@@ -5,7 +5,7 @@ import graft.lexer.PatternBank
 import graft.sources.LogFiles
 
 /** Within-file split scale smoke: ONE large synthetic log file, parsed via
-  * the wholetext path (pinned to a single task by design) vs the chunked
+  * the whole-file path (pinned to a single task by design) vs the chunked
   * eventsSplit path (size/chunkBytes tasks). Evidences the split's reason
   * to exist: a single multi-GB file is the one input shape where the
   * per-file source cannot scale out.
@@ -77,7 +77,7 @@ object LogSplitBench {
       // warmup on a small prefix path (JIT) — reuse the split machinery
       timed("warmup-split")(LogFiles.eventsSplit(spark, file.toString, bank,
         chunkBytes = chunkMB.toLong << 20).count())
-      val whole = timed("wholetext-1task")(LogFiles.events(spark, file.toString, bank).count())
+      val whole = timed("wholefile-1task")(LogFiles.events(spark, file.toString, bank).count())
       val split = timed(s"split-${chunkMB}MB-chunks")(LogFiles.eventsSplit(
         spark, file.toString, bank, chunkBytes = chunkMB.toLong << 20).count())
       require(whole == split, s"event counts diverged: whole=$whole split=$split")

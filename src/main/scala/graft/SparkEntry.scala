@@ -185,7 +185,7 @@ object SparkEntry {
     * (LogSplitBench.writeLog content — multi-line events, ERROR lines)
     * sized per sf dir, generated once into /tmp via an atomic move so
     * concurrent processes can share it. Both the l1 query (split path) and
-    * Verify's oracle staging (wholetext path) parse THIS file.
+    * Verify's oracle staging (whole-file path) parse THIS file.
     */
   /** Scale factor parsed from the sf path segment (".../sf0.01" → 0.01;
     * last segment wins if several). Substring checks like
@@ -1316,7 +1316,7 @@ object SparkEntry {
     // parquet ({STAGED} is substituted with the absolute path at dump time):
     // the queries run the native-expression path, the oracle re-aggregates
     // the independently-implemented typed path in DuckDB.
-    // l1 oracle: the wholetext-path event stats Verify stages from the same
+    // l1 oracle: the whole-file-path event stats Verify stages from the same
     // deterministic log file ({STAGED} substituted at dump time)
     "l1_log_events" ->
       """SELECT event_idx, line_start, line_end, has_timestamp, first_ts, n_tokens,

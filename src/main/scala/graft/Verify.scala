@@ -146,10 +146,11 @@ object Verify {
     }
   }
 
-  /** Stage the WHOLETEXT-path event stats of the deterministic l1 log file:
-    * the independent twin of the l1 query's split path (single-task
-    * wholetext + tokenize, no chunk scan / boundary repair / region
-    * offsets), re-read by the l1 oracle SQL in DuckDB.
+  /** Stage the WHOLE-FILE-path event stats of the deterministic l1 log
+    * file: the independent twin of the l1 query's split path (one region
+    * per file — no chunk scan / boundary repair / region offsets; the
+    * shared lexer kernel is checked against the char oracle in
+    * LogFilesKernelSpec), re-read by the l1 oracle SQL in DuckDB.
     */
   def stageLogEvents(spark: SparkSession, sfDir: String, stagedDir: String): Unit = {
     val bank = Parse.broadcastBank(spark, PatternBank.example)

@@ -254,9 +254,10 @@ object ParseTurnExpression {
 
   /** Token-span scratch (4 ints per token: packed type/schema, start, end,
     * line); lives inside a [[ParseScratch]], so steady-state it allocates
-    * nothing.
+    * nothing. The raw-log source (graft.sources.LogFiles) keeps one per
+    * parse region for the spans of the event being assembled.
     */
-  private[functions] final class SpanBuf {
+  private[graft] final class SpanBuf {
     var a: Array[Int] = new Array[Int](4 * 64)
     var n: Int = 0 // token count
     def reset(): Unit = n = 0
@@ -290,7 +291,7 @@ object ParseTurnExpression {
     scratchTl.get().parse(bank, text, role, tool).copy()
 
   /** value is exactly "ERROR" or "FATAL" (both length 5). */
-  @inline private[functions] def matches5(b: Array[Byte], s: Int): Boolean =
+  @inline private[graft] def matches5(b: Array[Byte], s: Int): Boolean =
     (b(s) == 'E' && b(s + 1) == 'R' && b(s + 2) == 'R' && b(s + 3) == 'O' && b(s + 4) == 'R') ||
     (b(s) == 'F' && b(s + 1) == 'A' && b(s + 2) == 'T' && b(s + 3) == 'A' && b(s + 4) == 'L')
 
@@ -298,10 +299,17 @@ object ParseTurnExpression {
     * static text verbatim; trailing newline dropped (mirrors
     * graft.pipeline.Parse.signatureOfLine, the test oracle).
     */
-  private[functions] def signature(bank: PatternBank, bytes: Array[Byte], spans: SpanBuf, lineNum: Int): UTF8String = {
+  private[functions] def signature(bank: PatternBank, bytes: Array[Byte], spans: SpanBuf, lineNum: Int): UTF8String =
+    UTF8String.fromString(signatureOf(bank, bytes, spans, lineNum, 0, spans.n))
+
+  /** [[signature]] over the tokens `[from, until)` only — the raw-log
+    * source templates one event's line without scanning the whole file.
+    */
+  private[graft] def signatureOf(bank: PatternBank, bytes: Array[Byte], spans: SpanBuf, lineNum: Int,
+                                 from: Int, until: Int): String = {
     val sb = new java.lang.StringBuilder(64)
-    var i = 0
-    while (i < spans.n) {
+    var i = from
+    while (i < until) {
       if (spans.line(i) == lineNum) {
         spans.tt(i) match {
           case TokenType.Timestamp => sb.append(TS_PLACEHOLDER)
@@ -313,7 +321,7 @@ object ParseTurnExpression {
       i += 1
     }
     if (sb.length > 0 && sb.charAt(sb.length - 1) == '\n') sb.setLength(sb.length - 1)
-    UTF8String.fromString(sb.toString)
+    sb.toString
   }
 
   /** Fixed-offset timestamp parse for the example schema's 5 formats:

@@ -43,10 +43,8 @@ object Parse {
     } catch { case _: Exception => null }
   }
 
-  /** Single-pass timestamp/error extraction over a token sequence — ONE
-    * implementation shared by the typed parse stage and the raw-log-file
-    * source ([[graft.sources.LogFiles]]), so the two surfaces can never
-    * disagree on error-detection or first-timestamp semantics.
+  /** Single-pass timestamp/error extraction over a token sequence, shared
+    * by the typed parse stage and the char-path oracles in tests.
     */
   final case class TokenScan(firstTs: String, tsSchemaId: Int, nErrors: Int, firstErrorLine: Int)
 

@@ -1,26 +1,45 @@
 package graft.sources
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.SerializableWritable
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.lexer.{PatternBank, TokenType, Tokenizer}
-import graft.pipeline.{Category, Parse}
+import graft.functions.ParseTurnExpression.{SpanBuf, matches5, signatureOf}
+import graft.lexer.{ByteTokenizer, PatternBank, TokenType}
+import graft.pipeline.{Category, Parse, TokenRow}
 
 /** Raw log-file source — the reference's primary input mode
-  * (`BufferedFileStream` + `Lexer`, /root/reference/src/lexer/lexer.rs and
-  * tests/lexer_test.rs:9-65): read `.log` files, tokenize, and assemble
-  * multi-line events (split-before-each-Timestamp) into a typed Dataset.
+  * (`BufferedFileStream` + `Lexer`, reference src/lexer/streams.rs and
+  * tests/lexer_test.rs:9-65): read `.log` files, lex their bytes, and
+  * assemble multi-line events (split before each Timestamp) into a typed
+  * Dataset.
   *
-  * Scale design: [[events]]'s unit of parallelism is the FILE (wholetext
-  * read + per-file tokenize in `flatMap`), matching how log pipelines shard
-  * in practice — a crawl/cluster emits many files, and event boundaries
-  * never cross files, so no fix-up shuffle is needed. For pathological
-  * multi-GB files that would pin one task, [[eventsSplit]] adds WITHIN-FILE
-  * parallelism: CLP-style chunking with boundary repair at the first
-  * event-start line after each split, producing byte-identical events.
-  * Tokenization is lossless (`concat(event texts) == file bytes`, asserted
-  * in tests).
+  * Every entry point runs ONE read path and ONE lexer kernel:
+  *  1. the driver resolves the input files ([[resolveFiles]]: the glob,
+  *     directories expanded to their files) — the stream instead discovers
+  *     them per micro-batch;
+  *  1. each file becomes one or more [[Region]]s: a byte range starting at
+  *     an event boundary, with the event index and line number it starts at;
+  *  1. a task reads the region's bytes and lexes them with
+  *     [[graft.lexer.ByteTokenizer]] into int spans ([[parseRegion]]); each
+  *     event's text and token values are decoded once from their byte slice.
+  *
+  * [[events]] and [[eventsWithTokens]] parse one whole-file region per file:
+  * the unit of parallelism is the FILE, matching how log pipelines shard in
+  * practice (event boundaries never cross files, so no fix-up shuffle is
+  * needed), and a compressed file (any Hadoop codec suffix, e.g. `.log.gz`)
+  * is decompressed whole. For multi-GB files that would pin one task,
+  * [[eventsSplit]] adds WITHIN-FILE parallelism: CLP-style chunking with
+  * boundary repair at the first event-start line after each split,
+  * producing identical events. [[eventsStream]] chooses between the two per
+  * arriving file. Lexing is lossless (`concat(event texts) == file bytes`,
+  * asserted in tests), and every entry point names a file by its Hadoop
+  * `Path.toString` (`file:/logs/a b/x.log`, not URI-encoded).
   */
 object LogFiles {
 
@@ -41,35 +60,41 @@ object LogFiles {
   )
 
   /** [[LogEvent]] plus its token array — the reference exposes an event's
-    * tokens for per-event variable extraction
-    * (/root/reference/src/log_parser/log_parser.rs:106-134:
-    * `get_timestamp_token`, `get_log_message_tokens`); without them a
-    * downstream extractor would have to re-tokenize the event text. Nested
-    * on purpose: `select($"event.*", $"tokens")` flattens when wanted, and
-    * [[events]] consumers that don't need tokens never pay for the array.
-    * Token rows reuse the pipeline's schema (token_type, schema_id, value,
-    * line_num); line_num is 1-based within the parsed text (file-local on
-    * this wholetext path), exactly what [[eventsOf]]'s tokenize emitted.
+    * tokens for per-event variable extraction (reference
+    * src/log_parser/log_parser.rs:106-134: `get_timestamp_token`,
+    * `get_log_message_tokens`); without them a downstream extractor would
+    * have to re-tokenize the event text. Nested on purpose:
+    * `select($"event.*", $"tokens")` flattens when wanted, and [[events]]
+    * consumers that don't need tokens never pay for the array. The token rows
+    * reuse the pipeline's schema (token_type, schema_id, value, line_num);
+    * line_num is the 1-based line within the file, like the event's
+    * line_start/line_end.
     */
-  final case class LogEventWithTokens(event: LogEvent, tokens: Seq[graft.pipeline.TokenRow])
+  final case class LogEventWithTokens(event: LogEvent, tokens: Seq[TokenRow])
 
   /** Parse every file matching `pathGlob` into events. */
   def events(spark: SparkSession, pathGlob: String,
-             bank: Broadcast[PatternBank]): Dataset[LogEvent] = {
+             bank: Broadcast[PatternBank]): Dataset[LogEvent] =
+    parseRegions(spark, wholeFileRegions(spark, pathGlob), bank)
+
+  /** [[events]] with the per-event token array attached. */
+  def eventsWithTokens(spark: SparkSession, pathGlob: String,
+                       bank: Broadcast[PatternBank]): Dataset[LogEventWithTokens] = {
     import spark.implicits._
-    spark.read.option("wholetext", "true").text(pathGlob)
-      .select(input_file_name().as("file"), col("value"))
-      .as[(String, String)]
-      .flatMap { case (file, content) => eventsOf(file, content, bank.value) }
+    val conf = confOf(spark)
+    spark.createDataset(wholeFileRegions(spark, pathGlob)).flatMap { r =>
+      lexEvents(r.file, readRegion(r, conf.value), bank.value, r.eventIdxOffset, r.lineOffset,
+        withTokens = true)
+    }
   }
 
   /** Structured Streaming twin of [[events]]: `.log` files arriving in
     * `dir` parse through the SAME kernels as the batch paths, one
     * micro-batch per trigger — the raw-log side of the R2 pluggable-stream
     * symmetry [[graft.streaming.StreamingParse]] provides for transcripts
-    * (the reference's pull-stream input, /root/reference/src/lexer/
-    * lexer_stream.rs:3-5). The `binaryFile` file-stream source is used for
-    * DISCOVERY only — the query selects just (path, length), so the
+    * (the reference's pull-stream input, reference
+    * src/lexer/lexer_stream.rs:3-5). The `binaryFile` file-stream source is
+    * used for DISCOVERY only — the query selects just (path, length), so the
     * source's column pruning never materializes file content; all byte
     * reads below are bounded ranges. A file is processed exactly once, in
     * the micro-batch that discovers it (file-source offset tracking);
@@ -83,7 +108,7 @@ object LogFiles {
     * cheap phase-1 boundary scan ([[scanChunk]] per range, each holding
     * ~chunkBytes + lookahead, buffers discarded between chunks) and
     * prefix-sums it into repaired regions ([[regionsOf]]); the regions
-    * then REPARTITION across the cluster and tokenize in parallel
+    * then REPARTITION across the cluster and lex in parallel
     * ([[parseRegion]]). A 512 MB log arriving in the stream is a ~1 s
     * byte scan plus 32 parallel ~16 MB parse tasks, not one whole-file
     * task holding 512 MB on-heap. Files at or under `chunkBytes` (and all
@@ -92,22 +117,19 @@ object LogFiles {
     * region — for those the whole-file task is the documented fallback.
     * Global event_idx / line numbers are file-local exactly like
     * [[events]]; the split restores them from the prefix sums, so stream
-    * output is byte-identical to the batch wholetext parse. Files must
-    * arrive complete (the standard file-source contract: write elsewhere,
-    * move in).
+    * output is identical to the batch whole-file parse. Files must arrive
+    * complete (the standard file-source contract: write elsewhere, move in).
     */
   def eventsStream(spark: SparkSession, dir: String, bank: Broadcast[PatternBank],
                    maxFilesPerTrigger: Int = 4, chunkBytes: Long = 16L << 20,
                    regionParallelism: Int = 0): Dataset[LogEvent] = {
     import spark.implicits._
     require(chunkBytes >= 4096, s"chunkBytes too small: $chunkBytes")
-    val confSer = new org.apache.spark.SerializableWritable(
-      spark.sparkContext.hadoopConfiguration)
+    val confSer = confOf(spark)
     // same soundness preconditions chunkIndex requires; checked ONCE on the
     // driver — an unsafe schema degrades to whole-file regions, it must not
     // silently mis-split
-    val splittable = !bank.value.tsDfa.canTransitionOn('\n') &&
-      !bank.value.varDfa.canTransitionOn('\n') && bank.value.isDelimiter('\n')
+    val splittable = splitBlocker(bank.value).isEmpty
     val files = spark.readStream
       .format("binaryFile")
       // the binaryFile format's FIXED schema — the streaming source API
@@ -119,6 +141,7 @@ object LogFiles {
       .load(dir)
       .select(col("path"), col("length"))
       .as[(String, Long)]
+    // the source reports a file's Hadoop Path.toString — the batch naming
     val regions = files.flatMap { case (path, len) =>
       if (!splittable || len <= chunkBytes) Iterator.single(Region(path, 0L, len, 0L, 0L))
       else {
@@ -134,16 +157,6 @@ object LogFiles {
       .repartition(if (regionParallelism > 0) regionParallelism
         else spark.sparkContext.defaultParallelism)
       .flatMap(r => parseRegion(r, bank.value, confSer.value))
-  }
-
-  /** [[events]] with the per-event token array attached. */
-  def eventsWithTokens(spark: SparkSession, pathGlob: String,
-                       bank: Broadcast[PatternBank]): Dataset[LogEventWithTokens] = {
-    import spark.implicits._
-    spark.read.option("wholetext", "true").text(pathGlob)
-      .select(input_file_name().as("file"), col("value"))
-      .as[(String, String)]
-      .flatMap { case (file, content) => eventsWithTokensOf(file, content, bank.value) }
   }
 
   // ------------------------------------------------------------------ //
@@ -164,13 +177,15 @@ object LogFiles {
       firstEventStart: Long, nEventStarts: Long,
       nNewlines: Long, nNewlinesBeforeFirstEvent: Long)
 
-  /** A repaired parse region: `[start, end)` begins at an event-start line
-    * and ends at the next chunk's first event start, so events never cross
-    * regions. Offsets restore global event indices and line numbers.
+  /** A parse region: `[start, end)` begins at an event-start line and ends
+    * at the next region's start (or the file's end), so events never cross
+    * regions. Offsets restore global event indices and line numbers. A
+    * `compressed` region is always a whole file, `end` its compressed
+    * length; its task decompresses the file instead of reading a range.
     */
   private[sources] final case class Region(
       file: String, start: Long, end: Long,
-      eventIdxOffset: Long, lineOffset: Long)
+      eventIdxOffset: Long, lineOffset: Long, compressed: Boolean = false)
 
   /** Parse files matching `pathGlob` into events with WITHIN-FILE
     * parallelism: files are cut into `chunkBytes` ranges, a cheap
@@ -178,7 +193,7 @@ object LogFiles {
     * timestamp DFA accepts — the same test `tokenize` applies) and newline
     * counts per chunk, the driver prefix-sums chunk metadata into repaired
     * regions (each starting at an event boundary), and a second distributed
-    * pass tokenizes each region independently. Event output is IDENTICAL to
+    * pass lexes each region independently. Event output is IDENTICAL to
     * [[events]] (asserted in tests) — same events, same global event_idx
     * and line numbers — but a multi-GB file now spreads over
     * size/chunkBytes tasks instead of pinning one.
@@ -192,6 +207,7 @@ object LogFiles {
     * '\n' is a delimiter and neither the timestamp nor the variable DFA can
     * consume '\n' — split points are line starts, so a newline-swallowing
     * token could hide an event boundary (and a newline) from the index pass.
+    * A compressed file has no byte-addressable lines and is rejected.
     */
   def eventsSplit(spark: SparkSession, pathGlob: String, bank: Broadcast[PatternBank],
                   chunkBytes: Long = 16L << 20): Dataset[LogEvent] =
@@ -199,7 +215,8 @@ object LogFiles {
 
   /** Phase 1 as a first-class, PERSISTABLE artifact: the chunk index — one
     * slim row per `chunkBytes` range of each matched file (event-start
-    * offsets + newline counts). This is the CLP move: the index costs one
+    * offsets + newline counts; files resolved as for [[events]], hidden
+    * ones skipped). This is the CLP move: the index costs one
     * IO-bound scan of the raw logs, and once written to parquet it lets
     * every later job ([[eventsFromIndex]]) jump straight to repaired
     * parse regions without re-deriving boundaries — write it next to the
@@ -207,37 +224,18 @@ object LogFiles {
     */
   def chunkIndex(spark: SparkSession, pathGlob: String, bank: Broadcast[PatternBank],
                  chunkBytes: Long = 16L << 20): Dataset[ChunkMeta] = {
-    // Soundness guards: split points are line starts, so '\n' must be a
-    // hard token boundary. A timestamp OR variable pattern that can consume
-    // '\n' lets a token swallow a newline (tokenize then neither probes the
-    // next line start nor counts the newline), and a schema without '\n' as
-    // a delimiter has no line structure at all.
-    require(!bank.value.tsDfa.canTransitionOn('\n'),
-      "within-file split requires newline-free timestamp patterns; use events() instead")
-    require(!bank.value.varDfa.canTransitionOn('\n'),
-      "within-file split requires newline-free variable patterns; use events() instead")
-    require(bank.value.isDelimiter('\n'),
-      "within-file split requires '\\n' to be a delimiter; use events() instead")
+    splitBlocker(bank.value).foreach(need =>
+      throw new IllegalArgumentException(s"within-file split requires $need; use events() instead"))
     require(chunkBytes >= 4096, s"chunkBytes too small: $chunkBytes")
     import spark.implicits._
-
-    val hconf = spark.sparkContext.hadoopConfiguration
-    // executor-side reads must see the SESSION's Hadoop conf (credentials,
-    // endpoints, defaultFS) — a fresh Configuration() would silently limit
-    // the split path to conf-free filesystems. SerializableWritable ships it.
-    val confSer = new org.apache.spark.SerializableWritable(hconf)
-    val glob = new org.apache.hadoop.fs.Path(pathGlob)
-    val fs = glob.getFileSystem(hconf)
-    val files = Option(fs.globStatus(glob)).getOrElse(Array.empty)
-      .filter(s => s.isFile && s.getLen > 0)
-      .map(s => (s.getPath.toString, s.getLen))
-      .sortBy(_._1)
-
-    val chunks = files.flatMap { case (path, len) =>
-      val n = ((len + chunkBytes - 1) / chunkBytes).toInt
-      (0 until n).map(i => (path, i, i * chunkBytes, math.min(len, (i + 1) * chunkBytes), len))
-    }.toSeq
-
+    val files = resolveFiles(spark, pathGlob)
+    files.find(_.compressed).foreach(f => throw new IllegalArgumentException(
+      s"within-file split cannot byte-split the compressed file ${f.path}; use events() instead"))
+    val confSer = confOf(spark)
+    val chunks = files.flatMap { f =>
+      val n = ((f.len + chunkBytes - 1) / chunkBytes).toInt
+      (0 until n).map(i => (f.path, i, i * chunkBytes, math.min(f.len, (i + 1) * chunkBytes), f.len))
+    }
     spark.createDataset(chunks)
       .map { case (path, idx, s, e, len) =>
         scanChunk(path, idx, s, e, len, bank.value, confSer.value) }
@@ -246,22 +244,25 @@ object LogFiles {
   /** Phase 2: parse events from a (possibly parquet-round-tripped) chunk
     * index. The index rows are collected (slim — one per chunk), prefix-
     * summed into repaired regions on the driver, and each region is
-    * tokenized independently. Output equals [[events]] byte-for-byte.
+    * lexed independently. Output equals [[events]].
     */
   def eventsFromIndex(spark: SparkSession, index: Dataset[ChunkMeta],
                       bank: Broadcast[PatternBank]): Dataset[LogEvent] = {
-    import spark.implicits._
-    val confSer = new org.apache.spark.SerializableWritable(
-      spark.sparkContext.hadoopConfiguration)
-    val metas = index.collect()
-
-    // driver: prefix-sum chunk metadata into repaired regions
-    val regions = metas.groupBy(_.file).toSeq.flatMap { case (_, ms) => regionsOf(ms) }
-
-    // phase 2 (distributed): tokenize each region independently; restore
-    // global event indices and line numbers from the prefix sums
-    spark.createDataset(regions).flatMap(r => parseRegion(r, bank.value, confSer.value))
+    val regions = index.collect().groupBy(_.file).values.flatMap(ms => regionsOf(ms.toSeq)).toSeq
+    parseRegions(spark, regions, bank)
   }
+
+  /** Why line-start splitting is unsound for `bank`, or None when it is
+    * sound. A timestamp OR variable pattern that can consume '\n' lets a
+    * token swallow a newline (the lexer then neither probes the next line
+    * start nor counts the newline), and a schema without '\n' as a
+    * delimiter has no line structure at all.
+    */
+  private def splitBlocker(bank: PatternBank): Option[String] =
+    if (bank.tsDfa.canTransitionOn('\n')) Some("newline-free timestamp patterns")
+    else if (bank.varDfa.canTransitionOn('\n')) Some("newline-free variable patterns")
+    else if (!bank.isDelimiter('\n')) Some("'\\n' to be a delimiter")
+    else None
 
   /** Prefix-sum ONE file's chunk metas into repaired parse regions — the
     * boundary-repair core shared by the batch split path
@@ -293,33 +294,85 @@ object LogFiles {
     out.result()
   }
 
-  /** Tokenize one repaired region and restore its global event indices and
-    * line numbers from the prefix-sum offsets (shared phase-2 kernel).
+  // ------------------------------------------------------------------ //
+  // The shared read path: resolve files, build regions, read, lex.       //
+  // ------------------------------------------------------------------ //
+
+  private final case class InputFile(path: String, len: Long, compressed: Boolean)
+
+  /** The driver-side file resolver of every batch entry point: the files
+    * `pathGlob` matches, a directory standing for the files below it, in
+    * path order. Hidden (`.`/`_`-prefixed) files and directories are
+    * skipped, as Spark's file sources skip them — also when the path names
+    * one explicitly. A path that matches nothing but hidden entries fails,
+    * as `spark.read` does; empty files hold no events and are dropped.
     */
-  private def parseRegion(r: Region, bank: PatternBank,
-                          conf: org.apache.hadoop.conf.Configuration): Iterator[LogEvent] = {
-    val content = new String(readRange(r.file, r.start, r.end, conf),
-      java.nio.charset.StandardCharsets.UTF_8)
-    eventsOf(r.file, content, bank).map { ev =>
-      ev.copy(
-        event_idx = (ev.event_idx + r.eventIdxOffset).toInt,
-        line_start = (ev.line_start + r.lineOffset).toInt,
-        line_end = (ev.line_end + r.lineOffset).toInt)
+  private def resolveFiles(spark: SparkSession, pathGlob: String): Seq[InputFile] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val glob = new Path(pathGlob)
+    val fs = glob.getFileSystem(conf)
+    def hidden(s: FileStatus): Boolean = {
+      val name = s.getPath.getName
+      name.startsWith(".") || name.startsWith("_")
     }
+    val matched = Option(fs.globStatus(glob)).getOrElse(Array.empty[FileStatus]).filterNot(hidden)
+    if (matched.isEmpty)
+      throw new java.io.FileNotFoundException(s"no file matches $pathGlob (hidden files skipped)")
+    def below(dir: FileStatus): Iterator[FileStatus] =
+      fs.listStatus(dir.getPath).iterator.filterNot(hidden)
+        .flatMap(s => if (s.isDirectory) below(s) else Iterator.single(s))
+    val codecs = new CompressionCodecFactory(conf)
+    matched.iterator
+      .flatMap(s => if (s.isDirectory) below(s) else Iterator.single(s))
+      .filter(_.getLen > 0)
+      .map(s => InputFile(s.getPath.toString, s.getLen, codecs.getCodec(s.getPath) != null))
+      .toSeq.sortBy(_.path)
   }
 
-  /** Read bytes `[start, end)` of a Hadoop-FS path. Ranges are bounded by
-    * the JVM's array/String limit — a repaired region larger than 2 GB
-    * means >2 GB between two event starts, which no single-String tokenize
-    * (here or in wholetext [[events]]) can represent; fail with a clear
-    * message instead of a negative-size allocation.
+  private def wholeFileRegions(spark: SparkSession, pathGlob: String): Seq[Region] =
+    resolveFiles(spark, pathGlob).map(f => Region(f.path, 0L, f.len, 0L, 0L, f.compressed))
+
+  /** Executor-side reads must see the SESSION's Hadoop conf (credentials,
+    * endpoints, defaultFS) — a fresh Configuration() would silently limit
+    * the source to conf-free filesystems. SerializableWritable ships it.
     */
-  private def readRange(file: String, start: Long, end: Long,
-                        conf: org.apache.hadoop.conf.Configuration): Array[Byte] = {
+  private def confOf(spark: SparkSession): SerializableWritable[Configuration] =
+    new SerializableWritable(spark.sparkContext.hadoopConfiguration)
+
+  private def parseRegions(spark: SparkSession, regions: Seq[Region],
+                           bank: Broadcast[PatternBank]): Dataset[LogEvent] = {
+    import spark.implicits._
+    val conf = confOf(spark)
+    spark.createDataset(regions).flatMap(r => parseRegion(r, bank.value, conf.value))
+  }
+
+  /** Lex one region and restore its global event indices and line numbers
+    * from the prefix-sum offsets (the phase-2 kernel of every entry point).
+    */
+  private def parseRegion(r: Region, bank: PatternBank, conf: Configuration): Iterator[LogEvent] =
+    lexEvents(r.file, readRegion(r, conf), bank, r.eventIdxOffset, r.lineOffset,
+      withTokens = false).map(_.event)
+
+  private def readRegion(r: Region, conf: Configuration): Array[Byte] =
+    if (!r.compressed) readRange(r.file, r.start, r.end, conf)
+    else {
+      val path = new Path(r.file)
+      val codec = new CompressionCodecFactory(conf).getCodec(path)
+      val in = codec.createInputStream(path.getFileSystem(conf).open(path))
+      try in.readAllBytes() finally in.close()
+    }
+
+  /** Read bytes `[start, end)` of a Hadoop-FS path. Ranges are bounded by
+    * the JVM's array limit — a repaired region larger than 2 GB means
+    * >2 GB between two event starts, which no single-array lex can
+    * represent; fail with a clear message instead of a negative-size
+    * allocation.
+    */
+  private def readRange(file: String, start: Long, end: Long, conf: Configuration): Array[Byte] = {
     require(end - start < Int.MaxValue.toLong,
-      s"single parse region of ${end - start} bytes in $file exceeds the 2 GB JVM string " +
+      s"single parse region of ${end - start} bytes in $file exceeds the 2 GB JVM array " +
         "limit (one event spans >2 GB between timestamps)")
-    val path = new org.apache.hadoop.fs.Path(file)
+    val path = new Path(file)
     val fs = path.getFileSystem(conf)
     val in = fs.open(path)
     try {
@@ -339,7 +392,7 @@ object LogFiles {
     */
   private def scanChunk(file: String, chunkIdx: Int, start: Long, end: Long,
                         fileLen: Long, bank: PatternBank,
-                        conf: org.apache.hadoop.conf.Configuration): ChunkMeta = {
+                        conf: Configuration): ChunkMeta = {
     var lookahead = 8192L
     var buf = readRange(file, math.max(0L, start - 1), math.min(fileLen, end + lookahead), conf)
     val bufStart = math.max(0L, start - 1)
@@ -398,53 +451,90 @@ object LogFiles {
       nNewlines, nNewlinesBeforeFirst)
   }
 
-  /** Pure per-file parse — shared with tests. Extraction semantics come
-    * from [[Parse.scanTokens]], the same kernel the transcript pipeline
-    * uses, applied to THIS event's token slice only (a whole-file scan per
-    * event would make dense-error files O(events × file_tokens), and could
-    * pick up a neighboring event sharing the boundary line).
+  /** Pure per-file parse — shared with tests and the kernel probe: the
+    * content's UTF-8 bytes through the same kernel as every Spark entry
+    * point ([[lexEvents]]).
     */
   def eventsOf(file: String, content: String, bank: PatternBank): Iterator[LogEvent] =
-    eventSlices(file, content, bank).map(_._1)
+    lexEvents(file, content.getBytes(UTF_8), bank, 0L, 0L, withTokens = false).map(_.event)
 
-  /** [[eventsOf]] keeping each event's token slice attached. */
-  def eventsWithTokensOf(file: String, content: String,
-                         bank: PatternBank): Iterator[LogEventWithTokens] =
-    eventSlices(file, content, bank).map { case (ev, toks) =>
-      LogEventWithTokens(ev, toks.iterator
-        .map(t => graft.pipeline.TokenRow(t.tokenType, t.schemaId, t.value, t.lineNum))
-        .toVector)
+  /** The lexer kernel: lex `bytes` once with [[ByteTokenizer]] and
+    * assemble events on Timestamp spans (a new event before each Timestamp
+    * token; a leading event may lack one) — see [[EventAssembler]].
+    */
+  private[sources] def lexEvents(file: String, bytes: Array[Byte], bank: PatternBank,
+                                 eventIdxOffset: Long, lineOffset: Long,
+                                 withTokens: Boolean): Iterator[LogEventWithTokens] = {
+    val events = new EventAssembler(file, bytes, bank, eventIdxOffset, lineOffset, withTokens)
+    ByteTokenizer.tokenize(bank, bytes, events)
+    events.flush()
+    events.out.iterator
+  }
+
+  /** Span sink that holds only the CURRENT event's spans (4 ints per
+    * token) and turns them into a [[LogEvent]] when the next Timestamp
+    * token or the end of input closes the event, so the span buffer stays
+    * event-sized however large the region. Extraction follows the
+    * transcript parse (`parse_turn`): the first timestamp, the ERROR/FATAL
+    * loglevel count, and the template of the first error line. An event's
+    * text, and with `withTokens` each token value, is decoded once from its
+    * byte slice; token boundaries always follow an ASCII byte, so
+    * slice-wise decoding equals decoding the whole buffer, invalid UTF-8
+    * included. `tokens` is null without `withTokens`.
+    */
+  private final class EventAssembler(file: String, bytes: Array[Byte], bank: PatternBank,
+                                     eventIdxOffset: Long, lineOffset: Long,
+                                     withTokens: Boolean) extends ByteTokenizer.Sink {
+    val out = new collection.mutable.ArrayBuffer[LogEventWithTokens]
+    private val spans = new SpanBuf
+    private val loglevel = bank.loglevelVarId
+    private var nErrors = 0
+    private var firstErrorLine = -1
+
+    override def token(tt: Byte, sid: Int, start: Int, end: Int, line: Int): Unit = {
+      if (tt == TokenType.Timestamp) flush()
+      else if (tt == TokenType.Variable && sid == loglevel && end - start == 5 &&
+          matches5(bytes, start)) {
+        nErrors += 1
+        if (firstErrorLine < 0) firstErrorLine = line
+      }
+      spans.add(tt, sid, start, end, line)
     }
 
-  private def eventSlices(file: String, content: String, bank: PatternBank)
-      : Iterator[(LogEvent, collection.IndexedSeq[graft.lexer.Token])] = {
-    val toks = Tokenizer.tokenize(bank, content)
-    Tokenizer.assembleEvents(toks).iterator.zipWithIndex.map { case (span, idx) =>
-      val eventToks = toks.slice(span.tokenStart, span.tokenEnd)
-      val scan = Parse.scanTokens(bank, eventToks)
-      val sb = new java.lang.StringBuilder(128)
-      eventToks.foreach(t => sb.append(t.value))
-      (LogEvent(
+    private def decode(start: Int, end: Int): String = new String(bytes, start, end - start, UTF_8)
+
+    /** Close the current event, if any. */
+    def flush(): Unit = if (spans.n > 0) {
+      val n = spans.n
+      val hasTs = spans.tt(0) == TokenType.Timestamp
+      val firstTs = if (hasTs) decode(spans.start(0), spans.end(0)) else null
+      val ev = LogEvent(
         file = file,
-        event_idx = idx,
-        line_start = span.lineStart,
-        line_end = span.lineEnd,
-        has_timestamp = span.hasTimestamp,
-        first_ts = scan.firstTs,
-        ts_extracted = Parse.parseTsToken(scan.firstTs, scan.tsSchemaId),
-        n_tokens = span.tokenEnd - span.tokenStart,
-        n_errors = scan.nErrors,
+        event_idx = (out.length + eventIdxOffset).toInt,
+        line_start = (spans.line(0) + lineOffset).toInt,
+        line_end = (spans.line(n - 1) + lineOffset).toInt,
+        has_timestamp = hasTs,
+        first_ts = firstTs,
+        ts_extracted = if (hasTs) Parse.parseTsToken(firstTs, spans.sid(0)) else null,
+        n_tokens = n,
+        n_errors = nErrors,
         error_signature =
-          if (scan.firstErrorLine < 0) null
-          else Parse.signatureOfLine(bank, eventToks, scan.firstErrorLine),
-        category = if (scan.nErrors > 0) Category.Errors else Category.Unmatched,
-        text = sb.toString
-      ), eventToks)
+          if (firstErrorLine < 0) null else signatureOf(bank, bytes, spans, firstErrorLine, 0, n),
+        category = if (nErrors > 0) Category.Errors else Category.Unmatched,
+        text = decode(spans.start(0), spans.end(n - 1)))
+      val tokens =
+        if (!withTokens) null
+        else Vector.tabulate(n)(i => TokenRow(spans.tt(i), spans.sid(i),
+          decode(spans.start(i), spans.end(i)), (spans.line(i) + lineOffset).toInt))
+      out += LogEventWithTokens(ev, tokens)
+      spans.reset()
+      nErrors = 0
+      firstErrorLine = -1
     }
   }
 
   /** The slim per-event projection shared by the l1 driver query (split
-    * path via a persisted chunk index) and its oracle staging (wholetext
+    * path via a persisted chunk index) and its oracle staging (whole-file
     * path): enough columns to pin boundaries, numbering, extraction and the
     * exact text bytes (crc), without shipping the text itself.
     */

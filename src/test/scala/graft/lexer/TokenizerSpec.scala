@@ -209,9 +209,13 @@ class TokenizerSpec extends AnyFunSuite {
   }
 
   test("the reference's real schema.yaml loads byte-for-byte; field_identifier drives tool routing") {
-    val yaml = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get("/root/reference/examples/schema.yaml")),
-      java.nio.charset.StandardCharsets.UTF_8)
+    // src/test/resources/schema.yaml is a verbatim copy of the reference's
+    // examples/schema.yaml (FIXTURES.md §1)
+    val yaml = {
+      val in = getClass.getResourceAsStream("/schema.yaml")
+      try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+      finally in.close()
+    }
     val cfg = SchemaConfig.parseYaml(yaml)
     assert(cfg.varNames == Vector("int", "float", "hex", "loglevel", "field_identifier", "path"))
     val refBank = PatternBank.compile(cfg)

@@ -6,8 +6,11 @@ import org.scalatest.BeforeAndAfterAll
 import graft.lexer.PatternBank
 
 /** Raw .log file source: events over the reference's own fixtures, read
-  * through a real Spark job (wholetext scan + flatMap), asserted lossless
-  * and identical to the in-memory tokenizer path.
+  * through real Spark jobs on the shared region path (driver-side file
+  * resolution, one byte region per file or per repaired chunk, byte lexer
+  * in the task), asserted lossless and identical across the whole-file,
+  * split and streaming entry points. The kernel itself is checked against
+  * the char-tokenizer oracle in [[LogFilesKernelSpec]].
   */
 class LogFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -200,5 +203,71 @@ class LogFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(evs(0).category == graft.pipeline.Category.Unmatched && evs(0).n_errors == 0)
     assert(evs(1).category == graft.pipeline.Category.Errors && evs(1).n_errors == 1)
     assert(evs(1).error_signature == "<ts> <loglevel> <thread_identifier> failed after <int> retries")
+  }
+
+  test("every entry point names a file by the same Hadoop path string, spaces included") {
+    val dir = java.nio.file.Files.createTempDirectory("graft logs ")
+    java.nio.file.Files.writeString(dir.resolve("a b.log"), resource("hive-24h.log"))
+    val bank = spark.sparkContext.broadcast(PatternBank.example)
+    val glob = s"$dir/*.log"
+    val want = Set(new org.apache.hadoop.fs.Path(dir.resolve("a b.log").toUri).toString)
+    assert(want.head.contains(" ") && !want.head.contains("%20"))
+
+    assert(LogFiles.events(spark, glob, bank).collect().map(_.file).toSet == want)
+    assert(LogFiles.eventsWithTokens(spark, glob, bank).collect().map(_.event.file).toSet == want)
+    assert(LogFiles.eventsSplit(spark, glob, bank, chunkBytes = 4096).collect().map(_.file).toSet == want)
+    val q = LogFiles.eventsStream(spark, dir.toString, bank).writeStream
+      .format("memory").queryName("log_event_files").start()
+    try {
+      q.processAllAvailable()
+      assert(spark.sql("SELECT file FROM log_event_files").collect().map(_.getString(0)).toSet == want)
+    } finally q.stop()
+  }
+
+  test("a directory stands for the files below it; hidden files are skipped; no match fails") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-logs-dir")
+    val small = resource("hive-24h.log")
+    java.nio.file.Files.writeString(dir.resolve("a.log"), small)
+    java.nio.file.Files.createDirectory(dir.resolve("sub"))
+    java.nio.file.Files.writeString(dir.resolve("sub").resolve("b.log"), small)
+    java.nio.file.Files.writeString(dir.resolve(".a.log.tmp"), small)
+    java.nio.file.Files.writeString(dir.resolve("_SUCCESS"), small)
+    val bank = spark.sparkContext.broadcast(PatternBank.example)
+    val files = LogFiles.events(spark, dir.toString, bank).collect()
+      .map(e => e.file.substring(e.file.indexOf("graft-logs-dir"))).toSet
+    assert(files.map(_.split('/').drop(1).mkString("/")) == Set("a.log", "sub/b.log"))
+    intercept[java.io.FileNotFoundException](LogFiles.events(spark, s"$dir/*.nothing", bank))
+    intercept[java.io.FileNotFoundException](LogFiles.chunkIndex(spark, s"$dir/missing.log", bank))
+    // a path that names hidden files only — explicitly or by glob — matches nothing
+    intercept[java.io.FileNotFoundException](LogFiles.events(spark, s"$dir/_SUCCESS", bank))
+    intercept[java.io.FileNotFoundException](LogFiles.eventsSplit(spark, s"$dir/.*.tmp", bank))
+    intercept[java.io.FileNotFoundException](LogFiles.chunkIndex(spark, s"$dir/_*", bank))
+  }
+
+  test("compressed input: events() decompresses a .log.gz whole; the split path rejects it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-logs-gz")
+    val large = resource("hive-24h_large.log")
+    java.nio.file.Files.writeString(dir.resolve("plain.log"), large)
+    val gz = new java.util.zip.GZIPOutputStream(
+      java.nio.file.Files.newOutputStream(dir.resolve("packed.log.gz")))
+    try gz.write(large.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally gz.close()
+    val bank = spark.sparkContext.broadcast(PatternBank.example)
+    def key(e: LogFiles.LogEvent) = e.copy(file = null)
+
+    val plain = LogFiles.events(spark, s"$dir/plain.log", bank).collect()
+    val packed = LogFiles.events(spark, s"$dir/packed.log.gz", bank).collect()
+    assert(packed.forall(_.file.endsWith("/packed.log.gz")))
+    assert(packed.map(key).sortBy(_.event_idx).toSeq == plain.map(key).sortBy(_.event_idx).toSeq)
+    assert(packed.sortBy(_.event_idx).map(_.text).mkString == large)
+    val withTokens = LogFiles.eventsWithTokens(spark, s"$dir/packed.log.gz", bank).collect()
+    assert(withTokens.map(_.event).map(key).sortBy(_.event_idx).toSeq ==
+      plain.map(key).sortBy(_.event_idx).toSeq)
+
+    val onIndex = intercept[IllegalArgumentException](
+      LogFiles.chunkIndex(spark, s"$dir/*.log*", bank))
+    assert(onIndex.getMessage.contains("packed.log.gz") && onIndex.getMessage.contains("use events()"))
+    val onSplit = intercept[IllegalArgumentException](
+      LogFiles.eventsSplit(spark, s"$dir/packed.log.gz", bank))
+    assert(onSplit.getMessage.contains("compressed"))
   }
 }

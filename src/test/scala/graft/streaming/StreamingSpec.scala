@@ -274,7 +274,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
           e.n_tokens, e.n_errors, crc(e.text))
       val got = spark.sql("SELECT * FROM log_events_split")
         .as[graft.sources.LogFiles.LogEvent].collect().map(key).sorted.toSeq
-      // batch wholetext twin: same events, same GLOBAL indices/line numbers
+      // batch whole-file twin: same events, same GLOBAL indices/line numbers
       val want = graft.sources.LogFiles.events(spark, s"$dir/*.log", bank)
         .collect().map(key).sorted.toSeq
       assert(got.nonEmpty && got == want,
