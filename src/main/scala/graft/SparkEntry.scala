@@ -181,12 +181,6 @@ object SparkEntry {
       Similarity.bruteForceKnn(emb, q10(emb), k = 5).select("query_id", "neighbor_id")
     }
 
-  /** l1 fixture: a deterministic synthetic hive-style .log file
-    * (LogSplitBench.writeLog content — multi-line events, ERROR lines)
-    * sized per sf dir, generated once into /tmp via an atomic move so
-    * concurrent processes can share it. Both the l1 query (split path) and
-    * Verify's oracle staging (whole-file path) parse THIS file.
-    */
   /** Scale factor parsed from the sf path segment (".../sf0.01" → 0.01;
     * last segment wins if several). Substring checks like
     * `dir.contains("0.1")` silently mis-sized on any path with those digits
@@ -207,6 +201,12 @@ object SparkEntry {
   }
 
   private val l1Gen = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+  /** l1 fixture: a deterministic synthetic hive-style .log file
+    * ([[graft.datagen.SyntheticLogs.writeLog]] content — multi-line events,
+    * ERROR lines) sized per sf dir, generated once into /tmp via an atomic
+    * move so concurrent processes can share it. Both the l1 query (split
+    * path) and Verify's oracle staging (whole-file path) parse THIS file.
+    */
   private[graft] def l1LogPath(dir: String): String = {
     val mb = sfOfDir(dir) match {
       case Some(sf) if sf >= 0.1 => 16
@@ -218,7 +218,7 @@ object SparkEntry {
       if (!java.nio.file.Files.exists(p)) {
         val tmp = java.nio.file.Paths.get(
           s"/tmp/graft-l1-$mb.log.tmp-${ProcessHandle.current().pid()}")
-        LogSplitBench.writeLog(tmp, mb)
+        graft.datagen.SyntheticLogs.writeLog(tmp, mb)
         java.nio.file.Files.move(tmp, p,
           java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       }
@@ -359,8 +359,9 @@ object SparkEntry {
     * structure for the router to exploit — supers are arbitrary Voronoi
     * cuts), so it probes 3 of 4 supers to stay at the flat path's
     * cell-miss-bounded recall; the regime the hierarchy EXISTS for (cells ≈
-    * clusters, nSuper ≫ probed supers) is measured in AnnScaleBench at
-    * 65,536 cells.
+    * clusters, nSuper ≫ probed supers) was measured at 65,536 cells by a
+    * 1 M-vector scale smoke since removed (BENCH/BASELINE.md keeps its
+    * numbers).
     */
   /** The two-level model on the full corpus — memoized: s9's index builder
     * and s10's IVF-PQ composition train the IDENTICAL model (same corpus,

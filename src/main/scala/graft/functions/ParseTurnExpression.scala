@@ -34,7 +34,7 @@ import graft.pipeline.Category
   * so buffer reuse is safe. The interpreted `eval` path instead returns a
   * defensive copy, since interpreted consumers may hold references.
   *
-  * The typed path (graft.pipeline.Parse.typed) remains as the independent
+  * The typed path (graft.pipeline.Parse.apply) remains as the independent
   * oracle; equality between the two is asserted in tests.
   */
 case class ParseTurnExpression(first: Expression, second: Expression, third: Expression,

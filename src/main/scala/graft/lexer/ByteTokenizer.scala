@@ -2,7 +2,8 @@ package graft.lexer
 
 import scala.collection.mutable.ArrayBuffer
 
-/** Byte-level tokenizer — the execution-path twin of [[Tokenizer]], matching
+/** Byte-level tokenizer — the production lexer kernel (the char
+  * [[Tokenizer]] is its oracle), matching
   * the reference's byte-stream model exactly (it lexes `u8`, not chars:
   * /root/reference/src/lexer/lexer.rs:320-336). Semantics are identical for
   * any UTF-8 input: delimiters and patterns are ASCII-only, multi-byte

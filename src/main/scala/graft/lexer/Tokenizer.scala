@@ -28,7 +28,12 @@ final case class LogEventSpan(
     lineEnd: Int
 )
 
-/** The tokenizer core — a pure function `(bank, text) => tokens`.
+/** The char-level reference tokenizer — a pure function
+  * `(bank, text) => tokens` — kept as the ORACLE for [[ByteTokenizer]], the
+  * one kernel every production path runs (parse_turn, LogFiles, streaming).
+  * Its only production-tree caller is the typed oracle parse
+  * `graft.pipeline.Parse.parseTurn`, which perfbench's output check and
+  * `Verify.stageTypedParse` run; the specs compare the two lexers directly.
   *
   * Faithful re-expression of the reference lexer's observable semantics
   * (/root/reference/src/lexer/lexer.rs:153-415), restructured from its
@@ -50,8 +55,7 @@ final case class LogEventSpan(
   *  - `lineNum` starts at 1 and increments after each '\n' token is emitted
   *    (lexer.rs:176-183).
   *
-  * Executor hot path: called from `mapPartitions`; every transition is one
-  * array read in the broadcast DenseDfa tables.
+  * Every transition is one array read in the broadcast DenseDfa tables.
   */
 object Tokenizer {
 

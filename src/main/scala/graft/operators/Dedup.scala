@@ -119,29 +119,25 @@ object Dedup {
   /** Session confs for the staging heuristic shared by [[minhashPairs]] /
     * [[simhashPairs]]: when the caller passes no `stagingDir`, corpora of at
     * least `autoStageMinDocs` documents are staged automatically into a
-    * temp dir removed at JVM exit (`spark.graft.dedup.autoStage=false`
-    * disables the probe entirely). Rationale: staging is a pure win above
+    * temp dir removed at JVM exit. Rationale: staging is a pure win above
     * ~100k docs (measured 1.6–3.8×) and a caller who forgets the knob gets
     * the re-scanning plan at exactly the scale where it hurts; below the
     * threshold the lazy plan is returned unchanged, so small corpora pay
     * neither the count probe's job nor the staging write.
     */
-  val AutoStageConf = "spark.graft.dedup.autoStage"
   val AutoStageMinDocsConf = "spark.graft.dedup.autoStageMinDocs"
 
   private def resolveStaging(documents: DataFrame, stagingDir: Option[String],
                              what: String): Option[String] =
     stagingDir.orElse {
-      val conf = documents.sparkSession.conf
-      val auto = conf.get(AutoStageConf, "true").toBoolean
-      lazy val minDocs = conf.get(AutoStageMinDocsConf, "50000").toLong
+      val minDocs = documents.sparkSession.conf.get(AutoStageMinDocsConf, "50000").toLong
       // BOUNDED probe: `limit(minDocs).count()` reads at most minDocs rows
       // and stops. A plain `documents.count()` is metadata-cheap only on a
       // bare parquet scan — on a computed plan (filtered/unioned/synthetic
       // input) it executed the FULL plan at query-construction time just to
-      // test a threshold. Only paid when auto-staging is live.
+      // test a threshold.
       val cap = math.min(minDocs, Int.MaxValue.toLong).toInt
-      if (auto && documents.limit(cap).count() >= cap)
+      if (documents.limit(cap).count() >= cap)
         Some(graft.pipeline.Staging.tempDirDeletedOnExit(s"graft-autostage-$what"))
       else None
     }

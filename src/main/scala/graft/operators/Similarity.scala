@@ -554,7 +554,8 @@ object Similarity {
     * approximation: a vector near a super-cell boundary may belong to a
     * child of the OTHER super, so assignment and probing both descend into
     * the `topSuper` nearest supers rather than one (the knob that trades
-    * routing loss for cost — measured in AnnScaleBench).
+    * routing loss for cost — measured by the 1 M-vector ANN scale smoke,
+    * BENCH/BASELINE.md).
     */
   final case class IvfTwoLevel(superCentroids: Array[Array[Float]],
                                children: Array[Array[Array[Float]]]) extends Serializable {
@@ -727,7 +728,7 @@ object Similarity {
     * probing prunes on the partition column, not on file identity. The
     * model goes stale as the corpus drifts from its training distribution;
     * gate appended-index recall against a fresh retrain (the s11 driver
-    * row + AnnScaleBench measure exactly that) and retrain when the gap
+    * row measures exactly that) and retrain when the gap
     * exceeds budget.
     */
   def ivfIndexTwoLevel(corpus: DataFrame, model: IvfTwoLevel, topSuper: Int = 2): DataFrame = {
@@ -1085,7 +1086,8 @@ object Similarity {
     * ([[graft.operators.Dedup.embeddingNearDupPairs]]); kNN it only after
     * deduping, or widen `rerank` to cover the cluster. On a fine-grained
     * corpus (clusters of tens, the realistic ANN regime) the same operating
-    * point ranks correctly — both regimes measured in `AnnScaleBench`.
+    * point ranks correctly — both regimes were measured by the 1 M-vector ANN
+    * scale smoke (BENCH/BASELINE.md).
     */
   final case class PqModel(codebooks: Array[Array[Array[Float]]]) extends Serializable {
     def nSub: Int = codebooks.length

@@ -7,12 +7,12 @@ import java.sql.Timestamp
 import java.time.LocalDateTime
 import java.time.format.DateTimeFormatter
 
-/** P2 — the parse stage (SURVEY.md §2.2).
-  *
-  * `mapPartitions` over the typed Dataset[Turn] with the broadcast compiled
-  * pattern bank: the only non-Catalyst operator in the pipeline. Everything
-  * it emits is a pure function of (broadcast bank, row), so it is
-  * deterministic under task retries and AQE re-planning. The bank's dense
+/** P2 — the parse stage (SURVEY.md §2.2), in two independently coded
+  * forms: [[expr]], the `parse_turn` expression every production path runs,
+  * and [[apply]], a typed `mapPartitions` over Dataset[Turn] with the
+  * broadcast compiled pattern bank, kept as the oracle. Everything either
+  * emits is a pure function of (bank, row), so it is deterministic under
+  * task retries and AQE re-planning. The bank's dense
   * DFA tables are compiled once on the driver and read-shared by all tasks
   * of an executor — at 1000 executors pattern compilation stays O(1).
   *
@@ -143,9 +143,10 @@ object Parse {
   }
 
   /** The typed mapPartitions stage — retained as the independently-coded
-    * oracle and the streaming path; the batch pipeline runs the
-    * expression-based [[expr]] below (same semantics, asserted equal in
-    * PipelineSpec, ~10× less per-row allocation).
+    * ORACLE (perfbench's output check, `Verify.stageTypedParse` and the
+    * specs call it); every production path — batch pipeline and streaming —
+    * runs the expression-based [[expr]] below (same semantics, asserted
+    * equal in PipelineSpec and StreamingSpec, ~10× less per-row allocation).
     */
   def apply(turns: Dataset[Turn], bank: Broadcast[PatternBank]): Dataset[ParsedTurn] = {
     val spark = turns.sparkSession

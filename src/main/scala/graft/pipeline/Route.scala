@@ -2,7 +2,6 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
 
 /** P4 — route / fan-out stage: ONE pass over the parsed+enriched rows,
   * written with `partitionBy("category")` into the four per-category sinks
@@ -19,9 +18,10 @@ import org.apache.spark.util.LongAccumulator
   *    deterministic salt spreads one conversation over at most SaltBuckets
   *    tasks while typical conversations stay co-resident. AQE fixes skewed
   *    joins, not skewed writes, hence the manual salt.
-  *  - Per-sink counts come from one map-side-partial groupBy on the cached
-  *    rows (metadata-light), not from per-row accumulator maps that would
-  *    force an extra row-codec round trip per sink.
+  *  - Per-sink counts come from `observe()` aggregates on the write pass
+  *    itself (`RunPipeline.run`): no second job over the rows, and no
+  *    per-row accumulator maps that would force an extra row-codec round
+  *    trip per sink.
   */
 object Route {
 

@@ -6,8 +6,8 @@ import graft.lexer.PatternBank
 import graft.schema.SchemaConfig
 
 /** End-to-end job: scan → parse → enrich → route (4 sinks) → aggregates,
-  * with checkpoint/resume and metrics accumulators. `main` is the
-  * spark-submit entry used by the scaling benchmark:
+  * with checkpoint/resume and per-sink counts observed on the route pass.
+  * `main` is the spark-submit entry used by the scaling benchmark:
   *
   *   RunPipeline <nConvs> <outDir> [cores] [schemaYamlPath]
   */
@@ -44,9 +44,9 @@ object RunPipeline {
   }
 
   /** Run the full pipeline over an input Dataset[Turn]. Sinks land in
-    * `outDir/<category>`; committed sinks are skipped on resume.
-    */
-  /** @param sinkMode "parquet" (real partitioned sinks) or "noop" (full
+    * `outDir/category=<category>`; committed sinks are skipped on resume.
+    *
+    * @param sinkMode "parquet" (real partitioned sinks) or "noop" (full
     *   computation — shuffle, parse, enrich, row materialization — into
     *   Spark's noop writer; exact per-sink counts still come from the same
     *   pass via `observe`). noop is the disk-independent configuration the
@@ -58,19 +58,19 @@ object RunPipeline {
           schema: SchemaConfig = SchemaConfig.example,
           fingerprint: String = "",
           sinkMode: String = "parquet"): Result = {
-    val sc = spark.sparkContext
     // The compiled bank rides inside ParseTurnExpression in the plan; Spark
     // broadcasts the serialized task binary once per stage, so the dense DFA
     // tables still ship O(stages), not O(tasks) — no separate
     // sparkContext.broadcast needed on the expression path (the typed oracle
     // path in Parse.apply keeps one).
     val bank = PatternBank.compile(schema)
-
-    val turnsIn = sc.longAccumulator("turns_in")
-    val counters = Category.All.map(c => c -> sc.longAccumulator(s"rows_routed_$c")).toMap
-
-    import spark.implicits._
     val partitions = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // salted repartition of the RAW turns (cheap representation through the
+    // shuffle), expression-based parse after placement is fixed (the heavy
+    // token arrays never move and rows never leave Tungsten form),
+    // broadcast-enrich. Lazy: a fully resumed parquet run never plans it.
+    lazy val enriched = Enrich(Parse.expr(Route.salted(turns.toDF(), partitions), bank),
+      SyntheticTranscripts.dimTool(spark), SyntheticTranscripts.dimRole(spark))
 
     val ckpt = new Checkpoint(outDir, fingerprint)
     // noop sinks write nothing durable, so they must neither consult nor
@@ -81,17 +81,11 @@ object RunPipeline {
 
     val t0 = System.nanoTime()
     var observedCounts = Map.empty[String, Long]
+    var turnsIn = 0L
     if (pending.nonEmpty) {
-      // ONE pass: salted repartition of the RAW turns (cheap representation
-      // through the shuffle), expression-based parse after placement is
-      // fixed (the heavy token arrays never move and rows never leave
-      // Tungsten form), broadcast-enrich, partitioned write. Per-sink
-      // counts and the rows-in metric ride the same pass via observe().
-      val salted = Route.salted(turns.toDF(), partitions)
-      val parsed = Parse.expr(salted, bank)
-      val enriched = Enrich(parsed,
-        SyntheticTranscripts.dimTool(spark), SyntheticTranscripts.dimRole(spark))
-
+      // ONE pass: the enriched rows go straight to the partitioned write;
+      // per-sink counts and the rows-in metric ride the same pass via
+      // observe().
       import org.apache.spark.sql.functions.{col, count, lit, sum, when}
       val obs = org.apache.spark.sql.Observation()
       val countAggs = count(lit(1)).as("_turns_in") +: Category.All.map(c =>
@@ -104,14 +98,10 @@ object RunPipeline {
         Route.writePartitioned(observed, outDir, pending)
 
       val metrics = obs.get
-      turnsIn.add(metrics.get("_turns_in").map(_.asInstanceOf[Long]).getOrElse(0L))
+      turnsIn = metrics.get("_turns_in").map(_.asInstanceOf[Long]).getOrElse(0L)
       observedCounts = Category.All.map(c =>
         c -> metrics.get(c).map(_.asInstanceOf[Long]).getOrElse(0L)).toMap
-      pending.foreach { c =>
-        val n = observedCounts.getOrElse(c, 0L)
-        counters.get(c).foreach(_.add(n))
-        if (sinkMode != "noop") ckpt.commitSink(c, n)
-      }
+      if (sinkMode != "noop") pending.foreach(c => ckpt.commitSink(c, observedCounts(c)))
     }
     val routeSecs = (System.nanoTime() - t0) / 1e9
     val routedCounts =
@@ -120,20 +110,15 @@ object RunPipeline {
 
     // aggregates: parquet mode reads the durable sinks back (column pruning
     // reads a handful of scalar columns, not the token arrays); noop mode
-    // recomputes from the logical pipeline
+    // recomputes from the same logical pipeline
     val ta = System.nanoTime()
-    val aggSource =
-      if (sinkMode == "noop") {
-        val salted = Route.salted(turns.toDF(), partitions)
-        Enrich(Parse.expr(salted, bank),
-          SyntheticTranscripts.dimTool(spark), SyntheticTranscripts.dimRole(spark))
-      } else spark.read.parquet(outDir)
+    val aggSource = if (sinkMode == "noop") enriched else spark.read.parquet(outDir)
     val perTool = Aggregate.perTool(aggSource)
     val perConv = Aggregate.perConversation(aggSource)
     val nt = perTool.count()
     val nc = perConv.count()
     val aggSecs = (System.nanoTime() - ta) / 1e9
-    Result(routedCounts, perTool, perConv, nt, nc, turnsIn.value, routeSecs, aggSecs)
+    Result(routedCounts, perTool, perConv, nt, nc, turnsIn, routeSecs, aggSecs)
   }
 
   /** Stage the synthetic transcript table as parquet (the "Iceberg table"
@@ -164,9 +149,6 @@ object RunPipeline {
 
     val spark = sparkSession(cores)
     spark.sparkContext.setLogLevel("WARN")
-    val stageMetrics = if (sys.env.contains("GRAFT_STAGES")) {
-      val l = new StageMetrics; spark.sparkContext.addSparkListener(l); Some(l)
-    } else None
     try {
       // input staged once (untimed), shared across scaling runs
       val inDir = s"/tmp/graft-input-$nConvs"
@@ -188,7 +170,6 @@ object RunPipeline {
         f"tools=${res.nTools} convStats=${res.nConversations} mode=$sinkMode " +
         f"route=${res.routeSecs}%.2fs agg=${res.aggSecs}%.2fs wall=$secs%.2fs " +
         f"thru=${turnsTotal / math.max(res.routeSecs, 0.001)}%.0f turns/s")
-      stageMetrics.foreach(l => print(l.report()))
     } finally spark.stop()
   }
 }

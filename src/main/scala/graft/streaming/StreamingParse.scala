@@ -1,17 +1,17 @@
 package graft.streaming
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.lexer.PatternBank
-import graft.pipeline.{Category, Parse, ParsedTurn, Turn}
+import graft.pipeline.{Parse, Turn}
 
 /** Structured Streaming face of the engine: the reference's pluggable
-  * pull-stream input (/root/reference/src/lexer/lexer_stream.rs:3-5) maps to
-  * `readStream` over the same transcript table layout; the SAME pure parse
-  * function runs inside the streaming plan, so batch and streaming parses
-  * are equal by construction (asserted in StreamingSpec).
+  * pull-stream input (`src/lexer/lexer_stream.rs:3-5`) maps to `readStream`
+  * over the same transcript table layout; the SAME `parse_turn` expression
+  * the batch pipeline runs is inside the streaming plan, so batch and
+  * streaming parses are equal by construction (asserted in StreamingSpec
+  * against the typed batch oracle `Parse.apply`).
   */
 object StreamingParse {
 
@@ -25,27 +25,20 @@ object StreamingParse {
       .as[Turn]
   }
 
-  /** Streaming parse, typed path: identical mapPartitions + broadcast bank
-    * as batch P2 (kept as the streaming oracle, like in batch).
+  /** Streaming parse: the same whole-stage-codegen `parse_turn` the batch
+    * pipeline runs ([[Parse.expr]]) — micro-batch plans get the
+    * zero-allocation kernel too.
     */
-  def parsedStream(turns: Dataset[Turn], bank: Broadcast[PatternBank]): Dataset[ParsedTurn] =
-    Parse(turns, bank)
-
-  /** Streaming parse, expression path: the same whole-stage-codegen
-    * `parse_turn` the batch pipeline runs — micro-batch plans get the
-    * zero-allocation kernel too. Equality with the typed path is asserted
-    * in StreamingSpec.
-    */
-  def parsedStreamExpr(turns: DataFrame, bank: PatternBank): DataFrame =
+  def parsedStream(turns: DataFrame, bank: PatternBank): DataFrame =
     Parse.expr(turns, bank)
 
   /** Watermarked tumbling-window per-category counts — the streaming
     * analogue of the route-stage counts.
     */
-  def windowedCategoryCounts(parsed: Dataset[ParsedTurn],
+  def windowedCategoryCounts(parsed: DataFrame,
                              watermark: String = "10 minutes",
                              windowLen: String = "1 hour"): DataFrame =
-    parsed.toDF()
+    parsed
       .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), windowLen), col("category"))
       .agg(count(lit(1)).as("n_turns"), sum("n_errors").as("n_errors"))
@@ -88,22 +81,25 @@ object StreamingParse {
       .drop("_th", "_tc", "_tl")
 
   /** Custom streaming state via mapGroupsWithState: running per-conversation
-    * turn/error counters (the stateful-operator surface of the engine).
+    * turn/error counters (the stateful-operator surface of the engine). The
+    * state function sees only the slim (conv_id, turn_idx, n_errors)
+    * projection, never the token arrays.
     */
-  def conversationProgress(parsed: Dataset[ParsedTurn]): Dataset[ConvProgress] = {
+  def conversationProgress(parsed: DataFrame): Dataset[ConvProgress] = {
     val spark = parsed.sparkSession
     import spark.implicits._
-    parsed.groupByKey(_.conv_id)
+    parsed.select("conv_id", "turn_idx", "n_errors").as[(String, Int, Int)]
+      .groupByKey(_._1)
       .mapGroupsWithState[ConvProgress, ConvProgress](GroupStateTimeout.NoTimeout()) {
         case (convId, turns, state: GroupState[ConvProgress]) =>
           val prev = state.getOption.getOrElse(ConvProgress(convId, 0L, 0L, -1))
           var n = prev.turns_seen
           var errs = prev.errors_seen
           var last = prev.last_turn_idx
-          turns.foreach { t =>
+          turns.foreach { case (_, turnIdx, nErrors) =>
             n += 1
-            errs += t.n_errors
-            if (t.turn_idx > last) last = t.turn_idx
+            errs += nErrors
+            if (turnIdx > last) last = turnIdx
           }
           val next = ConvProgress(convId, n, errs, last)
           state.update(next)

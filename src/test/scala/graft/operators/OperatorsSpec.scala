@@ -130,16 +130,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.conf.set(Dedup.AutoStageMinDocsConf, "1000000000")
       val stillLazy = Dedup.minhashPairs(docsDup, threshold = 0.8)
       assert(!stillLazy.queryExecution.executedPlan.toString.contains("graft-autostage"))
-
-      // conf off → not even the count probe's staging can fire
-      spark.conf.set(Dedup.AutoStageMinDocsConf, "1")
-      spark.conf.set(Dedup.AutoStageConf, "false")
-      val off = Dedup.minhashPairs(docsDup, threshold = 0.8)
-      assert(!off.queryExecution.executedPlan.toString.contains("graft-autostage"))
-    } finally {
-      spark.conf.unset(Dedup.AutoStageMinDocsConf)
-      spark.conf.unset(Dedup.AutoStageConf)
-    }
+    } finally spark.conf.unset(Dedup.AutoStageMinDocsConf)
   }
 
   test("dedup staging refuses a non-empty directory (an earlier frame may still read it)") {
@@ -244,7 +235,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // sample, every cluster is represented and recall stays high.
     import spark.implicits._
     val n = 2000L
-    val corr = spark.range(n).map(id => (id, graft.AnnScaleBench.vecCorrelated(id, n, 16, 8)))
+    val corr = spark.range(n).map(id => (id, graft.SyntheticVectors.vecCorrelated(id, n, 16, 8)))
       .toDF("vec_id", "embedding")
     val q = corr.filter(col("vec_id") % 250 === 0) // one probe per cluster block
     val brute = Similarity.bruteForceKnn(corr, q, k = 5).collect()
@@ -327,7 +318,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("distributed IVF trainer: partition-invariant centroids, recall parity on correlated ids") {
     import spark.implicits._
     val n = 2000L
-    val corr = spark.range(n).map(id => (id, graft.AnnScaleBench.vecCorrelated(id, n, 16, 8)))
+    val corr = spark.range(n).map(id => (id, graft.SyntheticVectors.vecCorrelated(id, n, 16, 8)))
       .toDF("vec_id", "embedding")
     // fixed-point accumulation makes the reduction associative-exact: the
     // same corpus under different partitionings must train BIT-IDENTICAL
@@ -351,7 +342,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("distributed IVF trainer: hash-slice subsample is deterministic; small corpora degrade to fewer cells") {
     import spark.implicits._
     val n = 2000L
-    val corr = spark.range(n).map(id => (id, graft.AnnScaleBench.vecCorrelated(id, n, 16, 8)))
+    val corr = spark.range(n).map(id => (id, graft.SyntheticVectors.vecCorrelated(id, n, 16, 8)))
       .toDF("vec_id", "embedding")
     val a = Similarity.ivfTrainDistributed(corr, nCells = 8, sampleFraction = 0.5)
     val b = Similarity.ivfTrainDistributed(corr, nCells = 8, sampleFraction = 0.5)
@@ -374,7 +365,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("two-level IVF: partition-invariant model, routed recall on clustered ids, staged round trip") {
     import spark.implicits._
     val n = 2000L
-    val corr = spark.range(n).map(id => (id, graft.AnnScaleBench.vecCorrelated(id, n, 16, 8)))
+    val corr = spark.range(n).map(id => (id, graft.SyntheticVectors.vecCorrelated(id, n, 16, 8)))
       .toDF("vec_id", "embedding")
     def flatEq(a: Similarity.IvfTwoLevel, b: Similarity.IvfTwoLevel): Boolean =
       a.superCentroids.zip(b.superCentroids).forall { case (x, y) => java.util.Arrays.equals(x, y) } &&
@@ -411,7 +402,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("two-level IVF-PQ: routed compressed path recalls on clustered ids, staged ≡ in-memory") {
     import spark.implicits._
     val n = 2000L
-    val corr = spark.range(n).map(id => (id, graft.AnnScaleBench.vecCorrelated(id, n, 16, 8)))
+    val corr = spark.range(n).map(id => (id, graft.SyntheticVectors.vecCorrelated(id, n, 16, 8)))
       .toDF("vec_id", "embedding")
     val m = Similarity.ivfTrainTwoLevel(corr, nCells = 16, nSuper = 4)
     val pq = Similarity.pqTrainTwoLevel(corr, m, nSub = 8, k = 16)
@@ -465,7 +456,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val n = 2000L
     def skewVec(id: Long): Array[Float] = {
       val cluster = if (id < 1800) 0 else 1 + (id % 7).toInt
-      graft.AnnScaleBench.vecCorrelated(cluster.toLong * 250 + id % 250, n, 16, 8)
+      graft.SyntheticVectors.vecCorrelated(cluster.toLong * 250 + id % 250, n, 16, 8)
     }
     val corpus = spark.range(n).map(id => (id, skewVec(id))).toDF("vec_id", "embedding")
     val m = Similarity.ivfTrainTwoLevel(corpus, nCells = 8, nSuper = 2, maxPerSuper = 64)
@@ -503,7 +494,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("filtered ANN: every neighbor satisfies the predicate; recall holds vs brute over the filtered corpus") {
     import spark.implicits._
     val n = 2000L
-    val corr = spark.range(n).map(id => (id, graft.AnnScaleBench.vecCorrelated(id, n, 16, 8)))
+    val corr = spark.range(n).map(id => (id, graft.SyntheticVectors.vecCorrelated(id, n, 16, 8)))
       .toDF("vec_id", "embedding")
     val m = Similarity.ivfTrainTwoLevel(corr, nCells = 16, nSuper = 4)
     val idx = Similarity.ivfIndexTwoLevel(corr, m)
@@ -534,7 +525,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("filtered ANN, compressed path: semi-join cuts code rows pre-ADC, no leaks, recall holds") {
     import spark.implicits._
     val n = 2000L
-    val corr = spark.range(n).map(id => (id, graft.AnnScaleBench.vecCorrelated(id, n, 16, 8)))
+    val corr = spark.range(n).map(id => (id, graft.SyntheticVectors.vecCorrelated(id, n, 16, 8)))
       .toDF("vec_id", "embedding")
     val m = Similarity.ivfTrainTwoLevel(corr, nCells = 16, nSuper = 4)
     val pq = Similarity.pqTrainTwoLevel(corr, m, nSub = 8, k = 16)
@@ -558,7 +549,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("index compaction: appended supers collapse to target file count, query results identical") {
     import spark.implicits._
     val n = 2000L
-    val corr = spark.range(n).map(id => (id, graft.AnnScaleBench.vecCorrelated(id, n, 16, 8)))
+    val corr = spark.range(n).map(id => (id, graft.SyntheticVectors.vecCorrelated(id, n, 16, 8)))
       .toDF("vec_id", "embedding")
     val base = corr.filter(col("vec_id") % 10 =!= 0)
     val m = Similarity.ivfTrainTwoLevel(base, nCells = 16, nSuper = 4)

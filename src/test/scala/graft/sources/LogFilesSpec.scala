@@ -136,7 +136,7 @@ class LogFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the region by less than one chunk). Only a single event larger than
     // chunkBytes can grow a region beyond that — the documented contract.
     val dir = java.nio.file.Files.createTempDirectory("graft-region-bound")
-    graft.LogSplitBench.writeLog(dir.resolve("big.log"), 4)
+    graft.datagen.SyntheticLogs.writeLog(dir.resolve("big.log"), 4)
     val bank = spark.sparkContext.broadcast(PatternBank.example)
     val chunkBytes = 128L << 10
     val metas = LogFiles.chunkIndex(spark, s"$dir/big.log", bank, chunkBytes).collect().toSeq
@@ -145,6 +145,19 @@ class LogFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     val maxLen = regions.map(r => r.end - r.start).max
     assert(maxLen <= 2 * chunkBytes,
       s"region of $maxLen bytes exceeds 2×chunkBytes=$chunkBytes")
+  }
+
+  test("synthetic l1 log content is pinned: the /tmp copy is cached by name across processes") {
+    // SparkEntry.l1LogPath reuses /tmp/graft-l1-<mb>.log if it exists, so a
+    // content change to the generator would be served stale; rename the
+    // cache file together with this value
+    val p = java.nio.file.Files.createTempFile("graft-l1-pin", ".log")
+    try {
+      graft.datagen.SyntheticLogs.writeLog(p, 1)
+      val crc = new java.util.zip.CRC32()
+      crc.update(java.nio.file.Files.readAllBytes(p))
+      assert((crc.getValue, java.nio.file.Files.size(p)) == (378856923L, 1048579L))
+    } finally java.nio.file.Files.delete(p)
   }
 
   test("within-file split property: random logs × minimal chunks equal the single-task parse") {

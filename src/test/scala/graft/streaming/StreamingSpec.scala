@@ -30,8 +30,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     SyntheticTranscripts.generate(spark, 80L).repartition(6).write.mode("overwrite").parquet(dir)
     val bank = spark.sparkContext.broadcast(PatternBank.example)
 
-    val stream = StreamingParse.windowedCategoryCounts(
-      StreamingParse.parsedStream(StreamingParse.turnsStream(spark, dir, maxFilesPerTrigger = 2), bank))
+    val stream = StreamingParse.windowedCategoryCounts(StreamingParse.parsedStream(
+      StreamingParse.turnsStream(spark, dir, maxFilesPerTrigger = 2).toDF(), PatternBank.example))
     val q = stream.writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
       .format("memory").queryName("cat_counts")
@@ -59,7 +59,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-route-ckpt").toString
     SyntheticTranscripts.generate(spark, 60L).repartition(4).write.mode("overwrite").parquet(in)
 
-    val parsed = StreamingParse.parsedStreamExpr(
+    val parsed = StreamingParse.parsedStream(
       StreamingParse.turnsStream(spark, in, maxFilesPerTrigger = 2).toDF(), PatternBank.example)
       .select("conv_id", "turn_idx", "category", "n_tokens")
     val q = StreamingParse.routeStream(parsed, out, ckpt)
@@ -76,12 +76,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got == want)
   }
 
-  test("expression-path streaming parse equals the typed streaming path") {
+  test("streaming parse equals the typed batch oracle Parse.apply") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-stream-expr").toString
     SyntheticTranscripts.generate(spark, 40L).repartition(4).write.mode("overwrite").parquet(dir)
 
-    val exprStream = StreamingParse.parsedStreamExpr(
+    val exprStream = StreamingParse.parsedStream(
       StreamingParse.turnsStream(spark, dir, maxFilesPerTrigger = 2).toDF(), PatternBank.example)
       .select("conv_id", "turn_idx", "n_tokens", "n_errors", "category")
     val q = exprStream.writeStream
@@ -134,8 +134,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     SyntheticTranscripts.generate(spark, 30L).repartition(5).write.mode("overwrite").parquet(dir)
     val bank = spark.sparkContext.broadcast(PatternBank.example)
 
-    val progress = StreamingParse.conversationProgress(
-      StreamingParse.parsedStream(StreamingParse.turnsStream(spark, dir, maxFilesPerTrigger = 1), bank))
+    val progress = StreamingParse.conversationProgress(StreamingParse.parsedStream(
+      StreamingParse.turnsStream(spark, dir, maxFilesPerTrigger = 1).toDF(), PatternBank.example))
     val q = progress.toDF().writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
       .format("memory").queryName("conv_progress")
@@ -206,7 +206,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     import graft.operators.Similarity
     val n = 2000L
-    val corr = spark.range(n).map(id => (id, graft.AnnScaleBench.vecCorrelated(id, n, 16, 8)))
+    val corr = spark.range(n).map(id => (id, graft.SyntheticVectors.vecCorrelated(id, n, 16, 8)))
       .toDF("vec_id", "embedding")
     val m = Similarity.ivfTrainTwoLevel(corr, nCells = 16, nSuper = 4)
     val stage = graft.pipeline.Staging.tempDir("graft-serve-test")
@@ -246,7 +246,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // parallel region parse), never one whole-file task
     val chunkBytes = 256L << 10
     val tmp = java.nio.file.Paths.get(dir, ".big.log.tmp")
-    graft.LogSplitBench.writeLog(tmp, 8)
+    graft.datagen.SyntheticLogs.writeLog(tmp, 8)
     java.nio.file.Files.move(tmp, java.nio.file.Paths.get(dir, "big.log"),
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     // preconditions gate: chunkIndex REQUIRES the newline-safe schema — its
