@@ -41,10 +41,11 @@ object Bench {
   // EVERY registered query is timed per-round: an unbenched operator is
   // regression-invisible (round 3's s2 regression was caught only because
   // s2 was benched; 16 rows were still blind through round 4). The list is
-  // ordered explicitly — NOT derived from the queries map — so that shared
-  // memoized staging (d3/d4 collapse frames, the d9-d11 truth set, the
-  // s2-s8 index dirs) is paid by the same row across rounds and per-row
-  // deltas stay comparable; new rows append at the end. BenchSpec asserts
+  // ordered explicitly — NOT derived from the queries map — so that each
+  // shared SparkEntry artifact (the d3/d4/d5 pair sets, the d9-d11 truth
+  // set, the trained ANN models, indexes and top-k sets, the l1 chunk
+  // index) is built by the same first-touching row across rounds and
+  // per-row deltas stay comparable; new rows append at the end. BenchSpec asserts
   // this list covers SparkEntry.queries exactly, so the blind spot cannot
   // silently reopen.
   val HeadlineQueries: Seq[String] = Seq(

@@ -103,7 +103,8 @@ object GraftExtensions {
   val jaccardSortedDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
     (FunctionIdentifier("jaccard_sorted"),
       info("jaccard_sorted",
-        "jaccard_sorted(a, b) - exact Jaccard of two sorted-distinct BIGINT arrays"),
+        "jaccard_sorted(a, b) - exact Jaccard of two sorted-distinct BIGINT arrays; " +
+          "unsorted or duplicated input undercounts the intersection"),
       arity("jaccard_sorted", 2)(args => graft.functions.JaccardSorted(args(0), args(1))))
 
   val parseTurnDesc: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =

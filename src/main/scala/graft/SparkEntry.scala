@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.datagen.SyntheticTranscripts
 import graft.lexer.PatternBank
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
-import graft.pipeline.{Aggregate, Enrich, Parse, Route}
+import graft.pipeline.{Aggregate, Enrich, Parse, Route, Staging}
+import graft.sources.LogFiles
 
 /** Driver contract: one `queries` entry per implemented operator
   * (SURVEY.md §2 inventory), with equivalent DuckDB SQL in `oracleSql`
@@ -69,27 +70,54 @@ object SparkEntry {
       SyntheticTranscripts.dimTool(spark), SyntheticTranscripts.dimRole(spark))
   }
 
-  /** One staged ANN index per (corpus, method): the index is a DATASET
-    * artifact, so s2 and the s4 recall gate (and repeated bench runs in
-    * one JVM) share the same parquet index instead of rebuilding it per
-    * query construction — index once, query many, within the process too.
-    * The key includes the corpus plan's semantic hash AND the session
-    * identity: keying on the sf dir alone would silently serve a stale
-    * index to a caller passing a DIFFERENT embeddings frame for the same
-    * dir (or a frame bound to a new session). Dirs are removed at JVM exit.
+  /** The artifact memo: the one staging mechanism ahead of `queries`. Every
+    * staged intermediate — the trained ANN models, the ANN indexes, the
+    * bucketed vector table, the shared pair, top-k and truth sets, the l1
+    * chunk index and q21's result — is a directory built at most once per
+    * (name, sf dir, session) and removed at JVM exit; nothing persists
+    * across processes.
+    *
+    * Why stage: a frame referenced by k gate rows × m aggregation branches
+    * is otherwise re-executed k·m times (round 6 re-ran the same
+    * brute-force truth subtree 14× and the d3 pair plan 3× per bench pass);
+    * the trainers are deterministic functions of (corpus, params), so a
+    * second run is waste; and a query rebuilt in a loop would otherwise
+    * allocate a dir and a write job per call. The build runs inside the
+    * first touching row's timed region (`Bench.HeadlineQueries` fixes which
+    * row that is).
+    *
+    * The key: every caller reads the sf dir's own tables, so the dir names
+    * the content. The session is in the key because an artifact is read
+    * back in its caller's session, so a new session pays its own staging;
+    * two sessions whose identity hashes collide can at worst share
+    * same-content parquet.
+    *
+    * Builds nest (a top-k set stages its index, which stages its model) and
+    * `computeIfAbsent` forbids recursive updates of one map, so the map only
+    * inserts a lazy [[Artifact]] and the build runs outside it, under that
+    * artifact's own lock. A build that throws is removed, so the next caller
+    * retries. Each build prints one `[graft-stage] <name> <secs>` line on
+    * stderr (wall time, nested builds included).
     */
-  private val annIndexCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def cachedIndexDir(method: String, corpus: DataFrame)(build: String => Unit): String = {
-    val key = method + ":" + corpus.queryExecution.analyzed.semanticHash() +
-      ":" + System.identityHashCode(corpus.sparkSession)
-    annIndexCache.computeIfAbsent(key, { _ =>
-      val d = graft.pipeline.Staging.tempDirDeletedOnExit("graft-ann-index")
+  private final class Artifact(build: => String) { lazy val dir: String = build }
+  private val artifacts =
+    new java.util.concurrent.ConcurrentHashMap[(String, String, Int), Artifact]()
+
+  private def staged(name: String, s: SparkSession, dir: String)(build: String => Unit): String = {
+    val key = (name, dir, System.identityHashCode(s))
+    val a = artifacts.computeIfAbsent(key, _ => new Artifact({
+      val d = Staging.tempDirDeletedOnExit(s"graft-$name")
       val t0 = System.nanoTime()
       build(d)
-      System.err.println(f"[graft-stage] index $method%-12s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
+      System.err.println(f"[graft-stage] $name ${(System.nanoTime() - t0) / 1e9}%.2f")
       d
-    })
+    }))
+    try a.dir catch { case e: Throwable => artifacts.remove(key, a); throw e }
   }
+
+  /** `df` staged as an artifact, read back in the caller's session. */
+  private def stagedFrame(name: String, s: SparkSession, dir: String)(df: => DataFrame): DataFrame =
+    s.read.parquet(staged(name, s, dir)(d => df.write.parquet(s"$d/out")) + "/out")
 
   /** Mean pair recall of a near-dup dedup path against the exact
     * char-5-shingle Jaccard truth set (the similarity MinHash approximates;
@@ -122,65 +150,6 @@ object SparkEntry {
       .agg(coalesce(max(col("n")), lit(0L)).as("mx"))
       .select((col("mx") > Dedup.TruthMaxBlock).as("truth_capped"))
 
-  /** Staged-query memo for the d3/d4 eager-staging builders: one staged
-    * frame per (query, sfDir, session). Without it, every invocation of the
-    * query builder allocated a fresh temp dir and ran the staging write job
-    * again — disk and work growing per call in a looping process.
-    */
-  private val stagedQueryCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private def cachedStagedQuery(name: String, spark: SparkSession, sfDir: String)
-                               (build: => DataFrame): DataFrame =
-    stagedQueryCache.computeIfAbsent(
-      s"$name:$sfDir:${System.identityHashCode(spark)}", _ => build)
-
-  /** Staged-parquet memo of a BOUNDED intermediate shared by several driver
-    * rows (truth pair sets, brute-force top-k truth, shipped pair outputs):
-    * built once per (name, sf dir, session), written to a JVM-exit-scoped
-    * temp dir, and read back as a slim parquet frame. Rationale (guide §1
-    * first-principles): a frame referenced by k gate rows × m aggregation
-    * branches is otherwise re-executed k·m times — the round-6 surface
-    * re-ran the SAME brute-force truth subtree 14× and the d3 pair plan 3×
-    * per bench pass. The staged results are small (≤ a few hundred rows),
-    * the job that produces them runs INSIDE the first touching row's timed
-    * region, and nothing persists across processes — same lifecycle as the
-    * d9 truth staging this generalizes.
-    */
-  private def stagedShared(name: String, s: SparkSession, dir: String)
-                          (build: => DataFrame): DataFrame =
-    cachedStagedQuery(name, s, dir) {
-      val d = graft.pipeline.Staging.tempDirDeletedOnExit(s"graft-$name")
-      val t0 = System.nanoTime()
-      build.write.mode("overwrite").parquet(s"$d/out")
-      System.err.println(f"[graft-stage] shared $name%-12s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
-      s.read.parquet(s"$d/out")
-    }
-
-  /** In-process memo for the tiny trained ANN models (centroid sets): s3/s6
-    * train the SAME flat 16-cell model and s9/s10 the SAME two-level model —
-    * the training passes over the corpus are deterministic pure functions of
-    * (corpus, params), so the second trainer run per process is pure waste.
-    * Keyed like [[annIndexCache]] (semantic hash + session identity).
-    */
-  private val modelCache = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]()
-  private def cachedModel[T <: AnyRef](method: String, corpus: DataFrame)(train: => T): T =
-    modelCache.computeIfAbsent(
-      method + ":" + corpus.queryExecution.analyzed.semanticHash() +
-        ":" + System.identityHashCode(corpus.sparkSession), _ => train).asInstanceOf[T]
-
-  /** The ANN gates' shared query batch: the 10 lowest-id vectors. */
-  private def q10(emb: DataFrame): DataFrame = emb.filter(col("vec_id") < 10)
-
-  /** The exact brute-force top-k truth (query_id, neighbor_id) that every
-    * unfiltered ANN recall gate compares against — one staged job instead of
-    * a re-executed corpus-scan subtree per gate × branch (s4/s5/s7/s8/s9/
-    * s10/s11 reference it 14× per full pass).
-    */
-  private def bruteTruth(s: SparkSession, dir: String): DataFrame =
-    stagedShared("brute-truth", s, dir) {
-      val emb = tbl(s, dir, "embeddings")
-      Similarity.bruteForceKnn(emb, q10(emb), k = 5).select("query_id", "neighbor_id")
-    }
-
   /** Scale factor parsed from the sf path segment (".../sf0.01" → 0.01;
     * last segment wins if several). Substring checks like
     * `dir.contains("0.1")` silently mis-sized on any path with those digits
@@ -200,162 +169,167 @@ object SparkEntry {
     case _ => 500L
   }
 
-  private val l1Gen = new java.util.concurrent.ConcurrentHashMap[Int, String]()
   /** l1 fixture: a deterministic synthetic hive-style .log file
     * ([[graft.datagen.SyntheticLogs.writeLog]] content — multi-line events,
     * ERROR lines) sized per sf dir, generated once into /tmp via an atomic
-    * move so concurrent processes can share it. Both the l1 query (split
-    * path) and Verify's oracle staging (whole-file path) parse THIS file.
+    * move so concurrent processes can share it (a cross-process file, not
+    * an artifact). Both the l1 query (split path) and Verify's oracle
+    * staging (whole-file path) parse THIS file.
     */
-  private[graft] def l1LogPath(dir: String): String = {
+  private[graft] def l1LogPath(dir: String): String = synchronized {
     val mb = sfOfDir(dir) match {
       case Some(sf) if sf >= 0.1 => 16
       case Some(sf) if sf >= 0.01 => 4
       case _ => 1
     }
-    l1Gen.computeIfAbsent(mb, { _ =>
-      val p = java.nio.file.Paths.get(s"/tmp/graft-l1-$mb.log")
-      if (!java.nio.file.Files.exists(p)) {
-        val tmp = java.nio.file.Paths.get(
-          s"/tmp/graft-l1-$mb.log.tmp-${ProcessHandle.current().pid()}")
-        graft.datagen.SyntheticLogs.writeLog(tmp, mb)
-        java.nio.file.Files.move(tmp, p,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-      p.toString
-    })
+    val p = java.nio.file.Paths.get(s"/tmp/graft-l1-$mb.log")
+    if (!java.nio.file.Files.exists(p)) {
+      val tmp = java.nio.file.Paths.get(
+        s"/tmp/graft-l1-$mb.log.tmp-${ProcessHandle.current().pid()}")
+      graft.datagen.SyntheticLogs.writeLog(tmp, mb)
+      java.nio.file.Files.move(tmp, p,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    }
+    p.toString
   }
 
-  /** The SHIPPED staged minhash/simhash pair plans — shared by the d3/d4
-    * raw-pair queries, the d9/d10 recall gates, and the d11 end-to-end
-    * pipeline query, so the gates grade exactly the plan users run. The
-    * pair OUTPUT (a few hundred slim rows) is itself staged: the d3 plan
-    * was otherwise re-executed by d9's hits branch and d11's cluster input
-    * (3 full LSH pipelines per bench pass for one result), and d4's by d10.
-    * The shipped plan still runs end to end — exactly once.
+  /** The d9/d10/d11 truth set: three gates share one O(n²)-within-block
+    * truth job (measured ~5 s each at sf0.1 when each gate derived it).
+    */
+  private def truthPairs(s: SparkSession, dir: String): DataFrame =
+    stagedFrame("truth", s, dir) {
+      Dedup.shingleJaccardPairs(docsWithDups(s, dir)).select("id_a", "id_b")
+    }
+
+  /** The SHIPPED staged minhash/simhash pair outputs — shared by the d3/d4
+    * raw-pair queries, the d9/d10 recall gates and the d11 pipeline query,
+    * so the gates grade exactly the plan users run, and that plan runs once
+    * (d9's hits branch and d11's cluster input re-ran it otherwise). The d5
+    * n-gram pair set is shared the same way by d5 and d8.
     */
   private def d3Pairs(s: SparkSession, dir: String): DataFrame =
-    stagedShared("d3-pairs", s, dir) {
+    stagedFrame("d3-pairs", s, dir) {
       Dedup.minhashPairs(docsWithDups(s, dir), threshold = 0.8,
-        stagingDir = Some(graft.pipeline.Staging.tempDirDeletedOnExit("graft-d3-stage")))
+        stagingDir = Some(Staging.tempDirDeletedOnExit("graft-d3-stage")))
     }
 
   private def d4Pairs(s: SparkSession, dir: String): DataFrame =
-    stagedShared("d4-pairs", s, dir) {
+    stagedFrame("d4-pairs", s, dir) {
       Dedup.simhashPairs(docsWithDups(s, dir), maxHamming = 3,
-        stagingDir = Some(graft.pipeline.Staging.tempDirDeletedOnExit("graft-d4-stage")))
+        stagingDir = Some(Staging.tempDirDeletedOnExit("graft-d4-stage")))
     }
 
-  /** The d5/d8 shared n-gram Jaccard pair set: d8 clusters exactly the d5
-    * pair output, but each row previously re-ran the full blocked all-pairs
-    * job. Staged once (the first touching row pays), read twice.
-    */
   private def d5Pairs(s: SparkSession, dir: String): DataFrame =
-    stagedShared("d5-pairs", s, dir) {
+    stagedFrame("d5-pairs", s, dir) {
       Dedup.ngramJaccardPairs(docsWithDups(s, dir), n = 3, threshold = 0.5)
     }
 
-  /** The d9/d10/d11 truth set, computed ONCE per (sf dir, session) and
-    * staged to parquet: three gates share one O(n²)-within-block truth job
-    * instead of re-deriving it per query (measured ~5 s each at sf0.1).
+  private def emb(s: SparkSession, dir: String): DataFrame = tbl(s, dir, "embeddings")
+
+  /** The ANN gates' shared query batch: the 10 lowest-id vectors. */
+  private def q10(s: SparkSession, dir: String): DataFrame = emb(s, dir).filter(col("vec_id") < 10)
+
+  /** The exact brute-force top-k truth (query_id, neighbor_id) every
+    * unfiltered ANN recall gate compares against (s4/s5/s7/s8/s9/s10/s11).
     */
-  private def truthPairs(s: SparkSession, dir: String): DataFrame =
-    cachedStagedQuery("truth", s, dir) {
-      val d = graft.pipeline.Staging.tempDirDeletedOnExit("graft-truth")
-      Dedup.shingleJaccardPairs(docsWithDups(s, dir)).select("id_a", "id_b")
-        .write.mode("overwrite").parquet(s"$d/truth")
-      s.read.parquet(s"$d/truth")
+  private def bruteTruth(s: SparkSession, dir: String): DataFrame =
+    stagedFrame("brute-truth", s, dir) {
+      Similarity.bruteForceKnn(emb(s, dir), q10(s, dir), k = 5).select("query_id", "neighbor_id")
     }
 
-  /** The single staged copy of the bucketed vector table — the re-rank
-    * side every ANN method shares. One corpus, ONE staged copy: the LSH,
-    * IVF-PQ and two-level IVF-PQ builders each wrote their own identical
-    * copy (3 corpus passes + 3 × 64-partition writes for one artifact).
-    */
-  private def vectorsDir(emb: DataFrame): String =
-    cachedIndexDir("vectors", emb) { d =>
-      Similarity.vectorTableBucketed(emb).write.partitionBy("id_bucket").parquet(s"$d/vectors")
-    }
-
-  private def stagedVectors(emb: DataFrame): DataFrame =
-    emb.sparkSession.read.parquet(s"${vectorsDir(emb)}/vectors")
-
-  /** LSH kNN through a parquet-staged index (build once per corpus →
-    * persist → read → query), the driver-surface twin of Similarity's
-    * build/query split: slim (bucket, id) rows plus ONE copy of the
-    * vectors ([[vectorsDir]]), instead of nTables embedded copies.
-    */
-  private def stagedLshKnn(emb: DataFrame, q: DataFrame): DataFrame = {
-    val dir = cachedIndexDir("lsh", emb) { d =>
-      Similarity.lshIndex(emb, nBits = 4).write.parquet(s"$d/lsh")
-    }
-    val spark = emb.sparkSession
-    Similarity.lshKnnIndexed(spark.read.parquet(s"$dir/lsh"),
-      stagedVectors(emb), q, k = 5, nBits = 4)
-  }
-
-  /** Staged top-k result shared by a raw-kNN row and its recall gate (s2/s4,
-    * s3/s5, s6/s7, s9/{s9,s11}): the first touching row runs the shipped
-    * query plan end to end and stages the ≤ 50-row result; the gate grades
-    * that exact output instead of re-executing the whole probe pipeline.
-    */
-  private def sharedKnn(name: String, s: SparkSession, dir: String)
-                       (run: (DataFrame, DataFrame) => DataFrame): DataFrame =
-    stagedShared(name, s, dir) {
-      val emb = tbl(s, dir, "embeddings")
-      run(emb, q10(emb))
-    }
-
-  /** IVF kNN through a parquet-staged index + centroid model (shared per
-    * corpus like the LSH index). ONE staging recipe parameterized by the
-    * trainer: s3 (driver Lloyd) and s8 (executor-side Lloyd) must stay the
-    * SAME staged contract — index partitioned on cell (the probe join's
-    * broadcast side dynamically prunes the scan to the nProbe cells
-    * actually probed), centroid model beside it, k=5/nProbe=6 — or the
-    * s3-vs-s8 comparison stops meaning "same index, different trainer".
-    */
-  private def ivfStagedDir(method: String, emb: DataFrame)
-                          (train: DataFrame => Array[Array[Float]]): String =
-    cachedIndexDir(method, emb) { d =>
-      val cs = train(emb)
-      Similarity.ivfIndex(emb, cs).write.partitionBy("cell").parquet(s"$d/ivf")
-      Similarity.centroidsToDf(emb.sparkSession, cs).write.parquet(s"$d/centroids")
-    }
-
-  private def stagedIvfFrom(dir: String, spark: SparkSession, q: DataFrame): DataFrame =
-    Similarity.ivfKnnIndexed(
-      spark.read.parquet(s"$dir/ivf"),
-      Similarity.centroidsFromDf(spark.read.parquet(s"$dir/centroids")),
-      q, k = 5, nProbe = 6)
-
-  private def ivfDir(emb: DataFrame): String =
-    // model memoized: s6's IVF-PQ builder needs the SAME 16-cell centroids
-    ivfStagedDir("ivf", emb)(e => cachedModel("ivftrain16", e)(Similarity.ivfTrain(e, nCells = 16)))
-
-  private def stagedIvfKnn(emb: DataFrame, q: DataFrame): DataFrame =
-    stagedIvfFrom(ivfDir(emb), emb.sparkSession, q)
-
-  /** The centroid model of the staged IVF index the s3/s5 queries run
-    * against — Verify's sequential replay oracle scores candidates with the
-    * SAME model (the model is a dataset artifact; the replay pins the
-    * distributed index build + probe + re-rank machinery around it).
+  /** The trained ANN models, one training run per corpus: `ivf-model`
+    * (driver Lloyd, 16 cells) behind s3/s5/s6/s7, `ivfdist-model`
+    * (executor-side Lloyd) behind s8, `ivf2l-model` (16 cells under 4
+    * supers) behind s9–s13 (s11's appended index keeps its own base-trained
+    * model). Verify's s3/s6/s12 replays score with the SAME
+    * model: it is a dataset artifact, and the replays pin the distributed
+    * index build, probe and re-rank around it.
     */
   private[graft] def ivfModel(s: SparkSession, dir: String): Array[Array[Float]] =
-    Similarity.centroidsFromDf(
-      s.read.parquet(s"${ivfDir(tbl(s, dir, "embeddings"))}/centroids"))
+    Similarity.centroidsFromDf(stagedFrame("ivf-model", s, dir)(
+      Similarity.centroidsToDf(s, Similarity.ivfTrain(emb(s, dir), nCells = 16))))
 
-  /** IVF through the EXECUTOR-SIDE trainer (full-population distributed
-    * Lloyd) — the s8 gate puts the scale trainer on the driver correctness
-    * signal with the same staged contract as s3/s5 (shared recipe above).
+  private def ivfDistModel(s: SparkSession, dir: String): Array[Array[Float]] =
+    Similarity.centroidsFromDf(stagedFrame("ivfdist-model", s, dir)(
+      Similarity.centroidsToDf(s, Similarity.ivfTrainDistributed(emb(s, dir), nCells = 16))))
+
+  private[graft] def ivfTwoLevelModel(s: SparkSession, dir: String): Similarity.IvfTwoLevel =
+    Similarity.twoLevelFromDf(stagedFrame("ivf2l-model", s, dir)(
+      Similarity.twoLevelToDf(s, Similarity.ivfTrainTwoLevel(emb(s, dir), nCells = 16, nSuper = 4))))
+
+  /** The single staged copy of the bucketed vector table — the exact
+    * re-rank side every ANN method shares.
     */
-  private def stagedIvfDistKnn(emb: DataFrame, q: DataFrame): DataFrame =
-    stagedIvfFrom(
-      ivfStagedDir("ivfdist", emb)(Similarity.ivfTrainDistributed(_, nCells = 16)),
-      emb.sparkSession, q)
+  private def stagedVectors(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(staged("vectors", s, dir) { d =>
+      Similarity.vectorTableBucketed(emb(s, dir)).write.partitionBy("id_bucket").parquet(s"$d/vectors")
+    } + "/vectors")
 
-  /** TWO-LEVEL IVF through its staged contract (super-partitioned index +
-    * parquet model) — the s9 gate drives the hierarchical router end to
-    * end. Operating point: the validation corpus is near-random (no cluster
+  /** LSH top-k (s2/s4) through a staged index: slim (bucket, id) rows plus
+    * the shared vector table, instead of nTables embedded copies.
+    */
+  private def lshKnn(s: SparkSession, dir: String): DataFrame =
+    stagedFrame("knn-lsh", s, dir) {
+      Similarity.lshKnnIndexed(
+        stagedFrame("lsh", s, dir)(Similarity.lshIndex(emb(s, dir), nBits = 4)),
+        stagedVectors(s, dir), q10(s, dir), k = 5, nBits = 4)
+    }
+
+  /** IVF kNN through a cell-partitioned staged index (the probe join's
+    * broadcast side dynamically prunes the scan to the probed cells). ONE
+    * recipe for both trainers: s3 (driver Lloyd) and s8 (executor-side
+    * Lloyd) must stay the same staged contract, k=5/nProbe=6, or the
+    * s3-vs-s8 comparison stops meaning "same index, different trainer".
+    */
+  private def ivfKnn(s: SparkSession, dir: String, index: String,
+                     cs: Array[Array[Float]]): DataFrame = {
+    val d = staged(index, s, dir) { d =>
+      Similarity.ivfIndex(emb(s, dir), cs).write.partitionBy("cell").parquet(s"$d/ivf")
+    }
+    Similarity.ivfKnnIndexed(s.read.parquet(s"$d/ivf"), cs, q10(s, dir), k = 5, nProbe = 6)
+  }
+
+  /** The s3/s5 top-k set. */
+  private def knnIvf(s: SparkSession, dir: String): DataFrame =
+    stagedFrame("knn-ivf", s, dir)(ivfKnn(s, dir, "ivf", ivfModel(s, dir)))
+
+  /** IVF-PQ index over `ivf-model`'s cells: (cell, id, codes, norm) rows,
+    * cell-partitioned, scanned at nSub+4 = 20 B/vector (vs 260 B raw), with
+    * its codebooks beside them.
+    */
+  private def ivfPqDir(s: SparkSession, dir: String): String =
+    staged("ivfpq", s, dir) { d =>
+      val cs = ivfModel(s, dir)
+      val pq = Similarity.pqTrain(emb(s, dir), cs, nSub = 16, k = 16)
+      Similarity.ivfPqIndex(emb(s, dir), cs, pq).write.partitionBy("cell").parquet(s"$d/ivfpq")
+      Similarity.pqModelToDf(s, pq).write.parquet(s"$d/pqmodel")
+    }
+
+  /** Coarse + PQ models of the staged IVF-PQ index s6/s7 query. */
+  private[graft] def ivfPqModel(s: SparkSession, dir: String)
+      : (Array[Array[Float]], Similarity.PqModel) = {
+    val d = ivfPqDir(s, dir)
+    (ivfModel(s, dir), Similarity.pqModelFromDf(s.read.parquet(s"$d/pqmodel")))
+  }
+
+  /** The s6/s7 top-k set: compressed codes scanned, raw vectors touched
+    * only by the exact re-rank.
+    */
+  private def knnIvfPq(s: SparkSession, dir: String): DataFrame =
+    stagedFrame("knn-ivfpq", s, dir) {
+      val (cs, pq) = ivfPqModel(s, dir)
+      Similarity.ivfPqKnnIndexed(s.read.parquet(s"${ivfPqDir(s, dir)}/ivfpq"), cs, pq,
+        stagedVectors(s, dir),
+        // nSub=16 / rerank=40: the validation corpus is near-random vectors
+        // (weak neighbor structure), so ADC needs fine subspaces and a wide
+        // cut to reach the cell-miss-bounded ~0.72 recall raw IVF gets at the
+        // same nProbe (measured at sf0.01 AND sf0.1); 200 exact re-ranks per
+        // query is still negligible vs any corpus scan
+        q10(s, dir), k = 5, nProbe = 6, rerank = 40)
+    }
+
+  /** A two-level probe of a super-partitioned index, at the operating point
+    * s9–s12 share. The validation corpus is near-random (no cluster
     * structure for the router to exploit — supers are arbitrary Voronoi
     * cuts), so it probes 3 of 4 supers to stay at the flat path's
     * cell-miss-bounded recall; the regime the hierarchy EXISTS for (cells ≈
@@ -363,75 +337,48 @@ object SparkEntry {
     * 1 M-vector scale smoke since removed (BENCH/BASELINE.md keeps its
     * numbers).
     */
-  /** The two-level model on the full corpus — memoized: s9's index builder
-    * and s10's IVF-PQ composition train the IDENTICAL model (same corpus,
-    * same params); the second distributed-Lloyd run per process was waste.
-    */
-  private def twoLevelModel(emb: DataFrame): Similarity.IvfTwoLevel =
-    cachedModel("ivf2ltrain-16-4", emb)(Similarity.ivfTrainTwoLevel(emb, nCells = 16, nSuper = 4))
+  private def probeTwoLevel(s: SparkSession, dir: String, index: String,
+                            m: Similarity.IvfTwoLevel, allowed: Option[DataFrame]): DataFrame =
+    Similarity.ivfKnnTwoLevelFilteredIndexed(s.read.parquet(s"$index/ivf"), m, q10(s, dir),
+      allowed, k = 5, nProbe = 6, nProbeSuper = 3)
 
-  private def ivf2lDir(emb: DataFrame): String =
-    cachedIndexDir("ivf2l", emb) { d =>
-      val m = twoLevelModel(emb)
-      Similarity.ivfIndexTwoLevel(emb, m).write.partitionBy("super").parquet(s"$d/ivf")
-      Similarity.twoLevelToDf(emb.sparkSession, m).write.parquet(s"$d/model")
+  /** TWO-LEVEL IVF: `ivf2l-model` routes into a super-partitioned index.
+    * `allowed` is s12's metadata predicate (label < 5, read from the corpus
+    * table with an ordinary PUSHED-DOWN comparison that PlanSpec asserts in
+    * the scan's PushedFilters, standing in for a real retrieval's
+    * source/license/date attribute join), applied as a left-semi join on
+    * the candidate stream before any cosine is evaluated.
+    */
+  private def ivf2lKnn(s: SparkSession, dir: String, allowed: Option[DataFrame]): DataFrame = {
+    val d = staged("ivf2l", s, dir) { d =>
+      Similarity.ivfIndexTwoLevel(emb(s, dir), ivfTwoLevelModel(s, dir))
+        .write.partitionBy("super").parquet(s"$d/ivf")
     }
-
-  private def stagedIvfTwoLevelKnn(emb: DataFrame, q: DataFrame): DataFrame = {
-    val dir = ivf2lDir(emb)
-    Similarity.ivfKnnTwoLevelIndexed(
-      emb.sparkSession.read.parquet(s"$dir/ivf"),
-      Similarity.twoLevelFromDf(emb.sparkSession.read.parquet(s"$dir/model")),
-      q, k = 5, nProbe = 6, nProbeSuper = 3)
+    probeTwoLevel(s, dir, d, ivfTwoLevelModel(s, dir), allowed)
   }
 
-  /** The two-level model of the staged s9 index — the s12 replay oracle
-    * routes with the SAME model (same contract as [[ivfModel]]).
-    */
-  private[graft] def ivfTwoLevelModel(s: SparkSession, dir: String): Similarity.IvfTwoLevel =
-    Similarity.twoLevelFromDf(
-      s.read.parquet(s"${ivf2lDir(tbl(s, dir, "embeddings"))}/model"))
-
-  /** FILTERED ANN through s9's staged two-level index: the metadata
-    * predicate (label < 5 — the attribute is read from the corpus table
-    * and filtered with an ordinary PUSHED-DOWN comparison, standing in for
-    * the source/license/date attribute join of a real training-data
-    * retrieval; PlanSpec asserts it lands in the parquet scan's
-    * PushedFilters) lands as a left-semi join on the candidate stream
-    * before any cosine is evaluated. Same operating point as s9.
-    */
-  private def stagedIvfTwoLevelFilteredKnn(emb: DataFrame, q: DataFrame): DataFrame = {
-    val dir = ivf2lDir(emb)
-    val allowed = emb.filter(col("label") < 5).select(col("vec_id").as("id"))
-    Similarity.ivfKnnTwoLevelFilteredIndexed(
-      emb.sparkSession.read.parquet(s"$dir/ivf"),
-      Similarity.twoLevelFromDf(emb.sparkSession.read.parquet(s"$dir/model")),
-      q, Some(allowed), k = 5, nProbe = 6, nProbeSuper = 3)
-  }
+  /** The s9/s11 top-k set. */
+  private def knnIvf2l(s: SparkSession, dir: String): DataFrame =
+    stagedFrame("knn-ivf2l", s, dir)(ivf2lKnn(s, dir, None))
 
   /** INCREMENTAL APPEND lifecycle (s11): the index a daily-growing corpus
     * actually runs — train/build on the BASE 90% (vec_id % 10 != 0), then
     * route the 10% delta through the FROZEN parquet-round-tripped model and
     * `.mode("append")` it into the same super-partitioned layout. No
-    * retrain, no rebuild; readers see the union via partition pruning.
+    * retrain, no rebuild; readers see the union via partition pruning. The
+    * frozen model stays in the index dir: that round trip is what s11 tests.
     */
-  private def ivf2lAppendDir(emb: DataFrame): String =
-    cachedIndexDir("ivf2l-append", emb) { d =>
-      val base = emb.filter(col("vec_id") % 10 =!= 0)
+  private def ivf2lAppendKnn(s: SparkSession, dir: String): DataFrame = {
+    val d = staged("ivf2l-append", s, dir) { d =>
+      val base = emb(s, dir).filter(col("vec_id") % 10 =!= 0)
       val m = Similarity.ivfTrainTwoLevel(base, nCells = 16, nSuper = 4)
       Similarity.ivfIndexTwoLevel(base, m).write.partitionBy("super").parquet(s"$d/ivf")
-      Similarity.twoLevelToDf(emb.sparkSession, m).write.parquet(s"$d/model")
-      val mFrozen = Similarity.twoLevelFromDf(emb.sparkSession.read.parquet(s"$d/model"))
-      Similarity.ivfIndexTwoLevel(emb.filter(col("vec_id") % 10 === 0), mFrozen)
+      Similarity.twoLevelToDf(s, m).write.parquet(s"$d/model")
+      val mFrozen = Similarity.twoLevelFromDf(s.read.parquet(s"$d/model"))
+      Similarity.ivfIndexTwoLevel(emb(s, dir).filter(col("vec_id") % 10 === 0), mFrozen)
         .write.mode("append").partitionBy("super").parquet(s"$d/ivf")
     }
-
-  private def stagedIvfTwoLevelAppendKnn(emb: DataFrame, q: DataFrame): DataFrame = {
-    val dir = ivf2lAppendDir(emb)
-    Similarity.ivfKnnTwoLevelIndexed(
-      emb.sparkSession.read.parquet(s"$dir/ivf"),
-      Similarity.twoLevelFromDf(emb.sparkSession.read.parquet(s"$dir/model")),
-      q, k = 5, nProbe = 6, nProbeSuper = 3)
+    probeTwoLevel(s, dir, d, Similarity.twoLevelFromDf(s.read.parquet(s"$d/model")), None)
   }
 
   /** s11 gate row: (n_queries, recall_pass, staleness_pass). recall_pass =
@@ -445,10 +392,9 @@ object SparkEntry {
     */
   private def annAppendGate(s: SparkSession, dir: String, minRecall: Double,
                             staleMargin: Double): DataFrame = {
-    val emb = tbl(s, dir, "embeddings")
     // truth and the fresh-retrain side are the SAME staged frames the other
-    // gates use (s9's sharedKnn result IS the fresh two-level index's
-    // answer); only the appended-index probe runs here
+    // gates use (s9's top-k set IS the fresh two-level index's answer);
+    // only the appended-index probe runs here
     val brute = bruteTruth(s, dir)
     val stats = brute.agg(countDistinct("query_id").as("n_queries"), count(lit(1)).as("total"))
     def hits(df: DataFrame, as: String): DataFrame =
@@ -456,8 +402,8 @@ object SparkEntry {
         .join(brute, Seq("query_id", "neighbor_id"), "left_semi")
         .agg(count(lit(1)).as(as))
     stats
-      .crossJoin(hits(stagedIvfTwoLevelAppendKnn(emb, q10(emb)), "hits_app"))
-      .crossJoin(hits(sharedKnn("knn-ivf2l", s, dir)(stagedIvfTwoLevelKnn), "hits_fresh"))
+      .crossJoin(hits(ivf2lAppendKnn(s, dir), "hits_app"))
+      .crossJoin(hits(knnIvf2l(s, dir), "hits_fresh"))
       .select(col("n_queries"),
         when(col("total") === 0L, lit(true))
           .otherwise(col("hits_app").cast("double") / col("total") >= minRecall)
@@ -468,30 +414,22 @@ object SparkEntry {
           .as("staleness_pass"))
   }
 
-  /** The COMPOSED scale layout — two-level router over PQ codes — through
-    * its staged contract: super-partitioned compressed index, parquet
-    * model + codebooks, bucketed vector table for the exact re-rank. Same
-    * operating point as s7 (nSub=16, rerank=40) plus s9's routing.
+  /** The COMPOSED scale layout — `ivf2l-model`'s router over PQ codes:
+    * super-partitioned compressed index with its codebooks beside it, the
+    * shared vector table for the exact re-rank. Same operating point as s7
+    * (nSub=16, rerank=40) plus s9's routing.
     */
-  private def ivfPq2lDir(emb: DataFrame): String =
-    cachedIndexDir("ivfpq2l", emb) { d =>
-      val m = twoLevelModel(emb) // memoized — identical to s9's model
-      val pq = Similarity.pqTrainTwoLevel(emb, m, nSub = 16, k = 16)
-      Similarity.ivfPqIndexTwoLevel(emb, m, pq).write.partitionBy("super").parquet(s"$d/ivfpq")
-      Similarity.twoLevelToDf(emb.sparkSession, m).write.parquet(s"$d/model")
-      Similarity.pqModelToDf(emb.sparkSession, pq).write.parquet(s"$d/pqmodel")
+  private def ivfPq2lKnn(s: SparkSession, dir: String, allowed: Option[DataFrame]): DataFrame = {
+    val d = staged("ivfpq2l", s, dir) { d =>
+      val m = ivfTwoLevelModel(s, dir)
+      val pq = Similarity.pqTrainTwoLevel(emb(s, dir), m, nSub = 16, k = 16)
+      Similarity.ivfPqIndexTwoLevel(emb(s, dir), m, pq).write.partitionBy("super").parquet(s"$d/ivfpq")
+      Similarity.pqModelToDf(s, pq).write.parquet(s"$d/pqmodel")
     }
-
-  private def stagedIvfPqTwoLevelKnn(emb: DataFrame, q: DataFrame,
-                                     allowed: Option[DataFrame] = None): DataFrame = {
-    val dir = ivfPq2lDir(emb)
-    val spark = emb.sparkSession
     Similarity.ivfPqKnnTwoLevelFilteredIndexed(
-      spark.read.parquet(s"$dir/ivfpq"),
-      Similarity.twoLevelFromDf(spark.read.parquet(s"$dir/model")),
-      Similarity.pqModelFromDf(spark.read.parquet(s"$dir/pqmodel")),
-      stagedVectors(emb),
-      q, allowed, k = 5, nProbe = 6, nProbeSuper = 3, rerank = 40)
+      s.read.parquet(s"$d/ivfpq"), ivfTwoLevelModel(s, dir),
+      Similarity.pqModelFromDf(s.read.parquet(s"$d/pqmodel")), stagedVectors(s, dir),
+      q10(s, dir), allowed, k = 5, nProbe = 6, nProbeSuper = 3, rerank = 40)
   }
 
   /** s13 gate row: filtered ANN on the COMPRESSED serving path —
@@ -501,8 +439,7 @@ object SparkEntry {
     * this row keeps the guarantee on the driver's hard signal).
     */
   private def annFilteredPqRecall(s: SparkSession, dir: String, minRecall: Double): DataFrame = {
-    val emb = tbl(s, dir, "embeddings")
-    val allowed = emb.filter(col("label") < 5).select(col("vec_id").as("id"))
+    val allowed = emb(s, dir).filter(col("label") < 5).select(col("vec_id").as("id"))
     // approx feeds two branches (hits + leaks), brute two (stats + hits);
     // the duplicated-subtree LAZY shape is a measured keep (round 7):
     // staging both sides (like annRecall's shared truth) was benched twice
@@ -510,9 +447,8 @@ object SparkEntry {
     // frames are used by ONE gate row only, so staging serializes two write
     // jobs where the lazy branches execute concurrently inside one job.
     // annRecall's truth is different: it amortizes over SEVEN gates.
-    val approx = stagedIvfPqTwoLevelKnn(emb, q10(emb), Some(allowed))
-      .select("query_id", "neighbor_id")
-    val brute = Similarity.bruteForceKnn(emb.filter(col("label") < 5), q10(emb), k = 5)
+    val approx = ivfPq2lKnn(s, dir, Some(allowed)).select("query_id", "neighbor_id")
+    val brute = Similarity.bruteForceKnn(emb(s, dir).filter(col("label") < 5), q10(s, dir), k = 5)
       .select("query_id", "neighbor_id")
     val stats = brute.agg(countDistinct("query_id").as("n_queries"), count(lit(1)).as("total"))
     val hits = approx.join(brute, Seq("query_id", "neighbor_id"), "left_semi")
@@ -527,55 +463,12 @@ object SparkEntry {
         (col("leaks") === 0L).as("no_leak"))
   }
 
-  /** IVF-PQ kNN through a parquet-staged compressed index: coarse centroids
-    * + per-subspace codebooks + (cell, id, codes, norm) rows + the
-    * single-copy vector table for the exact re-rank. The scan side of a
-    * query batch reads nSub+4 = 20 B/vector at this builder's nSub=16
-    * (vs 260 B raw), cell-partitioned so the probe join dynamically prunes
-    * the scan to the probed cells — the layout a 100 TB vector corpus
-    * actually serves batches from.
-    */
-  private def ivfPqDir(emb: DataFrame): String =
-    cachedIndexDir("ivfpq", emb) { d =>
-      val cs = cachedModel("ivftrain16", emb)(Similarity.ivfTrain(emb, nCells = 16))
-      val pq = Similarity.pqTrain(emb, cs, nSub = 16, k = 16)
-      Similarity.ivfPqIndex(emb, cs, pq).write.partitionBy("cell").parquet(s"$d/ivfpq")
-      Similarity.centroidsToDf(emb.sparkSession, cs).write.parquet(s"$d/centroids")
-      Similarity.pqModelToDf(emb.sparkSession, pq).write.parquet(s"$d/pqmodel")
-    }
-
-  /** Coarse + PQ models of the staged IVF-PQ index s6/s7 query — same
-    * replay-oracle contract as [[ivfModel]].
-    */
-  private[graft] def ivfPqModel(s: SparkSession, dir: String)
-      : (Array[Array[Float]], Similarity.PqModel) = {
-    val d = ivfPqDir(tbl(s, dir, "embeddings"))
-    (Similarity.centroidsFromDf(s.read.parquet(s"$d/centroids")),
-      Similarity.pqModelFromDf(s.read.parquet(s"$d/pqmodel")))
-  }
-
-  private def stagedIvfPqKnn(emb: DataFrame, q: DataFrame): DataFrame = {
-    val dir = ivfPqDir(emb)
-    val spark = emb.sparkSession
-    Similarity.ivfPqKnnIndexed(
-      spark.read.parquet(s"$dir/ivfpq"),
-      Similarity.centroidsFromDf(spark.read.parquet(s"$dir/centroids")),
-      Similarity.pqModelFromDf(spark.read.parquet(s"$dir/pqmodel")),
-      stagedVectors(emb),
-      // nSub=16 / rerank=40: the validation corpus is near-random vectors
-      // (weak neighbor structure), so ADC needs fine subspaces and a wide
-      // cut to reach the cell-miss-bounded ~0.72 recall raw IVF gets at the
-      // same nProbe (measured at sf0.01 AND sf0.1); 200 exact re-ranks per
-      // query is still negligible vs any corpus scan
-      q, k = 5, nProbe = 6, rerank = 40)
-  }
-
   /** Mean recall of an ANN method vs the exact brute-force top-k, reported
     * as a driver-checkable single row: (n_queries, recall_pass). The brute
     * side is the independently-tested exact operator; DuckDB re-derives
     * n_queries and pins recall_pass = true.
     *
-    * Both sides arrive STAGED ([[bruteTruth]] / [[sharedKnn]]): the gates
+    * Both sides arrive STAGED ([[bruteTruth]] and the top-k sets): the gates
     * reference their brute/approx frames from several aggregation branches,
     * and round 6's lazy duplicated-subtree shape re-executed the full
     * corpus-scan subtrees per branch per gate — 14 brute-force runs and a
@@ -799,7 +692,7 @@ object SparkEntry {
     // sized so ε·N sits far below the heavy hitters' counts (the standard
     // CMS sizing rule); seed fixed for determinism.
     "q21_heavy_hitters" -> ((s, dir) =>
-      cachedStagedQuery("q21", s, dir) {
+      stagedFrame("q21", s, dir) {
         val ev = tbl(s, dir, "events")
         val top = ev.groupBy("user_id").agg(count(lit(1)).as("n_exact"))
           .orderBy(col("n_exact").desc, col("user_id")).limit(10)
@@ -829,10 +722,7 @@ object SparkEntry {
       Dedup.normalized(docsWithDups(s, dir)).orderBy("keep_id")),
     // staged collapse: the exact-collapse feeds four plan branches; lazy it
     // is recomputed per branch (measured 7+ corpus scans, 1.6× slower at
-    // 301k docs). The staged frame is memoized per (query, sfDir, session)
-    // like the ANN indexes — re-building the query in a loop (repeated
-    // bench/verify runs in one process) reuses one staging dir instead of
-    // accumulating a dir + eager write job per invocation.
+    // 301k docs). The pair output is an artifact (see `staged`).
     "d3_minhash_pairs" -> ((s, dir) => d3Pairs(s, dir).orderBy("id_a", "id_b")),
     // staged signatures, same rationale (and lifecycle) as d3's collapse
     "d4_simhash_pairs" -> ((s, dir) => d4Pairs(s, dir).orderBy("id_a", "id_b")),
@@ -891,7 +781,7 @@ object SparkEntry {
       val emb = tbl(s, dir, "embeddings")
       // the O(n²) exact truth feeds two aggregation branches (n_true +
       // hits); staged once so the full-corpus cross join runs once
-      val truth = stagedShared("d7-truth", s, dir) {
+      val truth = stagedFrame("d7-truth", s, dir) {
         Dedup.embeddingNearDupBrute(emb, threshold = 0.3).select("id_a", "id_b")
       }
       val approx = Dedup.embeddingNearDupPairs(emb, threshold = 0.3, nBits = 3, nTables = 12)
@@ -915,47 +805,37 @@ object SparkEntry {
     // built, persisted to parquet, read back, and queried — the shape a
     // 100 TB corpus demands (identical results to the one-shot plan, proven
     // by the OperatorsSpec round-trip equality test)
-    "s2_knn_lsh" -> ((s, dir) => {
-      sharedKnn("knn-lsh", s, dir)(stagedLshKnn).orderBy("query_id", "rank")
-    }),
-    "s3_knn_ivf" -> ((s, dir) => {
-      sharedKnn("knn-ivf", s, dir)(stagedIvfKnn).orderBy("query_id", "rank")
-    }),
+    "s2_knn_lsh" -> ((s, dir) => lshKnn(s, dir).orderBy("query_id", "rank")),
+    "s3_knn_ivf" -> ((s, dir) => knnIvf(s, dir).orderBy("query_id", "rank")),
     // recall gates: ANN quality asserted as a driver-checkable result — the
     // oracle pins n_queries (recomputed by DuckDB) and recall_pass=true;
     // the approximate side queries the SAME staged index as s2/s3
     "s4_lsh_recall" -> ((s, dir) =>
-      annRecall(s, dir, sharedKnn("knn-lsh", s, dir)(stagedLshKnn), minRecall = 0.6)),
+      annRecall(s, dir, lshKnn(s, dir), minRecall = 0.6)),
     "s5_ivf_recall" -> ((s, dir) =>
-      annRecall(s, dir, sharedKnn("knn-ivf", s, dir)(stagedIvfKnn), minRecall = 0.6)),
+      annRecall(s, dir, knnIvf(s, dir), minRecall = 0.6)),
     // s8: the executor-side (distributed Lloyd) trainer behind the same
     // staged IVF contract and recall gate — the trainer a 10⁴–10⁵-cell
     // 100 TB index needs, graded on the driver signal like s5
-    "s8_ivf_dist_recall" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      annRecall(s, dir, stagedIvfDistKnn(emb, q10(emb)), minRecall = 0.6)
-    }),
+    "s8_ivf_dist_recall" -> ((s, dir) =>
+      annRecall(s, dir, ivfKnn(s, dir, "ivfdist", ivfDistModel(s, dir)), minRecall = 0.6)),
     // s9: the two-level (hierarchical) coarse quantizer — the 10⁴–10⁵-cell
     // assignment/probe path — behind the same staged contract + recall gate
     "s9_ivf_twolevel_recall" -> ((s, dir) =>
-      annRecall(s, dir, sharedKnn("knn-ivf2l", s, dir)(stagedIvfTwoLevelKnn), minRecall = 0.6)),
+      annRecall(s, dir, knnIvf2l(s, dir), minRecall = 0.6)),
     // s10: router + compressed codes composed (two-level IVF-PQ) — the
     // full 100 TB serving layout, gated like s7/s9
-    "s10_ivfpq_twolevel_recall" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      annRecall(s, dir, stagedIvfPqTwoLevelKnn(emb, q10(emb)), minRecall = 0.6)
-    }),
+    "s10_ivfpq_twolevel_recall" -> ((s, dir) =>
+      annRecall(s, dir, ivfPq2lKnn(s, dir, None), minRecall = 0.6)),
     // s11: the incremental-append lifecycle — base-trained frozen model,
     // delta appended assign-only, recall + staleness-vs-fresh-retrain gated
     "s11_ivf_append_recall" -> ((s, dir) =>
       annAppendGate(s, dir, minRecall = 0.6, staleMargin = 0.1)),
     // s12: filtered ANN — metadata predicate composed with the staged
     // two-level probe BEFORE scoring; full top-k rows, replay-pinned
-    "s12_knn_filtered" -> ((s, dir) => {
-      val emb = tbl(s, dir, "embeddings")
-      stagedIvfTwoLevelFilteredKnn(emb, emb.filter(col("vec_id") < 10))
-        .orderBy("query_id", "rank")
-    }),
+    "s12_knn_filtered" -> ((s, dir) =>
+      ivf2lKnn(s, dir, Some(emb(s, dir).filter(col("label") < 5).select(col("vec_id").as("id"))))
+        .orderBy("query_id", "rank")),
     // s13: the same predicate composition on the COMPRESSED (IVF-PQ
     // two-level) serving path — the semi-join cuts code rows before the
     // ADC scan; recall gated vs brute over the admitted corpus + no-leak
@@ -964,11 +844,9 @@ object SparkEntry {
     // s6/s7: the product-quantized IVF path (compressed codes scanned, raw
     // vectors touched only by the bounded exact re-rank) through the same
     // staged-parquet contract and recall gate as s2-s5
-    "s6_knn_ivfpq" -> ((s, dir) => {
-      sharedKnn("knn-ivfpq", s, dir)(stagedIvfPqKnn).orderBy("query_id", "rank")
-    }),
+    "s6_knn_ivfpq" -> ((s, dir) => knnIvfPq(s, dir).orderBy("query_id", "rank")),
     "s7_ivfpq_recall" -> ((s, dir) =>
-      annRecall(s, dir, sharedKnn("knn-ivfpq", s, dir)(stagedIvfPqKnn), minRecall = 0.6)),
+      annRecall(s, dir, knnIvfPq(s, dir), minRecall = 0.6)),
 
     // ---- text analysis ----
     "t1_quality" -> ((s, dir) =>
@@ -1013,16 +891,14 @@ object SparkEntry {
     // oracle reads the WHOLETEXT events() output Verify staged from the
     // same file — split-path ≡ whole-path including global event indices,
     // line numbers and exact text bytes (crc).
-    "l1_log_events" -> ((s, dir) =>
-      cachedStagedQuery("l1", s, dir) {
-        import s.implicits._
-        val bank = graft.pipeline.Parse.broadcastBank(s, PatternBank.example)
-        val d = graft.pipeline.Staging.tempDirDeletedOnExit("graft-l1-index")
-        graft.sources.LogFiles.chunkIndex(s, l1LogPath(dir), bank, chunkBytes = 256L << 10)
-          .write.mode("overwrite").parquet(s"$d/chunks")
-        val idx = s.read.parquet(s"$d/chunks").as[graft.sources.LogFiles.ChunkMeta]
-        graft.sources.LogFiles.eventStats(graft.sources.LogFiles.eventsFromIndex(s, idx, bank))
-      }.orderBy("event_idx")),
+    "l1_log_events" -> ((s, dir) => {
+      import s.implicits._
+      val bank = Parse.broadcastBank(s, PatternBank.example)
+      val idx = stagedFrame("l1-chunks", s, dir)(
+        LogFiles.chunkIndex(s, l1LogPath(dir), bank, chunkBytes = 256L << 10).toDF())
+      LogFiles.eventStats(LogFiles.eventsFromIndex(s, idx.as[LogFiles.ChunkMeta], bank))
+        .orderBy("event_idx")
+    }),
 
     // ---- transcript pipeline (the north-rule surface; oracles live in the
     //      ScalaTest suites — naive per-row recompute + exceptAll) ----

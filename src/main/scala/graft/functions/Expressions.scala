@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -21,10 +21,12 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Cosine similarity between two ARRAY<FLOAT> columns (returns DOUBLE).
   * Used by the similarity-search operators: brute-force top-k baseline and
-  * the LSH re-rank step.
+  * the LSH re-rank step. Other numeric arrays are implicitly cast to
+  * ARRAY<FLOAT>; a non-array argument fails at analysis.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(FloatType), ArrayType(FloatType))
   override def dataType: DataType = DoubleType
   override def nullSafeEval(a: Any, b: Any): Any =
     CosineSimilarity.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -64,10 +66,14 @@ object CosineSimilarity {
   * the typed `Dataset.map` over `exactJaccard` (encoder deserializes both
   * arrays out of Tungsten per PAIR — the dominant per-pair cost in the
   * all-pairs verification jobs). Reads elements in place (`getLong`), no
-  * copies, inlined into whole-stage codegen.
+  * copies, inlined into whole-stage codegen. Other integral arrays are
+  * implicitly cast to ARRAY<BIGINT> (an ARRAY<INT> read with `getLong`
+  * would misread its packed elements); a non-array argument fails at
+  * analysis.
   */
 case class JaccardSorted(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = DoubleType
   override def nullSafeEval(a: Any, b: Any): Any =
     JaccardSorted.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])

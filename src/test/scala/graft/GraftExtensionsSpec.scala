@@ -36,6 +36,27 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(math.abs(j - 0.5) < 1e-15)
   }
 
+  test("jaccard_sorted casts ARRAY<INT> to BIGINT[] and rejects a STRING at analysis") {
+    val j = spark.sql("SELECT jaccard_sorted(array(1, 2, 3), array(2, 3, 4))").first().getDouble(0)
+    assert(j == spark.sql(
+      "SELECT jaccard_sorted(array(1L, 2L, 3L), array(2L, 3L, 4L))").first().getDouble(0))
+    assert(math.abs(j - 0.5) < 1e-15)
+    // spark.sql analyzes eagerly: the type error surfaces before any job
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT jaccard_sorted('1,2,3', array(2L, 3L, 4L))"))
+  }
+
+  test("cosine_similarity casts ARRAY<INT> to FLOAT[] and rejects a STRING at analysis") {
+    val c = spark.sql("SELECT cosine_similarity(array(1, 2, 3), array(2, 3, 4))").first().getDouble(0)
+    assert(c == spark.sql(
+      """SELECT cosine_similarity(array(CAST(1 AS FLOAT), CAST(2 AS FLOAT), CAST(3 AS FLOAT)),
+        |                         array(CAST(2 AS FLOAT), CAST(3 AS FLOAT), CAST(4 AS FLOAT)))""".stripMargin)
+      .first().getDouble(0))
+    assert(math.abs(c - 20.0 / math.sqrt(14.0 * 29.0)) < 1e-12)
+    intercept[org.apache.spark.sql.AnalysisException](
+      spark.sql("SELECT cosine_similarity('1,2,3', array(CAST(1 AS FLOAT)))"))
+  }
+
   test("parse_turn works from SQL and extracts routing fields") {
     import spark.implicits._
     Seq(("c1", 0, "assistant", null: String,

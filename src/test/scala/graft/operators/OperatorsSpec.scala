@@ -741,6 +741,26 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(withNull.select(graft.functions.functions.cosine_similarity(col("a"), col("b"))).first().isNullAt(0))
   }
 
+  test("jaccard_sorted/cosine_similarity inputs arrive uncast in the dedup and ANN plans") {
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import graft.functions.{CosineSimilarity, JaccardSorted}
+    val q = emb.filter(col("vec_id") < 10)
+    Seq(
+      "minhashPairs" -> Dedup.minhashPairs(docsDup, threshold = 0.8),
+      "shingleJaccardPairs" -> Dedup.shingleJaccardPairs(docsDup),
+      "ngramJaccardPairs" -> Dedup.ngramJaccardPairs(docsDup),
+      "embeddingNearDupPairs" -> Dedup.embeddingNearDupPairs(emb),
+      "embeddingNearDupBrute" -> Dedup.embeddingNearDupBrute(emb),
+      "bruteForceKnn" -> Similarity.bruteForceKnn(emb, q),
+      "lshKnn" -> Similarity.lshKnn(emb, q)
+    ).foreach { case (name, df) =>
+      val kernels = df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+        case e @ (_: JaccardSorted | _: CosineSimilarity) => e }))
+      assert(kernels.nonEmpty, s"$name: no kernel in the plan")
+      kernels.foreach(k => assert(!k.children.exists(_.isInstanceOf[Cast]), s"$name: $k"))
+    }
+  }
+
   test("char_entropy: known values, empty/null semantics, equals the explode-agg formulation") {
     import spark.implicits._
     // hand-computed: "aaaa" → 0; "ab" → ln 2; "aab" → ln3 − (2 ln2)/3
@@ -996,6 +1016,61 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(again == first)
     val stats = Multimodal.featureStats(feats).collect()
     assert(stats.length == Multimodal.MediaTypes.size)
+  }
+
+  /** `f`'s value and the artifacts it built: SparkEntry prints one
+    * `[graft-stage] <name> <secs>` line per artifact build.
+    */
+  private def staging[T](f: => T): (T, Seq[String]) = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val err = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    val r = try f finally System.setErr(err)
+    (r, buf.toString("UTF-8").linesIterator.collect {
+      case l if l.startsWith("[graft-stage] ") => l.split(' ')(1) }.toSeq)
+  }
+
+  test("artifact memo: a rebuilt query reuses its artifacts; a new session stages its own") {
+    // files read from staged artifacts (the sf tables are shared by every session)
+    def build(s: SparkSession, name: String) = {
+      val df = graft.SparkEntry.queries(name)(s, sfDir)
+      (df.collect().toSeq, df.inputFiles.filterNot(_.contains(sfDir)).toSet)
+    }
+    val fresh = spark.newSession()
+    val freshStaged = Seq("d3_minhash_pairs", "d9_minhash_recall", "d11_dedup_pipeline",
+      "s3_knn_ivf", "s5_ivf_recall", "s7_ivfpq_recall", "s9_ivf_twolevel_recall",
+      "s12_knn_filtered", "q21_heavy_hitters", "l1_log_events").flatMap { name =>
+      val (rows, files) = build(spark, name)
+      // l1 collects its staged chunk index on the driver, so its plan reads
+      // no file; its reuse shows as the missing [graft-stage] line below
+      if (name != "l1_log_events") assert(files.nonEmpty, name)
+      val ((again, againFiles), restaged) = staging(build(spark, name))
+      assert(again == rows, name)
+      assert(againFiles == files, name)
+      assert(restaged.isEmpty, s"$name staged $restaged again")
+      val ((other, otherFiles), staged) = staging(build(fresh, name))
+      assert(other == rows, name)
+      assert(otherFiles.intersect(files).isEmpty, name)
+      staged
+    }
+    assert(Set("d3-pairs", "truth", "brute-truth", "vectors", "ivf-model", "ivf", "knn-ivf",
+      "ivfpq", "knn-ivfpq", "ivf2l-model", "ivf2l", "knn-ivf2l", "q21", "l1-chunks")
+      .subsetOf(freshStaged.toSet), freshStaged)
+    assert(freshStaged.distinct == freshStaged, freshStaged)
+    // builds nest: a cold top-k set stages its index, which stages its model
+    val (_, cold) = staging(graft.SparkEntry.queries("s7_ivfpq_recall")(spark.newSession(), sfDir))
+    val at = Seq("ivf-model", "ivfpq", "knn-ivfpq").map(cold.indexOf)
+    assert(at.forall(_ >= 0) && at == at.sorted, cold)
+  }
+
+  test("artifact memo: a build that throws caches nothing; the next call builds") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-memo").resolve("sf0.001")
+    java.nio.file.Files.createDirectories(dir)
+    val q21 = graft.SparkEntry.queries("q21_heavy_hitters")
+    intercept[org.apache.spark.sql.AnalysisException](q21(spark, dir.toString)) // no events table
+    java.nio.file.Files.createSymbolicLink(dir.resolve("events.parquet"),
+      java.nio.file.Paths.get(s"$sfDir/events.parquet"))
+    assert(q21(spark, dir.toString).collect().toSeq == q21(spark, sfDir).collect().toSeq)
   }
 
   test("all SparkEntry queries run on sf0.001 and return rows") {
