@@ -97,19 +97,26 @@ object SparkEntry {
     * inserts a lazy [[Artifact]] and the build runs outside it, under that
     * artifact's own lock. A build that throws is removed, so the next caller
     * retries. Each build prints one `[graft-stage] <name> <secs>` line on
-    * stderr (wall time, nested builds included).
+    * stderr: the build's own wall time, with the artifacts it built inside
+    * itself subtracted, so the lines of one run sum to at most its wall time.
     */
   private final class Artifact(build: => String) { lazy val dir: String = build }
   private val artifacts =
     new java.util.concurrent.ConcurrentHashMap[(String, String, Int), Artifact]()
+  /** Wall nanos of the builds finished inside the current build on this thread. */
+  private val nestedNanos = ThreadLocal.withInitial[java.lang.Long](() => 0L)
 
   private def staged(name: String, s: SparkSession, dir: String)(build: String => Unit): String = {
     val key = (name, dir, System.identityHashCode(s))
     val a = artifacts.computeIfAbsent(key, _ => new Artifact({
       val d = Staging.tempDirDeletedOnExit(s"graft-$name")
+      val outer = nestedNanos.get
+      nestedNanos.set(0L)
       val t0 = System.nanoTime()
-      build(d)
-      System.err.println(f"[graft-stage] $name ${(System.nanoTime() - t0) / 1e9}%.2f")
+      try {
+        build(d)
+        System.err.println(f"[graft-stage] $name ${(System.nanoTime() - t0 - nestedNanos.get) / 1e9}%.2f")
+      } finally nestedNanos.set(outer + System.nanoTime() - t0)
       d
     }))
     try a.dir catch { case e: Throwable => artifacts.remove(key, a); throw e }
@@ -275,33 +282,36 @@ object SparkEntry {
         stagedVectors(s, dir), q10(s, dir), k = 5, nBits = 4)
     }
 
-  /** IVF kNN through a cell-partitioned staged index (the probe join's
-    * broadcast side dynamically prunes the scan to the probed cells). ONE
-    * recipe for both trainers: s3 (driver Lloyd) and s8 (executor-side
-    * Lloyd) must stay the same staged contract, k=5/nProbe=6, or the
-    * s3-vs-s8 comparison stops meaning "same index, different trainer".
+  /** IVF kNN through a flat staged index, one partition per cell (the
+    * probe join's broadcast side dynamically prunes the scan to the probed
+    * cells). ONE recipe for both trainers: s3 (driver Lloyd) and s8
+    * (executor-side Lloyd) must stay the same staged contract,
+    * k=5/nProbe=6, or the s3-vs-s8 comparison stops meaning "same index,
+    * different trainer".
     */
   private def ivfKnn(s: SparkSession, dir: String, index: String,
                      cs: Array[Array[Float]]): DataFrame = {
+    val q = Similarity.Flat(cs)
     val d = staged(index, s, dir) { d =>
-      Similarity.ivfIndex(emb(s, dir), cs).write.partitionBy("cell").parquet(s"$d/ivf")
+      Similarity.ivfIndex(emb(s, dir), q).write.partitionBy(Similarity.IndexPart).parquet(s"$d/ivf")
     }
-    Similarity.ivfKnnIndexed(s.read.parquet(s"$d/ivf"), cs, q10(s, dir), k = 5, nProbe = 6)
+    Similarity.ivfKnnIndexed(s.read.parquet(s"$d/ivf"), q, q10(s, dir), k = 5, nProbe = 6)
   }
 
   /** The s3/s5 top-k set. */
   private def knnIvf(s: SparkSession, dir: String): DataFrame =
     stagedFrame("knn-ivf", s, dir)(ivfKnn(s, dir, "ivf", ivfModel(s, dir)))
 
-  /** IVF-PQ index over `ivf-model`'s cells: (cell, id, codes, norm) rows,
-    * cell-partitioned, scanned at nSub+4 = 20 B/vector (vs 260 B raw), with
-    * its codebooks beside them.
+  /** IVF-PQ index over `ivf-model`'s cells: (part, cell, id, codes, norm)
+    * rows, one partition per cell, scanned at nSub+4 = 20 B/vector (vs
+    * 260 B raw), with its codebooks beside them.
     */
   private def ivfPqDir(s: SparkSession, dir: String): String =
     staged("ivfpq", s, dir) { d =>
-      val cs = ivfModel(s, dir)
-      val pq = Similarity.pqTrain(emb(s, dir), cs, nSub = 16, k = 16)
-      Similarity.ivfPqIndex(emb(s, dir), cs, pq).write.partitionBy("cell").parquet(s"$d/ivfpq")
+      val q = Similarity.Flat(ivfModel(s, dir))
+      val pq = Similarity.pqTrain(emb(s, dir), q, nSub = 16, k = 16)
+      Similarity.ivfPqIndex(emb(s, dir), q, pq)
+        .write.partitionBy(Similarity.IndexPart).parquet(s"$d/ivfpq")
       Similarity.pqModelToDf(s, pq).write.parquet(s"$d/pqmodel")
     }
 
@@ -318,8 +328,8 @@ object SparkEntry {
   private def knnIvfPq(s: SparkSession, dir: String): DataFrame =
     stagedFrame("knn-ivfpq", s, dir) {
       val (cs, pq) = ivfPqModel(s, dir)
-      Similarity.ivfPqKnnIndexed(s.read.parquet(s"${ivfPqDir(s, dir)}/ivfpq"), cs, pq,
-        stagedVectors(s, dir),
+      Similarity.ivfPqKnnIndexed(s.read.parquet(s"${ivfPqDir(s, dir)}/ivfpq"),
+        Similarity.Flat(cs), pq, stagedVectors(s, dir),
         // nSub=16 / rerank=40: the validation corpus is near-random vectors
         // (weak neighbor structure), so ADC needs fine subspaces and a wide
         // cut to reach the cell-miss-bounded ~0.72 recall raw IVF gets at the
@@ -339,7 +349,7 @@ object SparkEntry {
     */
   private def probeTwoLevel(s: SparkSession, dir: String, index: String,
                             m: Similarity.IvfTwoLevel, allowed: Option[DataFrame]): DataFrame =
-    Similarity.ivfKnnTwoLevelFilteredIndexed(s.read.parquet(s"$index/ivf"), m, q10(s, dir),
+    Similarity.ivfKnnIndexed(s.read.parquet(s"$index/ivf"), m, q10(s, dir),
       allowed, k = 5, nProbe = 6, nProbeSuper = 3)
 
   /** TWO-LEVEL IVF: `ivf2l-model` routes into a super-partitioned index.
@@ -351,8 +361,8 @@ object SparkEntry {
     */
   private def ivf2lKnn(s: SparkSession, dir: String, allowed: Option[DataFrame]): DataFrame = {
     val d = staged("ivf2l", s, dir) { d =>
-      Similarity.ivfIndexTwoLevel(emb(s, dir), ivfTwoLevelModel(s, dir))
-        .write.partitionBy("super").parquet(s"$d/ivf")
+      Similarity.ivfIndex(emb(s, dir), ivfTwoLevelModel(s, dir))
+        .write.partitionBy(Similarity.IndexPart).parquet(s"$d/ivf")
     }
     probeTwoLevel(s, dir, d, ivfTwoLevelModel(s, dir), allowed)
   }
@@ -372,11 +382,11 @@ object SparkEntry {
     val d = staged("ivf2l-append", s, dir) { d =>
       val base = emb(s, dir).filter(col("vec_id") % 10 =!= 0)
       val m = Similarity.ivfTrainTwoLevel(base, nCells = 16, nSuper = 4)
-      Similarity.ivfIndexTwoLevel(base, m).write.partitionBy("super").parquet(s"$d/ivf")
+      Similarity.ivfIndex(base, m).write.partitionBy(Similarity.IndexPart).parquet(s"$d/ivf")
       Similarity.twoLevelToDf(s, m).write.parquet(s"$d/model")
       val mFrozen = Similarity.twoLevelFromDf(s.read.parquet(s"$d/model"))
-      Similarity.ivfIndexTwoLevel(emb(s, dir).filter(col("vec_id") % 10 === 0), mFrozen)
-        .write.mode("append").partitionBy("super").parquet(s"$d/ivf")
+      Similarity.ivfIndex(emb(s, dir).filter(col("vec_id") % 10 === 0), mFrozen)
+        .write.mode("append").partitionBy(Similarity.IndexPart).parquet(s"$d/ivf")
     }
     probeTwoLevel(s, dir, d, Similarity.twoLevelFromDf(s.read.parquet(s"$d/model")), None)
   }
@@ -422,11 +432,11 @@ object SparkEntry {
   private def ivfPq2lKnn(s: SparkSession, dir: String, allowed: Option[DataFrame]): DataFrame = {
     val d = staged("ivfpq2l", s, dir) { d =>
       val m = ivfTwoLevelModel(s, dir)
-      val pq = Similarity.pqTrainTwoLevel(emb(s, dir), m, nSub = 16, k = 16)
-      Similarity.ivfPqIndexTwoLevel(emb(s, dir), m, pq).write.partitionBy("super").parquet(s"$d/ivfpq")
+      val pq = Similarity.pqTrain(emb(s, dir), m, nSub = 16, k = 16)
+      Similarity.ivfPqIndex(emb(s, dir), m, pq).write.partitionBy(Similarity.IndexPart).parquet(s"$d/ivfpq")
       Similarity.pqModelToDf(s, pq).write.parquet(s"$d/pqmodel")
     }
-    Similarity.ivfPqKnnTwoLevelFilteredIndexed(
+    Similarity.ivfPqKnnIndexed(
       s.read.parquet(s"$d/ivfpq"), ivfTwoLevelModel(s, dir),
       Similarity.pqModelFromDf(s.read.parquet(s"$d/pqmodel")), stagedVectors(s, dir),
       q10(s, dir), allowed, k = 5, nProbe = 6, nProbeSuper = 3, rerank = 40)

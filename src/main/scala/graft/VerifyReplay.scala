@@ -249,17 +249,17 @@ object VerifyReplay {
 
   // ---------------------------------------- s12: filtered two-level kNN --
 
-  /** Sequential [[Similarity.ivfIndexTwoLevel]] +
-    * [[Similarity.ivfKnnTwoLevelFilteredIndexed]] around the SAME staged
-    * two-level model the s9/s12 queries use: routed assignment
-    * (topSuper=2), routed probes ranked by (-dot, cell), the metadata
-    * predicate applied to candidates before scoring, exact re-rank. s12
-    * operating point: k=5, nProbe=6, nProbeSuper=3, allowed = label < 5.
+  /** Sequential [[Similarity.ivfIndex]] + [[Similarity.ivfKnnIndexed]]
+    * around the SAME staged two-level model the s9/s12 queries use: routed
+    * assignment ([[Similarity.TopSuper]] = 2), routed probes ranked by
+    * (-dot, cell), the metadata predicate applied to candidates before
+    * scoring, exact re-rank. s12 operating point: k=5, nProbe=6,
+    * nProbeSuper=3, allowed = label < 5.
     */
   def s12Knn(emb: Seq[(Long, Array[Float])], model: Similarity.IvfTwoLevel,
              allowed: Long => Boolean, k: Int = 5, nProbe: Int = 6,
              nProbeSuper: Int = 3): Seq[(Long, Int, Long, Double)] = {
-    val byCell = emb.groupBy { case (_, v) => model.assign(v, 2) }
+    val byCell = emb.groupBy { case (_, v) => model.assign(v) }
     val vecs = emb.toMap
     emb.filter(_._1 < 10).flatMap { case (qid, qv) =>
       val scored = model.topSupers(qv, nProbeSuper).iterator.flatMap { s =>

@@ -81,24 +81,6 @@ final class Nfa {
           }
       }
   }
-
-  /** ε-closure over this NFA's states (reference: nfa.rs:407-429). */
-  def epsilonClosure(states: Iterable[Int]): collection.mutable.BitSet = {
-    val seen = collection.mutable.BitSet.empty
-    val stack = collection.mutable.ArrayDeque.from(states)
-    states.foreach(seen += _)
-    while (stack.nonEmpty) {
-      val s = stack.removeLast()
-      val ts = trans(s)
-      var i = 0
-      while (i < ts.length) {
-        val t = ts(i)
-        if (t.isEpsilon && !seen.contains(t.to)) { seen += t.to; stack += t.to }
-        i += 1
-      }
-    }
-    seen
-  }
 }
 
 object Nfa {

@@ -242,8 +242,6 @@ object ParseTurnExpression {
     StructField("tool_invocation", StringType, nullable = true),
     StructField("category", StringType, nullable = false)))
 
-  private[functions] val ERROR = UTF8String.fromString("ERROR")
-  private[functions] val FATAL = UTF8String.fromString("FATAL")
   private[functions] val TOOL = UTF8String.fromString("tool")
   private[functions] val ASSISTANT = UTF8String.fromString("assistant")
   private[functions] val CAT_ERRORS = UTF8String.fromString(Category.Errors)

@@ -34,7 +34,6 @@ final class PatternBank(
 ) extends Serializable {
   @inline def isDelimiter(c: Int): Boolean = c >= 0 && c < 128 && delimiters(c)
   def varName(id: Int): String = if (id >= 0 && id < varNames.length) varNames(id) else null
-  def varId(name: String): Int = varNames.indexOf(name)
 }
 
 object PatternBank {

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -18,9 +19,9 @@ import graft.pipeline.Rng
   *    join shuffles only (bucket, id, vec-of-candidates), never the full
   *    cross product.
   *  - IVF (k-means coarse quantizer) ANN: the other standard scale path —
-  *    small deterministic Lloyd on a fixed sample defines centroids,
-  *    corpus vectors are assigned to their nearest cell, queries probe the
-  *    nProbe nearest cells.
+  *    deterministic Lloyd defines centroids, a [[Quantizer]] (flat, or a
+  *    two-level router) assigns corpus vectors to cells, queries probe the
+  *    nProbe best cells. One index/query path serves both quantizers.
   *
   * BUILD ONCE, QUERY MANY (the 100 TB contract): both ANN methods are
   * split into an index-build phase (`lshIndex` / `ivfTrain`+`ivfIndex` —
@@ -52,16 +53,17 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("neighbor_id"), round(col("score"), 4).as("score"))
   }
 
+  /** The non-null query vectors as (query_id, q_emb): every kNN method's query side. */
+  private def queryVectors(queries: DataFrame): DataFrame =
+    queries.filter(col("embedding").isNotNull)
+      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+
   /** Brute-force exact top-k neighbors for each query vector. Null
     * embeddings are dropped on BOTH sides — the same guard the approximate
     * paths apply, so exact-vs-ANN recall gates compare identical inputs.
     */
   def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int = 5): DataFrame = {
-    val c = corpus.filter(col("embedding").isNotNull)
-      .select(col("vec_id").as("id"), col("embedding").as("emb"))
-    val q = queries.filter(col("embedding").isNotNull)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val scored = c.join(broadcast(q), col("id") =!= col("query_id"))
+    val scored = vectorTable(corpus).join(broadcast(queryVectors(queries)), col("id") =!= col("query_id"))
       .select(col("query_id"), col("id").as("neighbor_id"),
         cosine_similarity(col("q_emb"), col("emb")).as("score"))
     topK(scored, k)
@@ -235,8 +237,7 @@ object Similarity {
                     maxBucket: Int = 4096): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val qn = queries.filter(col("embedding").isNotNull)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+    val qn = queryVectors(queries)
     val dimRow = index.select(col("dim")).head(1)
     if (dimRow.isEmpty) return emptyDf(spark, KnnSchema)
     val dim = dimRow(0).getInt(0)
@@ -290,6 +291,115 @@ object Similarity {
 
   // ---------------------------------------------------------------- IVF --
 
+  /** Partition column of every IVF index. Index rows are (part, cell, id,
+    * …), persisted with `.write.partitionBy(IndexPart)`, and probes join on
+    * (part, cell), so the probe join's broadcast side dynamically prunes the
+    * scan to the probed partitions. [[Quantizer.part]] sets the granularity:
+    * one directory per cell for [[Flat]], one per super-cell for
+    * [[IvfTwoLevel]] (10⁵ cell directories would be a filesystem
+    * antipattern).
+    */
+  val IndexPart = "part"
+
+  /** A coarse quantizer: all the IVF phases below ask of a model. Index
+    * build, PQ training, query and PQ query are written once against it; the
+    * two implementations differ only in how a vector is assigned, how a
+    * query ranks cells, and which partition holds a cell. Cell ids are flat
+    * (0 until nCells) in both.
+    */
+  sealed trait Quantizer extends Serializable {
+    /** The cell a corpus vector is indexed under (and its PQ residual taken against). */
+    def assign(v: Array[Float]): Int
+    /** Raw centroid of a cell: the PQ residual's subtrahend and ADC's coarse term. */
+    def centroid(cell: Int): Array[Float]
+    /** The [[IndexPart]] value of a cell. */
+    def part(cell: Int): Int
+    /** The cells a query probes, best first. */
+    def probes(q: Array[Float], nProbe: Int, nProbeSuper: Int): Seq[Int]
+  }
+
+  /** Flat quantizer over [[ivfTrain]]/[[ivfTrainDistributed]] centroids.
+    * Assignment ranks cells by dot(v, c/|c|) over unitized centroids — the
+    * same ranking as cosine at a third of the flops, with |c| computed once
+    * per broadcast copy instead of once per (vector, cell): the index build
+    * is the corpus-sized O(n · nCells · dim) pass, exactly where a 3× matters.
+    * Probes rank all cells by cosine (stable sort: the lower cell wins ties);
+    * `nProbeSuper` does not apply.
+    */
+  final case class Flat(centroids: Array[Array[Float]]) extends Quantizer {
+    @transient lazy val unit: Array[Array[Float]] = unitize(centroids)
+    def assign(v: Array[Float]): Int = nearestCellDot(v, unit)
+    def centroid(cell: Int): Array[Float] = centroids(cell)
+    def part(cell: Int): Int = cell
+    def probes(q: Array[Float], nProbe: Int, nProbeSuper: Int): Seq[Int] =
+      centroids.indices.map(c => (c, cos(q, centroids(c)))).sortBy(-_._2).take(nProbe).map(_._1)
+  }
+
+  /** How many nearest supers [[IvfTwoLevel.assign]] descends into. */
+  final val TopSuper = 2
+
+  /** Two-level coarse quantizer: `nSuper` super-cells, each with
+    * `nCells/nSuper` child cells; the flat cell id of (super s, child c) is
+    * `s·kChild + c`. This is what takes IVF past the flat quantizer's two
+    * O(nCells) walls: assignment/probing cost nSuper + [[TopSuper]]·kChild
+    * dot products per vector instead of nCells (85× fewer at 65,536 cells),
+    * and child training is a per-super-cell LOCAL Lloyd that runs as one
+    * executor task per super-cell instead of a driver loop over every cell.
+    * Routing through a parent is the standard two-level IVF approximation:
+    * a vector near a super-cell boundary may belong to a child of the OTHER
+    * super, so assignment descends into the [[TopSuper]] nearest supers and
+    * probing into the `nProbeSuper` nearest (measured by a 1 M-vector ANN
+    * scale smoke, BENCH/BASELINE.md). An index partition is one super.
+    */
+  final case class IvfTwoLevel(superCentroids: Array[Array[Float]],
+                               children: Array[Array[Array[Float]]]) extends Quantizer {
+    def nSuper: Int = superCentroids.length
+    def kChild: Int = children(0).length
+    def nCells: Int = nSuper * kChild
+    /** Pre-unitized router copies (computed once per broadcast copy). */
+    @transient lazy val superUnit: Array[Array[Float]] = unitize(superCentroids)
+    @transient lazy val childUnit: Array[Array[Array[Float]]] = children.map(unitize)
+    def centroid(cell: Int): Array[Float] = children(cell / kChild)(cell % kChild)
+    def part(cell: Int): Int = cell / kChild
+
+    /** Best child (by unit-dot) among the [[TopSuper]] nearest supers' children. */
+    def assign(v: Array[Float]): Int = {
+      val top = topSupers(v, TopSuper)
+      var best = -1; var bestS = Double.MinValue
+      var i = 0
+      while (i < top.length) {
+        val s = top(i)
+        val (c, d) = nearestCellDotWithScore(v, childUnit(s))
+        if (d > bestS) { bestS = d; best = s * kChild + c }
+        i += 1
+      }
+      best
+    }
+
+    /** The best `nProbe` cells among the `nProbeSuper` nearest supers'
+      * children, ranked by (-unit-dot, cell).
+      */
+    def probes(q: Array[Float], nProbe: Int, nProbeSuper: Int): Seq[Int] =
+      topSupers(q, nProbeSuper).toVector
+        .flatMap(s => childUnit(s).indices.map(c => (s * kChild + c, dot(q, childUnit(s)(c)))))
+        .sortBy { case (cell, d) => (-d, cell) }.take(nProbe).map(_._1)
+
+    /** The `n` nearest supers by unit-dot, best first (deterministic:
+      * stable sort, lower super id wins ties).
+      */
+    def topSupers(v: Array[Float], n: Int): Array[Int] =
+      superUnit.indices.map(s => (s, dot(v, superUnit(s))))
+        .sortBy(-_._2).take(math.min(n, nSuper)).map(_._1).toArray
+  }
+
+  /** Σ a(i)·b(i) in double over the shorter length. */
+  private def dot(a: Array[Float], b: Array[Float]): Double = {
+    var d = 0.0; var i = 0
+    val lim = math.min(a.length, b.length)
+    while (i < lim) { d += a(i).toDouble * b(i); i += 1 }
+    d
+  }
+
   /** TRAIN phase: deterministic k-means centroids — Lloyd iterations on a
     * seeded UNIFORM driver-side sample. Uniformity matters: ordering by raw
     * vec_id would train on the corpus's smallest ids — one corner of one
@@ -314,9 +424,7 @@ object Similarity {
       .orderBy(xxhash64(col("vec_id"), lit(41)), col("vec_id")).limit(sampleSize)
       .select("embedding").as[Array[Float]].collect()
     require(sample.nonEmpty, "empty corpus")
-    // evenly-strided init + Lloyd refinement (shared with the two-level
-    // trainer's per-super-cell child training)
-    lloydCos(sample, nCells, iterations)
+    lloyd(sample, nCells, iterations, nearestCell)
   }
 
   /** Unit-normalized copies of the centroids: argmax over cells of
@@ -350,9 +458,7 @@ object Similarity {
     var best = 0; var bestS = Double.MinValue
     var c = 0
     while (c < unit.length) {
-      val u = unit(c); var d = 0.0; var i = 0
-      val lim = math.min(v.length, u.length)
-      while (i < lim) { d += v(i).toDouble * u(i); i += 1 }
+      val d = dot(v, unit(c))
       if (d > bestS) { bestS = d; best = c }
       c += 1
     }
@@ -481,138 +587,27 @@ object Similarity {
     } finally if (cacheTraining) training.unpersist(blocking = false)
   }
 
-  /** BUILD phase: assign every corpus vector to its nearest centroid cell —
-    * one pass, broadcast centroids. Output (cell, id, emb) is the
-    * parquet-persistable inverted file; readers prune to the probed cells.
-    * Assignment ranks cells by dot(v, c/|c|) over pre-unitized centroids —
-    * the same ranking as cosine at a third of the flops, with |c| computed
-    * once per broadcast instead of once per (vector, cell): the index build
-    * is the corpus-sized O(n · nCells · dim) pass, exactly where a 3×
-    * matters at 100 TB (and at the 10⁴-cell counts [[ivfTrainDistributed]]
-    * unlocks).
+  /** Deterministic driver-side Lloyd over an in-memory sample: evenly
+    * strided init, then `iterations` passes assigning each vector to
+    * `nearest(v, centroids)` and moving each centroid to its members' mean
+    * (an empty cell keeps its centroid). [[ivfTrain]] runs it under cosine
+    * ([[nearestCell]]), per-super-cell child training runs the SAME routine
+    * inside one executor task per group, and the PQ sub-codebooks run it
+    * under L2 (subspace vectors are unnormalized — cosine is only
+    * meaningful for the full vector).
     */
-  def ivfIndex(corpus: DataFrame, centroids: Array[Array[Float]]): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(unitize(centroids))
-    corpus.filter(col("embedding").isNotNull)
-      .select(col("vec_id").as("id"), col("embedding").as("emb"))
-      .as[(Long, Array[Float])]
-      .map { case (id, emb) => (nearestCellDot(emb, bc.value), id, emb) }
-      .toDF("cell", "id", "emb")
-  }
-
-  /** QUERY phase: approximate top-k against a prebuilt [[ivfIndex]] + its
-    * centroid model. Queries probe their nProbe nearest cells; candidates
-    * re-ranked by exact cosine. Corpus touched only through the index.
-    * Probe rows are SLIM (cell, query_id) — embedding the query vector per
-    * probed cell multiplies the broadcast by nProbe copies (the same
-    * payload discipline as [[lshKnnIndexed]]'s probes); the vectors join
-    * back once per matched candidate from the tiny broadcast `qn` side.
-    */
-  def ivfKnnIndexed(index: DataFrame, centroids: Array[Array[Float]], queries: DataFrame,
-                    k: Int = 5, nProbe: Int = 4): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(centroids)
-    val qn = queries.filter(col("embedding").isNotNull)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val probes = qn.as[(Long, Array[Float])]
-      .flatMap { case (qid, emb) =>
-        bc.value.indices.map(c => (c, cos(emb, bc.value(c))))
-          .sortBy(-_._2).take(nProbe)
-          .map { case (c, _) => (c, qid) }
-      }.toDF("cell", "query_id")
-
-    val scored = index.join(broadcast(probes), Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
-      .join(broadcast(qn), "query_id")
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        cosine_similarity(col("q_emb"), col("emb")).as("score"))
-      .groupBy("query_id", "neighbor_id").agg(max("score").as("score"))
-    topK(scored, k)
-  }
-
-  /** One-shot convenience: train + index + query in one call. */
-  def ivfKnn(corpus: DataFrame, queries: DataFrame, k: Int = 5,
-             nCells: Int = 16, nProbe: Int = 4, sampleSize: Int = 256,
-             iterations: Int = 5): DataFrame = {
-    val centroids = ivfTrain(corpus, nCells, sampleSize, iterations)
-    ivfKnnIndexed(ivfIndex(corpus, centroids), centroids, queries, k, nProbe)
-  }
-
-  // ------------------------------------------------ two-level IVF (10⁵ cells) --
-
-  /** Two-level coarse quantizer: `nSuper` super-cells, each with
-    * `nCells/nSuper` child cells; the flat cell id of (super s, child c) is
-    * `s·kChild + c`. This is what takes IVF past the flat quantizer's two
-    * O(nCells) walls: assignment/probing cost nSuper + topSuper·kChild dot
-    * products per vector instead of nCells (85× fewer at 65,536 cells with
-    * the defaults), and child training is a per-super-cell LOCAL Lloyd that
-    * runs as one executor task per super-cell instead of a driver loop over
-    * every cell. Routing through a parent is the standard two-level IVF
-    * approximation: a vector near a super-cell boundary may belong to a
-    * child of the OTHER super, so assignment and probing both descend into
-    * the `topSuper` nearest supers rather than one (the knob that trades
-    * routing loss for cost — measured by the 1 M-vector ANN scale smoke,
-    * BENCH/BASELINE.md).
-    */
-  final case class IvfTwoLevel(superCentroids: Array[Array[Float]],
-                               children: Array[Array[Array[Float]]]) extends Serializable {
-    def nSuper: Int = superCentroids.length
-    def kChild: Int = children(0).length
-    def nCells: Int = nSuper * kChild
-    /** Pre-unitized router copies (computed once, broadcast with the model). */
-    @transient lazy val superUnit: Array[Array[Float]] = unitize(superCentroids)
-    @transient lazy val childUnit: Array[Array[Array[Float]]] = children.map(unitize)
-    /** Raw centroid of a flat cell id (the quantity PQ residuals subtract). */
-    def cellCentroid(cell: Int): Array[Float] = children(cell / kChild)(cell % kChild)
-    /** Children flattened in flat-cell-id order (ADC's coarse-term table). */
-    @transient lazy val flatCentroids: Array[Array[Float]] = children.flatten
-
-    /** Flat cell id of v: best child (by unit-dot) among the `topSuper`
-      * nearest supers' children.
-      */
-    def assign(v: Array[Float], topSuper: Int): Int = {
-      val top = topSupers(v, topSuper)
-      var best = -1; var bestS = Double.MinValue
-      var i = 0
-      while (i < top.length) {
-        val s = top(i)
-        val (c, d) = nearestCellDotWithScore(v, childUnit(s))
-        if (d > bestS) { bestS = d; best = s * kChild + c }
-        i += 1
-      }
-      best
-    }
-
-    /** The `n` nearest supers by unit-dot, best first (deterministic:
-      * stable sort, lower super id wins ties).
-      */
-    def topSupers(v: Array[Float], n: Int): Array[Int] =
-      superUnit.indices.map { s =>
-        val u = superUnit(s); var d = 0.0; var j = 0
-        val lim = math.min(v.length, u.length)
-        while (j < lim) { d += v(j).toDouble * u(j); j += 1 }
-        (s, d)
-      }.sortBy(-_._2).take(math.min(n, nSuper)).map(_._1).toArray
-  }
-
-  /** Driver-side Lloyd under cosine over an in-memory sample — the loop
-    * [[ivfTrain]] runs, extracted so per-super-cell child training can run
-    * the SAME deterministic routine inside one executor task per group.
-    */
-  private[operators] def lloydCos(sample: Array[Array[Float]], k: Int, iterations: Int): Array[Array[Float]] = {
+  private[operators] def lloyd(sample: Array[Array[Float]], k: Int, iterations: Int,
+                               nearest: (Array[Float], Array[Array[Float]]) => Int)
+      : Array[Array[Float]] = {
     val dim = sample.head.length
-    var centroids = Array.tabulate(math.min(k, sample.length)) { c =>
-      sample((c.toLong * sample.length / math.min(k, sample.length)).toInt).clone()
-    }
+    val kk = math.min(k, sample.length)
+    var centroids = Array.tabulate(kk)(c => sample((c.toLong * sample.length / kk).toInt).clone())
     var it = 0
     while (it < iterations) {
       val sums = Array.fill(centroids.length)(new Array[Double](dim))
       val counts = new Array[Int](centroids.length)
       sample.foreach { v =>
-        val c = nearestCell(v, centroids)
+        val c = nearest(v, centroids)
         counts(c) += 1
         var i = 0
         while (i < dim) { sums(c)(i) += v(i); i += 1 }
@@ -702,7 +697,7 @@ object Similarity {
         // hash, id) + take(maxPerSuper); then id-sorted for the
         // sequential Lloyd.
         val kept = capByHash(it, maxPerSuper).sortBy(_._1).map(_._2)
-        (superId, lloydCos(kept, kChild, iterations))
+        (superId, lloyd(kept, kChild, iterations, nearestCell))
       }.collect().toMap
     IvfTwoLevel(supers, Array.tabulate(nSuper) { s =>
       childRows.getOrElse(s, Array.empty) match {
@@ -714,79 +709,72 @@ object Similarity {
     })
   }
 
-  /** BUILD phase, two-level: one pass, nSuper + topSuper·kChild dots per
-    * vector. Output (super, cell, id, emb) — persist with
-    * `.write.partitionBy("super")` so the probe join's broadcast side
-    * partition-prunes the scan to the probed supers (partitioning on the
-    * flat cell would create nCells directories — 10⁵ files is a filesystem
-    * antipattern; the super level is the right granularity).
+  /** BUILD phase: assign every corpus vector to its [[Quantizer.assign]]
+    * cell — one pass, broadcast quantizer. Output (part, cell, id, emb) is
+    * the inverted file; persist it with `.write.partitionBy(IndexPart)`.
     *
     * INCREMENTAL APPEND (the daily-growth lifecycle): the same pass over
     * only the NEW vectors, written with `.mode("append")` into the same
-    * super-partitioned layout, is an assign-only upsert through the FROZEN
-    * model — no retrain, no rebuild, and readers see the union because
-    * probing prunes on the partition column, not on file identity. The
-    * model goes stale as the corpus drifts from its training distribution;
-    * gate appended-index recall against a fresh retrain (the s11 driver
-    * row measures exactly that) and retrain when the gap
-    * exceeds budget.
+    * layout, is an assign-only upsert through the FROZEN model — no
+    * retrain, no rebuild, and readers see the union because probing prunes
+    * on the partition column, not on file identity. The model goes stale as
+    * the corpus drifts from its training distribution; gate appended-index
+    * recall against a fresh retrain (the s11 driver row measures exactly
+    * that) and retrain when the gap exceeds budget.
     */
-  def ivfIndexTwoLevel(corpus: DataFrame, model: IvfTwoLevel, topSuper: Int = 2): DataFrame = {
+  def ivfIndex(corpus: DataFrame, q: Quantizer): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(model)
-    corpus.filter(col("embedding").isNotNull)
-      .select(col("vec_id").as("id"), col("embedding").as("emb"))
-      .as[(Long, Array[Float])]
+    val bc = spark.sparkContext.broadcast(q)
+    vectorTable(corpus).as[(Long, Array[Float])]
       .map { case (id, emb) =>
-        val cell = bc.value.assign(emb, topSuper)
-        (cell / bc.value.kChild, cell, id, emb)
+        val cell = bc.value.assign(emb)
+        (bc.value.part(cell), cell, id, emb)
       }
-      .toDF("super", "cell", "id", "emb")
+      .toDF(IndexPart, "cell", "id", "emb")
   }
 
-  /** COMPACTION for the append lifecycle: every [[ivfIndexTwoLevel]]
-    * `mode("append")` leaves one more file set in each touched super's
-    * partition, so after k appends a probe pays k+1 file opens per probed
-    * super and loses row-group locality. This rewrites ONLY the supers
-    * whose file count exceeds `targetFiles` — each as one bounded job:
-    * read `super=S`, coalesce, write to a sibling staging dir, then swap
-    * via two renames. Returns the compacted super ids. The read happens
-    * fully before the swap (write-to-staging), so this never hits the
-    * read-overwrite-same-path hazard; at 100 TB each super partition is a
-    * few GB and compaction parallelizes per super like any other
+  /** COMPACTION for the append lifecycle: every [[ivfIndex]]
+    * `mode("append")` leaves one more file set in each touched partition,
+    * so after k appends a probe pays k+1 file opens per probed partition
+    * and loses row-group locality. This rewrites ONLY the [[IndexPart]]
+    * partitions whose file count exceeds `targetFiles` — each as one
+    * bounded job: read `part=P`, coalesce, write to a sibling staging dir,
+    * then swap via two renames. Returns the compacted partition ids. The
+    * read happens fully before the swap (write-to-staging), so this never
+    * hits the read-overwrite-same-path hazard; at 100 TB each partition is
+    * a few GB and compaction parallelizes per partition like any other
     * partition-wise maintenance job.
     *
     * CONSISTENCY CONTRACT (what a directory layout without a transaction
     * log can and cannot give — the transactional version of this job is
     * exactly what an Iceberg/Delta binding would buy):
     *  - SINGLE MAINTAINER: no concurrent append may run during compaction —
-    *    a file appended into `super=S` between the read and the swap would
+    *    a file appended into `part=P` between the read and the swap would
     *    be swapped out with the old directory and dropped. Appends and
     *    compaction are both maintenance-side operations; serialize them.
-    *  - CRASH WINDOW: between the two renames the live `super=S` is absent
-    *    (its rows are in `.compact-old-super=S`). The window is two
+    *  - CRASH WINDOW: between the two renames the live `part=P` is absent
+    *    (its rows are in `.compact-old-part=P`). The window is two
     *    metadata operations wide; a crash inside it leaves a RECOVERABLE
     *    layout, never a lost one — run [[recoverCompaction]] (idempotent)
     *    before the next read/append to restore the partition and clear
     *    leftover staging dirs. Probing a partially-compacted index without
-    *    recovery under-returns for the affected super only.
+    *    recovery under-returns for the affected partition only.
     */
-  def compactIndexTwoLevel(spark: SparkSession, indexDir: String,
-                           targetFiles: Int = 1): Seq[Int] = {
+  def compactIndex(spark: SparkSession, indexDir: String, targetFiles: Int = 1): Seq[Int] = {
     require(targetFiles >= 1, s"bad targetFiles $targetFiles")
     val hconf = spark.sparkContext.hadoopConfiguration
     val root = new org.apache.hadoop.fs.Path(indexDir)
     val fs = root.getFileSystem(hconf)
-    val superDirs = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("super="))
+    val partDirs = fs.listStatus(root)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(s"$IndexPart="))
       .map(_.getPath)
-    val touched = superDirs.filter { p =>
+    val touched = partDirs.filter { p =>
       fs.listStatus(p).count(f => f.isFile && f.getPath.getName.endsWith(".parquet")) > targetFiles
     }
     touched.map { p =>
-      val superId = p.getName.stripPrefix("super=").toInt
-      val tmp = new org.apache.hadoop.fs.Path(root, s".compact-tmp-super=$superId")
+      val partId = p.getName.stripPrefix(s"$IndexPart=").toInt
+      val tmp = new org.apache.hadoop.fs.Path(root, s".compact-tmp-$IndexPart=$partId")
       fs.delete(tmp, true)
       // partition-column value is implied by the directory; rows inside
       // carry the remaining columns — write them as-is, coalesced
@@ -794,7 +782,7 @@ object Similarity {
         .write.mode("overwrite").parquet(tmp.toString)
       // drop the _SUCCESS marker so the swapped dir holds data files only
       fs.delete(new org.apache.hadoop.fs.Path(tmp, "_SUCCESS"), false)
-      val bak = new org.apache.hadoop.fs.Path(root, s".compact-old-super=$superId")
+      val bak = new org.apache.hadoop.fs.Path(root, s".compact-old-$IndexPart=$partId")
       fs.delete(bak, true)
       require(fs.rename(p, bak), s"could not move aside $p")
       if (!fs.rename(tmp, p)) {
@@ -807,27 +795,27 @@ object Similarity {
              else s" AND could not restore $bak — run recoverCompaction($indexDir)"))
       }
       fs.delete(bak, true)
-      superId
+      partId
     }.toSeq.sorted
   }
 
-  /** Idempotent crash recovery for [[compactIndexTwoLevel]]: any
-    * `.compact-old-super=S` left behind while the live `super=S` is absent
+  /** Idempotent crash recovery for [[compactIndex]]: any
+    * `.compact-old-part=P` left behind while the live `part=P` is absent
     * is renamed back (the crash hit inside the swap window — the old rows
     * are authoritative), and all `.compact-tmp-*` / remaining
     * `.compact-old-*` staging dirs are removed. Safe to run any time the
-    * index is quiescent; returns the supers it restored.
+    * index is quiescent; returns the partitions it restored.
     */
   def recoverCompaction(spark: SparkSession, indexDir: String): Seq[Int] = {
     val root = new org.apache.hadoop.fs.Path(indexDir)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val entries = fs.listStatus(root).map(_.getPath)
-    val restored = entries.filter(_.getName.startsWith(".compact-old-super=")).flatMap { bak =>
-      val superId = bak.getName.stripPrefix(".compact-old-super=").toInt
-      val live = new org.apache.hadoop.fs.Path(root, s"super=$superId")
+    val restored = entries.filter(_.getName.startsWith(s".compact-old-$IndexPart=")).flatMap { bak =>
+      val partId = bak.getName.stripPrefix(s".compact-old-$IndexPart=").toInt
+      val live = new org.apache.hadoop.fs.Path(root, s"$IndexPart=$partId")
       if (!fs.exists(live)) {
         require(fs.rename(bak, live), s"could not restore $bak")
-        Some(superId)
+        Some(partId)
       } else None
     }
     entries.filter(p => p.getName.startsWith(".compact-tmp-") ||
@@ -836,97 +824,104 @@ object Similarity {
     restored.toSeq.sorted
   }
 
-  /** QUERY phase, two-level: probe the best `nProbe` cells found among the
-    * `nProbeSuper` nearest supers' children (ranked by unit-dot — the same
-    * router the index used), then the standard slim probe join + exact
-    * re-rank. Probe cost per query: nSuper + nProbeSuper·kChild dots, not
-    * nCells.
-    */
-  def ivfKnnTwoLevelIndexed(index: DataFrame, model: IvfTwoLevel, queries: DataFrame,
-                            k: Int = 5, nProbe: Int = 8, nProbeSuper: Int = 8): DataFrame =
-    ivfKnnTwoLevelFilteredIndexed(index, model, queries, None, k, nProbe, nProbeSuper)
-
-  /** FILTERED ANN: [[ivfKnnTwoLevelIndexed]] composed with a metadata
-    * predicate — `allowed` is a slim one-column (`id`) frame of the vectors
-    * the predicate admits (typically an attribute table filtered with
-    * ordinary pushed-down predicates: source, license, date, label).
-    * Retrieval over training data is almost always filtered; this is the
-    * "pre-filtering" composition: the filter lands as a LEFT SEMI join on
+  /** The probe head both IVF query kernels share: each query's
+    * [[Quantizer.probes]] cells as SLIM (part, cell, query_id) rows —
+    * embedding the query vector per probed cell would broadcast nProbe
+    * copies of it (the payload discipline of [[lshKnnIndexed]]'s probes) —
+    * joined into the index on (part, cell), self-matches dropped, the
+    * `allowed` filter applied, then the query vectors joined back once per
+    * surviving candidate from the tiny broadcast side.
+    *
+    * FILTERED ANN: `allowed` is a slim one-column (`id`) frame of the
+    * vectors a metadata predicate admits (typically an attribute table
+    * filtered with ordinary pushed-down predicates: source, license, date,
+    * label). This is the "pre-filtering" composition: a LEFT SEMI join on
     * the candidate stream AFTER partition-pruned probe selection but BEFORE
-    * the per-candidate scoring join — disallowed vectors never reach a
-    * cosine, and k survivors per query are guaranteed to satisfy the
+    * any scoring — disallowed vectors never reach a cosine or an ADC
+    * accumulation, and k survivors per query are guaranteed to satisfy the
     * predicate (post-filtering an unfiltered top-k can return < k rows or
-    * rescan). At 100 TB the allowed set is a slim id column; Catalyst/AQE
-    * picks broadcast vs shuffle for the semi-join by its actual size, and
-    * the attribute table's own predicate pushes down to its parquet scan
-    * (plan-asserted in PlanSpec).
+    * rescan). Catalyst/AQE picks broadcast vs shuffle for the semi-join by
+    * the allowed set's actual size, and the attribute table's own predicate
+    * pushes down to its parquet scan (plan-asserted in PlanSpec).
     */
-  def ivfKnnTwoLevelFilteredIndexed(index: DataFrame, model: IvfTwoLevel, queries: DataFrame,
-                                    allowed: Option[DataFrame],
-                                    k: Int = 5, nProbe: Int = 8, nProbeSuper: Int = 8): DataFrame = {
+  private def probed(index: DataFrame, bc: Broadcast[Quantizer], queries: DataFrame,
+                     allowed: Option[DataFrame], nProbe: Int, nProbeSuper: Int): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val bc = spark.sparkContext.broadcast(model)
-    val qn = queries.filter(col("embedding").isNotNull)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    // slim probes — at nProbe=512 an embedded q_emb would broadcast 512
-    // copies of every query vector (same discipline as lshKnnIndexed)
+    val qn = queryVectors(queries)
     val probes = qn.as[(Long, Array[Float])]
       .flatMap { case (qid, emb) =>
-        val m = bc.value
-        val scored = m.topSupers(emb, nProbeSuper).iterator.flatMap { s =>
-          m.childUnit(s).indices.iterator.map { c =>
-            val u = m.childUnit(s)(c); var d = 0.0; var j = 0
-            val lim = math.min(emb.length, u.length)
-            while (j < lim) { d += emb(j).toDouble * u(j); j += 1 }
-            (s, s * m.kChild + c, d)
-          }
-        }.toVector
-        scored.sortBy { case (_, cell, d) => (-d, cell) }.take(nProbe)
-          .map { case (s, cell, _) => (s, cell, qid) }
-      }.toDF("super", "cell", "query_id")
-
-    val probed = index.join(broadcast(probes), Seq("super", "cell"))
+        val q = bc.value
+        q.probes(emb, nProbe, nProbeSuper).map(cell => (q.part(cell), cell, qid))
+      }.toDF(IndexPart, "cell", "query_id")
+    val hits = index.join(broadcast(probes), Seq(IndexPart, "cell"))
       .filter(col("id") =!= col("query_id"))
-    val admitted = allowed match {
-      case Some(ok) => probed.join(ok.select(col("id")), Seq("id"), "left_semi")
-      case None => probed
-    }
-    val scored = admitted
+    allowed.fold(hits)(ok => hits.join(ok.select(col("id")), Seq("id"), "left_semi"))
       .join(broadcast(qn), "query_id")
+  }
+
+  /** QUERY phase: approximate top-k against a prebuilt [[ivfIndex]] and its
+    * quantizer — the [[probed]] candidates of each query, re-ranked by
+    * exact cosine. The corpus is touched only through the index. For an
+    * [[IvfTwoLevel]] probe cost per query is nSuper + nProbeSuper·kChild
+    * dots, not nCells.
+    */
+  def ivfKnnIndexed(index: DataFrame, q: Quantizer, queries: DataFrame,
+                    allowed: Option[DataFrame] = None, k: Int = 5, nProbe: Int = 4,
+                    nProbeSuper: Int = 8): DataFrame = {
+    val bc = queries.sparkSession.sparkContext.broadcast(q)
+    val scored = probed(index, bc, queries, allowed, nProbe, nProbeSuper)
       .select(col("query_id"), col("id").as("neighbor_id"),
         cosine_similarity(col("q_emb"), col("emb")).as("score"))
       .groupBy("query_id", "neighbor_id").agg(max("score").as("score"))
     topK(scored, k)
   }
 
-  /** STREAMING SERVE: top-k over a STREAM of query vectors against the
-    * staged two-level index — the deployment shape of a nightly-built
-    * (and incrementally appended) index answering online query batches.
-    * Top-k is a per-batch ranking, not a continuous aggregate, so
-    * append-mode streaming cannot express it as a plan; `foreachBatch` is
-    * the idiomatic Structured Streaming answer — each trigger's queries
-    * run the EXACT batch kernel ([[ivfKnnTwoLevelFilteredIndexed]],
-    * including an optional metadata filter) and the results go to `sink`
-    * with the batch id (exactly-once per trigger under a checkpointed
-    * sink; same guarantee contract as any foreachBatch consumer). Stream
-    * semantics: results for a query depend only on its own batch and the
-    * static index — batch ≡ stream equality is by construction and
-    * asserted in StreamingSpec.
+  /** STREAMING SERVE: top-k over a STREAM of query vectors against a staged
+    * index — the deployment shape of a nightly-built (and incrementally
+    * appended) index answering online query batches. Top-k is a per-batch
+    * ranking, not a continuous aggregate, so append-mode streaming cannot
+    * express it as a plan; `foreachBatch` is the idiomatic Structured
+    * Streaming answer — each trigger's queries run the EXACT batch kernel
+    * ([[ivfKnnIndexed]], including an optional metadata filter) and the
+    * results go to `sink` with the batch id (exactly-once per trigger under
+    * a checkpointed sink; same guarantee contract as any foreachBatch
+    * consumer). Stream semantics: results for a query depend only on its
+    * own batch and the static index — batch ≡ stream equality is by
+    * construction and asserted in StreamingSpec.
     */
-  def ivfKnnTwoLevelServe(index: DataFrame, model: IvfTwoLevel,
-                          queryStream: DataFrame,
-                          sink: (DataFrame, Long) => Unit,
-                          allowed: Option[DataFrame] = None,
-                          k: Int = 5, nProbe: Int = 8, nProbeSuper: Int = 8)
+  def ivfKnnServe(index: DataFrame, q: Quantizer, queryStream: DataFrame,
+                  sink: (DataFrame, Long) => Unit, allowed: Option[DataFrame] = None,
+                  k: Int = 5, nProbe: Int = 4, nProbeSuper: Int = 8)
       : org.apache.spark.sql.streaming.StreamingQuery =
     queryStream.writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sink(ivfKnnTwoLevelFilteredIndexed(index, model, batch, allowed,
-          k, nProbe, nProbeSuper), batchId)
+        sink(ivfKnnIndexed(index, q, batch, allowed, k, nProbe, nProbeSuper), batchId)
       }
       .start()
+
+  /** One-shot convenience: train + index + query in one call. */
+  def ivfKnn(corpus: DataFrame, queries: DataFrame, k: Int = 5,
+             nCells: Int = 16, nProbe: Int = 4, sampleSize: Int = 256,
+             iterations: Int = 5): DataFrame = {
+    val q = Flat(ivfTrain(corpus, nCells, sampleSize, iterations))
+    ivfKnnIndexed(ivfIndex(corpus, q), q, queries, k = k, nProbe = nProbe)
+  }
+
+  /** Centroid model ↔ DataFrame converters, so a staged IVF index is fully
+    * parquet-persistable: write `centroidsToDf` next to the index, read it
+    * back with `centroidsFromDf` before querying.
+    */
+  def centroidsToDf(spark: SparkSession, centroids: Array[Array[Float]]): DataFrame = {
+    import spark.implicits._
+    centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq.toDF("cell", "centroid")
+  }
+
+  def centroidsFromDf(df: DataFrame): Array[Array[Float]] =
+    df.select("cell", "centroid").collect()
+      .sortBy(_.getInt(0))
+      .map(_.getSeq[Float](1).toArray)
 
   /** Two-level model ↔ DataFrame converters (same staged-parquet lifecycle
     * as [[centroidsToDf]]): child rows are (super, child, centroid), the
@@ -950,119 +945,6 @@ object Similarity {
       Array.tabulate(supers.length)(s => kids.filter(_._1 == s).sortBy(_._2).map(_._3)))
   }
 
-  // ------------------------------------------- two-level IVF-PQ (composed) --
-
-  /** TRAIN: per-subspace codebooks over ROUTED residuals (v − its two-level
-    * child centroid, the same assignment [[ivfPqIndexTwoLevel]] applies —
-    * train/index residual semantics must never diverge). Composes the
-    * 10⁴–10⁵-cell router with the nSub+4 B/vector compressed scan: the
-    * layout a 100 TB vector corpus actually serves batches from.
-    */
-  def pqTrainTwoLevel(corpus: DataFrame, model: IvfTwoLevel, nSub: Int = 8, k: Int = 16,
-                      sampleSize: Int = 256, iterations: Int = 5, topSuper: Int = 2): PqModel =
-    pqFromResiduals(
-      pqSample(corpus, sampleSize)
-        .map(v => subtractCentroid(v, model.cellCentroid(model.assign(v, topSuper)))),
-      nSub, k, iterations)
-
-  /** BUILD: one routed-assignment pass emitting (super, cell, id, codes,
-    * norm) — persist with `.write.partitionBy("super")` like
-    * [[ivfIndexTwoLevel]].
-    */
-  def ivfPqIndexTwoLevel(corpus: DataFrame, model: IvfTwoLevel, pq: PqModel,
-                         topSuper: Int = 2): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val bcM = spark.sparkContext.broadcast(model)
-    val bcP = spark.sparkContext.broadcast(pq)
-    corpus.filter(col("embedding").isNotNull)
-      .select(col("vec_id").as("id"), col("embedding").as("emb"))
-      .as[(Long, Array[Float])]
-      .map { case (id, emb) =>
-        val m = bcM.value
-        val cell = m.assign(emb, topSuper)
-        val res = subtractCentroid(emb, m.cellCentroid(cell))
-        (cell / m.kChild, cell, id, pqEncode(res, bcP.value), l2norm(emb))
-      }
-      .toDF("super", "cell", "id", "codes", "norm")
-  }
-
-  /** QUERY: routed probes (nSuper + nProbeSuper·kChild dots, never nCells)
-    * into the shared ADC scan + exact re-rank ([[adcScanRerank]] — the
-    * coarse-term table is the flattened children). Probe rows embed q_emb
-    * because the ADC pass builds its LUT in-scan; the broadcast is bounded
-    * by queries × nProbe × dim — fine for the bounded-query-batch contract,
-    * same as the flat PQ path.
-    */
-  def ivfPqKnnTwoLevelIndexed(index: DataFrame, model: IvfTwoLevel, pq: PqModel,
-                              vectors: DataFrame, queries: DataFrame,
-                              k: Int = 5, nProbe: Int = 8, nProbeSuper: Int = 8,
-                              rerank: Int = 8): DataFrame =
-    ivfPqKnnTwoLevelFilteredIndexed(index, model, pq, vectors, queries, None,
-      k, nProbe, nProbeSuper, rerank)
-
-  /** FILTERED ANN on the COMPRESSED path: the
-    * [[ivfKnnTwoLevelFilteredIndexed]] composition applied to the IVF-PQ
-    * serving layout. The left-semi predicate cut lands on the slim
-    * (nSub+4 B) code rows BEFORE the ADC scan, so disallowed vectors cost
-    * neither an ADC accumulation nor a re-rank slot — with a selective
-    * predicate the in-scan top-(k·rerank) heaps fill with admissible
-    * candidates only, which is what makes pre-filtering beat post-filtering
-    * on recall at equal rerank budget.
-    */
-  def ivfPqKnnTwoLevelFilteredIndexed(index: DataFrame, model: IvfTwoLevel, pq: PqModel,
-                                      vectors: DataFrame, queries: DataFrame,
-                                      allowed: Option[DataFrame],
-                                      k: Int = 5, nProbe: Int = 8, nProbeSuper: Int = 8,
-                                      rerank: Int = 8): DataFrame = {
-    val spark = queries.sparkSession
-    import spark.implicits._
-    val bcM = spark.sparkContext.broadcast(model)
-    val bcFlat = spark.sparkContext.broadcast(model.flatCentroids)
-    val bcP = spark.sparkContext.broadcast(pq)
-    val qn = queries.filter(col("embedding").isNotNull)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val probes = qn.as[(Long, Array[Float])]
-      .flatMap { case (qid, emb) =>
-        val m = bcM.value
-        val scored = m.topSupers(emb, nProbeSuper).iterator.flatMap { s =>
-          m.childUnit(s).indices.iterator.map { c =>
-            val u = m.childUnit(s)(c); var d = 0.0; var j = 0
-            val lim = math.min(emb.length, u.length)
-            while (j < lim) { d += emb(j).toDouble * u(j); j += 1 }
-            (s, s * m.kChild + c, d)
-          }
-        }.toVector
-        scored.sortBy { case (_, cell, d) => (-d, cell) }.take(nProbe)
-          .map { case (s, cell, _) => (s, cell, qid, emb) }
-      }.toDF("super", "cell", "query_id", "q_emb")
-
-    val probed = index.join(broadcast(probes), Seq("super", "cell"))
-      .filter(col("id") =!= col("query_id"))
-    val admitted = allowed match {
-      case Some(ok) => probed.join(ok.select(col("id")), Seq("id"), "left_semi")
-      case None => probed
-    }
-    val joined = admitted
-      .select(col("query_id"), col("q_emb"), col("cell"), col("id"), col("codes"), col("norm"))
-      .as[(Long, Array[Float], Int, Long, Array[Byte], Float)]
-    adcScanRerank(joined, bcFlat, bcP, vectors, qn, k, k * rerank)
-  }
-
-  /** Centroid model ↔ DataFrame converters, so a staged IVF index is fully
-    * parquet-persistable: write `centroidsToDf` next to the index, read it
-    * back with `centroidsFromDf` before querying.
-    */
-  def centroidsToDf(spark: SparkSession, centroids: Array[Array[Float]]): DataFrame = {
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq.toDF("cell", "centroid")
-  }
-
-  def centroidsFromDf(df: DataFrame): Array[Array[Float]] =
-    df.select("cell", "centroid").collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Float](1).toArray)
-
   // ------------------------------------------------------------- IVF-PQ --
 
   /** Product-quantization model: `nSub` sub-codebooks of `k` centroids over
@@ -1073,7 +955,9 @@ object Similarity {
     * 256 B → 12 B at the default nSub=8. At 100 TB the PQ index is what
     * executors actually scan per query batch; the raw vectors exist once
     * (in [[vectorTable]]) and are touched only by the final exact re-rank
-    * over the bounded candidate list.
+    * over the bounded candidate list. Over an [[IvfTwoLevel]] quantizer
+    * this composes the 10⁴–10⁵-cell router with the nSub+4 B/vector
+    * compressed scan: the layout a 100 TB vector corpus serves batches from.
     *
     * Residual (not raw-vector) encoding is the standard IVF-PQ refinement:
     * codebooks quantize v − its coarse cell centroid, spending their
@@ -1110,33 +994,6 @@ object Similarity {
     best
   }
 
-  /** Deterministic Lloyd under L2 (subspace vectors are unnormalized —
-    * cosine is only meaningful for the full vector, so the sub-codebooks
-    * quantize raw subvectors and the ADC scorer reassembles inner products).
-    */
-  private def lloydL2(sample: Array[Array[Float]], k: Int, iterations: Int): Array[Array[Float]] = {
-    val subDim = sample.head.length
-    val kk = math.min(k, sample.length)
-    var centroids = Array.tabulate(kk)(c => sample((c.toLong * sample.length / kk).toInt).clone())
-    var it = 0
-    while (it < iterations) {
-      val sums = Array.fill(centroids.length)(new Array[Double](subDim))
-      val counts = new Array[Int](centroids.length)
-      sample.foreach { v =>
-        val c = nearestL2(v, 0, centroids)
-        counts(c) += 1
-        var i = 0
-        while (i < subDim) { sums(c)(i) += v(i); i += 1 }
-      }
-      centroids = centroids.indices.map { c =>
-        if (counts(c) == 0) centroids(c)
-        else Array.tabulate(subDim)(i => (sums(c)(i) / counts(c)).toFloat)
-      }.toArray
-      it += 1
-    }
-    centroids
-  }
-
   /** v − centroid, the single definition both pqTrain's sample and
     * ivfPqIndex's codes go through — train/index residual semantics must
     * never diverge.
@@ -1150,52 +1007,29 @@ object Similarity {
     out
   }
 
-  /** v − its coarse cell centroid: the quantity the codebooks quantize.
-    * Cell assignment MUST match [[ivfIndex]]/[[ivfPqIndex]]'s (unit-dot) —
-    * train/index residual semantics must never diverge.
+  /** TRAIN phase: per-subspace codebooks (L2 [[lloyd]]) over RESIDUALS —
+    * each sample vector minus the centroid of its [[Quantizer.assign]] cell,
+    * the assignment [[ivfPqIndex]] applies, so train and index residuals
+    * never diverge. The sample is the seeded hash-ordered uniform draw
+    * [[ivfTrain]] uses, under seed 43 instead of 41 so the two samples are
+    * independent. k ≤ 256 so a code fits one byte.
     */
-  private def residual(v: Array[Float], centroids: Array[Array[Float]],
-                       unit: Array[Array[Float]]): Array[Float] =
-    subtractCentroid(v, centroids(nearestCellDot(v, unit)))
-
-  /** TRAIN phase: per-subspace codebooks over RESIDUALS vs the given coarse
-    * centroids, from the same seeded hash-ordered uniform sample
-    * [[ivfTrain]] uses (different seed so the two samples are independent
-    * draws). k ≤ 256 so a code fits one byte.
-    */
-  def pqTrain(corpus: DataFrame, centroids: Array[Array[Float]], nSub: Int = 8, k: Int = 16,
+  def pqTrain(corpus: DataFrame, q: Quantizer, nSub: Int = 8, k: Int = 16,
               sampleSize: Int = 256, iterations: Int = 5): PqModel = {
-    val unit = unitize(centroids)
-    pqFromResiduals(
-      pqSample(corpus, sampleSize).map(v => residual(v, centroids, unit)),
-      nSub, k, iterations)
-  }
-
-  /** The seeded hash-ordered PQ training sample (seed 43 — an independent
-    * draw from ivfTrain's 41), shared by the flat and two-level trainers.
-    */
-  private def pqSample(corpus: DataFrame, sampleSize: Int): Array[Array[Float]] = {
+    require(k <= 256, s"PQ code must fit one byte: k=$k > 256")
     val spark = corpus.sparkSession
     import spark.implicits._
-    corpus.filter(col("embedding").isNotNull)
+    val sample = corpus.filter(col("embedding").isNotNull)
       .orderBy(xxhash64(col("vec_id"), lit(43)), col("vec_id")).limit(sampleSize)
       .select("embedding").as[Array[Float]].collect()
-  }
-
-  /** Per-subspace Lloyd over an already-residualized sample — the tail both
-    * PQ trainers share (residualization differs: flat nearest-cell vs
-    * two-level routed assignment; it must match the index build's).
-    */
-  private def pqFromResiduals(sample: Array[Array[Float]], nSub: Int, k: Int,
-                              iterations: Int): PqModel = {
-    require(k <= 256, s"PQ code must fit one byte: k=$k > 256")
+      .map(v => subtractCentroid(v, q.centroid(q.assign(v))))
     require(sample.nonEmpty, "empty corpus")
     val dim = sample.head.length
     require(dim % nSub == 0, s"embedding dim $dim not divisible by nSub=$nSub")
     val subDim = dim / nSub
     PqModel(Array.tabulate(nSub) { m =>
-      lloydL2(sample.map(v => java.util.Arrays.copyOfRange(v, m * subDim, (m + 1) * subDim)),
-        k, iterations)
+      lloyd(sample.map(v => java.util.Arrays.copyOfRange(v, m * subDim, (m + 1) * subDim)),
+        k, iterations, nearestL2(_, 0, _))
     })
   }
 
@@ -1236,37 +1070,37 @@ object Similarity {
     lut
   }
 
-  /** BUILD phase: one pass assigning every vector to its coarse cell and
-    * product-quantizing it. Output (cell, id, codes BINARY(nSub), norm) is
-    * the parquet-persistable compressed inverted file; `norm` is the exact
-    * L2 norm so ADC can return approximate COSINE (approx <q,v> from codes,
-    * exact |q|·|v| from stored norms).
+  /** BUILD phase: one pass assigning every vector to its [[Quantizer.assign]]
+    * cell and product-quantizing its residual. Output (part, cell, id,
+    * codes BINARY(nSub), norm) is the compressed inverted file, persisted
+    * with `.write.partitionBy(IndexPart)` like [[ivfIndex]]; `norm` is the
+    * exact L2 norm so ADC can return approximate COSINE (approx <q,v> from
+    * codes, exact |q|·|v| from stored norms).
     */
-  def ivfPqIndex(corpus: DataFrame, centroids: Array[Array[Float]], pq: PqModel): DataFrame = {
+  def ivfPqIndex(corpus: DataFrame, q: Quantizer, pq: PqModel): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val bcC = spark.sparkContext.broadcast(centroids)
-    val bcU = spark.sparkContext.broadcast(unitize(centroids))
+    val bcQ = spark.sparkContext.broadcast(q)
     val bcP = spark.sparkContext.broadcast(pq)
-    corpus.filter(col("embedding").isNotNull)
-      .select(col("vec_id").as("id"), col("embedding").as("emb"))
-      .as[(Long, Array[Float])]
+    vectorTable(corpus).as[(Long, Array[Float])]
       .map { case (id, emb) =>
-        // unit-dot assignment, same ranking/flops rationale as ivfIndex
-        val cell = nearestCellDot(emb, bcU.value)
-        val res = subtractCentroid(emb, bcC.value(cell))
-        (cell, id, pqEncode(res, bcP.value), l2norm(emb))
+        val m = bcQ.value
+        val cell = m.assign(emb)
+        (m.part(cell), cell, id, pqEncode(subtractCentroid(emb, m.centroid(cell)), bcP.value), l2norm(emb))
       }
-      .toDF("cell", "id", "codes", "norm")
+      .toDF(IndexPart, "cell", "id", "codes", "norm")
   }
 
-  /** QUERY phase against a prebuilt [[ivfPqIndex]]: probe the nProbe nearest
-    * cells, ADC-score every code row in them, keep the top `k·rerank`
-    * candidates per query, and exact-cosine re-rank those against the
+  /** QUERY phase against a prebuilt [[ivfPqIndex]]: the [[probed]] code rows
+    * of each query (with its `allowed` filter cutting the slim nSub+4 B rows
+    * BEFORE the ADC scan, so with a selective predicate the in-scan
+    * top-(k·rerank) heaps fill with admissible candidates only), ADC-scored,
+    * the top `k·rerank` per query exact-cosine re-ranked against the
     * single-copy [[vectorTable]]. Two scale properties:
     *
-    *  - the scan side reads only (cell, id, codes, norm) — `4·dim/(nSub+4)`×
-    *    fewer bytes than scanning raw vectors, with cell pruning on top;
+    *  - the scan side reads only (part, cell, id, codes, norm) —
+    *    `4·dim/(nSub+4)`× fewer bytes than scanning raw vectors, with
+    *    partition pruning on top;
     *  - the candidate cut happens INSIDE the ADC pass (a bounded per-query
     *    heap per partition, the map-side-combine shape), so the only
     *    exchange carries ≤ partitions × queries × k·rerank slim rows, never
@@ -1274,47 +1108,34 @@ object Similarity {
     *    always contains the global top-R by (score desc, id asc), so the
     *    final window cut is partition-count-invariant and deterministic.
     */
-  def ivfPqKnnIndexed(index: DataFrame, centroids: Array[Array[Float]], pq: PqModel,
+  def ivfPqKnnIndexed(index: DataFrame, q: Quantizer, pq: PqModel,
                       vectors: DataFrame, queries: DataFrame,
-                      k: Int = 5, nProbe: Int = 4, rerank: Int = 8): DataFrame = {
+                      allowed: Option[DataFrame] = None, k: Int = 5, nProbe: Int = 4,
+                      nProbeSuper: Int = 8, rerank: Int = 8): DataFrame = {
     val spark = queries.sparkSession
     import spark.implicits._
-    val bcC = spark.sparkContext.broadcast(centroids)
-    val bcP = spark.sparkContext.broadcast(pq)
-    val qn = queries.filter(col("embedding").isNotNull)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-    val probes = qn.as[(Long, Array[Float])]
-      .flatMap { case (qid, emb) =>
-        bcC.value.indices.map(c => (c, cos(emb, bcC.value(c))))
-          .sortBy(-_._2).take(nProbe)
-          .map { case (c, _) => (c, qid, emb) }
-      }.toDF("cell", "query_id", "q_emb")
-
-    val joined = index.join(broadcast(probes), Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
+    val bcQ = spark.sparkContext.broadcast(q)
+    val joined = probed(index, bcQ, queries, allowed, nProbe, nProbeSuper)
       .select(col("query_id"), col("q_emb"), col("cell"), col("id"), col("codes"), col("norm"))
       .as[(Long, Array[Float], Int, Long, Array[Byte], Float)]
-    adcScanRerank(joined, bcC, bcP, vectors, qn, k, k * rerank)
+    adcScanRerank(joined, bcQ, spark.sparkContext.broadcast(pq), vectors, queryVectors(queries),
+      k, k * rerank)
   }
 
-  /** Shared tail of the flat and two-level PQ query paths: the ADC scan
-    * with in-scan bounded per-query heaps, the partition-count-invariant
-    * global top-R window cut, and the exact re-rank over the broadcast
-    * candidate list. `cents` is indexed by the FLAT cell id the joined rows
-    * carry (for the two-level path: the flattened children), because with
-    * residual codes the reassembled inner product is <q,c_cell> + Σ_m
-    * lut[code_m].
+  /** The ADC scan with in-scan bounded per-query heaps, the
+    * partition-count-invariant global top-R window cut, and the exact
+    * re-rank over the broadcast candidate list. With residual codes the
+    * reassembled inner product is <q, centroid(cell)> + Σ_m lut[code_m].
     */
   private def adcScanRerank(
       joined: org.apache.spark.sql.Dataset[(Long, Array[Float], Int, Long, Array[Byte], Float)],
-      bcC: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
-      bcP: org.apache.spark.broadcast.Broadcast[PqModel],
+      bcQ: Broadcast[Quantizer], bcP: Broadcast[PqModel],
       vectors: DataFrame, qn: DataFrame, k: Int, r: Int): DataFrame = {
     val spark = vectors.sparkSession
     import spark.implicits._
     val approx = joined.mapPartitions { rows =>
       val p = bcP.value
-      val cents = bcC.value
+      val quant = bcQ.value
       val luts = scala.collection.mutable.Map[Long, (Array[Float], Float)]()
       // <q, cell centroid>, cached per (query, cell): ≤ nProbe coarse terms
       // per query, amortized like the LUT
@@ -1326,12 +1147,7 @@ object Similarity {
       val heaps = scala.collection.mutable.Map[Long, scala.collection.mutable.PriorityQueue[(Double, Long)]]()
       rows.foreach { case (qid, qEmb, cell, id, codes, norm) =>
         val (lut, qNorm) = luts.getOrElseUpdate(qid, (adcLut(qEmb, p), l2norm(qEmb)))
-        var ip = qc.getOrElseUpdate((qid, cell), {
-          val cc = cents(cell); var d = 0.0; var i = 0
-          val lim = math.min(qEmb.length, cc.length)
-          while (i < lim) { d += qEmb(i).toDouble * cc(i); i += 1 }
-          d
-        })
+        var ip = qc.getOrElseUpdate((qid, cell), dot(qEmb, quant.centroid(cell)))
         var m = 0
         while (m < p.nSub) { ip += lut(m * p.k + (codes(m) & 0xFF)); m += 1 }
         val denom = qNorm.toDouble * norm
@@ -1362,10 +1178,10 @@ object Similarity {
   def ivfPqKnn(corpus: DataFrame, queries: DataFrame, k: Int = 5,
                nCells: Int = 16, nProbe: Int = 4, nSub: Int = 8, kCodes: Int = 16,
                rerank: Int = 8): DataFrame = {
-    val cs = ivfTrain(corpus, nCells)
-    val pq = pqTrain(corpus, cs, nSub, kCodes)
-    ivfPqKnnIndexed(ivfPqIndex(corpus, cs, pq), cs, pq, vectorTable(corpus),
-      queries, k, nProbe, rerank)
+    val q = Flat(ivfTrain(corpus, nCells))
+    val pq = pqTrain(corpus, q, nSub, kCodes)
+    ivfPqKnnIndexed(ivfPqIndex(corpus, q, pq), q, pq, vectorTable(corpus),
+      queries, k = k, nProbe = nProbe, rerank = rerank)
   }
 
   /** PQ model ↔ DataFrame converters (parquet-persistable next to the

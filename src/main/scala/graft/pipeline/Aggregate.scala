@@ -42,8 +42,4 @@ object Aggregate {
         sum(when(col("role") === col("prev_role"), 1L).otherwise(0L)).as("n_role_repeats")
       )
   }
-
-  /** Per-category counts (the per-sink equality check of the north rule). */
-  def perCategory(enriched: DataFrame): DataFrame =
-    enriched.groupBy("category").agg(count(lit(1)).as("n_turns"))
 }

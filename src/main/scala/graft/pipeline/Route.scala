@@ -48,8 +48,6 @@ object Route {
     df.repartition(partitions, col("conv_id"),
       pmod(hash(col("turn_idx")), lit(saltBuckets(df))))
 
-  def sinkPath(outDir: String, category: String): String = s"$outDir/category=$category"
-
   /** One partitioned write job over rows whose placement was already fixed
     * by the salted repartition of the RAW turns upstream (shuffling the
     * ~4×-larger parsed token arrays instead would dominate the job — the

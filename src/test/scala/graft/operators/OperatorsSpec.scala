@@ -240,7 +240,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = corr.filter(col("vec_id") % 250 === 0) // one probe per cluster block
     val brute = Similarity.bruteForceKnn(corr, q, k = 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val cs = Similarity.ivfTrain(corr, nCells = 8)
+    val cs = Similarity.Flat(Similarity.ivfTrain(corr, nCells = 8))
     val got = Similarity.ivfKnnIndexed(Similarity.ivfIndex(corr, cs), cs, q, k = 5, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val recall = got.intersect(brute).size.toDouble / brute.size
@@ -333,7 +333,8 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = corr.filter(col("vec_id") % 250 === 0)
     val brute = Similarity.bruteForceKnn(corr, q, k = 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val got = Similarity.ivfKnnIndexed(Similarity.ivfIndex(corr, cs3), cs3, q, k = 5, nProbe = 2)
+    val flat = Similarity.Flat(cs3)
+    val got = Similarity.ivfKnnIndexed(Similarity.ivfIndex(corr, flat), flat, q, k = 5, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val recall = got.intersect(brute).size.toDouble / brute.size
     assert(recall >= 0.9, s"distributed-trainer IVF recall = $recall")
@@ -353,7 +354,8 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = corr.filter(col("vec_id") % 250 === 0)
     val brute = Similarity.bruteForceKnn(corr, q, k = 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val got = Similarity.ivfKnnIndexed(Similarity.ivfIndex(corr, a), a, q, k = 5, nProbe = 2)
+    val flat = Similarity.Flat(a)
+    val got = Similarity.ivfKnnIndexed(Similarity.ivfIndex(corr, flat), flat, q, k = 5, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val recall = got.intersect(brute).size.toDouble / brute.size
     assert(recall >= 0.9, s"half-slice distributed-trainer recall = $recall")
@@ -379,8 +381,8 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = corr.filter(col("vec_id") % 250 === 0)
     val brute = Similarity.bruteForceKnn(corr, q, k = 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val idx = Similarity.ivfIndexTwoLevel(corr, m3)
-    val got = Similarity.ivfKnnTwoLevelIndexed(idx, m3, q, k = 5, nProbe = 4, nProbeSuper = 2)
+    val idx = Similarity.ivfIndex(corr, m3)
+    val got = Similarity.ivfKnnIndexed(idx, m3, q, k = 5, nProbe = 4, nProbeSuper = 2)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val recall = got.intersect(brute).size.toDouble / brute.size
     assert(recall >= 0.9, s"two-level routed recall = $recall")
@@ -389,10 +391,10 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stage = graft.pipeline.Staging.tempDir("graft-2l-test")
     try {
       Similarity.twoLevelToDf(spark, m3).write.parquet(s"$stage/model")
-      idx.write.partitionBy("super").parquet(s"$stage/ivf")
+      idx.write.partitionBy(Similarity.IndexPart).parquet(s"$stage/ivf")
       val mBack = Similarity.twoLevelFromDf(spark.read.parquet(s"$stage/model"))
       assert(flatEq(m3, mBack), "model changed through parquet")
-      val gotStaged = Similarity.ivfKnnTwoLevelIndexed(
+      val gotStaged = Similarity.ivfKnnIndexed(
         spark.read.parquet(s"$stage/ivf"), mBack, q, k = 5, nProbe = 4, nProbeSuper = 2)
         .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
       assert(gotStaged == got)
@@ -405,14 +407,14 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val corr = spark.range(n).map(id => (id, graft.SyntheticVectors.vecCorrelated(id, n, 16, 8)))
       .toDF("vec_id", "embedding")
     val m = Similarity.ivfTrainTwoLevel(corr, nCells = 16, nSuper = 4)
-    val pq = Similarity.pqTrainTwoLevel(corr, m, nSub = 8, k = 16)
-    val idx = Similarity.ivfPqIndexTwoLevel(corr, m, pq)
+    val pq = Similarity.pqTrain(corr, m, nSub = 8, k = 16)
+    val idx = Similarity.ivfPqIndex(corr, m, pq)
     val q = corr.filter(col("vec_id") % 250 === 0)
     val brute = Similarity.bruteForceKnn(corr, q, k = 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    val got = rows(Similarity.ivfPqKnnTwoLevelIndexed(idx, m, pq, Similarity.vectorTable(corr),
+    val got = rows(Similarity.ivfPqKnnIndexed(idx, m, pq, Similarity.vectorTable(corr),
       q, k = 5, nProbe = 4, nProbeSuper = 2, rerank = 32))
     val recall = got.map(t => (t._1, t._3)).intersect(brute).size.toDouble / brute.size
     assert(recall >= 0.9, s"two-level PQ routed recall = $recall")
@@ -420,11 +422,11 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // bucketed vectors) reproduces the in-memory results exactly
     val stage = graft.pipeline.Staging.tempDir("graft-2lpq-test")
     try {
-      idx.write.partitionBy("super").parquet(s"$stage/ivfpq")
+      idx.write.partitionBy(Similarity.IndexPart).parquet(s"$stage/ivfpq")
       Similarity.twoLevelToDf(spark, m).write.parquet(s"$stage/model")
       Similarity.pqModelToDf(spark, pq).write.parquet(s"$stage/pqmodel")
       Similarity.vectorTableBucketed(corr).write.partitionBy("id_bucket").parquet(s"$stage/vectors")
-      val gotStaged = rows(Similarity.ivfPqKnnTwoLevelIndexed(
+      val gotStaged = rows(Similarity.ivfPqKnnIndexed(
         spark.read.parquet(s"$stage/ivfpq"),
         Similarity.twoLevelFromDf(spark.read.parquet(s"$stage/model")),
         Similarity.pqModelFromDf(spark.read.parquet(s"$stage/pqmodel")),
@@ -432,6 +434,28 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
         q, k = 5, nProbe = 4, nProbeSuper = 2, rerank = 32))
       assert(gotStaged == got)
     } finally graft.pipeline.Staging.deleteRecursively(stage)
+  }
+
+  test("one IVF path: flat and two-level quantizers probing every cell equal brute force, filtered or not") {
+    val q = emb.filter(col("vec_id") < 10)
+    val admitted = emb.filter(col("label") < 5)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+    val exact = rows(Similarity.bruteForceKnn(emb, q, k = 5))
+    val exactAdmitted = rows(Similarity.bruteForceKnn(admitted, q, k = 5))
+    assert(exact.nonEmpty && exactAdmitted.nonEmpty && exact != exactAdmitted)
+    val flat = Similarity.Flat(Similarity.ivfTrain(emb, nCells = 16))
+    val twoLevel = Similarity.ivfTrainTwoLevel(emb, nCells = 16, nSuper = 4)
+    // (quantizer, nProbe, nProbeSuper) that probe every cell
+    for ((quant, nProbe, nProbeSuper) <- Seq((flat, flat.centroids.length, 1),
+                                             (twoLevel, twoLevel.nCells, twoLevel.nSuper))) {
+      val idx = Similarity.ivfIndex(emb, quant)
+      def knn(allowed: Option[org.apache.spark.sql.DataFrame]) = rows(Similarity.ivfKnnIndexed(
+        idx, quant, q, allowed, k = 5, nProbe = nProbe, nProbeSuper = nProbeSuper))
+      assert(knn(None) == exact, quant.getClass.getSimpleName)
+      assert(knn(Some(admitted.select(col("vec_id").as("id")))) == exactAdmitted,
+        quant.getClass.getSimpleName)
+    }
   }
 
   test("capByHash streaming cap keeps exactly the sort-take set with O(cap) memory") {
@@ -475,7 +499,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .sortBy(_._1).map(_._2)
       if (kept.isEmpty) Array.fill(4)(supers(s).clone())
       else {
-        val cs = Similarity.lloydCos(kept, 4, 3)
+        val cs = Similarity.lloyd(kept, 4, 3, Similarity.nearestCell)
         cs ++ Array.fill(4 - cs.length)(supers(s).clone())
       }
     }
@@ -497,11 +521,11 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val corr = spark.range(n).map(id => (id, graft.SyntheticVectors.vecCorrelated(id, n, 16, 8)))
       .toDF("vec_id", "embedding")
     val m = Similarity.ivfTrainTwoLevel(corr, nCells = 16, nSuper = 4)
-    val idx = Similarity.ivfIndexTwoLevel(corr, m)
+    val idx = Similarity.ivfIndex(corr, m)
     // metadata predicate: label = vec_id % 10, admit even labels only
     val allowed = corr.select(col("vec_id").as("id")).filter(col("id") % 10 % 2 === 0)
     val q = corr.filter(col("vec_id") % 250 === 0)
-    val got = Similarity.ivfKnnTwoLevelFilteredIndexed(idx, m, q, Some(allowed),
+    val got = Similarity.ivfKnnIndexed(idx, m, q, Some(allowed),
       k = 5, nProbe = 4, nProbeSuper = 2)
       .collect().map(r => (r.getLong(0), r.getLong(2)))
     val allowedIds = allowed.as[Long].collect().toSet
@@ -514,7 +538,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(recall >= 0.85, s"filtered routed recall = $recall")
     // the predicate prunes BEFORE the scoring join: LeftSemi sits below the
     // cosine evaluation in the optimized plan
-    val plan = Similarity.ivfKnnTwoLevelFilteredIndexed(idx, m, q, Some(allowed),
+    val plan = Similarity.ivfKnnIndexed(idx, m, q, Some(allowed),
       k = 5, nProbe = 4, nProbeSuper = 2).queryExecution.optimizedPlan.toString
     val semiAt = plan.indexOf("LeftSemi")
     val cosAt = plan.indexOf("cosine_similarity")
@@ -528,11 +552,11 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val corr = spark.range(n).map(id => (id, graft.SyntheticVectors.vecCorrelated(id, n, 16, 8)))
       .toDF("vec_id", "embedding")
     val m = Similarity.ivfTrainTwoLevel(corr, nCells = 16, nSuper = 4)
-    val pq = Similarity.pqTrainTwoLevel(corr, m, nSub = 8, k = 16)
-    val idx = Similarity.ivfPqIndexTwoLevel(corr, m, pq)
+    val pq = Similarity.pqTrain(corr, m, nSub = 8, k = 16)
+    val idx = Similarity.ivfPqIndex(corr, m, pq)
     val allowed = corr.select(col("vec_id").as("id")).filter(col("id") % 10 % 2 === 0)
     val q = corr.filter(col("vec_id") % 250 === 0)
-    val got = Similarity.ivfPqKnnTwoLevelFilteredIndexed(idx, m, pq,
+    val got = Similarity.ivfPqKnnIndexed(idx, m, pq,
       Similarity.vectorTable(corr), q, Some(allowed),
       k = 5, nProbe = 4, nProbeSuper = 2, rerank = 32)
       .collect().map(r => (r.getLong(0), r.getLong(2)))
@@ -556,39 +580,39 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stage = graft.pipeline.Staging.tempDir("graft-compact-test")
     try {
       val dir = s"$stage/ivf"
-      Similarity.ivfIndexTwoLevel(base, m).write.partitionBy("super").parquet(dir)
+      Similarity.ivfIndex(base, m).write.partitionBy(Similarity.IndexPart).parquet(dir)
       // two append batches — each leaves another file set per touched super
       for (r <- Seq(0, 5))
-        Similarity.ivfIndexTwoLevel(corr.filter(col("vec_id") % 10 === r), m)
-          .write.mode("append").partitionBy("super").parquet(dir)
+        Similarity.ivfIndex(corr.filter(col("vec_id") % 10 === r), m)
+          .write.mode("append").partitionBy(Similarity.IndexPart).parquet(dir)
       def filesPerSuper: Map[String, Int] = {
         val root = new java.io.File(dir)
-        root.listFiles.filter(f => f.isDirectory && f.getName.startsWith("super="))
+        root.listFiles.filter(f => f.isDirectory && f.getName.startsWith(s"${Similarity.IndexPart}="))
           .map(d => d.getName -> d.listFiles.count(_.getName.endsWith(".parquet"))).toMap
       }
       val before = filesPerSuper
       assert(before.values.max >= 3, s"append fixture produced $before")
       val q = corr.filter(col("vec_id") % 250 === 0)
-      def results = Similarity.ivfKnnTwoLevelIndexed(
+      def results = Similarity.ivfKnnIndexed(
           spark.read.parquet(dir), m, q, k = 5, nProbe = 4, nProbeSuper = 2)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
       val want = results
-      val compacted = Similarity.compactIndexTwoLevel(spark, dir)
+      val compacted = Similarity.compactIndex(spark, dir)
       assert(compacted.nonEmpty)
       val after = filesPerSuper
-      assert(compacted.forall(s => after(s"super=$s") == 1), s"after=$after")
+      assert(compacted.forall(s => after(s"${Similarity.IndexPart}=$s") == 1), s"after=$after")
       // untouched supers (if any) keep their files; results are identical
       assert(results == want)
       // idempotent: nothing left to compact
-      assert(Similarity.compactIndexTwoLevel(spark, dir).isEmpty)
+      assert(Similarity.compactIndex(spark, dir).isEmpty)
       // crash recovery: simulate dying inside the swap window (live dir
       // renamed aside, compacted tmp never swapped in) — recoverCompaction
       // restores the partition and clears staging; results return to `want`
       val victim = compacted.head
       val root = new java.io.File(dir)
-      val live = new java.io.File(root, s"super=$victim")
-      val bak = new java.io.File(root, s".compact-old-super=$victim")
-      val tmpD = new java.io.File(root, s".compact-tmp-super=$victim")
+      val live = new java.io.File(root, s"${Similarity.IndexPart}=$victim")
+      val bak = new java.io.File(root, s".compact-old-${Similarity.IndexPart}=$victim")
+      val tmpD = new java.io.File(root, s".compact-tmp-${Similarity.IndexPart}=$victim")
       assert(live.renameTo(bak))
       tmpD.mkdirs() // leftover staging dir from the crashed job
       val recovered = Similarity.recoverCompaction(spark, dir)
@@ -620,12 +644,12 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val cs = Similarity.ivfTrain(emb, nCells = 16)
       // the shipped layout partitions on cell: the probe join's broadcast
       // side must dynamically prune the index scan to the probed cells
-      Similarity.ivfIndex(emb, cs).write.partitionBy("cell").parquet(s"$stage/ivf")
+      Similarity.ivfIndex(emb, Similarity.Flat(cs)).write.partitionBy(Similarity.IndexPart).parquet(s"$stage/ivf")
       Similarity.centroidsToDf(spark, cs).write.parquet(s"$stage/centroids")
       val csBack = Similarity.centroidsFromDf(spark.read.parquet(s"$stage/centroids"))
       assert(csBack.map(_.toSeq).toSeq == cs.map(_.toSeq).toSeq)
       val ivfStagedDf = Similarity.ivfKnnIndexed(
-        spark.read.parquet(s"$stage/ivf"), csBack, q, k = 5, nProbe = 6)
+        spark.read.parquet(s"$stage/ivf"), Similarity.Flat(csBack), q, k = 5, nProbe = 6)
       assert(ivfStagedDf.queryExecution.executedPlan.toString.toLowerCase
         .contains("dynamicpruning"))
       val ivfStaged = rows(ivfStagedDf)
@@ -638,12 +662,12 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val queries = emb.filter(col("vec_id") < 20)
     val brute = Similarity.bruteForceKnn(emb, queries, k = 5).collect()
       .map(r => (r.getLong(0), r.getLong(2))).toSet
-    val cs = Similarity.ivfTrain(emb, nCells = 16)
+    val cs = Similarity.Flat(Similarity.ivfTrain(emb, nCells = 16))
     val pq = Similarity.pqTrain(emb, cs, nSub = 8, k = 16)
     assert(pq.nSub == 8 && pq.k == 16 && pq.dim == 64)
     // every code byte indexes a real sub-centroid
     val idx = Similarity.ivfPqIndex(emb, cs, pq)
-    assert(idx.columns.toSet == Set("cell", "id", "codes", "norm"))
+    assert(idx.columns.toSet == Set(Similarity.IndexPart, "cell", "id", "codes", "norm"))
     val badCodes = idx.collect().count { r =>
       val codes = r.getAs[Array[Byte]]("codes")
       codes.length != 8 || codes.exists(b => (b & 0xFF) >= 16)
@@ -665,10 +689,10 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       def rows(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
       val cs = Similarity.ivfTrain(emb, nCells = 16)
-      val pq = Similarity.pqTrain(emb, cs, nSub = 8, k = 16)
+      val pq = Similarity.pqTrain(emb, Similarity.Flat(cs), nSub = 8, k = 16)
       // shipped layout: cell-partitioned codes, bucket-partitioned vectors —
       // both scans must be dynamically pruned (probed cells / candidates)
-      Similarity.ivfPqIndex(emb, cs, pq).write.partitionBy("cell").parquet(s"$stage/ivfpq")
+      Similarity.ivfPqIndex(emb, Similarity.Flat(cs), pq).write.partitionBy(Similarity.IndexPart).parquet(s"$stage/ivfpq")
       Similarity.centroidsToDf(spark, cs).write.parquet(s"$stage/centroids")
       Similarity.pqModelToDf(spark, pq).write.parquet(s"$stage/pqmodel")
       Similarity.vectorTableBucketed(emb).write.partitionBy("id_bucket").parquet(s"$stage/vectors")
@@ -677,7 +701,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
         pq.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
       val stagedDf = Similarity.ivfPqKnnIndexed(
         spark.read.parquet(s"$stage/ivfpq"),
-        Similarity.centroidsFromDf(spark.read.parquet(s"$stage/centroids")),
+        Similarity.Flat(Similarity.centroidsFromDf(spark.read.parquet(s"$stage/centroids"))),
         pqBack, spark.read.parquet(s"$stage/vectors"), q, k = 5, nProbe = 6)
       val planStr = stagedDf.queryExecution.executedPlan.toString.toLowerCase
       assert(planStr.contains("dynamicpruning"))
@@ -714,7 +738,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // must produce identical top-k: the union of per-partition top-R heaps
     // always contains the global top-R by (score desc, id asc)
     val q = emb.filter(col("vec_id") < 10)
-    val cs = Similarity.ivfTrain(emb, nCells = 16)
+    val cs = Similarity.Flat(Similarity.ivfTrain(emb, nCells = 16))
     val pq = Similarity.pqTrain(emb, cs, nSub = 8, k = 16)
     val idx = Similarity.ivfPqIndex(emb, cs, pq)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -1018,16 +1042,23 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(stats.length == Multimodal.MediaTypes.size)
   }
 
-  /** `f`'s value and the artifacts it built: SparkEntry prints one
-    * `[graft-stage] <name> <secs>` line per artifact build.
+  /** `f`'s value and the artifacts it built, with their printed seconds:
+    * SparkEntry prints one `[graft-stage] <name> <secs>` line per artifact
+    * build.
     */
-  private def staging[T](f: => T): (T, Seq[String]) = {
+  private def stageLines[T](f: => T): (T, Seq[(String, Double)]) = {
     val buf = new java.io.ByteArrayOutputStream()
     val err = System.err
     System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
     val r = try f finally System.setErr(err)
     (r, buf.toString("UTF-8").linesIterator.collect {
-      case l if l.startsWith("[graft-stage] ") => l.split(' ')(1) }.toSeq)
+      case l if l.startsWith("[graft-stage] ") => val w = l.split(' '); (w(1), w(2).toDouble) }.toSeq)
+  }
+
+  /** `f`'s value and the names of the artifacts it built. */
+  private def staging[T](f: => T): (T, Seq[String]) = {
+    val (r, lines) = stageLines(f)
+    (r, lines.map(_._1))
   }
 
   test("artifact memo: a rebuilt query reuses its artifacts; a new session stages its own") {
@@ -1058,9 +1089,16 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .subsetOf(freshStaged.toSet), freshStaged)
     assert(freshStaged.distinct == freshStaged, freshStaged)
     // builds nest: a cold top-k set stages its index, which stages its model
-    val (_, cold) = staging(graft.SparkEntry.queries("s7_ivfpq_recall")(spark.newSession(), sfDir))
+    val t0 = System.nanoTime()
+    val (_, coldLines) =
+      stageLines(graft.SparkEntry.queries("s7_ivfpq_recall")(spark.newSession(), sfDir))
+    val wall = (System.nanoTime() - t0) / 1e9
+    val cold = coldLines.map(_._1)
     val at = Seq("ivf-model", "ivfpq", "knn-ivfpq").map(cold.indexOf)
     assert(at.forall(_ >= 0) && at == at.sorted, cold)
+    // each line is its build's own seconds, nested builds subtracted, so the
+    // lines sum to at most the construction's wall time (plus rounding)
+    assert(coldLines.map(_._2).sum <= wall + 0.005 * coldLines.size, s"$coldLines vs wall $wall s")
   }
 
   test("artifact memo: a build that throws caches nothing; the next call builds") {

@@ -211,7 +211,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val m = Similarity.ivfTrainTwoLevel(corr, nCells = 16, nSuper = 4)
     val stage = graft.pipeline.Staging.tempDir("graft-serve-test")
     try {
-      Similarity.ivfIndexTwoLevel(corr, m).write.partitionBy("super").parquet(s"$stage/ivf")
+      Similarity.ivfIndex(corr, m).write.partitionBy(Similarity.IndexPart).parquet(s"$stage/ivf")
       val index = spark.read.parquet(s"$stage/ivf")
       // two query batches arrive as separate files
       val qDir = s"$stage/queries"
@@ -223,12 +223,12 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         .option("maxFilesPerTrigger", 1)
         .parquet(qDir)
       val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Int, Long, Double)]()
-      val q = Similarity.ivfKnnTwoLevelServe(index, m, qStream,
+      val q = Similarity.ivfKnnServe(index, m, qStream,
         (res, _) => res.collect().foreach(r =>
           got.add((r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))),
         k = 5, nProbe = 4, nProbeSuper = 2)
       try q.processAllAvailable() finally q.stop()
-      val want = Similarity.ivfKnnTwoLevelIndexed(index, m,
+      val want = Similarity.ivfKnnIndexed(index, m,
           corr.filter(col("vec_id") % 250 === 0), k = 5, nProbe = 4, nProbeSuper = 2)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
       assert(got.size == want.size && got.iterator().hasNext)
