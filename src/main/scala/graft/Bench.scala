@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import graft.datagen.SyntheticTranscripts
-import graft.pipeline.{Route, RunPipeline}
+import graft.pipeline.{Route, RunPipeline, Staging}
 
 /** Driver-run benchmark: headline = end-to-end parse→enrich→route throughput
   * on the synthetic transcript table (the BASELINE.json metric, turns/sec),
@@ -30,7 +30,7 @@ object Bench {
     val turns = RunPipeline.stageInput(spark, nConvs, s"/tmp/graft-input-$nConvs")
     val warm = RunPipeline.stageInput(spark, math.max(100L, nConvs / 20), s"/tmp/graft-input-warm-$nConvs")
     RunPipeline.run(spark, warm,
-      java.nio.file.Files.createTempDirectory("graft-bench-warm").toString,
+      Staging.tempDirDeletedOnExit("graft-bench-warm"),
       fingerprint = "warmup", sinkMode = sinkMode)
     val res = RunPipeline.run(spark, turns, outDir,
       fingerprint = s"bench-$nConvs-$outDir", sinkMode = sinkMode)
@@ -83,7 +83,7 @@ object Bench {
 
     try {
       // headline: parse→enrich→route throughput (with sink writes)
-      val benchOut = java.nio.file.Files.createTempDirectory("graft-bench").toString
+      val benchOut = Staging.tempDirDeletedOnExit("graft-bench")
       val nConvs = SyntheticTranscripts.convsForSfDir(sfDir)
       val (turns, pipeSecs, turnsPerSec) = pipelineThroughput(spark, nConvs, benchOut)
 

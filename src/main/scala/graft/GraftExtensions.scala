@@ -111,13 +111,4 @@ object GraftExtensions {
     (FunctionIdentifier("parse_turn"),
       info("parse_turn", "parse_turn(text, role, tool) - tokenize + extract routing fields"),
       arity("parse_turn", 3)(args => ParseTurnExpression(args(0), args(1), args(2), sessionBank())))
-
-  /** Register on an existing session (tests / spark-shell convenience). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    Seq(simhashDesc, cosineDesc, entropyDesc, fingerprintDesc, jaccardSortedDesc, parseTurnDesc)
-      .foreach { case (id, inf, builder) =>
-      reg.registerFunction(id, inf, builder)
-    }
-  }
 }

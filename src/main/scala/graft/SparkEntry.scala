@@ -211,20 +211,21 @@ object SparkEntry {
   /** The SHIPPED staged minhash/simhash pair outputs — shared by the d3/d4
     * raw-pair queries, the d9/d10 recall gates and the d11 pipeline query,
     * so the gates grade exactly the plan users run, and that plan runs once
-    * (d9's hits branch and d11's cluster input re-ran it otherwise). The d5
+    * (d9's hits branch and d11's cluster input re-ran it otherwise). The
+    * operators' own staged intermediates go under the artifact's dir. The d5
     * n-gram pair set is shared the same way by d5 and d8.
     */
   private def d3Pairs(s: SparkSession, dir: String): DataFrame =
-    stagedFrame("d3-pairs", s, dir) {
-      Dedup.minhashPairs(docsWithDups(s, dir), threshold = 0.8,
-        stagingDir = Some(Staging.tempDirDeletedOnExit("graft-d3-stage")))
-    }
+    s.read.parquet(staged("d3-pairs", s, dir) { d =>
+      Dedup.minhashPairs(docsWithDups(s, dir), threshold = 0.8, stagingDir = Some(s"$d/stage"))
+        .write.parquet(s"$d/out")
+    } + "/out")
 
   private def d4Pairs(s: SparkSession, dir: String): DataFrame =
-    stagedFrame("d4-pairs", s, dir) {
-      Dedup.simhashPairs(docsWithDups(s, dir), maxHamming = 3,
-        stagingDir = Some(Staging.tempDirDeletedOnExit("graft-d4-stage")))
-    }
+    s.read.parquet(staged("d4-pairs", s, dir) { d =>
+      Dedup.simhashPairs(docsWithDups(s, dir), maxHamming = 3, stagingDir = Some(s"$d/stage"))
+        .write.parquet(s"$d/out")
+    } + "/out")
 
   private def d5Pairs(s: SparkSession, dir: String): DataFrame =
     stagedFrame("d5-pairs", s, dir) {

@@ -116,32 +116,6 @@ object Dedup {
     if (union == 0) 1.0 else inter.toDouble / union
   }
 
-  /** Session confs for the staging heuristic shared by [[minhashPairs]] /
-    * [[simhashPairs]]: when the caller passes no `stagingDir`, corpora of at
-    * least `autoStageMinDocs` documents are staged automatically into a
-    * temp dir removed at JVM exit. Rationale: staging is a pure win above
-    * ~100k docs (measured 1.6–3.8×) and a caller who forgets the knob gets
-    * the re-scanning plan at exactly the scale where it hurts; below the
-    * threshold the lazy plan is returned unchanged, so small corpora pay
-    * neither the count probe's job nor the staging write.
-    */
-  val AutoStageMinDocsConf = "spark.graft.dedup.autoStageMinDocs"
-
-  private def resolveStaging(documents: DataFrame, stagingDir: Option[String],
-                             what: String): Option[String] =
-    stagingDir.orElse {
-      val minDocs = documents.sparkSession.conf.get(AutoStageMinDocsConf, "50000").toLong
-      // BOUNDED probe: `limit(minDocs).count()` reads at most minDocs rows
-      // and stops. A plain `documents.count()` is metadata-cheap only on a
-      // bare parquet scan — on a computed plan (filtered/unioned/synthetic
-      // input) it executed the FULL plan at query-construction time just to
-      // test a threshold.
-      val cap = math.min(minDocs, Int.MaxValue.toLong).toInt
-      if (documents.limit(cap).count() >= cap)
-        Some(graft.pipeline.Staging.tempDirDeletedOnExit(s"graft-autostage-$what"))
-      else None
-    }
-
   /** Write a staged intermediate and return the read-back frame. Refuses a
     * non-empty directory: staging used to overwrite silently, which meant
     * reusing one path across calls invalidated the lazy frame an EARLIER
@@ -242,13 +216,12 @@ object Dedup {
         * so pass a directory for anything real: the collapsed uniques are
         * written ONCE at call time and every branch reads the slim staged
         * table (the standard multi-job shape of production dedup
-        * pipelines). Left None, corpora above the [[AutoStageMinDocsConf]]
-        * threshold are auto-staged into a JVM-exit-scoped temp dir (see
-        * [[resolveStaging]]). The CALLER owns an explicit directory's
-        * lifecycle: supply a unique path per call (a non-empty dir is
-        * refused — overwriting would corrupt the lazy frame an earlier
-        * call returned over the same files) and delete it after the last
-        * action over the returned frame
+        * pipelines). Left None, the lazy plan is returned and building it
+        * runs no Spark job. The CALLER owns the directory's lifecycle:
+        * supply a unique path per call (a non-empty dir is refused —
+        * overwriting would corrupt the lazy frame an earlier call returned
+        * over the same files) and delete it after the last action over the
+        * returned frame
         * ([[graft.pipeline.Staging]] has helpers). An internal .persist()
         * is deliberately NOT used: the operator returns a lazy frame, so it
         * could never unpersist, and a leaked cache entry degrades every
@@ -267,8 +240,7 @@ object Dedup {
     val collapsed = documents.select(col("doc_id"), col("text"), textKey.as("tk"))
       .groupBy("tk")
       .agg(min("doc_id").as("rep_id"), count(lit(1)).as("grp_n"), first("text").as("text"))
-    val staging = resolveStaging(documents, stagingDir, "minhash")
-    val groups = staging match {
+    val groups = stagingDir match {
       // WIDE staged write: AQE's partition coalescing shrinks the small
       // post-groupBy collapse to 1–2 files, and the signature/banding pass
       // (128 mixed hashes per shingle per representative — the CPU-heaviest
@@ -304,7 +276,7 @@ object Dedup {
     // id) rows are written once and both sides read the parquet — one
     // signature pass per build, a few MB written.
     val cappedPlan = capBuckets(banded, maxBucket)
-    val capped = staging match {
+    val capped = stagingDir match {
       case Some(dir) => stageParquet(cappedPlan, s"$dir/banded")
       case None => cappedPlan
     }
@@ -376,15 +348,13 @@ object Dedup {
                      * branch re-scans the corpus TEXT and re-hashes it.
                      * Staged, the text is read once and every branch reads
                      * the slim parquet. Caller owns the (unique, initially
-                     * empty) path; None auto-stages above the conf'd corpus
-                     * size like minhashPairs.
+                     * empty) path; None returns the lazy plan.
                      */
                    stagingDir: Option[String] = None): DataFrame = {
     require(maxHamming <= 3, "4×16-bit banding guarantees recall only for hamming ≤ 3")
     val sigsPlan = documents.select(col("doc_id"),
       graft.functions.functions.simhash64(col("text")).as("sig"))
-    val staging = resolveStaging(documents, stagingDir, "simhash")
-    val sigs = staging match {
+    val sigs = stagingDir match {
       case Some(dir) => stageParquet(sigsPlan, s"$dir/sigs")
       case None => sigsPlan
     }
@@ -408,7 +378,7 @@ object Dedup {
     // staging is live, like minhashPairs (the window + banding explode
     // otherwise execute twice)
     val cappedPlan = capBuckets(banded, maxBucket)
-    val capped = staging match {
+    val capped = stagingDir match {
       case Some(dir) => stageParquet(cappedPlan, s"$dir/banded")
       case None => cappedPlan
     }

@@ -414,7 +414,7 @@ object Similarity {
     * it with [[centroidsToDf]] next to the [[ivfIndex]] parquet. The
     * reference makes the same whole-population move: its matcher compiles
     * from the entire schema, not a biased corner
-    * (/root/reference/src/dfa/dfa.rs:250-413).
+    * (reference `src/dfa/dfa.rs:250-413`).
     */
   def ivfTrain(corpus: DataFrame, nCells: Int = 16, sampleSize: Int = 256,
                iterations: Int = 5): Array[Array[Float]] = {
@@ -490,50 +490,27 @@ object Similarity {
     *    tolerance. The exchange carries ≤ partitions × nCells × dim slim
     *    rows per iteration, never the training set.
     *
-    * Empty cells keep their previous centroid, like [[ivfTrain]].
-    * `sampleFraction` < 1 trains on a seeded hash-slice of the corpus
-    * (membership a pure function of vec_id — deterministic, id-layout-
-    * proof); the default 1.0 trains on the whole population — the
-    * reference-analogous move: its matcher compiles from the entire
-    * schema, never a corner (/root/reference/src/dfa/dfa.rs:250-413).
+    * Empty cells keep their previous centroid, like [[ivfTrain]]. It
+    * trains on the whole non-null corpus, persisted across the Lloyd passes
+    * (it is read iterations+1 times) — the reference-analogous move: its
+    * matcher compiles from the entire schema, never a corner
+    * (reference `src/dfa/dfa.rs:250-413`).
     */
-  def ivfTrainDistributed(corpus: DataFrame, nCells: Int, iterations: Int = 5,
-                          sampleFraction: Double = 1.0,
-                          /** Cache the training set across Lloyd passes (it
-                            * is read iterations+1 times). Right whenever the
-                            * (sliced) training set fits executor storage —
-                            * the validation/bench regime; at corpus scales
-                            * beyond storage pass false and stream each pass
-                            * instead (a build-time job re-scanning an
-                            * uncacheable corpus is intended behavior there,
-                            * caching it would spill the corpus to disk).
-                            */
-                          cacheTraining: Boolean = true): Array[Array[Float]] = {
-    require(sampleFraction > 0.0 && sampleFraction <= 1.0, s"bad sampleFraction $sampleFraction")
+  def ivfTrainDistributed(corpus: DataFrame, nCells: Int, iterations: Int = 5): Array[Array[Float]] = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val Q = 1L << 24
     val nonNull = corpus.filter(col("embedding").isNotNull)
-    // UNSIGNED hash key for BOTH the init ordering and the slice filter: the
-    // slice keeps the unsigned-lowest `sampleFraction` of hashes, so ordering
-    // init by the same unsigned key makes the nCells seeds the slice's own
-    // head — seeds are inside the training set by construction for any
-    // fraction (a signed orderBy would put the most-negative hashes first,
-    // which the unsigned slice EXCLUDES for fractions <= 0.5, leaving seed
-    // centroids frozen untrained in empty cells)
+    // init: the nCells vectors with the lowest UNSIGNED hash key — a pure
+    // function of vec_id, so the seeds are id-layout-proof
     val hashKey = shiftrightunsigned(xxhash64(col("vec_id"), lit(41)), 11)
     val init = nonNull
       .orderBy(hashKey, col("vec_id")).limit(nCells)
       .select("embedding").as[Array[Float]].collect()
     require(init.nonEmpty, "empty corpus")
     val dim = init.head.length
-    val training = (if (sampleFraction >= 1.0) nonNull
-      else nonNull.filter(
-        hashKey.cast("double") / lit((1L << 53).toDouble) < sampleFraction))
-      .select(col("embedding")).as[Array[Float]]
-    if (cacheTraining) {
-      training.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    }
+    val training = nonNull.select(col("embedding")).as[Array[Float]]
+    training.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
     var centroids = init
     var it = 0
@@ -584,7 +561,7 @@ object Similarity {
       it += 1
     }
     centroids
-    } finally if (cacheTraining) training.unpersist(blocking = false)
+    } finally training.unpersist(blocking = false)
   }
 
   /** Deterministic driver-side Lloyd over an in-memory sample: evenly
@@ -673,18 +650,14 @@ object Similarity {
     * index-time routing sends boundary vectors there).
     */
   def ivfTrainTwoLevel(corpus: DataFrame, nCells: Int, nSuper: Int = 256,
-                       iterations: Int = 3, sampleFraction: Double = 1.0,
-                       maxPerSuper: Int = 1 << 17): IvfTwoLevel = {
+                       iterations: Int = 3, maxPerSuper: Int = 1 << 17): IvfTwoLevel = {
     require(nCells % nSuper == 0, s"nCells=$nCells must be a multiple of nSuper=$nSuper")
     val kChild = nCells / nSuper
     val spark = corpus.sparkSession
     import spark.implicits._
-    val supers = ivfTrainDistributed(corpus, nSuper, iterations, sampleFraction)
+    val supers = ivfTrainDistributed(corpus, nSuper, iterations)
     val bcU = spark.sparkContext.broadcast(unitize(supers))
-    val hashKey = shiftrightunsigned(xxhash64(col("vec_id"), lit(41)), 11)
-    val training = (if (sampleFraction >= 1.0) corpus.filter(col("embedding").isNotNull)
-      else corpus.filter(col("embedding").isNotNull).filter(
-        hashKey.cast("double") / lit((1L << 53).toDouble) < sampleFraction))
+    val training = corpus.filter(col("embedding").isNotNull)
       .select(col("vec_id"), col("embedding")).as[(Long, Array[Float])]
     val childRows = training
       .groupByKey { case (_, v) => nearestCellDot(v, bcU.value) }

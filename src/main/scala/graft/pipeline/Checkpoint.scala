@@ -12,10 +12,11 @@ import scala.jdk.CollectionConverters._
   * that is replaced atomically (tmp + ATOMIC_MOVE). A re-run with the same
   * `inputFingerprint` skips committed sinks — resume-from-snapshot without
   * duplicate rows. The file list doubles as per-partition lineage.
-  * Swapping this for real Iceberg snapshot ids is a config-level change:
-  * the pipeline only sees `isCommitted`/`commitSink`.
+  * The pipeline only calls `isCommitted`/`commitSink`, so an Iceberg
+  * backend would replace these members with a table commit and a
+  * snapshot-summary lookup keyed by the input fingerprint.
   */
-final class Checkpoint(outDir: String, inputFingerprint: String) extends TableFormat {
+final class Checkpoint(outDir: String, inputFingerprint: String) {
   private val manifestPath: Path = Paths.get(outDir, "_manifest.json")
 
   final case class SinkCommit(rows: Long, files: Seq[String])

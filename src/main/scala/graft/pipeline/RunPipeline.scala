@@ -157,7 +157,7 @@ object RunPipeline {
       // JIT/codegen warmup on a small slice so the measured run reflects
       // steady-state throughput (the scaling-protocol runs compare N vs 4N
       // cores, not cold-JVM effects)
-      val warmDir = java.nio.file.Files.createTempDirectory("graft-warm").toString
+      val warmDir = Staging.tempDirDeletedOnExit("graft-warm")
       run(spark, stageInput(spark, math.max(100L, nConvs / 20), s"/tmp/graft-input-warm-$nConvs"),
         warmDir, schema, fingerprint = "warmup", sinkMode = sinkMode)
 

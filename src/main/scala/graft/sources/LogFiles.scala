@@ -121,8 +121,7 @@ object LogFiles {
     * complete (the standard file-source contract: write elsewhere, move in).
     */
   def eventsStream(spark: SparkSession, dir: String, bank: Broadcast[PatternBank],
-                   maxFilesPerTrigger: Int = 4, chunkBytes: Long = 16L << 20,
-                   regionParallelism: Int = 0): Dataset[LogEvent] = {
+                   maxFilesPerTrigger: Int = 4, chunkBytes: Long = 16L << 20): Dataset[LogEvent] = {
     import spark.implicits._
     require(chunkBytes >= 4096, s"chunkBytes too small: $chunkBytes")
     val confSer = confOf(spark)
@@ -153,9 +152,7 @@ object LogFiles {
         regionsOf(metas).iterator
       }
     }
-    regions
-      .repartition(if (regionParallelism > 0) regionParallelism
-        else spark.sparkContext.defaultParallelism)
+    regions.repartition(spark.sparkContext.defaultParallelism)
       .flatMap(r => parseRegion(r, bank.value, confSer.value))
   }
 

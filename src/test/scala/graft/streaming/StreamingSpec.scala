@@ -256,7 +256,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       .chunkIndex(spark, s"$dir/*.log", bank, chunkBytes).count()
     assert(nChunks >= 32, s"fixture spans only $nChunks chunks")
     val stream = graft.sources.LogFiles.eventsStream(spark, dir, bank,
-      maxFilesPerTrigger = 1, chunkBytes = chunkBytes, regionParallelism = 4)
+      maxFilesPerTrigger = 1, chunkBytes = chunkBytes)
     val q = stream.writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
       .format("memory").queryName("log_events_split")
