@@ -12,9 +12,7 @@ import scala.collection.mutable.ArrayBuffer
   * pattern-bank compile time, so clarity over micro-optimisation.
   */
 final class Nfa {
-  final case class Trans(lo: Long, hi: Long, to: Int) {
-    def isEpsilon: Boolean = lo == 0L && hi == 0L
-  }
+  import Nfa.Trans
 
   val start = 0
   val accept = 1
@@ -84,6 +82,10 @@ final class Nfa {
 }
 
 object Nfa {
+  final case class Trans(lo: Long, hi: Long, to: Int) {
+    def isEpsilon: Boolean = lo == 0L && hi == 0L
+  }
+
   def compile(ast: Ast): Nfa = {
     val nfa = new Nfa
     nfa.add(ast, nfa.start, nfa.accept)

@@ -17,9 +17,9 @@ import scala.jdk.CollectionConverters._
   * snapshot-summary lookup keyed by the input fingerprint.
   */
 final class Checkpoint(outDir: String, inputFingerprint: String) {
-  private val manifestPath: Path = Paths.get(outDir, "_manifest.json")
+  import Checkpoint.SinkCommit
 
-  final case class SinkCommit(rows: Long, files: Seq[String])
+  private val manifestPath: Path = Paths.get(outDir, "_manifest.json")
 
   /** snapshotId increments on every commit — monotonically, like an Iceberg
     * snapshot lineage.
@@ -77,4 +77,8 @@ final class Checkpoint(outDir: String, inputFingerprint: String) {
     Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
     Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
+}
+
+object Checkpoint {
+  final case class SinkCommit(rows: Long, files: Seq[String])
 }

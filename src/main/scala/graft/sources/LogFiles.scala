@@ -7,11 +7,21 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.SerializableWritable
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
+import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
-import graft.functions.ParseTurnExpression.{SpanBuf, matches5, signatureOf}
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.ParseTurnExpression.{SpanBuf, matches5, parseTsMicros, signatureOf}
 import graft.lexer.{ByteTokenizer, PatternBank, TokenType}
-import graft.pipeline.{Category, Parse, TokenRow}
+import graft.pipeline.{Category, TokenRow}
 
 /** Raw log-file source — the reference's primary input mode
   * (`BufferedFileStream` + `Lexer`, reference src/lexer/streams.rs and
@@ -26,8 +36,17 @@ import graft.pipeline.{Category, Parse, TokenRow}
   *  1. each file becomes one or more [[Region]]s: a byte range starting at
   *     an event boundary, with the event index and line number it starts at;
   *  1. a task reads the region's bytes and lexes them with
-  *     [[graft.lexer.ByteTokenizer]] into int spans ([[parseRegion]]); each
-  *     event's text and token values are decoded once from their byte slice.
+  *     [[graft.lexer.ByteTokenizer]], one event at a time, writing each
+  *     event straight into a reused Tungsten row ([[EventRows]]): text,
+  *     first_ts and token values are byte slices, and ts_extracted comes
+  *     from the byte-level `parseTsMicros` that `parse_turn` uses.
+  *
+  * The batch entry points serve those rows from a DataSource V2 scan
+  * ([[EventTable]]) whose input partitions are slices of the regions, so
+  * Catalyst prunes the columns nobody reads (a `count()` writes empty
+  * rows, and the token array is written only when selected), the physical
+  * plan names its files, and building a plan runs no Spark job. The
+  * `Dataset[LogEvent]` they return is a typed view over those rows.
   *
   * [[events]] and [[eventsWithTokens]] parse one whole-file region per file:
   * the unit of parallelism is the FILE, matching how log pipelines shard in
@@ -74,18 +93,19 @@ object LogFiles {
 
   /** Parse every file matching `pathGlob` into events. */
   def events(spark: SparkSession, pathGlob: String,
-             bank: Broadcast[PatternBank]): Dataset[LogEvent] =
-    parseRegions(spark, wholeFileRegions(spark, pathGlob), bank)
+             bank: Broadcast[PatternBank]): Dataset[LogEvent] = {
+    val regions = wholeFileRegions(spark, pathGlob)
+    typedEvents(spark, eventRows(spark, () => regions, bank))
+  }
 
   /** [[events]] with the per-event token array attached. */
   def eventsWithTokens(spark: SparkSession, pathGlob: String,
                        bank: Broadcast[PatternBank]): Dataset[LogEventWithTokens] = {
     import spark.implicits._
-    val conf = confOf(spark)
-    spark.createDataset(wholeFileRegions(spark, pathGlob)).flatMap { r =>
-      lexEvents(r.file, readRegion(r, conf.value), bank.value, r.eventIdxOffset, r.lineOffset,
-        withTokens = true)
-    }
+    val regions = wholeFileRegions(spark, pathGlob)
+    eventRows(spark, () => regions, bank)
+      .select(struct(eventSchema.fieldNames.map(col).toSeq: _*).as("event"), col("tokens"))
+      .as[LogEventWithTokens]
   }
 
   /** Structured Streaming twin of [[events]]: `.log` files arriving in
@@ -109,8 +129,9 @@ object LogFiles {
     * ~chunkBytes + lookahead, buffers discarded between chunks) and
     * prefix-sums it into repaired regions ([[regionsOf]]); the regions
     * then REPARTITION across the cluster and lex in parallel
-    * ([[parseRegion]]). A 512 MB log arriving in the stream is a ~1 s
-    * byte scan plus 32 parallel ~16 MB parse tasks, not one whole-file
+    * ([[parseRegion]]: the batch row kernel, decoded to [[LogEvent]]s). A
+    * 512 MB log arriving in the stream is a ~1 s byte scan plus 32
+    * parallel ~16 MB parse tasks, not one whole-file
     * task holding 512 MB on-heap. Files at or under `chunkBytes` (and all
     * files of a schema whose patterns fail [[chunkIndex]]'s newline-safety
     * preconditions, where split points can't be trusted) parse as a single
@@ -133,7 +154,7 @@ object LogFiles {
       .format("binaryFile")
       // the binaryFile format's FIXED schema — the streaming source API
       // still requires it stated explicitly
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
+      .schema(StructType.fromDDL(
         "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY"))
       .option("pathGlobFilter", "*.log")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -147,13 +168,13 @@ object LogFiles {
         val n = ((len + chunkBytes - 1) / chunkBytes).toInt
         val metas = (0 until n).map { i =>
           scanChunk(path, i, i * chunkBytes, math.min(len, (i + 1) * chunkBytes),
-            len, bank.value, confSer.value)
+            len, bank.value, confSer.value.value)
         }
         regionsOf(metas).iterator
       }
     }
     regions.repartition(spark.sparkContext.defaultParallelism)
-      .flatMap(r => parseRegion(r, bank.value, confSer.value))
+      .flatMap(r => parseRegion(r, bank.value, confSer.value.value))
   }
 
   // ------------------------------------------------------------------ //
@@ -235,19 +256,20 @@ object LogFiles {
     }
     spark.createDataset(chunks)
       .map { case (path, idx, s, e, len) =>
-        scanChunk(path, idx, s, e, len, bank.value, confSer.value) }
+        scanChunk(path, idx, s, e, len, bank.value, confSer.value.value) }
   }
 
   /** Phase 2: parse events from a (possibly parquet-round-tripped) chunk
-    * index. The index rows are collected (slim — one per chunk), prefix-
-    * summed into repaired regions on the driver, and each region is
-    * lexed independently. Output equals [[events]].
+    * index. When the query is planned, the index rows are collected (slim —
+    * one per chunk) and prefix-summed into repaired regions on the driver;
+    * each region is lexed independently. Building the Dataset runs no job.
+    * Output equals [[events]].
     */
   def eventsFromIndex(spark: SparkSession, index: Dataset[ChunkMeta],
-                      bank: Broadcast[PatternBank]): Dataset[LogEvent] = {
-    val regions = index.collect().groupBy(_.file).values.flatMap(ms => regionsOf(ms.toSeq)).toSeq
-    parseRegions(spark, regions, bank)
-  }
+                      bank: Broadcast[PatternBank]): Dataset[LogEvent] =
+    typedEvents(spark, eventRows(spark, () =>
+      index.collect().groupBy(_.file).values.flatMap(ms => regionsOf(ms.toSeq)).toSeq
+        .sortBy(r => (r.file, r.start)), bank))
 
   /** Why line-start splitting is unsound for `bank`, or None when it is
     * sound. A timestamp OR variable pattern that can consume '\n' lets a
@@ -331,24 +353,39 @@ object LogFiles {
 
   /** Executor-side reads must see the SESSION's Hadoop conf (credentials,
     * endpoints, defaultFS) — a fresh Configuration() would silently limit
-    * the source to conf-free filesystems. SerializableWritable ships it.
+    * the source to conf-free filesystems. It ships as a broadcast, as
+    * Spark's file sources ship it: a task that deserialized its own copy
+    * would re-parse the conf's XML resources, ~25 ms per task.
     */
-  private def confOf(spark: SparkSession): SerializableWritable[Configuration] =
-    new SerializableWritable(spark.sparkContext.hadoopConfiguration)
+  private def confOf(spark: SparkSession): Broadcast[SerializableWritable[Configuration]] =
+    spark.sparkContext.broadcast(new SerializableWritable(spark.sparkContext.hadoopConfiguration))
 
-  private def parseRegions(spark: SparkSession, regions: Seq[Region],
-                           bank: Broadcast[PatternBank]): Dataset[LogEvent] = {
+  /** The row source over the regions `planRegions` yields when the query
+    * is planned: a DSv2 relation built directly, since the bank is an
+    * object, not a string option.
+    */
+  private def eventRows(spark: SparkSession, planRegions: () => Seq[Region],
+                        bank: Broadcast[PatternBank]): DataFrame =
+    GraftBridge.ofRows(spark,
+      DataSourceV2Relation.create(new EventTable(planRegions, bank, confOf(spark),
+        spark.sparkContext.defaultParallelism), None, None))
+
+  private def typedEvents(spark: SparkSession, rows: DataFrame): Dataset[LogEvent] = {
     import spark.implicits._
-    val conf = confOf(spark)
-    spark.createDataset(regions).flatMap(r => parseRegion(r, bank.value, conf.value))
+    rows.select(eventSchema.fieldNames.map(col).toSeq: _*).as[LogEvent]
   }
 
   /** Lex one region and restore its global event indices and line numbers
-    * from the prefix-sum offsets (the phase-2 kernel of every entry point).
+    * from the prefix-sum offsets: the row kernel over the region's bytes
+    * ([[EventRows]], all event columns).
     */
+  private def regionRows(r: Region, bank: PatternBank, conf: Configuration,
+                         fields: Array[Int]): EventRows =
+    new EventRows(r.file, readRegion(r, conf), bank, r.eventIdxOffset, r.lineOffset, fields)
+
+  /** [[regionRows]] decoded to [[LogEvent]]s, for the stream. */
   private def parseRegion(r: Region, bank: PatternBank, conf: Configuration): Iterator[LogEvent] =
-    lexEvents(r.file, readRegion(r, conf), bank, r.eventIdxOffset, r.lineOffset,
-      withTokens = false).map(_.event)
+    decoded(regionRows(r, bank, conf, EventFields))(toEvent(r.file, _))
 
   private def readRegion(r: Region, conf: Configuration): Array[Byte] =
     if (!r.compressed) readRange(r.file, r.start, r.end, conf)
@@ -449,47 +486,138 @@ object LogFiles {
   }
 
   /** Pure per-file parse — shared with tests and the kernel probe: the
-    * content's UTF-8 bytes through the same kernel as every Spark entry
-    * point ([[lexEvents]]).
+    * content's UTF-8 bytes through the same row kernel as every Spark entry
+    * point ([[EventRows]]), each row decoded to a [[LogEvent]].
     */
   def eventsOf(file: String, content: String, bank: PatternBank): Iterator[LogEvent] =
-    lexEvents(file, content.getBytes(UTF_8), bank, 0L, 0L, withTokens = false).map(_.event)
+    decoded(new EventRows(file, content.getBytes(UTF_8), bank, 0L, 0L, EventFields))(
+      toEvent(file, _))
 
-  /** The lexer kernel: lex `bytes` once with [[ByteTokenizer]] and
-    * assemble events on Timestamp spans (a new event before each Timestamp
-    * token; a leading event may lack one) — see [[EventAssembler]].
+  /** The row kernel with every column, decoded to [[LogEventWithTokens]]
+    * — the typed face the kernel spec checks against the char oracle.
     */
-  private[sources] def lexEvents(file: String, bytes: Array[Byte], bank: PatternBank,
-                                 eventIdxOffset: Long, lineOffset: Long,
-                                 withTokens: Boolean): Iterator[LogEventWithTokens] = {
-    val events = new EventAssembler(file, bytes, bank, eventIdxOffset, lineOffset, withTokens)
-    ByteTokenizer.tokenize(bank, bytes, events)
-    events.flush()
-    events.out.iterator
+  private[sources] def lexEvents(file: String, bytes: Array[Byte],
+                                 bank: PatternBank): Iterator[LogEventWithTokens] =
+    decoded(new EventRows(file, bytes, bank, 0L, 0L, RowFields)) { r =>
+      val tokens = r.getArray(Field.Tokens)
+      LogEventWithTokens(toEvent(file, r), Vector.tabulate(tokens.numElements()) { i =>
+        val t = tokens.getStruct(i, 4)
+        TokenRow(t.getByte(0), t.getInt(1), t.getUTF8String(2).toString, t.getInt(3))
+      })
+    }
+
+  // ------------------------------------------------------------------ //
+  // The row kernel and the DSv2 scan that serves it.                     //
+  // ------------------------------------------------------------------ //
+
+  /** Row schema of the source: the [[LogEvent]] columns, then `tokens`
+    * (the [[LogEventWithTokens]] array), with the encoders' nullability.
+    */
+  private val eventSchema: StructType = Encoders.product[LogEvent].schema
+  private val rowSchema: StructType =
+    eventSchema.add(Encoders.product[LogEventWithTokens].schema("tokens"))
+
+  /** Ordinals of [[rowSchema]]; the kernel writes fields by these. */
+  private object Field {
+    final val File = 0
+    final val EventIdx = 1
+    final val LineStart = 2
+    final val LineEnd = 3
+    final val HasTimestamp = 4
+    final val FirstTs = 5
+    final val TsExtracted = 6
+    final val NTokens = 7
+    final val NErrors = 8
+    final val ErrorSignature = 9
+    final val Category = 10
+    final val Text = 11
+    final val Tokens = 12
+  }
+  require(rowSchema.fieldNames.toSeq == Seq("file", "event_idx", "line_start", "line_end",
+    "has_timestamp", "first_ts", "ts_extracted", "n_tokens", "n_errors", "error_signature",
+    "category", "text", "tokens"), s"LogEvent fields moved: ${rowSchema.fieldNames.mkString(",")}")
+
+  private val RowFields: Array[Int] = rowSchema.indices.toArray
+  private val EventFields: Array[Int] = eventSchema.indices.toArray
+  private val CatErrors = UTF8String.fromString(Category.Errors)
+  private val CatUnmatched = UTF8String.fromString(Category.Unmatched)
+
+  /** A row of [[EventFields]] as a [[LogEvent]]: the values the encoder's
+    * deserializer gives Spark's typed view, but with ONE `file` string per
+    * region and the category constants instead of a fresh string each per
+    * event — the decode is most of a typed event's cost.
+    */
+  private def toEvent(file: String, r: InternalRow): LogEvent = {
+    // decoded straight from the writer's byte array; UTF8String.toString
+    // would copy the bytes out first
+    def str(i: Int): String = if (r.isNullAt(i)) null else {
+      val u = r.getUTF8String(i)
+      new String(u.getBaseObject.asInstanceOf[Array[Byte]],
+        (u.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, u.numBytes, UTF_8)
+    }
+    LogEvent(
+      file = file,
+      event_idx = r.getInt(Field.EventIdx),
+      line_start = r.getInt(Field.LineStart),
+      line_end = r.getInt(Field.LineEnd),
+      has_timestamp = r.getBoolean(Field.HasTimestamp),
+      first_ts = str(Field.FirstTs),
+      ts_extracted =
+        if (r.isNullAt(Field.TsExtracted)) null
+        else DateTimeUtils.toJavaTimestamp(r.getLong(Field.TsExtracted)),
+      n_tokens = r.getInt(Field.NTokens),
+      n_errors = r.getInt(Field.NErrors),
+      error_signature = str(Field.ErrorSignature),
+      category = if (r.getInt(Field.NErrors) > 0) Category.Errors else Category.Unmatched,
+      text = str(Field.Text))
   }
 
-  /** Span sink that holds only the CURRENT event's spans (4 ints per
-    * token) and turns them into a [[LogEvent]] when the next Timestamp
-    * token or the end of input closes the event, so the span buffer stays
-    * event-sized however large the region. Extraction follows the
-    * transcript parse (`parse_turn`): the first timestamp, the ERROR/FATAL
-    * loglevel count, and the template of the first error line. An event's
-    * text, and with `withTokens` each token value, is decoded once from its
-    * byte slice; token boundaries always follow an ASCII byte, so
-    * slice-wise decoding equals decoding the whole buffer, invalid UTF-8
-    * included. `tokens` is null without `withTokens`.
+  private def decoded[T](rows: EventRows)(decode: InternalRow => T): Iterator[T] = new Iterator[T] {
+    private var ready = false
+    def hasNext: Boolean = ready || { ready = rows.next(); ready }
+    def next(): T = {
+      if (!hasNext) throw new NoSuchElementException("no more events")
+      ready = false
+      decode(rows.get())
+    }
+  }
+
+  /** The lexer kernel of every entry point: lex `bytes` once with
+    * [[ByteTokenizer]], pausing after each Timestamp token, and write each
+    * closed event (a new event starts before each Timestamp token; a
+    * leading event may lack one) into ONE reused [[UnsafeRowWriter]] —
+    * `fields` are the [[rowSchema]] ordinals to write, in output order. The
+    * span buffer holds only the current event's spans (4 ints per token),
+    * so memory stays event-sized however large the region, and a row is
+    * valid until the next [[next]].
+    *
+    * Extraction follows the transcript parse (`parse_turn`): the first
+    * timestamp (its micros from `parseTsMicros` on the token bytes), the
+    * ERROR/FATAL loglevel count, and the template of the first error line.
+    * `text`, `first_ts` and token values are byte slices of the input, so
+    * they keep its bytes exactly, invalid UTF-8 included; decoding a slice
+    * equals decoding the whole buffer, since token boundaries always follow
+    * an ASCII byte. A field left out of `fields` costs nothing.
     */
-  private final class EventAssembler(file: String, bytes: Array[Byte], bank: PatternBank,
-                                     eventIdxOffset: Long, lineOffset: Long,
-                                     withTokens: Boolean) extends ByteTokenizer.Sink {
-    val out = new collection.mutable.ArrayBuffer[LogEventWithTokens]
+  private[sources] final class EventRows(file: String, bytes: Array[Byte], bank: PatternBank,
+                                         eventIdxOffset: Long, lineOffset: Long,
+                                         fields: Array[Int])
+      extends ByteTokenizer.Sink {
+    private val fileName = UTF8String.fromString(file)
+    private val lexer = new ByteTokenizer.Lexer(bank, bytes)
     private val spans = new SpanBuf
     private val loglevel = bank.loglevelVarId
+    private val rw = new UnsafeRowWriter(fields.length, 256)
+    private val aw = new UnsafeArrayWriter(rw, 8)
+    private val tw = new UnsafeRowWriter(aw, 4)
     private var nErrors = 0
     private var firstErrorLine = -1
+    private var nEvents = 0
+    private var ready = false
+    private var exhausted = false
 
     override def token(tt: Byte, sid: Int, start: Int, end: Int, line: Int): Unit = {
-      if (tt == TokenType.Timestamp) flush()
+      if (tt == TokenType.Timestamp) closeEvent()
       else if (tt == TokenType.Variable && sid == loglevel && end - start == 5 &&
           matches5(bytes, start)) {
         nErrors += 1
@@ -498,36 +626,148 @@ object LogFiles {
       spans.add(tt, sid, start, end, line)
     }
 
-    private def decode(start: Int, end: Int): String = new String(bytes, start, end - start, UTF_8)
+    /** Advance to the next event's row. */
+    def next(): Boolean = {
+      ready = false
+      while (!ready && !exhausted)
+        if (!lexer.run(this, pauseAfterTimestamp = true)) { exhausted = true; closeEvent() }
+      ready
+    }
 
-    /** Close the current event, if any. */
-    def flush(): Unit = if (spans.n > 0) {
+    def get(): InternalRow = rw.getRow
+
+    /** Write the current event, if any, as the next row. */
+    private def closeEvent(): Unit = if (spans.n > 0) {
       val n = spans.n
       val hasTs = spans.tt(0) == TokenType.Timestamp
-      val firstTs = if (hasTs) decode(spans.start(0), spans.end(0)) else null
-      val ev = LogEvent(
-        file = file,
-        event_idx = (out.length + eventIdxOffset).toInt,
-        line_start = (spans.line(0) + lineOffset).toInt,
-        line_end = (spans.line(n - 1) + lineOffset).toInt,
-        has_timestamp = hasTs,
-        first_ts = firstTs,
-        ts_extracted = if (hasTs) Parse.parseTsToken(firstTs, spans.sid(0)) else null,
-        n_tokens = n,
-        n_errors = nErrors,
-        error_signature =
-          if (firstErrorLine < 0) null else signatureOf(bank, bytes, spans, firstErrorLine, 0, n),
-        category = if (nErrors > 0) Category.Errors else Category.Unmatched,
-        text = decode(spans.start(0), spans.end(n - 1)))
-      val tokens =
-        if (!withTokens) null
-        else Vector.tabulate(n)(i => TokenRow(spans.tt(i), spans.sid(i),
-          decode(spans.start(i), spans.end(i)), (spans.line(i) + lineOffset).toInt))
-      out += LogEventWithTokens(ev, tokens)
+      rw.reset()
+      rw.zeroOutNullBytes()
+      var i = 0
+      while (i < fields.length) {
+        (fields(i): @annotation.switch) match {
+          case Field.File => rw.write(i, fileName)
+          case Field.EventIdx => rw.write(i, (nEvents + eventIdxOffset).toInt)
+          case Field.LineStart => rw.write(i, (spans.line(0) + lineOffset).toInt)
+          case Field.LineEnd => rw.write(i, (spans.line(n - 1) + lineOffset).toInt)
+          case Field.HasTimestamp => rw.write(i, hasTs)
+          case Field.FirstTs =>
+            if (hasTs) rw.write(i, bytes, spans.start(0), spans.end(0) - spans.start(0))
+            else rw.setNullAt(i)
+          case Field.TsExtracted =>
+            val micros = if (hasTs) parseTsMicros(bytes, spans.start(0), spans.end(0)) else null
+            if (micros == null) rw.setNullAt(i) else rw.write(i, micros.longValue())
+          case Field.NTokens => rw.write(i, n)
+          case Field.NErrors => rw.write(i, nErrors)
+          case Field.ErrorSignature =>
+            if (firstErrorLine < 0) rw.setNullAt(i)
+            else rw.write(i, UTF8String.fromString(signatureOf(bank, bytes, spans, firstErrorLine, 0, n)))
+          case Field.Category => rw.write(i, if (nErrors > 0) CatErrors else CatUnmatched)
+          case Field.Text => rw.write(i, bytes, spans.start(0), spans.end(n - 1) - spans.start(0))
+          case Field.Tokens => writeTokens(i, n)
+        }
+        i += 1
+      }
+      nEvents += 1
+      ready = true
       spans.reset()
       nErrors = 0
       firstErrorLine = -1
     }
+
+    /** The `tokens` array: (token_type, schema_id, value, line_num) rows. */
+    private def writeTokens(ordinal: Int, n: Int): Unit = {
+      val arrCursor = rw.cursor()
+      aw.initialize(n)
+      var t = 0
+      while (t < n) {
+        val elemCursor = aw.cursor()
+        tw.resetRowWriter()
+        tw.zeroOutNullBytes()
+        tw.write(0, spans.tt(t))
+        tw.write(1, spans.sid(t))
+        tw.write(2, bytes, spans.start(t), spans.end(t) - spans.start(t))
+        tw.write(3, (spans.line(t) + lineOffset).toInt)
+        aw.setOffsetAndSizeFromPreviousCursor(t, elemCursor)
+        t += 1
+      }
+      rw.setOffsetAndSizeFromPreviousCursor(ordinal, arrCursor)
+    }
+  }
+
+  /** The DSv2 table behind the batch entry points: one row per event in
+    * [[rowSchema]], read from the regions `planRegions` yields — called
+    * once per planned scan, so a chunk index is collected when the query
+    * runs, never while it is built.
+    */
+  private final class EventTable(planRegions: () => Seq[Region], bank: Broadcast[PatternBank],
+                                 conf: Broadcast[SerializableWritable[Configuration]],
+                                 parallelism: Int)
+      extends Table with SupportsRead {
+    override def name(): String = "logfiles"
+    override def schema(): StructType = rowSchema
+    override def capabilities(): java.util.Set[TableCapability] =
+      java.util.EnumSet.of(TableCapability.BATCH_READ)
+    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+      new ScanBuilder with SupportsPushDownRequiredColumns {
+        private var fields = RowFields
+        override def pruneColumns(required: StructType): Unit = {
+          val names = required.fieldNames.toSet
+          fields = RowFields.filter(f => names(rowSchema(f).name))
+        }
+        override def build(): Scan = new EventScan(planRegions, bank, conf, parallelism, fields)
+      }
+  }
+
+  /** A pruned scan over the regions. Its input partitions are contiguous
+    * slices of the region list, at most `parallelism` of them, as a local
+    * relation slices its rows: a task per region would launch a task per
+    * small file. Each region is read by an [[EventRows]] that writes only
+    * the `fields` the plan reads.
+    */
+  private final class EventScan(planRegions: () => Seq[Region], bank: Broadcast[PatternBank],
+                                conf: Broadcast[SerializableWritable[Configuration]],
+                                parallelism: Int, fields: Array[Int])
+      extends Scan with Batch {
+    private lazy val regions = planRegions().toVector
+    override def readSchema(): StructType = StructType(fields.map(rowSchema(_)))
+    override def description(): String = {
+      val files = regions.map(_.file).distinct
+      s"LogFiles ${regions.length} regions of ${files.length} files " +
+        files.take(8).mkString("[", ", ", if (files.length > 8) ", ...]" else "]")
+    }
+    override def toBatch: Batch = this
+    override def planInputPartitions(): Array[InputPartition] = {
+      val n = regions.length
+      val slices = math.min(n, parallelism)
+      Array.tabulate[InputPartition](slices)(i =>
+        RegionSlice(regions.slice((i.toLong * n / slices).toInt, ((i + 1L) * n / slices).toInt)))
+    }
+    override def createReaderFactory(): PartitionReaderFactory = {
+      val fields = this.fields
+      val bank = this.bank
+      val conf = this.conf
+      (p: InputPartition) => new SliceReader(p.asInstanceOf[RegionSlice].regions, bank.value,
+        conf.value.value, fields)
+    }
+  }
+
+  private final case class RegionSlice(regions: Seq[Region]) extends InputPartition
+
+  /** Reads a slice's regions one after another, one region's bytes at a time. */
+  private final class SliceReader(regions: Seq[Region], bank: PatternBank, conf: Configuration,
+                                  fields: Array[Int]) extends PartitionReader[InternalRow] {
+    private var i = 0
+    private var rows: EventRows = _
+    override def next(): Boolean = {
+      while (rows == null || !rows.next()) {
+        if (i == regions.length) return false
+        rows = regionRows(regions(i), bank, conf, fields)
+        i += 1
+      }
+      true
+    }
+    override def get(): InternalRow = rows.get()
+    override def close(): Unit = ()
   }
 
   /** The slim per-event projection shared by the l1 driver query (split

@@ -85,6 +85,7 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
         |  tool_field: handle
         |""".stripMargin
     val path = java.nio.file.Files.createTempFile("graft-schema", ".yaml")
+    path.toFile.deleteOnExit()
     java.nio.file.Files.writeString(path, yaml)
     Seq(("c1", 0, "tool", "bash", "[bash] ran OK\n"))
       .toDF("conv_id", "turn_idx", "role", "tool", "text")
@@ -107,6 +108,7 @@ class GraftExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
          |  marker: '($word)'
          |""".stripMargin
     val path = java.nio.file.Files.createTempFile("graft-schema-edit", ".yaml")
+    path.toFile.deleteOnExit()
     java.nio.file.Files.writeString(path, yamlWith("alpha"))
     java.nio.file.Files.setLastModifiedTime(path,
       java.nio.file.attribute.FileTime.fromMillis(1000000000000L))

@@ -60,22 +60,42 @@ class ByteTokenizerSpec extends AnyFunSuite {
 
   test("fixed-offset timestamp parse agrees with the formatter oracle") {
     import graft.functions.ParseTurnExpression.parseTsMicros
-    val cases = Seq(
-      ("2015-03-23T08:09:17.637", 0), ("2015-03-23T08:09:17,637", 1),
-      ("2015-03-23 08:09:17.637", 2), ("2015-03-23 08:09:17,637", 3),
-      ("2015-03-23 08:09:17", 4), ("2000-02-29 23:59:59", 4),
-      ("1999-12-31 00:00:00.001", 2))
-    cases.foreach { case (s, sid) =>
+    import graft.pipeline.Parse.parseTsToken
+    def micros(s: String): java.lang.Long = {
       val bytes = s.getBytes
-      val micros = parseTsMicros(bytes, 0, bytes.length)
-      val oracle = graft.pipeline.Parse.parseTsToken(s, sid)
-      assert(micros != null && oracle != null, s)
-      assert(micros == oracle.getTime * 1000 + (oracle.getNanos / 1000 % 1000), s)
+      parseTsMicros(bytes, 0, bytes.length)
     }
-    // garbage stays null instead of throwing
-    val bad = "9915-99-99 99:99:99".getBytes
-    assert(parseTsMicros(bad, 0, bad.length) == null)
-    val sep = "2015x03-23 08:09:17".getBytes
-    assert(parseTsMicros(sep, 0, sep.length) == null)
+    // the example schema's 5 formats, in schema order (= parseTsToken's sid)
+    val formats: Seq[(String, Option[String])] =
+      Seq("T" -> Some("."), "T" -> Some(","), " " -> Some("."), " " -> Some(","), " " -> None)
+    // every month × days 1–31 takes in the SMART clamps (Feb 29–31 in leap
+    // and non-leap years, Apr/Jun/Sep/Nov 31)
+    var points = 0
+    for {
+      (sid, (sep, frac)) <- formats.indices.zip(formats)
+      year <- Seq(1900, 1999, 2000, 2015, 2024, 2100)
+      month <- 1 to 12
+      day <- 1 to 31
+      time <- Seq("00:00:00", "23:59:59")
+      millis <- frac.fold(Seq(""))(f => Seq("000", "001", "999").map(f + _))
+    } {
+      val s = f"$year%04d-$month%02d-$day%02d$sep$time$millis"
+      val got = micros(s)
+      val oracle = parseTsToken(s, sid)
+      assert(got != null && oracle != null, s)
+      assert(got == oracle.getTime * 1000 + (oracle.getNanos / 1000 % 1000), s)
+      points += 1
+    }
+    assert(points == 6 * 12 * 31 * 2 * (4 * 3 + 1))
+    // malformed values stay null on both parsers instead of throwing
+    Seq("9915-99-99 99:99:99", "2015-13-01 08:09:17", "2015-00-10 08:09:17",
+      "2015-03-00 08:09:17", "2015-03-23 25:09:17", "2015-03-23 08:60:17",
+      "2015-03-23 08:09:60", "2015-03-23 08:09:60.000").foreach { s =>
+      assert(micros(s) == null, s)
+      assert(parseTsToken(s, if (s.length == 19) 4 else 2) == null, s)
+    }
+    // and so do values of another shape
+    Seq("2015x03-23 08:09:17", "2015-03-23 08:09", "2015-03-23 08:09:17.6",
+      "2015-03-23 08.09.17").foreach(s => assert(micros(s) == null, s))
   }
 }

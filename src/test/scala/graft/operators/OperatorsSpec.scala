@@ -1069,7 +1069,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("artifact memo: a build that throws caches nothing; the next call builds") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-memo").resolve("sf0.001")
+    val dir = java.nio.file.Paths.get(graft.pipeline.Staging.tempDirDeletedOnExit("graft-memo"), "sf0.001")
     java.nio.file.Files.createDirectories(dir)
     val q21 = graft.SparkEntry.queries("q21_heavy_hitters")
     intercept[org.apache.spark.sql.AnalysisException](q21(spark, dir.toString)) // no events table

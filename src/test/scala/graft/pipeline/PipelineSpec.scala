@@ -149,7 +149,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("full run writes 4 sinks and resume skips committed work (no duplicates)") {
-    val out = java.nio.file.Files.createTempDirectory("graft-route").toString
+    val out = Staging.tempDirDeletedOnExit("graft-route")
     val res1 = RunPipeline.run(spark, turns, out, fingerprint = "t1")
     assert(res1.routedCounts.keySet == Category.All.toSet)
     val wantCounts = oracleParsed.groupBy(_.category).map { case (k, v) => k -> v.size.toLong }

@@ -77,7 +77,7 @@ class SkewAndLineageSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("manifest records snapshot id, per-sink rows, and the real part files") {
     import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-lineage").toString
+    val out = Staging.tempDirDeletedOnExit("graft-lineage")
     val turns = graft.datagen.SyntheticTranscripts.generate(spark, 40L)
     RunPipeline.run(spark, turns, out, fingerprint = "lineage-test")
 

@@ -61,7 +61,7 @@ class LogFilesKernelSpec extends AnyFunSuite {
     Seq("example" -> example, "reference" -> reference).foreach { case (name, bank) =>
       val content = new String(bytes, UTF_8)
       val want = oracle("f.log", content, bank)
-      val got = LogFiles.lexEvents("f.log", bytes, bank, 0L, 0L, withTokens = true).toVector
+      val got = LogFiles.lexEvents("f.log", bytes, bank).toVector
       val ev = firstDiff(got.map(_.event), want.map(_._1))
       assert(ev < 0, s"$label/$name: event $ev differs (got ${got.length}, want ${want.length})")
       val tok = firstDiff(got.map(_.tokens), want.map(_._2))

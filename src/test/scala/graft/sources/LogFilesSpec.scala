@@ -24,6 +24,9 @@ class LogFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = spark.stop()
 
+  private def tempDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Paths.get(graft.pipeline.Staging.tempDirDeletedOnExit(prefix))
+
   private def resource(name: String): String = {
     val in = getClass.getResourceAsStream(s"/$name")
     try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
@@ -31,7 +34,7 @@ class LogFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("hive fixtures parse to events through the Spark source, losslessly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-logs")
+    val dir = tempDir("graft-logs")
     val small = resource("hive-24h.log")
     val large = resource("hive-24h_large.log")
     java.nio.file.Files.writeString(dir.resolve("hive-24h.log"), small)
@@ -62,7 +65,7 @@ class LogFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("eventsWithTokens: per-event token arrays round-trip to the event text on both fixtures") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-logs-tok")
+    val dir = tempDir("graft-logs-tok")
     java.nio.file.Files.writeString(dir.resolve("hive-24h.log"), resource("hive-24h.log"))
     java.nio.file.Files.writeString(dir.resolve("hive-24h_large.log"), resource("hive-24h_large.log"))
     val bank = spark.sparkContext.broadcast(PatternBank.example)
@@ -83,8 +86,61 @@ class LogFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(evts.map(_.event.toString).sorted.toSeq == plain)
   }
 
+  test("building the event plans runs no Spark job; the scan names its files; results are pinned") {
+    import spark.implicits._
+    val dir = tempDir("graft-logs-plan")
+    val names = Seq("hive-24h.log", "hive-24h_large.log")
+    names.foreach(n => java.nio.file.Files.writeString(dir.resolve(n), resource(n)))
+    val bank = spark.sparkContext.broadcast(PatternBank.example)
+    val idxDir = s"$dir/chunk-index"
+    LogFiles.chunkIndex(spark, s"$dir/*.log", bank, chunkBytes = 4096).write.parquet(idxDir)
+    val index = spark.read.parquet(idxDir).as[LogFiles.ChunkMeta]
+    index.schema // resolve the parquet source before counting
+
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    val plans = try {
+      val built = Seq(
+        "events" -> LogFiles.events(spark, s"$dir/*.log", bank),
+        "eventsSplit" -> LogFiles.eventsSplit(spark, s"$dir/*.log", bank, chunkBytes = 4096),
+        "eventsFromIndex" -> LogFiles.eventsFromIndex(spark, index, bank))
+      // listener events arrive in order: once the marker job is seen, every
+      // job started while the plans were built has been recorded
+      sc.setJobDescription("marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!started.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      val before = started.toArray.takeWhile(_ != "marker")
+      assert(started.contains("marker") && before.isEmpty,
+        s"${before.length} job(s) ran while building the event plans")
+      built
+    } finally sc.removeSparkListener(listener)
+
+    val files = names.map(n => new org.apache.hadoop.fs.Path(dir.resolve(n).toUri).toString)
+    // per fixture: (events, crc32 over the eventStats rows in event_idx order)
+    // as the object-building kernel before the row kernel produced them
+    val pinned = Map(names(0) -> (4L, 3919348650L), names(1) -> (101L, 1098075722L))
+    plans.foreach { case (name, ds) =>
+      val plan = ds.queryExecution.executedPlan.toString
+      files.foreach(f => assert(plan.contains(f), s"$name: scan does not name $f in\n$plan"))
+      names.zip(files).foreach { case (n, f) =>
+        val one = ds.filter($"file" === f)
+        val crc = new java.util.zip.CRC32()
+        LogFiles.eventStats(one).orderBy("event_idx").collect()
+          .foreach(r => crc.update(r.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+        assert((one.count(), crc.getValue) == pinned(n), s"$name: $n")
+      }
+    }
+  }
+
   test("within-file split: chunked parse equals the single-task parse on a multi-MB log") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-split")
+    val dir = tempDir("graft-split")
     val large = resource("hive-24h_large.log")
     val sb = new java.lang.StringBuilder(4 << 20)
     // leading timestamp-less event + multi-line filler events between copies
@@ -135,7 +191,7 @@ class LogFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // stay within ~2·chunkBytes (an event straddling the boundary extends
     // the region by less than one chunk). Only a single event larger than
     // chunkBytes can grow a region beyond that — the documented contract.
-    val dir = java.nio.file.Files.createTempDirectory("graft-region-bound")
+    val dir = tempDir("graft-region-bound")
     graft.datagen.SyntheticLogs.writeLog(dir.resolve("big.log"), 4)
     val bank = spark.sparkContext.broadcast(PatternBank.example)
     val chunkBytes = 128L << 10
@@ -166,7 +222,7 @@ class LogFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
     // events starting exactly at chunk boundaries, empty lines, missing
     // trailing newline, timestamp-less preambles
     val bank = spark.sparkContext.broadcast(PatternBank.example)
-    val dir = java.nio.file.Files.createTempDirectory("graft-split-prop")
+    val dir = tempDir("graft-split-prop")
     def key(e: LogFiles.LogEvent) =
       (e.event_idx, e.line_start, e.line_end, e.has_timestamp, e.first_ts,
         e.n_tokens, e.n_errors, e.error_signature, e.category, e.text)
@@ -219,7 +275,7 @@ class LogFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("every entry point names a file by the same Hadoop path string, spaces included") {
-    val dir = java.nio.file.Files.createTempDirectory("graft logs ")
+    val dir = tempDir("graft logs ")
     java.nio.file.Files.writeString(dir.resolve("a b.log"), resource("hive-24h.log"))
     val bank = spark.sparkContext.broadcast(PatternBank.example)
     val glob = s"$dir/*.log"
@@ -238,7 +294,7 @@ class LogFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("a directory stands for the files below it; hidden files are skipped; no match fails") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-logs-dir")
+    val dir = tempDir("graft-logs-dir")
     val small = resource("hive-24h.log")
     java.nio.file.Files.writeString(dir.resolve("a.log"), small)
     java.nio.file.Files.createDirectory(dir.resolve("sub"))
@@ -258,7 +314,7 @@ class LogFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("compressed input: events() decompresses a .log.gz whole; the split path rejects it") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-logs-gz")
+    val dir = tempDir("graft-logs-gz")
     val large = resource("hive-24h_large.log")
     java.nio.file.Files.writeString(dir.resolve("plain.log"), large)
     val gz = new java.util.zip.GZIPOutputStream(

@@ -26,7 +26,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming windowed category counts equal the batch computation") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-in").toString
+    val dir = graft.pipeline.Staging.tempDirDeletedOnExit("graft-stream-in")
     SyntheticTranscripts.generate(spark, 80L).repartition(6).write.mode("overwrite").parquet(dir)
     val bank = spark.sparkContext.broadcast(PatternBank.example)
 
@@ -54,9 +54,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming route writes per-category partitioned sinks equal to batch counts") {
     import spark.implicits._
-    val in = java.nio.file.Files.createTempDirectory("graft-stream-route-in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft-stream-route-out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-stream-route-ckpt").toString
+    val in = graft.pipeline.Staging.tempDirDeletedOnExit("graft-stream-route-in")
+    val out = graft.pipeline.Staging.tempDirDeletedOnExit("graft-stream-route-out")
+    val ckpt = graft.pipeline.Staging.tempDirDeletedOnExit("graft-stream-route-ckpt")
     SyntheticTranscripts.generate(spark, 60L).repartition(4).write.mode("overwrite").parquet(in)
 
     val parsed = StreamingParse.parsedStream(
@@ -78,7 +78,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming parse equals the typed batch oracle Parse.apply") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-expr").toString
+    val dir = graft.pipeline.Staging.tempDirDeletedOnExit("graft-stream-expr")
     SyntheticTranscripts.generate(spark, 40L).repartition(4).write.mode("overwrite").parquet(dir)
 
     val exprStream = StreamingParse.parsedStream(
@@ -103,7 +103,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming exact dedup drops duplicate texts across triggers, keeps uniques") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-dedup").toString
+    val dir = graft.pipeline.Staging.tempDirDeletedOnExit("graft-stream-dedup")
     val base = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     // 40 docs, every other one a duplicate text of the previous, all inside
     // one watermark window; spread over files so triggers split them
@@ -130,7 +130,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("stateful per-conversation progress accumulates across triggers") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream-in2").toString
+    val dir = graft.pipeline.Staging.tempDirDeletedOnExit("graft-stream-in2")
     SyntheticTranscripts.generate(spark, 30L).repartition(5).write.mode("overwrite").parquet(dir)
     val bank = spark.sparkContext.broadcast(PatternBank.example)
 
@@ -164,7 +164,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
       finally in.close()
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-logstream").toString
+    val dir = graft.pipeline.Staging.tempDirDeletedOnExit("graft-logstream")
     val bank = spark.sparkContext.broadcast(PatternBank.example)
     def writeLog(name: String, content: String): Unit = {
       // file-source contract: write complete elsewhere, then move in
@@ -239,7 +239,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming .log within-file split: an oversized file parses in bounded regions, identical to batch") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-logstream-split").toString
+    val dir = graft.pipeline.Staging.tempDirDeletedOnExit("graft-logstream-split")
     val bank = spark.sparkContext.broadcast(PatternBank.example)
     // ~8 MB synthetic multi-line log with chunkBytes=256 KB → the stream
     // must route it through the chunk-index kernel (32 phase-1 ranges,
