@@ -10,14 +10,13 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
-import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 import graft.functions.ParseTurnExpression.{SpanBuf, matches5, parseTsMicros, signatureOf}
 import graft.lexer.{ByteTokenizer, PatternBank, TokenType}
@@ -383,9 +382,9 @@ object LogFiles {
                          fields: Array[Int]): EventRows =
     new EventRows(r.file, readRegion(r, conf), bank, r.eventIdxOffset, r.lineOffset, fields)
 
-  /** [[regionRows]] decoded to [[LogEvent]]s, for the stream. */
+  /** [[regionRows]] decoded to [[LogEvent]]s by the encoder, for the stream. */
   private def parseRegion(r: Region, bank: PatternBank, conf: Configuration): Iterator[LogEvent] =
-    decoded(regionRows(r, bank, conf, EventFields))(toEvent(r.file, _))
+    decoded(regionRows(r, bank, conf, EventFields))(eventEncoder.createDeserializer())
 
   private def readRegion(r: Region, conf: Configuration): Array[Byte] =
     if (!r.compressed) readRange(r.file, r.start, r.end, conf)
@@ -487,24 +486,26 @@ object LogFiles {
 
   /** Pure per-file parse — shared with tests and the kernel probe: the
     * content's UTF-8 bytes through the same row kernel as every Spark entry
-    * point ([[EventRows]]), each row decoded to a [[LogEvent]].
+    * point ([[EventRows]]), each row decoded to a [[LogEvent]] by the encoder.
     */
   def eventsOf(file: String, content: String, bank: PatternBank): Iterator[LogEvent] =
     decoded(new EventRows(file, content.getBytes(UTF_8), bank, 0L, 0L, EventFields))(
-      toEvent(file, _))
+      eventEncoder.createDeserializer())
 
   /** The row kernel with every column, decoded to [[LogEventWithTokens]]
     * — the typed face the kernel spec checks against the char oracle.
     */
   private[sources] def lexEvents(file: String, bytes: Array[Byte],
-                                 bank: PatternBank): Iterator[LogEventWithTokens] =
+                                 bank: PatternBank): Iterator[LogEventWithTokens] = {
+    val event = eventEncoder.createDeserializer()
     decoded(new EventRows(file, bytes, bank, 0L, 0L, RowFields)) { r =>
       val tokens = r.getArray(Field.Tokens)
-      LogEventWithTokens(toEvent(file, r), Vector.tabulate(tokens.numElements()) { i =>
+      LogEventWithTokens(event(r), Vector.tabulate(tokens.numElements()) { i =>
         val t = tokens.getStruct(i, 4)
         TokenRow(t.getByte(0), t.getInt(1), t.getUTF8String(2).toString, t.getInt(3))
       })
     }
+  }
 
   // ------------------------------------------------------------------ //
   // The row kernel and the DSv2 scan that serves it.                     //
@@ -542,35 +543,11 @@ object LogFiles {
   private val CatErrors = UTF8String.fromString(Category.Errors)
   private val CatUnmatched = UTF8String.fromString(Category.Unmatched)
 
-  /** A row of [[EventFields]] as a [[LogEvent]]: the values the encoder's
-    * deserializer gives Spark's typed view, but with ONE `file` string per
-    * region and the category constants instead of a fresh string each per
-    * event — the decode is most of a typed event's cost.
+  /** The [[LogEvent]] encoder bound to [[eventSchema]]: its deserializer
+    * turns a row of [[EventFields]] (or the leading fields of [[RowFields]])
+    * into the object Spark's typed view gives.
     */
-  private def toEvent(file: String, r: InternalRow): LogEvent = {
-    // decoded straight from the writer's byte array; UTF8String.toString
-    // would copy the bytes out first
-    def str(i: Int): String = if (r.isNullAt(i)) null else {
-      val u = r.getUTF8String(i)
-      new String(u.getBaseObject.asInstanceOf[Array[Byte]],
-        (u.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt, u.numBytes, UTF_8)
-    }
-    LogEvent(
-      file = file,
-      event_idx = r.getInt(Field.EventIdx),
-      line_start = r.getInt(Field.LineStart),
-      line_end = r.getInt(Field.LineEnd),
-      has_timestamp = r.getBoolean(Field.HasTimestamp),
-      first_ts = str(Field.FirstTs),
-      ts_extracted =
-        if (r.isNullAt(Field.TsExtracted)) null
-        else DateTimeUtils.toJavaTimestamp(r.getLong(Field.TsExtracted)),
-      n_tokens = r.getInt(Field.NTokens),
-      n_errors = r.getInt(Field.NErrors),
-      error_signature = str(Field.ErrorSignature),
-      category = if (r.getInt(Field.NErrors) > 0) Category.Errors else Category.Unmatched,
-      text = str(Field.Text))
-  }
+  private lazy val eventEncoder = ExpressionEncoder[LogEvent]().resolveAndBind()
 
   private def decoded[T](rows: EventRows)(decode: InternalRow => T): Iterator[T] = new Iterator[T] {
     private var ready = false

@@ -3,11 +3,11 @@
 working tree.
 
     python3 tools/ab.py --parent <rev> --workload <name> --pairs N --seed0 S
-        [--seconds 20] [--out runs.json] [--keep]
+        [--out runs.json]
 
 `git archive`s <rev> into a temporary directory, then for each seed
 S .. S+N-1 runs `perfbench/run.py --workload <name> --seed <seed> --trace 0
---seconds <s>` once in the parent tree and once in the working tree. The
+--seconds 20` once in the parent tree and once in the working tree. The
 order alternates per seed: odd seeds run the parent first, even seeds the
 change. Nothing under perfbench/ or BENCHMARK.json is written; each tree
 builds into its own .bench_build/.
@@ -29,10 +29,10 @@ import tempfile
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def run_bench(tree, workload, seed, seconds):
+def run_bench(tree, workload, seed):
     """One perfbench run in `tree`; return its final JSON record or None."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
-           "--seconds", str(seconds), "--trace", "0"]
+           "--seconds", "20", "--trace", "0"]
     r = subprocess.run(cmd, cwd=tree, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     lines = [l for l in r.stdout.splitlines() if l.startswith("{")]
     if not lines:
@@ -54,9 +54,7 @@ def main():
     ap.add_argument("--workload", required=True)
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--seed0", type=int, required=True)
-    ap.add_argument("--seconds", type=int, default=20)
     ap.add_argument("--out", help="write every run's record to this JSON file")
-    ap.add_argument("--keep", action="store_true", help="keep the parent tree")
     a = ap.parse_args()
 
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
@@ -74,7 +72,7 @@ def main():
             if seed % 2 == 0:
                 order.reverse()
             for side, tree in order:
-                rec = run_bench(tree, a.workload, seed, a.seconds)
+                rec = run_bench(tree, a.workload, seed)
                 runs.append((seed, side, rec))
                 failed = "no result" if rec is None else rec["failed"]
                 vals = "" if rec is None else " ".join(
@@ -84,8 +82,7 @@ def main():
         if a.out:
             with open(a.out, "w") as f:
                 json.dump([{"seed": s, "side": side, "record": r} for s, side, r in runs], f, indent=1)
-        if not a.keep:
-            shutil.rmtree(parent, ignore_errors=True)
+        shutil.rmtree(parent, ignore_errors=True)
 
     def values(side, name):
         return {s: r["metrics"][name]["value"] for s, sd, r in runs
