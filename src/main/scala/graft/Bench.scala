@@ -27,8 +27,8 @@ object Bench {
     val sinkMode = sys.env.getOrElse("GRAFT_SINK_MODE", "noop")
     // input staged as parquet (untimed) — the measured job starts from a
     // table scan like the real deployment; small warmup run for JIT
-    val turns = RunPipeline.stageInput(spark, nConvs, s"/tmp/graft-input-$nConvs")
-    val warm = RunPipeline.stageInput(spark, math.max(100L, nConvs / 20), s"/tmp/graft-input-warm-$nConvs")
+    val turns = RunPipeline.stageInput(spark, nConvs)
+    val warm = RunPipeline.stageInput(spark, math.max(100L, nConvs / 20))
     RunPipeline.run(spark, warm,
       Staging.tempDirDeletedOnExit("graft-bench-warm"),
       fingerprint = "warmup", sinkMode = sinkMode)

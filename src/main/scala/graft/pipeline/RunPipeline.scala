@@ -124,18 +124,18 @@ object RunPipeline {
   /** Stage the synthetic transcript table as parquet (the "Iceberg table"
     * of the north rule) so measured runs start from a table scan like the
     * real deployment would — datagen CPU is not pipeline throughput.
-    * Reuses an existing staging dir for the same nConvs.
+    * Staged per process into a temp dir deleted on exit: generation is
+    * seeded, so every run reads the same input, and a change to the
+    * generator is never measured against a stale copy.
     */
-  def stageInput(spark: SparkSession, nConvs: Long, dir: String): Dataset[Turn] = {
+  def stageInput(spark: SparkSession, nConvs: Long): Dataset[Turn] = {
     import spark.implicits._
-    val marker = java.nio.file.Paths.get(dir, "_SUCCESS")
-    if (!java.nio.file.Files.exists(marker)) {
-      // fixed 64-file layout regardless of staging parallelism: the scan
-      // stage must have enough splits to keep any core count busy
-      SyntheticTranscripts.generate(spark, nConvs)
-        .repartition(64)
-        .write.mode("overwrite").parquet(dir)
-    }
+    val dir = Staging.tempDirDeletedOnExit("graft-input")
+    // fixed 64-file layout regardless of staging parallelism: the scan
+    // stage must have enough splits to keep any core count busy
+    SyntheticTranscripts.generate(spark, nConvs)
+      .repartition(64)
+      .write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir).as[Turn]
   }
 
@@ -150,15 +150,14 @@ object RunPipeline {
     val spark = sparkSession(cores)
     spark.sparkContext.setLogLevel("WARN")
     try {
-      // input staged once (untimed), shared across scaling runs
-      val inDir = s"/tmp/graft-input-$nConvs"
-      val turns = stageInput(spark, nConvs, inDir)
+      // input staged untimed; seeded, so scaling runs read the same rows
+      val turns = stageInput(spark, nConvs)
 
       // JIT/codegen warmup on a small slice so the measured run reflects
       // steady-state throughput (the scaling-protocol runs compare N vs 4N
       // cores, not cold-JVM effects)
       val warmDir = Staging.tempDirDeletedOnExit("graft-warm")
-      run(spark, stageInput(spark, math.max(100L, nConvs / 20), s"/tmp/graft-input-warm-$nConvs"),
+      run(spark, stageInput(spark, math.max(100L, nConvs / 20)),
         warmDir, schema, fingerprint = "warmup", sinkMode = sinkMode)
 
       val t0 = System.nanoTime()

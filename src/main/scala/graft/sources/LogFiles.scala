@@ -9,7 +9,6 @@ import org.apache.spark.SerializableWritable
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.codegen.{UnsafeArrayWriter, UnsafeRowWriter}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read._
@@ -18,9 +17,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-import graft.functions.ParseTurnExpression.{SpanBuf, matches5, parseTsMicros, signatureOf}
+import graft.functions.ParseTurnExpression.CAT_UNMATCHED
+import graft.functions.SpanRowWriter
 import graft.lexer.{ByteTokenizer, PatternBank, TokenType}
-import graft.pipeline.{Category, TokenRow}
+import graft.pipeline.TokenRow
 
 /** Raw log-file source — the reference's primary input mode
   * (`BufferedFileStream` + `Lexer`, reference src/lexer/streams.rs and
@@ -36,9 +36,9 @@ import graft.pipeline.{Category, TokenRow}
   *     an event boundary, with the event index and line number it starts at;
   *  1. a task reads the region's bytes and lexes them with
   *     [[graft.lexer.ByteTokenizer]], one event at a time, writing each
-  *     event straight into a reused Tungsten row ([[EventRows]]): text,
-  *     first_ts and token values are byte slices, and ts_extracted comes
-  *     from the byte-level `parseTsMicros` that `parse_turn` uses.
+  *     event straight into a reused Tungsten row ([[EventRows]]) with the
+  *     [[graft.functions.SpanRowWriter]] `parse_turn` writes its rows
+  *     with: an event's fields are `parse_turn`'s over its spans.
   *
   * The batch entry points serve those rows from a DataSource V2 scan
   * ([[EventTable]]) whose input partitions are slices of the regions, so
@@ -499,7 +499,7 @@ object LogFiles {
                                  bank: PatternBank): Iterator[LogEventWithTokens] = {
     val event = eventEncoder.createDeserializer()
     decoded(new EventRows(file, bytes, bank, 0L, 0L, RowFields)) { r =>
-      val tokens = r.getArray(Field.Tokens)
+      val tokens = r.getArray(eventSchema.length) // after the LogEvent columns
       LogEventWithTokens(event(r), Vector.tabulate(tokens.numElements()) { i =>
         val t = tokens.getStruct(i, 4)
         TokenRow(t.getByte(0), t.getInt(1), t.getUTF8String(2).toString, t.getInt(3))
@@ -518,30 +518,9 @@ object LogFiles {
   private val rowSchema: StructType =
     eventSchema.add(Encoders.product[LogEventWithTokens].schema("tokens"))
 
-  /** Ordinals of [[rowSchema]]; the kernel writes fields by these. */
-  private object Field {
-    final val File = 0
-    final val EventIdx = 1
-    final val LineStart = 2
-    final val LineEnd = 3
-    final val HasTimestamp = 4
-    final val FirstTs = 5
-    final val TsExtracted = 6
-    final val NTokens = 7
-    final val NErrors = 8
-    final val ErrorSignature = 9
-    final val Category = 10
-    final val Text = 11
-    final val Tokens = 12
-  }
-  require(rowSchema.fieldNames.toSeq == Seq("file", "event_idx", "line_start", "line_end",
-    "has_timestamp", "first_ts", "ts_extracted", "n_tokens", "n_errors", "error_signature",
-    "category", "text", "tokens"), s"LogEvent fields moved: ${rowSchema.fieldNames.mkString(",")}")
-
-  private val RowFields: Array[Int] = rowSchema.indices.toArray
-  private val EventFields: Array[Int] = eventSchema.indices.toArray
-  private val CatErrors = UTF8String.fromString(Category.Errors)
-  private val CatUnmatched = UTF8String.fromString(Category.Unmatched)
+  /** [[rowSchema]] and [[eventSchema]] as [[SpanRowWriter]] field ids. */
+  private val RowFields: Array[Int] = SpanRowWriter.fieldIds(rowSchema)
+  private val EventFields: Array[Int] = SpanRowWriter.fieldIds(eventSchema)
 
   /** The [[LogEvent]] encoder bound to [[eventSchema]]: its deserializer
     * turns a row of [[EventFields]] (or the leading fields of [[RowFields]])
@@ -562,19 +541,12 @@ object LogFiles {
   /** The lexer kernel of every entry point: lex `bytes` once with
     * [[ByteTokenizer]], pausing after each Timestamp token, and write each
     * closed event (a new event starts before each Timestamp token; a
-    * leading event may lack one) into ONE reused [[UnsafeRowWriter]] —
-    * `fields` are the [[rowSchema]] ordinals to write, in output order. The
-    * span buffer holds only the current event's spans (4 ints per token),
-    * so memory stays event-sized however large the region, and a row is
-    * valid until the next [[next]].
-    *
-    * Extraction follows the transcript parse (`parse_turn`): the first
-    * timestamp (its micros from `parseTsMicros` on the token bytes), the
-    * ERROR/FATAL loglevel count, and the template of the first error line.
-    * `text`, `first_ts` and token values are byte slices of the input, so
-    * they keep its bytes exactly, invalid UTF-8 included; decoding a slice
-    * equals decoding the whole buffer, since token boundaries always follow
-    * an ASCII byte. A field left out of `fields` costs nothing.
+    * leading event may lack one) as a row of `fields` (writer ids) with ONE
+    * reused [[SpanRowWriter]]. It holds only the current event's spans, so
+    * memory stays event-sized however large the region; a row is valid
+    * until the next [[next]]. An event's fields are `parse_turn`'s over its
+    * spans with `role` and `tool` null (EventTurnSpec), plus its file,
+    * index, lines and text; a field left out of `fields` costs nothing.
     */
   private[sources] final class EventRows(file: String, bytes: Array[Byte], bank: PatternBank,
                                          eventIdxOffset: Long, lineOffset: Long,
@@ -582,25 +554,16 @@ object LogFiles {
       extends ByteTokenizer.Sink {
     private val fileName = UTF8String.fromString(file)
     private val lexer = new ByteTokenizer.Lexer(bank, bytes)
-    private val spans = new SpanBuf
-    private val loglevel = bank.loglevelVarId
-    private val rw = new UnsafeRowWriter(fields.length, 256)
-    private val aw = new UnsafeArrayWriter(rw, 8)
-    private val tw = new UnsafeRowWriter(aw, 4)
-    private var nErrors = 0
-    private var firstErrorLine = -1
+    private val rows = new SpanRowWriter(fields)
+    rows.input(bank, bytes, toolRole = false)
+    private var row: InternalRow = _
     private var nEvents = 0
     private var ready = false
     private var exhausted = false
 
     override def token(tt: Byte, sid: Int, start: Int, end: Int, line: Int): Unit = {
       if (tt == TokenType.Timestamp) closeEvent()
-      else if (tt == TokenType.Variable && sid == loglevel && end - start == 5 &&
-          matches5(bytes, start)) {
-        nErrors += 1
-        if (firstErrorLine < 0) firstErrorLine = line
-      }
-      spans.add(tt, sid, start, end, line)
+      rows.token(tt, sid, start, end, line)
     }
 
     /** Advance to the next event's row. */
@@ -611,63 +574,14 @@ object LogFiles {
       ready
     }
 
-    def get(): InternalRow = rw.getRow
+    def get(): InternalRow = row
 
     /** Write the current event, if any, as the next row. */
-    private def closeEvent(): Unit = if (spans.n > 0) {
-      val n = spans.n
-      val hasTs = spans.tt(0) == TokenType.Timestamp
-      rw.reset()
-      rw.zeroOutNullBytes()
-      var i = 0
-      while (i < fields.length) {
-        (fields(i): @annotation.switch) match {
-          case Field.File => rw.write(i, fileName)
-          case Field.EventIdx => rw.write(i, (nEvents + eventIdxOffset).toInt)
-          case Field.LineStart => rw.write(i, (spans.line(0) + lineOffset).toInt)
-          case Field.LineEnd => rw.write(i, (spans.line(n - 1) + lineOffset).toInt)
-          case Field.HasTimestamp => rw.write(i, hasTs)
-          case Field.FirstTs =>
-            if (hasTs) rw.write(i, bytes, spans.start(0), spans.end(0) - spans.start(0))
-            else rw.setNullAt(i)
-          case Field.TsExtracted =>
-            val micros = if (hasTs) parseTsMicros(bytes, spans.start(0), spans.end(0)) else null
-            if (micros == null) rw.setNullAt(i) else rw.write(i, micros.longValue())
-          case Field.NTokens => rw.write(i, n)
-          case Field.NErrors => rw.write(i, nErrors)
-          case Field.ErrorSignature =>
-            if (firstErrorLine < 0) rw.setNullAt(i)
-            else rw.write(i, UTF8String.fromString(signatureOf(bank, bytes, spans, firstErrorLine, 0, n)))
-          case Field.Category => rw.write(i, if (nErrors > 0) CatErrors else CatUnmatched)
-          case Field.Text => rw.write(i, bytes, spans.start(0), spans.end(n - 1) - spans.start(0))
-          case Field.Tokens => writeTokens(i, n)
-        }
-        i += 1
-      }
+    private def closeEvent(): Unit = if (!rows.isEmpty) {
+      row = rows.write(CAT_UNMATCHED, fileName, (nEvents + eventIdxOffset).toInt, lineOffset)
       nEvents += 1
       ready = true
-      spans.reset()
-      nErrors = 0
-      firstErrorLine = -1
-    }
-
-    /** The `tokens` array: (token_type, schema_id, value, line_num) rows. */
-    private def writeTokens(ordinal: Int, n: Int): Unit = {
-      val arrCursor = rw.cursor()
-      aw.initialize(n)
-      var t = 0
-      while (t < n) {
-        val elemCursor = aw.cursor()
-        tw.resetRowWriter()
-        tw.zeroOutNullBytes()
-        tw.write(0, spans.tt(t))
-        tw.write(1, spans.sid(t))
-        tw.write(2, bytes, spans.start(t), spans.end(t) - spans.start(t))
-        tw.write(3, (spans.line(t) + lineOffset).toInt)
-        aw.setOffsetAndSizeFromPreviousCursor(t, elemCursor)
-        t += 1
-      }
-      rw.setOffsetAndSizeFromPreviousCursor(ordinal, arrCursor)
+      rows.reset()
     }
   }
 
@@ -686,12 +600,12 @@ object LogFiles {
       java.util.EnumSet.of(TableCapability.BATCH_READ)
     override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
       new ScanBuilder with SupportsPushDownRequiredColumns {
-        private var fields = RowFields
+        private var pruned = rowSchema
         override def pruneColumns(required: StructType): Unit = {
           val names = required.fieldNames.toSet
-          fields = RowFields.filter(f => names(rowSchema(f).name))
+          pruned = StructType(rowSchema.filter(f => names(f.name)))
         }
-        override def build(): Scan = new EventScan(planRegions, bank, conf, parallelism, fields)
+        override def build(): Scan = new EventScan(planRegions, bank, conf, parallelism, pruned)
       }
   }
 
@@ -699,14 +613,14 @@ object LogFiles {
     * slices of the region list, at most `parallelism` of them, as a local
     * relation slices its rows: a task per region would launch a task per
     * small file. Each region is read by an [[EventRows]] that writes only
-    * the `fields` the plan reads.
+    * the columns the plan reads.
     */
   private final class EventScan(planRegions: () => Seq[Region], bank: Broadcast[PatternBank],
                                 conf: Broadcast[SerializableWritable[Configuration]],
-                                parallelism: Int, fields: Array[Int])
+                                parallelism: Int, pruned: StructType)
       extends Scan with Batch {
     private lazy val regions = planRegions().toVector
-    override def readSchema(): StructType = StructType(fields.map(rowSchema(_)))
+    override def readSchema(): StructType = pruned
     override def description(): String = {
       val files = regions.map(_.file).distinct
       s"LogFiles ${regions.length} regions of ${files.length} files " +
@@ -720,7 +634,7 @@ object LogFiles {
         RegionSlice(regions.slice((i.toLong * n / slices).toInt, ((i + 1L) * n / slices).toInt)))
     }
     override def createReaderFactory(): PartitionReaderFactory = {
-      val fields = this.fields
+      val fields = SpanRowWriter.fieldIds(pruned)
       val bank = this.bank
       val conf = this.conf
       (p: InputPartition) => new SliceReader(p.asInstanceOf[RegionSlice].regions, bank.value,

@@ -87,17 +87,22 @@ class ByteTokenizerSpec extends AnyFunSuite {
       points += 1
     }
     assert(points == 6 * 12 * 31 * 2 * (4 * 3 + 1))
-    // Where the two parsers part, pinned: values the example timestamp DFA
-    // accepts (two digits a field) that the formatter rejects or reads
-    // otherwise. parseTsMicros clamps a day of 32–99 to the month's last
-    // day where the oracle gives null, rejects 24:00:00 where the oracle's
-    // SMART resolution gives the next day's midnight, and reads year 0000
-    // proleptically where the oracle (year-of-era) gives null.
+    // Values the example timestamp DFA accepts (two digits a field) that
+    // the formatter rejects or reads otherwise: a day of 32–99 (null, past
+    // the SMART clamp), 24:00:00 (the next day's midnight with zero millis,
+    // else null) and year 0000 (null: year-of-era starts at 1). The
+    // fixed-offset parse agrees with the oracle on each, null included.
     def utc(t: java.time.LocalDateTime): Long =
       t.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + t.getNano / 1000
     def render(sid: Int, date: String, time: String, ms: Int): String = {
       val (sep, frac) = formats(sid)
       date + sep + time + frac.fold("")(f => f"$f$ms%03d")
+    }
+    def agrees(s: String, sid: Int): Unit = {
+      val oracle = parseTsToken(s, sid)
+      val want = if (oracle == null) null
+        else java.lang.Long.valueOf(oracle.getTime * 1000 + (oracle.getNanos / 1000 % 1000))
+      assert(micros(s) == want, s)
     }
     var parted = 0
     for {
@@ -108,9 +113,8 @@ class ByteTokenizerSpec extends AnyFunSuite {
       ms <- formats(sid)._2.fold(Seq(0))(_ => Seq(0, 999))
     } {
       val s = render(sid, f"$year%04d-$month%02d-$day%02d", "08:09:17", ms)
-      val last = java.time.YearMonth.of(year, month).atEndOfMonth.atTime(8, 9, 17, ms * 1000000)
-      assert(micros(s) == utc(last), s)
       assert(parseTsToken(s, sid) == null, s)
+      agrees(s, sid)
       parted += 1
     }
     assert(parted == 2 * 12 * 68 * (4 * 2 + 1))
@@ -120,12 +124,12 @@ class ByteTokenizerSpec extends AnyFunSuite {
       ms <- formats(sid)._2.fold(Seq(0))(_ => Seq(0, 1))
     } {
       val s = render(sid, date, "24:00:00", ms)
-      assert(micros(s) == null, s)
       val oracle = parseTsToken(s, sid)
       if (ms == 0) {
         val midnight = java.time.LocalDate.parse(date).plusDays(1).atStartOfDay
         assert(oracle != null && oracle.getTime * 1000 == utc(midnight), s)
       } else assert(oracle == null, s)
+      agrees(s, sid)
     }
     for {
       sid <- formats.indices
@@ -133,8 +137,8 @@ class ByteTokenizerSpec extends AnyFunSuite {
         ("0000-12-31", "12:34:56"))
     } {
       val s = render(sid, date, time, 0)
-      assert(micros(s) == utc(java.time.LocalDateTime.parse(date + "T" + time)), s)
       assert(parseTsToken(s, sid) == null, s)
+      agrees(s, sid)
     }
     // malformed values stay null on both parsers instead of throwing
     Seq("9915-99-99 99:99:99", "2015-13-01 08:09:17", "2015-00-10 08:09:17",

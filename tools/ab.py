@@ -14,7 +14,13 @@ builds into its own .bench_build/.
 
 Prints every run's `failed` count, then for each end-to-end metric of
 BENCHMARK.json: every value, the median, the min, the interquartile range,
-and in how many pairs the change was better (by the metric's `better`).
+in how many pairs the change was better (by the metric's `better`), and a
+verdict line. The metric's `bound` is relative to the parent's median:
+  regressed   the change's median is worse than the parent's by more than
+              the bound;
+  unresolved  the parent's IQR is wider than the bound (relative to its
+              median), unless every change run beats every parent run;
+  ok          otherwise.
 Exits non-zero if any run failed a check or produced no result.
 """
 import argparse
@@ -46,6 +52,19 @@ def quartiles(xs):
         return xs[0], xs[0]
     q = statistics.quantiles(xs, n=4, method="inclusive")
     return q[0], q[2]
+
+
+def verdict(parent, change, bound, lower):
+    """`regressed`, `unresolved` or `ok` for one metric's runs (see above)."""
+    pm, cm = statistics.median(parent), statistics.median(change)
+    worse = (cm - pm) / pm if lower else (pm - cm) / pm
+    if worse > bound:
+        return "regressed"
+    q1, q3 = quartiles(parent)
+    beats_all = max(change) < min(parent) if lower else min(change) > max(parent)
+    if (q3 - q1) / pm > bound and not beats_all:
+        return "unresolved"
+    return "ok"
 
 
 def main():
@@ -107,6 +126,8 @@ def main():
                   f"IQR {q3 - q1:.4g} ({q1:.4g}..{q3:.4g})")
         pm, cm = statistics.median(p[s] for s in seeds), statistics.median(c[s] for s in seeds)
         print(f"  change won {wins} of {len(seeds)} pairs; median {100 * (cm - pm) / pm:+.1f}%")
+        v = verdict([p[s] for s in seeds], [c[s] for s in seeds], m["bound"], lower)
+        print(f"  verdict {name}: {v} (bound {m['bound']:.0%} of the parent's median)")
     sys.exit(1 if bad else 0)
 
 
