@@ -126,6 +126,12 @@ object SparkEntry {
   private def stagedFrame(name: String, s: SparkSession, dir: String)(df: => DataFrame): DataFrame =
     s.read.parquet(staged(name, s, dir)(d => df.write.parquet(s"$d/out")) + "/out")
 
+  /** A gate row's pass column: `hits / total >= minRatio`, vacuously true
+    * on an empty truth set (hits/0 would be NULL).
+    */
+  private def ratioGate(hits: Column, total: Column, minRatio: Double): Column =
+    when(total === 0L, lit(true)).otherwise(hits.cast("double") / total >= minRatio)
+
   /** Mean pair recall of a near-dup dedup path against the exact
     * char-5-shingle Jaccard truth set (the similarity MinHash approximates;
     * source-blocked so DuckDB can recompute it), reported as a driver-
@@ -140,9 +146,7 @@ object SparkEntry {
       .agg(count(lit(1)).as("hits"))
     nTrue.crossJoin(hits).crossJoin(truthCapFlag(s, dir))
       .select(col("n_true").as("n_true_pairs"),
-        when(col("n_true") === 0L, lit(true))
-          .otherwise(col("hits").cast("double") / col("n_true") >= minRecall)
-          .as("recall_pass"),
+        ratioGate(col("hits"), col("n_true"), minRecall).as("recall_pass"),
         col("truth_capped"))
   }
 
@@ -416,9 +420,7 @@ object SparkEntry {
       .crossJoin(hits(ivf2lAppendKnn(s, dir), "hits_app"))
       .crossJoin(hits(knnIvf2l(s, dir), "hits_fresh"))
       .select(col("n_queries"),
-        when(col("total") === 0L, lit(true))
-          .otherwise(col("hits_app").cast("double") / col("total") >= minRecall)
-          .as("recall_pass"),
+        ratioGate(col("hits_app"), col("total"), minRecall).as("recall_pass"),
         when(col("total") === 0L, lit(true))
           .otherwise(col("hits_app").cast("double") / col("total") >=
             col("hits_fresh").cast("double") / col("total") - staleMargin)
@@ -468,9 +470,7 @@ object SparkEntry {
       .agg(count(lit(1)).as("leaks"))
     stats.crossJoin(hits).crossJoin(leaks)
       .select(col("n_queries"),
-        when(col("total") === 0L, lit(true))
-          .otherwise(col("hits").cast("double") / col("total") >= minRecall)
-          .as("recall_pass"),
+        ratioGate(col("hits"), col("total"), minRecall).as("recall_pass"),
         (col("leaks") === 0L).as("no_leak"))
   }
 
@@ -498,10 +498,7 @@ object SparkEntry {
       .agg(count(lit(1)).as("hits"))
     stats.crossJoin(hits)
       .select(col("n_queries"),
-        // vacuous truth on an empty brute set (hits/0 would be NULL)
-        when(col("total") === 0L, lit(true))
-          .otherwise(col("hits").cast("double") / col("total") >= minRecall)
-          .as("recall_pass"))
+        ratioGate(col("hits"), col("total"), minRecall).as("recall_pass"))
   }
 
   /** Flagship query on sf=0.001: full parse→enrich→route aggregation over
@@ -765,9 +762,7 @@ object SparkEntry {
             .otherwise(0L)).as("same"))
         .crossJoin(truthCapFlag(s, dir))
         .select(col("n_true").as("n_true_pairs"),
-          when(col("n_true") === 0L, lit(true))
-            .otherwise(col("same").cast("double") / col("n_true") >= 0.95)
-            .as("cluster_recall_pass"),
+          ratioGate(col("same"), col("n_true"), 0.95).as("cluster_recall_pass"),
           col("truth_capped"))
     }),
     "d5_ngram_jaccard" -> ((s, dir) => d5Pairs(s, dir).orderBy("id_a", "id_b")),
@@ -801,9 +796,7 @@ object SparkEntry {
       val hits = approx.join(truth, Seq("id_a", "id_b"), "left_semi")
         .agg(count(lit(1)).as("hits"))
       nTrue.crossJoin(hits).select(col("n_true").as("n_true_pairs"),
-        when(col("n_true") === 0L, lit(true))
-          .otherwise(col("hits").cast("double") / col("n_true") >= 0.8)
-          .as("recall_pass"))
+        ratioGate(col("hits"), col("n_true"), 0.8).as("recall_pass"))
     }),
 
     // ---- similarity search ----

@@ -8,9 +8,9 @@ import graft.pipeline.Rng
 /** Deduplication operators over the `documents` table, exact → fuzzy:
   *
   *  - exact / normalized: hash-groupBy — one shuffle on the (normalized)
-  *    text, map-side partial agg; at 100 TB, group on a 128-bit hash of the
-  *    text rather than the text itself to keep shuffle rows small (here we
-  *    group on xxhash64(text) and never shuffle the body).
+  *    text's ~96-bit [[textKey]], map-side partial agg; the key keeps
+  *    shuffle rows small and the body never moves, and a lone 64-bit hash
+  *    would merge colliding texts.
   *  - MinHash + LSH: exact-dedup FIRST (identical texts collapse to one
   *    representative — map-side combine shrinks dup-heavy inputs before the
   *    shuffle), then shingle → minhash signature → banded bucket join on the
@@ -34,22 +34,21 @@ import graft.pipeline.Rng
 object Dedup {
 
   /** Exact duplicate groups: smallest doc_id survives. Shuffles only
-    * (hash, doc_id) — the text body never moves.
+    * (key, doc_id) — the text body never moves.
     */
-  def exact(documents: DataFrame): DataFrame =
-    documents
-      .select(col("doc_id"), xxhash64(col("text")).as("h"))
-      .groupBy("h")
-      .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_dups"))
-      .filter(col("n_dups") > 1)
-      .select("keep_id", "n_dups")
+  def exact(documents: DataFrame): DataFrame = duplicateGroups(documents, col("text"))
 
   /** Normalized dedup: lowercase + whitespace-collapse before grouping. */
   def normalized(documents: DataFrame): DataFrame =
+    duplicateGroups(documents, lower(regexp_replace(trim(col("text")), "\\s+", " ")))
+
+  /** Groups of more than one document sharing `text`'s [[textKey]]:
+    * (keep_id = smallest doc_id, n_dups).
+    */
+  private def duplicateGroups(documents: DataFrame, text: Column): DataFrame =
     documents
-      .select(col("doc_id"),
-        xxhash64(lower(regexp_replace(trim(col("text")), "\\s+", " "))).as("h"))
-      .groupBy("h")
+      .select(col("doc_id"), textKey(text).as("tk"))
+      .groupBy("tk")
       .agg(min("doc_id").as("keep_id"), count(lit(1)).as("n_dups"))
       .filter(col("n_dups") > 1)
       .select("keep_id", "n_dups")
@@ -116,45 +115,52 @@ object Dedup {
     if (union == 0) 1.0 else inter.toDouble / union
   }
 
-  /** Write a staged intermediate and return the read-back frame. Refuses a
-    * non-empty directory: staging used to overwrite silently, which meant
-    * reusing one path across calls invalidated the lazy frame an EARLIER
-    * call returned over the same files — wrong results with no error. A
-    * caller who wants to reuse a path must delete it first
-    * ([[graft.pipeline.Staging.deleteRecursively]]).
+  /** `df` written to `stagingDir/name` and read back, or `df` itself when
+    * staging is off. Refuses a non-empty directory: staging used to
+    * overwrite silently, which meant reusing one path across calls
+    * invalidated the lazy frame an EARLIER call returned over the same
+    * files — wrong results with no error. A caller who wants to reuse a
+    * path must delete it first ([[graft.pipeline.Staging.deleteRecursively]]).
     */
-  private def stageParquet(df: DataFrame, dir: String): DataFrame = {
-    val spark = df.sparkSession
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!fs.exists(p) || fs.listStatus(p).isEmpty,
-      s"staging dir $dir is non-empty: a frame returned by an earlier call may still read it, " +
-        "and overwriting would silently corrupt that frame's results. Pass a fresh dir per " +
-        "call (Staging.tempDir) or delete it first (Staging.deleteRecursively).")
-    // overwrite is safe here — emptiness was just checked; it only tolerates
-    // the pre-created empty dir Staging.tempDir hands out
-    df.write.mode("overwrite").parquet(dir)
-    spark.read.parquet(dir)
-  }
+  private def stagedOr(df: DataFrame, stagingDir: Option[String], name: String): DataFrame =
+    stagingDir.fold(df) { root =>
+      val dir = s"$root/$name"
+      val p = new org.apache.hadoop.fs.Path(dir)
+      val fs = p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+      require(!fs.exists(p) || fs.listStatus(p).isEmpty,
+        s"staging dir $dir is non-empty: a frame returned by an earlier call may still read it, " +
+          "and overwriting would silently corrupt that frame's results. Pass a fresh dir per " +
+          "call (Staging.tempDir) or delete it first (Staging.deleteRecursively).")
+      // overwrite is safe here — emptiness was just checked; it only tolerates
+      // the pre-created empty dir Staging.tempDir hands out
+      df.write.mode("overwrite").parquet(dir)
+      df.sparkSession.read.parquet(dir)
+    }
 
   /** Exact-text group key: 64-bit xxhash + crc32 + length ≈ 96 bits — a
     * collision would silently merge two different texts into one exact
     * group, so one hash is not enough at web scale.
     */
-  private def textKey: Column =
-    struct(xxhash64(col("text")).as("xx"),
-      crc32(col("text").cast("binary")).as("crc"),
-      length(col("text")).as("len"))
+  private def textKey(text: Column): Column =
+    struct(xxhash64(text).as("xx"), crc32(text.cast("binary")).as("crc"), length(text).as("len"))
 
-  /** Cap a (band, bucket) to its `maxBucket` lowest doc_ids. The window sort
-    * is O(n log n) per bucket — bounded work even on a degenerate bucket —
-    * and everything downstream is bounded by maxBucket² per bucket.
+  /** Candidate pairs `(band, bucket, id_a, id_b, <c>_a, <c>_b …)` within a
+    * (band, bucket) of `banded` (band, bucket, doc_id, carry…), with
+    * id_a < id_b. Each bucket is first capped to its `maxBucket` lowest
+    * doc_ids: the window sort is O(n log n) per bucket — bounded work even
+    * on a degenerate bucket — and the self-join is bounded by maxBucket²
+    * per bucket. Both join sides reference the capped rows, so staging
+    * writes them once (`banded`) instead of running the banding twice.
     */
-  private def capBuckets(banded: DataFrame, maxBucket: Int): DataFrame = {
+  private def bucketPairs(banded: DataFrame, maxBucket: Int, stagingDir: Option[String],
+                          carry: String*): DataFrame = {
     val w = Window.partitionBy("band", "bucket").orderBy("doc_id")
-    banded.withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") <= maxBucket)
-      .drop("_rn")
+    val capped = stagedOr(
+      banded.withColumn("_rn", row_number().over(w)).filter(col("_rn") <= maxBucket).drop("_rn"),
+      stagingDir, "banded")
+    def side(s: String): DataFrame = capped.select(Seq(col("band"), col("bucket"),
+      col("doc_id").as(s"id_$s")) ++ carry.map(c => col(c).as(s"${c}_$s")): _*)
+    side("a").join(side("b"), Seq("band", "bucket")).filter(col("id_a") < col("id_b"))
   }
 
   /** Expand representative-level near-dup pairs and exact groups back to
@@ -237,23 +243,20 @@ object Dedup {
 
     // exact-text collapse: representatives carry the body onward; the
     // groupBy's partial aggregation collapses duplicate texts map-side
-    val collapsed = documents.select(col("doc_id"), col("text"), textKey.as("tk"))
+    val collapsed = documents.select(col("doc_id"), col("text"), textKey(col("text")).as("tk"))
       .groupBy("tk")
       .agg(min("doc_id").as("rep_id"), count(lit(1)).as("grp_n"), first("text").as("text"))
-    val groups = stagingDir match {
-      // WIDE staged write: AQE's partition coalescing shrinks the small
-      // post-groupBy collapse to 1–2 files, and the signature/banding pass
-      // (128 mixed hashes per shingle per representative — the CPU-heaviest
-      // map in this operator) then reads 1–2 partitions and runs on as many
-      // cores. An explicit numbered repartition is exempt from AQE
-      // coalescing, so the staged table keeps defaultParallelism files and
-      // the banding pass runs full-width. Row set unchanged.
-      case Some(dir) => stageParquet(
-        collapsed.repartition(documents.sparkSession.sparkContext.defaultParallelism),
-        s"$dir/collapse")
-      case None => collapsed
-    }
-    val members = documents.select(col("doc_id"), textKey.as("tk"))
+    // WIDE staged write: AQE's partition coalescing shrinks the small
+    // post-groupBy collapse to 1–2 files, and the signature/banding pass
+    // (128 mixed hashes per shingle per representative — the CPU-heaviest
+    // map in this operator) then reads 1–2 partitions and runs on as many
+    // cores. An explicit numbered repartition is exempt from AQE
+    // coalescing, so the staged table keeps defaultParallelism files and
+    // the banding pass runs full-width. Row set unchanged.
+    val groups = stagedOr(
+      if (stagingDir.isEmpty) collapsed else collapsed.repartition(spark.sparkContext.defaultParallelism),
+      stagingDir, "collapse")
+    val members = documents.select(col("doc_id"), textKey(col("text")).as("tk"))
       .join(groups.select("tk", "rep_id", "grp_n"), "tk")
       .select("doc_id", "rep_id", "grp_n")
     val uniq = groups.select(col("rep_id").as("doc_id"), col("text"))
@@ -269,22 +272,10 @@ object Dedup {
       }
     }.toDF("band", "bucket", "doc_id")
 
-    // candidate pairs: capped self-join within (band, bucket), ordered ids.
-    // BOTH self-join sides reference the capped-banding subtree, so the
-    // lazy plan executes the signature pass (the operator's dominant
-    // kernel) TWICE; when staging is live the slim capped (band, bucket,
-    // id) rows are written once and both sides read the parquet — one
-    // signature pass per build, a few MB written.
-    val cappedPlan = capBuckets(banded, maxBucket)
-    val capped = stagingDir match {
-      case Some(dir) => stageParquet(cappedPlan, s"$dir/banded")
-      case None => cappedPlan
-    }
-    val x = capped.select(col("band"), col("bucket"), col("doc_id").as("rep_a"))
-    val y = capped.select(col("band"), col("bucket"), col("doc_id").as("rep_b"))
-    val candidates = x.join(y, Seq("band", "bucket"))
-      .filter(col("rep_a") < col("rep_b"))
-      .select("rep_a", "rep_b")
+    // candidate pairs; lazily, both self-join sides re-run the signature
+    // pass (the operator's dominant kernel), staged it runs once
+    val candidates = bucketPairs(banded, maxBucket, stagingDir)
+      .select(col("id_a").as("rep_a"), col("id_b").as("rep_b"))
       .distinct()
 
     // exact verification on the candidate pairs only (shingles recomputed
@@ -354,10 +345,7 @@ object Dedup {
     require(maxHamming <= 3, "4×16-bit banding guarantees recall only for hamming ≤ 3")
     val sigsPlan = documents.select(col("doc_id"),
       graft.functions.functions.simhash64(col("text")).as("sig"))
-    val sigs = stagingDir match {
-      case Some(dir) => stageParquet(sigsPlan, s"$dir/sigs")
-      case None => sigsPlan
-    }
+    val sigs = stagedOr(sigsPlan, stagingDir, "sigs")
 
     // signature-identical collapse (identical texts have identical sigs)
     val groups = sigs.groupBy("sig")
@@ -374,21 +362,10 @@ object Dedup {
       .select(col("bb.band").as("band"), col("bb.bucket").as("bucket"),
         col("doc_id"), col("sig"))
 
-    // both self-join sides reference the capped banding — staged once when
-    // staging is live, like minhashPairs (the window + banding explode
-    // otherwise execute twice)
-    val cappedPlan = capBuckets(banded, maxBucket)
-    val capped = stagingDir match {
-      case Some(dir) => stageParquet(cappedPlan, s"$dir/banded")
-      case None => cappedPlan
-    }
-    val x = capped.select(col("band"), col("bucket"), col("doc_id").as("rep_a"), col("sig").as("sig_a"))
-    val y = capped.select(col("band"), col("bucket"), col("doc_id").as("rep_b"), col("sig").as("sig_b"))
-    val repPairs = x.join(y, Seq("band", "bucket"))
-      .filter(col("rep_a") < col("rep_b"))
+    val repPairs = bucketPairs(banded, maxBucket, stagingDir, "sig")
       .withColumn("hamming", expr("bit_count(sig_a ^ sig_b)"))
       .filter(col("hamming") <= maxHamming)
-      .select("rep_a", "rep_b", "hamming")
+      .select(col("id_a").as("rep_a"), col("id_b").as("rep_b"), col("hamming"))
       .distinct()
 
     expandPairs(members, repPairs, "hamming", lit(0), maxGroupExpand)
@@ -401,6 +378,9 @@ object Dedup {
     * follows the standard multi-table LSH S-curve (1-(1-p^b)^L); the exact
     * twin below is the oracle.
     *
+    * The buckets are [[Similarity.lshIndex]]'s, so the planes are the ANN
+    * index's; its table id (the bucket's high 32 bits) is the band.
+    *
     * Payload shape (the 100 TB bytes-moved budget): banding, the bucket cap
     * window, and the within-bucket self-join all run on SLIM (band, bucket,
     * doc_id) rows — round 3 shipped the full embedding through all of them
@@ -411,34 +391,11 @@ object Dedup {
   def embeddingNearDupPairs(embeddings: DataFrame, threshold: Double = 0.3,
                             nBits: Int = 4, nTables: Int = 8,
                             maxBucket: Int = 4096): DataFrame = {
-    val spark = embeddings.sparkSession
-    import spark.implicits._
-    val nonNull = embeddings.filter(col("embedding").isNotNull)
-    val dimRow = nonNull.select(size(col("embedding"))).head(1)
-    if (dimRow.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType.fromDDL("id_a BIGINT, id_b BIGINT, cos DOUBLE"))
-    val dim = dimRow(0).getInt(0)
-    val planes = spark.sparkContext.broadcast(
-      Array.tabulate(nTables)(t => Similarity.hyperplanes(nBits, dim, seed = 7L + t * 1000L)))
+    val banded = Similarity.lshIndex(embeddings, nBits, nTables)
+      .select(shiftrightunsigned(col("bucket"), 32).as("band"), col("bucket"), col("id").as("doc_id"))
+    val candidates = bucketPairs(banded, maxBucket, None).select("id_a", "id_b").distinct()
 
-    val banded = nonNull
-      .select(col("vec_id").as("doc_id"), col("embedding").as("emb"))
-      .as[(Long, Array[Float])]
-      .flatMap { case (id, emb) =>
-        planes.value.iterator.zipWithIndex.map { case (p, t) =>
-          (t, t.toLong << 32 | Similarity.signBucket(emb, p).toLong, id)
-        }
-      }.toDF("band", "bucket", "doc_id")
-
-    val capped = capBuckets(banded, maxBucket)
-    val x = capped.select(col("band"), col("bucket"), col("doc_id").as("id_a"))
-    val y = capped.select(col("band"), col("bucket"), col("doc_id").as("id_b"))
-    val candidates = x.join(y, Seq("band", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-
-    val vecs = nonNull.select(col("vec_id"), col("embedding"))
+    val vecs = embeddings.filter(col("embedding").isNotNull).select(col("vec_id"), col("embedding"))
     candidates
       .join(vecs.select(col("vec_id").as("id_a"), col("embedding").as("emb_a")), "id_a")
       .join(vecs.select(col("vec_id").as("id_b"), col("embedding").as("emb_b")), "id_b")
@@ -560,29 +517,31 @@ object Dedup {
           .filter(col("_rn") <= maxBlock)
           .drop("_rn")
       }
-    // Pair scoring is pure Column algebra (whole-stage codegen end to end):
-    // the former per-pair typed `.map` deserialized BOTH shingle arrays out
-    // of Tungsten for every one of the O(n²)-within-block pairs — the
-    // dominant cost of this truth job. Now a size-ratio prefilter (two int
-    // reads per pair — no array access) drops pairs that provably cannot
-    // reach `threshold`, and survivors are scored in place by the
-    // jaccard_sorted sorted-merge kernel. Identical output: the prefilter
-    // bound is sound (see sizeBoundReaches) and the kernel is exactJaccard.
-    val sh = fanOut(capped).as[(Long, String, String)]
+    blockedJaccard(fanOut(capped).as[(Long, String, String)]
       .map { case (id, src, t) => (id, src, shingleHashes(t, k)) }
-      .toDF("doc_id", "source", "sh")
-      .withColumn("n", size(col("sh")))
-    val a = sh.select(col("source").as("src_a"), col("doc_id").as("id_a"), col("sh").as("sh_a"), col("n").as("n_a"))
-    val b = sh.select(col("source").as("src_b"), col("doc_id").as("id_b"), col("sh").as("sh_b"), col("n").as("n_b"))
-    // the scoring predicates live IN the join condition, in this explicit
-    // order: cheap ordered-pair cut, then the two-int size bound, then the
-    // sorted-merge only for pairs that survive both. (Applied as separate
-    // .filter()s, Catalyst merged them into the join condition with
-    // jaccard_sorted FIRST — the merge then ran for both (a,b) and (b,a)
-    // orderings of every pair; conjuncts keep their written order, so this
-    // shape guarantees the expensive kernel evaluates last.)
-    val jac = graft.functions.functions.jaccard_sorted(col("sh_a"), col("sh_b"))
-    a.join(b, col("src_a") === col("src_b") && col("id_a") < col("id_b") &&
+      .toDF("doc_id", "source", "set"), threshold)
+  }
+
+  /** Exact Jaccard >= `threshold` pairs (id_a, id_b, jaccard) of sorted
+    * distinct `set`s within a `source` block of (doc_id, source, set).
+    * The scoring predicates live IN the join condition, in this explicit
+    * order: same block, cheap ordered-pair cut, then the two-int size bound
+    * (sound — see [[sizeBoundReaches]]), then the sorted-merge only for
+    * pairs that survive all three. (Applied as separate .filter()s,
+    * Catalyst merged them into the join condition with jaccard_sorted
+    * FIRST — the merge then ran for both (a,b) and (b,a) orderings of every
+    * pair; conjuncts keep their written order, so this shape guarantees the
+    * expensive kernel evaluates last.) Scoring is pure Column algebra, so
+    * whole-stage codegen runs it end to end: a per-pair typed `.map` would
+    * deserialize both arrays out of Tungsten for every O(n²)-within-block
+    * pair.
+    */
+  private def blockedJaccard(sets: DataFrame, threshold: Double): DataFrame = {
+    val sized = sets.withColumn("n", size(col("set")))
+    def side(s: String): DataFrame = sized.select(col("source").as(s"src_$s"),
+      col("doc_id").as(s"id_$s"), col("set").as(s"set_$s"), col("n").as(s"n_$s"))
+    val jac = graft.functions.functions.jaccard_sorted(col("set_a"), col("set_b"))
+    side("a").join(side("b"), col("src_a") === col("src_b") && col("id_a") < col("id_b") &&
         sizeBoundReaches(col("n_a"), col("n_b"), threshold) && jac >= threshold)
       .select(col("id_a"), col("id_b"), round(jac, 4).as("jaccard"))
   }
@@ -594,7 +553,7 @@ object Dedup {
   def ngramJaccardPairs(documents: DataFrame, n: Int = 3, threshold: Double = 0.5): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
-    val grams = fanOut(documents.select("doc_id", "source", "text")).as[(Long, String, String)]
+    blockedJaccard(fanOut(documents.select("doc_id", "source", "text")).as[(Long, String, String)]
       .map { case (id, src, text) =>
         val words = text.toLowerCase.split("\\s+").filter(_.nonEmpty)
         val gs: Array[Long] =
@@ -602,18 +561,6 @@ object Dedup {
           else words.sliding(n).map(g => graft.functions.SimHash64.wordHash(g.mkString(" "))).toArray
         java.util.Arrays.sort(gs)
         (id, src, gs.distinct)
-      }.toDF("doc_id", "source", "grams")
-
-    // same codegen pair-scoring shape as shingleJaccardPairs: ordered-pair
-    // cut, then the size-ratio prefilter (sound — see sizeBoundReaches),
-    // then the in-place sorted-merge kernel — all in the join condition in
-    // that explicit order, instead of a per-pair encoder round trip
-    val sized = grams.withColumn("n", size(col("grams")))
-    val a = sized.select(col("source").as("src_a"), col("doc_id").as("id_a"), col("grams").as("g_a"), col("n").as("n_a"))
-    val b = sized.select(col("source").as("src_b"), col("doc_id").as("id_b"), col("grams").as("g_b"), col("n").as("n_b"))
-    val jac = graft.functions.functions.jaccard_sorted(col("g_a"), col("g_b"))
-    a.join(b, col("src_a") === col("src_b") && col("id_a") < col("id_b") &&
-        sizeBoundReaches(col("n_a"), col("n_b"), threshold) && jac >= threshold)
-      .select(col("id_a"), col("id_b"), round(jac, 4).as("jaccard"))
+      }.toDF("doc_id", "source", "set"), threshold)
   }
 }

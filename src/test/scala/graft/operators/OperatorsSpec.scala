@@ -47,6 +47,24 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(want.nonEmpty)
   }
 
+  test("normalized dedup matches a driver-side normalize-then-group oracle") {
+    // case and whitespace variants that only normalization merges
+    val variants = docsDup.unionByName(
+      docs.filter(col("doc_id") % 11 === 0).withColumn("doc_id", col("doc_id") + 300000L)
+        .withColumn("text", concat(lit("  "), regexp_replace(upper(col("text")), " ", " \t "))))
+    val got = Dedup.normalized(variants).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // Spark's trim strips spaces only; \s+ collapses every whitespace run
+    def norm(t: String): String =
+      t.replaceAll("^ +| +$", "").replaceAll("\\s+", " ").toLowerCase(java.util.Locale.ROOT)
+    val want = variants.select("doc_id", "text").collect()
+      .map(r => (r.getLong(0), norm(r.getString(1))))
+      .groupBy(_._2).values.filter(_.length > 1)
+      .map(g => (g.map(_._1).min, g.length.toLong)).toSet
+    assert(got == want)
+    val exact = Dedup.exact(variants).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(want.nonEmpty && want != exact, "the variants must form groups exact dedup does not")
+  }
+
   test("minhash LSH pairs equal brute-force Jaccard >= threshold (no false positives, high recall)") {
     val got = Dedup.minhashPairs(docsDup, threshold = 0.8).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -943,6 +961,28 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lsh1.subsetOf(truth), s"false positives: ${lsh1.diff(truth).take(5)}")
     val recall = lsh1.size.toDouble / truth.size
     assert(recall >= 0.8, s"recall $recall (${lsh1.size} of ${truth.size})")
+  }
+
+  test("embedding near-dup: LSH pairs equal a driver-side capped-bucket recompute") {
+    val (nBits, nTables, maxBucket, threshold) = (4, 8, 8, 0.3)
+    val vecs = emb.filter(col("embedding").isNotNull).select("vec_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
+    val planes = Similarity.tablePlanes(nBits, nTables, vecs.head._2.length)
+    val buckets = vecs.toSeq.flatMap { case (id, v) =>
+      planes.indices.map(t => (t, Similarity.signBucket(v, planes(t))) -> id)
+    }.groupBy(_._1).values.map(_.map(_._2).sorted)
+    assert(buckets.exists(_.length > maxBucket), "the cap must bite on this corpus")
+    // round(cos, 4) as Spark rounds a double: HALF_UP on its decimal string
+    val want = buckets.toSeq.flatMap(_.take(maxBucket).combinations(2).map(p => (p(0), p(1)))).distinct
+      .map { case (a, b) => (a, b, Similarity.cos(vecs(a), vecs(b))) }
+      .collect { case (a, b, c) if c >= threshold =>
+        (a, b, BigDecimal(c).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble) }.toSet
+    val got = Dedup.embeddingNearDupPairs(emb, threshold = threshold, nBits = nBits,
+      nTables = nTables, maxBucket = maxBucket).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(got.length == got.toSet.size, "pairs must be distinct")
+    assert(got.toSet == want)
+    assert(want.nonEmpty)
   }
 
   test("fingerprint runs as a native expression (no encoder round trip in the plan)") {
