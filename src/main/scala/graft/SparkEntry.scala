@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 import graft.datagen.SyntheticTranscripts
 import graft.lexer.PatternBank
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
@@ -126,11 +127,51 @@ object SparkEntry {
   private def stagedFrame(name: String, s: SparkSession, dir: String)(df: => DataFrame): DataFrame =
     s.read.parquet(staged(name, s, dir)(d => df.write.parquet(s"$d/out")) + "/out")
 
+  /** A trained model staged as an artifact, one row written by [[writeModel]]. */
+  private def stagedModel[T <: Product : TypeTag](name: String, s: SparkSession, dir: String)
+                                                (build: => T): T =
+    readModel[T](s, staged(name, s, dir)(d => writeModel(s, build, s"$d/out")) + "/out")
+
+  /** The model [[writeModel]] wrote at `path`. */
+  private def readModel[T <: Product : TypeTag](s: SparkSession, path: String): T = {
+    import s.implicits._
+    s.read.parquet(path).as[T].head()
+  }
+
+  /** `m` as one parquet row through Spark's product encoder. */
+  private def writeModel[T <: Product : TypeTag](s: SparkSession, m: T, path: String): Unit = {
+    import s.implicits._
+    Seq(m).toDF().write.parquet(path)
+  }
+
   /** A gate row's pass column: `hits / total >= minRatio`, vacuously true
     * on an empty truth set (hits/0 would be NULL).
     */
   private def ratioGate(hits: Column, total: Column, minRatio: Double): Column =
     when(total === 0L, lit(true)).otherwise(hits.cast("double") / total >= minRatio)
+
+  /** `round(c, n)` as the DuckDB oracle rounds a double: scale by 10^n,
+    * round half away from zero, scale back. Spark's own `round(c, n)` rounds
+    * the double's decimal expansion instead, so a value such as
+    * 52724.244999999995 (whose ×100 is exactly 5272424.5 in double
+    * arithmetic) comes out 52724.24 there and 52724.25 in the oracle.
+    */
+  private[graft] def oracleRound(c: Column, n: Int): Column = {
+    val p = math.pow(10, n)
+    round(c * p, 0) / p
+  }
+
+  /** One row, one column `as`: how many of `approx`'s `keys` tuples `truth` holds. */
+  private def hits(approx: DataFrame, truth: DataFrame, keys: Seq[String],
+                   as: String = "hits"): DataFrame =
+    approx.select(keys.map(col): _*).join(truth, keys, "left_semi").agg(count(lit(1)).as(as))
+
+  private val KnnKeys = Seq("query_id", "neighbor_id")
+  private val PairKeys = Seq("id_a", "id_b")
+
+  /** One row (n_queries, total) over a top-k truth set. */
+  private def knnTruthStats(truth: DataFrame): DataFrame =
+    truth.agg(countDistinct("query_id").as("n_queries"), count(lit(1)).as("total"))
 
   /** Mean pair recall of a near-dup dedup path against the exact
     * char-5-shingle Jaccard truth set (the similarity MinHash approximates;
@@ -142,9 +183,7 @@ object SparkEntry {
                           minRecall: Double): DataFrame = {
     val truth = truthPairs(s, dir)
     val nTrue = truth.agg(count(lit(1)).as("n_true"))
-    val hits = approx.select("id_a", "id_b").join(truth, Seq("id_a", "id_b"), "left_semi")
-      .agg(count(lit(1)).as("hits"))
-    nTrue.crossJoin(hits).crossJoin(truthCapFlag(s, dir))
+    nTrue.crossJoin(hits(approx, truth, PairKeys)).crossJoin(truthCapFlag(s, dir))
       .select(col("n_true").as("n_true_pairs"),
         ratioGate(col("hits"), col("n_true"), minRecall).as("recall_pass"),
         col("truth_capped"))
@@ -253,21 +292,22 @@ object SparkEntry {
     * (driver Lloyd, 16 cells) behind s3/s5/s6/s7, `ivfdist-model`
     * (executor-side Lloyd) behind s8, `ivf2l-model` (16 cells under 4
     * supers) behind s9–s13 (s11's appended index keeps its own base-trained
-    * model). Verify's s3/s6/s12 replays score with the SAME
-    * model: it is a dataset artifact, and the replays pin the distributed
-    * index build, probe and re-rank around it.
+    * model). Each is staged as one encoder row ([[stagedModel]]). Verify's
+    * s3/s6/s12 replays score with the SAME model: it is a dataset artifact,
+    * and the replays pin the distributed index build, probe and re-rank
+    * around it.
     */
   private[graft] def ivfModel(s: SparkSession, dir: String): Array[Array[Float]] =
-    Similarity.centroidsFromDf(stagedFrame("ivf-model", s, dir)(
-      Similarity.centroidsToDf(s, Similarity.ivfTrain(emb(s, dir), nCells = 16))))
+    stagedModel("ivf-model", s, dir)(
+      Similarity.Flat(Similarity.ivfTrain(emb(s, dir), nCells = 16))).centroids
 
   private def ivfDistModel(s: SparkSession, dir: String): Array[Array[Float]] =
-    Similarity.centroidsFromDf(stagedFrame("ivfdist-model", s, dir)(
-      Similarity.centroidsToDf(s, Similarity.ivfTrainDistributed(emb(s, dir), nCells = 16))))
+    stagedModel("ivfdist-model", s, dir)(
+      Similarity.Flat(Similarity.ivfTrainDistributed(emb(s, dir), nCells = 16))).centroids
 
   private[graft] def ivfTwoLevelModel(s: SparkSession, dir: String): Similarity.IvfTwoLevel =
-    Similarity.twoLevelFromDf(stagedFrame("ivf2l-model", s, dir)(
-      Similarity.twoLevelToDf(s, Similarity.ivfTrainTwoLevel(emb(s, dir), nCells = 16, nSuper = 4))))
+    stagedModel("ivf2l-model", s, dir)(
+      Similarity.ivfTrainTwoLevel(emb(s, dir), nCells = 16, nSuper = 4))
 
   /** The single staged copy of the bucketed vector table — the exact
     * re-rank side every ANN method shares.
@@ -317,14 +357,14 @@ object SparkEntry {
       val pq = Similarity.pqTrain(emb(s, dir), q, nSub = 16, k = 16)
       Similarity.ivfPqIndex(emb(s, dir), q, pq)
         .write.partitionBy(Similarity.IndexPart).parquet(s"$d/ivfpq")
-      Similarity.pqModelToDf(s, pq).write.parquet(s"$d/pqmodel")
+      writeModel(s, pq, s"$d/pqmodel")
     }
 
   /** Coarse + PQ models of the staged IVF-PQ index s6/s7 query. */
   private[graft] def ivfPqModel(s: SparkSession, dir: String)
       : (Array[Array[Float]], Similarity.PqModel) = {
     val d = ivfPqDir(s, dir)
-    (ivfModel(s, dir), Similarity.pqModelFromDf(s.read.parquet(s"$d/pqmodel")))
+    (ivfModel(s, dir), readModel[Similarity.PqModel](s, s"$d/pqmodel"))
   }
 
   /** The s6/s7 top-k set: compressed codes scanned, raw vectors touched
@@ -388,12 +428,12 @@ object SparkEntry {
       val base = emb(s, dir).filter(col("vec_id") % 10 =!= 0)
       val m = Similarity.ivfTrainTwoLevel(base, nCells = 16, nSuper = 4)
       Similarity.ivfIndex(base, m).write.partitionBy(Similarity.IndexPart).parquet(s"$d/ivf")
-      Similarity.twoLevelToDf(s, m).write.parquet(s"$d/model")
-      val mFrozen = Similarity.twoLevelFromDf(s.read.parquet(s"$d/model"))
+      writeModel(s, m, s"$d/model")
+      val mFrozen = readModel[Similarity.IvfTwoLevel](s, s"$d/model")
       Similarity.ivfIndex(emb(s, dir).filter(col("vec_id") % 10 === 0), mFrozen)
         .write.mode("append").partitionBy(Similarity.IndexPart).parquet(s"$d/ivf")
     }
-    probeTwoLevel(s, dir, d, Similarity.twoLevelFromDf(s.read.parquet(s"$d/model")), None)
+    probeTwoLevel(s, dir, d, readModel[Similarity.IvfTwoLevel](s, s"$d/model"), None)
   }
 
   /** s11 gate row: (n_queries, recall_pass, staleness_pass). recall_pass =
@@ -411,14 +451,9 @@ object SparkEntry {
     // gates use (s9's top-k set IS the fresh two-level index's answer);
     // only the appended-index probe runs here
     val brute = bruteTruth(s, dir)
-    val stats = brute.agg(countDistinct("query_id").as("n_queries"), count(lit(1)).as("total"))
-    def hits(df: DataFrame, as: String): DataFrame =
-      df.select("query_id", "neighbor_id")
-        .join(brute, Seq("query_id", "neighbor_id"), "left_semi")
-        .agg(count(lit(1)).as(as))
-    stats
-      .crossJoin(hits(ivf2lAppendKnn(s, dir), "hits_app"))
-      .crossJoin(hits(knnIvf2l(s, dir), "hits_fresh"))
+    knnTruthStats(brute)
+      .crossJoin(hits(ivf2lAppendKnn(s, dir), brute, KnnKeys, "hits_app"))
+      .crossJoin(hits(knnIvf2l(s, dir), brute, KnnKeys, "hits_fresh"))
       .select(col("n_queries"),
         ratioGate(col("hits_app"), col("total"), minRecall).as("recall_pass"),
         when(col("total") === 0L, lit(true))
@@ -437,11 +472,11 @@ object SparkEntry {
       val m = ivfTwoLevelModel(s, dir)
       val pq = Similarity.pqTrain(emb(s, dir), m, nSub = 16, k = 16)
       Similarity.ivfPqIndex(emb(s, dir), m, pq).write.partitionBy(Similarity.IndexPart).parquet(s"$d/ivfpq")
-      Similarity.pqModelToDf(s, pq).write.parquet(s"$d/pqmodel")
+      writeModel(s, pq, s"$d/pqmodel")
     }
     Similarity.ivfPqKnnIndexed(
       s.read.parquet(s"$d/ivfpq"), ivfTwoLevelModel(s, dir),
-      Similarity.pqModelFromDf(s.read.parquet(s"$d/pqmodel")), stagedVectors(s, dir),
+      readModel[Similarity.PqModel](s, s"$d/pqmodel"), stagedVectors(s, dir),
       q10(s, dir), allowed, k = 5, nProbe = 6, nProbeSuper = 3, rerank = 40)
   }
 
@@ -463,12 +498,9 @@ object SparkEntry {
     val approx = ivfPq2lKnn(s, dir, Some(allowed)).select("query_id", "neighbor_id")
     val brute = Similarity.bruteForceKnn(emb(s, dir).filter(col("label") < 5), q10(s, dir), k = 5)
       .select("query_id", "neighbor_id")
-    val stats = brute.agg(countDistinct("query_id").as("n_queries"), count(lit(1)).as("total"))
-    val hits = approx.join(brute, Seq("query_id", "neighbor_id"), "left_semi")
-      .agg(count(lit(1)).as("hits"))
     val leaks = approx.join(allowed, col("neighbor_id") === col("id"), "left_anti")
       .agg(count(lit(1)).as("leaks"))
-    stats.crossJoin(hits).crossJoin(leaks)
+    knnTruthStats(brute).crossJoin(hits(approx, brute, KnnKeys)).crossJoin(leaks)
       .select(col("n_queries"),
         ratioGate(col("hits"), col("total"), minRecall).as("recall_pass"),
         (col("leaks") === 0L).as("no_leak"))
@@ -492,11 +524,7 @@ object SparkEntry {
   private def annRecall(s: SparkSession, dir: String, approx: DataFrame,
                         minRecall: Double): DataFrame = {
     val brute = bruteTruth(s, dir)
-    val stats = brute.agg(countDistinct("query_id").as("n_queries"), count(lit(1)).as("total"))
-    val hits = approx.select("query_id", "neighbor_id")
-      .join(brute, Seq("query_id", "neighbor_id"), "left_semi")
-      .agg(count(lit(1)).as("hits"))
-    stats.crossJoin(hits)
+    knnTruthStats(brute).crossJoin(hits(approx, brute, KnnKeys))
       .select(col("n_queries"),
         ratioGate(col("hits"), col("total"), minRecall).as("recall_pass"))
   }
@@ -515,8 +543,8 @@ object SparkEntry {
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
           sum("l_quantity").cast("bigint").as("sum_qty"),
-          round(sum("l_extendedprice"), 2).as("sum_base"),
-          round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc"),
+          oracleRound(sum("l_extendedprice"), 2).as("sum_base"),
+          oracleRound(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("sum_disc"),
           count(lit(1)).as("n_rows"))
         .orderBy("l_returnflag", "l_linestatus")
     }),
@@ -530,7 +558,7 @@ object SparkEntry {
       tbl(s, dir, "orders")
         .join(tbl(s, dir, "customer"), col("o_custkey") === col("c_custkey"))
         .groupBy("c_mktsegment")
-        .agg(count(lit(1)).as("n_orders"), round(sum("o_totalprice"), 2).as("revenue"))
+        .agg(count(lit(1)).as("n_orders"), oracleRound(sum("o_totalprice"), 2).as("revenue"))
         .orderBy("c_mktsegment")
     }),
     "q4_multijoin" -> ((s, dir) => {
@@ -550,7 +578,7 @@ object SparkEntry {
         .select(
           col("o_custkey"), col("o_orderkey"),
           row_number().over(w).as("rn"),
-          round(sum("o_totalprice").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)), 2)
+          oracleRound(sum("o_totalprice").over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)), 2)
             .as("running_spend"))
         .orderBy("o_custkey", "rn")
     }),
@@ -559,7 +587,7 @@ object SparkEntry {
         .filter(col("l_shipdate") >= lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")) &&
                 col("l_shipdate") < lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00")) &&
                 col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
-        .agg(round(sum(col("l_extendedprice") * col("l_discount")), 2).as("revenue"),
+        .agg(oracleRound(sum(col("l_extendedprice") * col("l_discount")), 2).as("revenue"),
              count(lit(1)).as("n_rows"))
     }),
     "q7_semi" -> ((s, dir) => {
@@ -623,7 +651,7 @@ object SparkEntry {
     "q10_events_hourly" -> ((s, dir) => {
       tbl(s, dir, "events")
         .groupBy(col("event_type"), date_trunc("hour", col("ts")).as("hour"))
-        .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
+        .agg(count(lit(1)).as("n"), oracleRound(sum("value"), 4).as("sum_value"))
         .orderBy("event_type", "hour")
     }),
     "q11_sessionize" -> ((s, dir) => {
@@ -662,8 +690,8 @@ object SparkEntry {
       tbl(s, dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(
-          round(expr("percentile(l_extendedprice, 0.5)"), 2).as("p50"),
-          round(expr("percentile(l_extendedprice, 0.95)"), 2).as("p95"),
+          oracleRound(expr("percentile(l_extendedprice, 0.5)"), 2).as("p50"),
+          oracleRound(expr("percentile(l_extendedprice, 0.95)"), 2).as("p95"),
           count(lit(1)).as("n_rows"))
         .orderBy("l_returnflag")
     }),
@@ -681,8 +709,8 @@ object SparkEntry {
           expr("approx_percentile(l_extendedprice, array(0.5, 0.95), 10000)").as("ap"),
           count(lit(1)).as("n_rows"))
         .select(col("l_returnflag"),
-          round(col("ex")(0), 2).as("p50_exact"),
-          round(col("ex")(1), 2).as("p95_exact"),
+          oracleRound(col("ex")(0), 2).as("p50_exact"),
+          oracleRound(col("ex")(1), 2).as("p95_exact"),
           col("n_rows"),
           // vacuous truth when the exact quantile is 0 (ap/0 would be NULL)
           when(col("ex")(0) === 0.0d, lit(true))
@@ -792,11 +820,9 @@ object SparkEntry {
       }
       val approx = Dedup.embeddingNearDupPairs(emb, threshold = 0.3, nBits = 3, nTables = 12)
         .select("id_a", "id_b")
-      val nTrue = truth.agg(count(lit(1)).as("n_true"))
-      val hits = approx.join(truth, Seq("id_a", "id_b"), "left_semi")
-        .agg(count(lit(1)).as("hits"))
-      nTrue.crossJoin(hits).select(col("n_true").as("n_true_pairs"),
-        ratioGate(col("hits"), col("n_true"), 0.8).as("recall_pass"))
+      truth.agg(count(lit(1)).as("n_true")).crossJoin(hits(approx, truth, PairKeys))
+        .select(col("n_true").as("n_true_pairs"),
+          ratioGate(col("hits"), col("n_true"), 0.8).as("recall_pass"))
     }),
 
     // ---- similarity search ----

@@ -38,7 +38,13 @@ object Dedup {
     */
   def exact(documents: DataFrame): DataFrame = duplicateGroups(documents, col("text"))
 
-  /** Normalized dedup: lowercase + whitespace-collapse before grouping. */
+  /** Normalized dedup: trim, collapse whitespace runs to one space,
+    * lowercase, then group. Spark's `trim` strips spaces only, so a leading
+    * or trailing tab or newline survives it and the collapse turns it into
+    * one kept space: `"x\n"` normalizes to `"x "` and does not group with
+    * `"x"`. The d2 oracle trims and collapses in the same order, so this is
+    * the defined semantics.
+    */
   def normalized(documents: DataFrame): DataFrame =
     duplicateGroups(documents, lower(regexp_replace(trim(col("text")), "\\s+", " ")))
 
@@ -141,7 +147,7 @@ object Dedup {
     * collision would silently merge two different texts into one exact
     * group, so one hash is not enough at web scale.
     */
-  private def textKey(text: Column): Column =
+  private[graft] def textKey(text: Column): Column =
     struct(xxhash64(text).as("xx"), crc32(text.cast("binary")).as("crc"), length(text).as("len"))
 
   /** Candidate pairs `(band, bucket, id_a, id_b, <c>_a, <c>_b …)` within a

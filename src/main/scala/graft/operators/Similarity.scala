@@ -45,7 +45,7 @@ object Similarity {
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType.fromDDL(ddl))
 
-  /** Exact-cosine re-rank + top-k: shared tail of every method here. */
+  /** Each query's top `k` by (score desc, neighbor_id asc), score rounded to 4 places. */
   private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("neighbor_id").asc)
     scored.withColumn("rank", row_number().over(w))
@@ -58,16 +58,31 @@ object Similarity {
     queries.filter(col("embedding").isNotNull)
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
 
+  /** (query_id, id, q_emb, emb) rows → (query_id, neighbor_id, score): the
+    * one exact-cosine scorer every method's result goes through.
+    */
+  private def scores(rows: DataFrame): DataFrame =
+    rows.select(col("query_id"), col("id").as("neighbor_id"),
+      cosine_similarity(col("q_emb"), col("emb")).as("score"))
+
+  /** The exact re-rank head of the candidate-generating methods (LSH, the
+    * ADC re-rank): (query_id, id) candidates joined to their vectors and to
+    * the broadcast query vectors `qn`, scored, top `k` kept. The candidate
+    * list is itself broadcast into the corpus-sized vector join
+    * ([[joinVectors]]): the kNN contract is a bounded query batch against a
+    * huge corpus, and leaving the join to AQE shuffled the single-copy
+    * vector table on id (measured 360 MB at 1 M × 64 for a 100-query batch).
+    */
+  private def rerank(candidates: DataFrame, vectors: DataFrame, qn: DataFrame, k: Int): DataFrame =
+    topK(scores(joinVectors(vectors, candidates).join(broadcast(qn), "query_id")), k)
+
   /** Brute-force exact top-k neighbors for each query vector. Null
     * embeddings are dropped on BOTH sides — the same guard the approximate
     * paths apply, so exact-vs-ANN recall gates compare identical inputs.
     */
-  def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int = 5): DataFrame = {
-    val scored = vectorTable(corpus).join(broadcast(queryVectors(queries)), col("id") =!= col("query_id"))
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        cosine_similarity(col("q_emb"), col("emb")).as("score"))
-    topK(scored, k)
-  }
+  def bruteForceKnn(corpus: DataFrame, queries: DataFrame, k: Int = 5): DataFrame =
+    topK(scores(
+      vectorTable(corpus).join(broadcast(queryVectors(queries)), col("id") =!= col("query_id"))), k)
 
   /** Deterministic random hyperplanes: nBits × dim from splitmix64. */
   def hyperplanes(nBits: Int, dim: Int, seed: Long = 7L): Array[Array[Float]] =
@@ -261,23 +276,12 @@ object Similarity {
       .withColumn("_rn", row_number().over(wCap))
       .filter(col("_rn") <= maxBucket)
       .drop("_rn")
+    // the probe-time cap above bounds the broadcast candidate list by
+    // queries × nTables × (nBits+1) probes × maxBucket
     val candidates = probedIndex.join(broadcast(probes), Seq("bucket"))
       .filter(col("id") =!= col("query_id"))
       .select("query_id", "id").distinct()
-    // candidates are BROADCAST into the vector join: the probe-time cap
-    // above bounds them by queries × nTables × (nBits+1) probes × maxBucket.
-    // The kNN contract is a bounded query batch against a huge corpus (the
-    // brute path broadcasts the query side for the same reason) — while
-    // `vectors` is corpus-sized. Leaving this to AQE shuffled the
-    // single-copy vector table on id (measured 360 MB at 1 M × 64 for a
-    // 100-query batch); broadcasting the candidate list keeps the corpus
-    // side map-local, and a bucketed staged layout additionally
-    // partition-prunes the scan.
-    val scored = joinVectors(vectors, candidates)
-      .join(broadcast(qn), "query_id")
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        cosine_similarity(col("q_emb"), col("emb")).as("score"))
-    topK(scored, k)
+    rerank(candidates, vectors, qn, k)
   }
 
   /** One-shot convenience: build the index and query it in one plan.
@@ -411,20 +415,27 @@ object Similarity {
     * deterministic across runs (same ids → same hashes → same sample), so a
     * restarted build reproduces the same centroids. TakeOrdered, never a
     * full sort. The returned model is tiny (nCells × dim floats); persist
-    * it with [[centroidsToDf]] next to the [[ivfIndex]] parquet. The
-    * reference makes the same whole-population move: its matcher compiles
-    * from the entire schema, not a biased corner
+    * it as one encoder row (`createDataset(Seq(Flat(cs)))`) next to the
+    * [[ivfIndex]] parquet. The reference makes the same whole-population
+    * move: its matcher compiles from the entire schema, not a biased corner
     * (reference `src/dfa/dfa.rs:250-413`).
     */
   def ivfTrain(corpus: DataFrame, nCells: Int = 16, sampleSize: Int = 256,
-               iterations: Int = 5): Array[Array[Float]] = {
+               iterations: Int = 5): Array[Array[Float]] =
+    lloyd(trainingSample(corpus, 41, sampleSize), nCells, iterations, nearestCell)
+
+  /** The `sampleSize` non-null embeddings with the smallest (signed
+    * xxhash64(vec_id, seed), vec_id) keys: the seeded uniform draw both
+    * driver-side trainers take (see [[ivfTrain]]).
+    */
+  private def trainingSample(corpus: DataFrame, seed: Int, sampleSize: Int): Array[Array[Float]] = {
     val spark = corpus.sparkSession
     import spark.implicits._
     val sample = corpus.filter(col("embedding").isNotNull)
-      .orderBy(xxhash64(col("vec_id"), lit(41)), col("vec_id")).limit(sampleSize)
+      .orderBy(xxhash64(col("vec_id"), lit(seed)), col("vec_id")).limit(sampleSize)
       .select("embedding").as[Array[Float]].collect()
     require(sample.nonEmpty, "empty corpus")
-    lloyd(sample, nCells, iterations, nearestCell)
+    sample
   }
 
   /** Unit-normalized copies of the centroids: argmax over cells of
@@ -843,11 +854,8 @@ object Similarity {
                     allowed: Option[DataFrame] = None, k: Int = 5, nProbe: Int = 4,
                     nProbeSuper: Int = 8): DataFrame = {
     val bc = queries.sparkSession.sparkContext.broadcast(q)
-    val scored = probed(index, bc, queries, allowed, nProbe, nProbeSuper)
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        cosine_similarity(col("q_emb"), col("emb")).as("score"))
-      .groupBy("query_id", "neighbor_id").agg(max("score").as("score"))
-    topK(scored, k)
+    topK(scores(probed(index, bc, queries, allowed, nProbe, nProbeSuper))
+      .groupBy("query_id", "neighbor_id").agg(max("score").as("score")), k)
   }
 
   /** STREAMING SERVE: top-k over a STREAM of query vectors against a staged
@@ -880,42 +888,6 @@ object Similarity {
              iterations: Int = 5): DataFrame = {
     val q = Flat(ivfTrain(corpus, nCells, sampleSize, iterations))
     ivfKnnIndexed(ivfIndex(corpus, q), q, queries, k = k, nProbe = nProbe)
-  }
-
-  /** Centroid model ↔ DataFrame converters, so a staged IVF index is fully
-    * parquet-persistable: write `centroidsToDf` next to the index, read it
-    * back with `centroidsFromDf` before querying.
-    */
-  def centroidsToDf(spark: SparkSession, centroids: Array[Array[Float]]): DataFrame = {
-    import spark.implicits._
-    centroids.zipWithIndex.map { case (c, i) => (i, c) }.toSeq.toDF("cell", "centroid")
-  }
-
-  def centroidsFromDf(df: DataFrame): Array[Array[Float]] =
-    df.select("cell", "centroid").collect()
-      .sortBy(_.getInt(0))
-      .map(_.getSeq[Float](1).toArray)
-
-  /** Two-level model ↔ DataFrame converters (same staged-parquet lifecycle
-    * as [[centroidsToDf]]): child rows are (super, child, centroid), the
-    * super row is (super, -1, centroid).
-    */
-  def twoLevelToDf(spark: SparkSession, m: IvfTwoLevel): DataFrame = {
-    import spark.implicits._
-    val rows =
-      m.superCentroids.zipWithIndex.map { case (c, s) => (s, -1, c) } ++
-        (for { s <- m.children.indices; c <- m.children(s).indices }
-          yield (s, c, m.children(s)(c)))
-    rows.toSeq.toDF("super", "child", "centroid")
-  }
-
-  def twoLevelFromDf(df: DataFrame): IvfTwoLevel = {
-    val rows = df.select("super", "child", "centroid").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
-    val supers = rows.filter(_._2 == -1).sortBy(_._1).map(_._3)
-    val kids = rows.filter(_._2 >= 0)
-    IvfTwoLevel(supers,
-      Array.tabulate(supers.length)(s => kids.filter(_._1 == s).sortBy(_._2).map(_._3)))
   }
 
   // ------------------------------------------------------------- IVF-PQ --
@@ -990,13 +962,8 @@ object Similarity {
   def pqTrain(corpus: DataFrame, q: Quantizer, nSub: Int = 8, k: Int = 16,
               sampleSize: Int = 256, iterations: Int = 5): PqModel = {
     require(k <= 256, s"PQ code must fit one byte: k=$k > 256")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val sample = corpus.filter(col("embedding").isNotNull)
-      .orderBy(xxhash64(col("vec_id"), lit(43)), col("vec_id")).limit(sampleSize)
-      .select("embedding").as[Array[Float]].collect()
+    val sample = trainingSample(corpus, 43, sampleSize)
       .map(v => subtractCentroid(v, q.centroid(q.assign(v))))
-    require(sample.nonEmpty, "empty corpus")
     val dim = sample.head.length
     require(dim % nSub == 0, s"embedding dim $dim not divisible by nSub=$nSub")
     val subDim = dim / nSub
@@ -1138,13 +1105,7 @@ object Similarity {
     val wA = Window.partitionBy("query_id").orderBy(col("approx").desc, col("id").asc)
     val candidates = approx.withColumn("rr", row_number().over(wA))
       .filter(col("rr") <= r).select("query_id", "id")
-    // bounded candidate list broadcast into the corpus-sized vector join,
-    // exactly like the LSH re-rank (partition-pruned when bucketed)
-    val scored = joinVectors(vectors, candidates)
-      .join(broadcast(qn), "query_id")
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        cosine_similarity(col("q_emb"), col("emb")).as("score"))
-    topK(scored, k)
+    rerank(candidates, vectors, qn, k)
   }
 
   /** One-shot convenience: train coarse + PQ, index, query in one call. */
@@ -1155,21 +1116,5 @@ object Similarity {
     val pq = pqTrain(corpus, q, nSub, kCodes)
     ivfPqKnnIndexed(ivfPqIndex(corpus, q, pq), q, pq, vectorTable(corpus),
       queries, k = k, nProbe = nProbe, rerank = rerank)
-  }
-
-  /** PQ model ↔ DataFrame converters (parquet-persistable next to the
-    * index + centroids, same lifecycle as [[centroidsToDf]]).
-    */
-  def pqModelToDf(spark: SparkSession, pq: PqModel): DataFrame = {
-    import spark.implicits._
-    (for { m <- pq.codebooks.indices; j <- pq.codebooks(m).indices }
-      yield (m, j, pq.codebooks(m)(j))).toDF("sub", "code", "centroid")
-  }
-
-  def pqModelFromDf(df: DataFrame): PqModel = {
-    val rows = df.select("sub", "code", "centroid").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Float](2).toArray))
-    val nSub = rows.iterator.map(_._1).max + 1
-    PqModel(Array.tabulate(nSub)(m => rows.filter(_._1 == m).sortBy(_._2).map(_._3)))
   }
 }

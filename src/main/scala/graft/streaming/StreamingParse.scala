@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.lexer.PatternBank
+import graft.operators.Dedup
 import graft.pipeline.{Parse, Turn}
 
 /** Structured Streaming face of the engine: the reference's pluggable
@@ -64,21 +65,20 @@ object StreamingParse {
   /** Streaming exact dedup over a document-shaped stream: first arrival of
     * each text hash wins, duplicates within the watermark horizon are
     * dropped. `dropDuplicatesWithinWatermark` keys state on the slim
-    * (64-bit hash) column — never the body — and the watermark bounds state
-    * size, which is what makes this viable on an unbounded 100 TB/day feed
-    * (plain dropDuplicates would accrete state forever).
+    * ~96-bit [[graft.operators.Dedup.textKey]] column (batch exact dedup's
+    * key) — never the body — and the watermark bounds state size, which is
+    * what makes this viable on an unbounded 100 TB/day feed (plain
+    * dropDuplicates would accrete state forever). A lone 64-bit hash would
+    * have ~50% birthday-collision odds by 5·10⁹ distinct docs — one horizon
+    * of such a feed.
     */
   def dedupedStream(docs: DataFrame, tsCol: String = "ts",
                     watermark: String = "10 minutes"): DataFrame =
     docs
-      // composite ~96-bit key: a lone 64-bit hash has ~50% birthday-collision
-      // odds by 5·10⁹ distinct docs — one horizon of a 100 TB/day feed
-      .withColumn("_th", xxhash64(col("text")))
-      .withColumn("_tc", crc32(col("text").cast("binary")))
-      .withColumn("_tl", length(col("text")))
+      .withColumn("_tk", Dedup.textKey(col("text")))
       .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("_th", "_tc", "_tl")
-      .drop("_th", "_tc", "_tl")
+      .dropDuplicatesWithinWatermark("_tk")
+      .drop("_tk")
 
   /** Custom streaming state via mapGroupsWithState: running per-conversation
     * turn/error counters (the stateful-operator surface of the engine). The

@@ -375,9 +375,9 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // index + model reproduce the in-memory results exactly
     val stage = graft.pipeline.Staging.tempDir("graft-2l-test")
     try {
-      Similarity.twoLevelToDf(spark, m3).write.parquet(s"$stage/model")
+      Seq(m3).toDS().write.parquet(s"$stage/model")
       idx.write.partitionBy(Similarity.IndexPart).parquet(s"$stage/ivf")
-      val mBack = Similarity.twoLevelFromDf(spark.read.parquet(s"$stage/model"))
+      val mBack = spark.read.parquet(s"$stage/model").as[Similarity.IvfTwoLevel].head()
       assert(flatEq(m3, mBack), "model changed through parquet")
       val gotStaged = Similarity.ivfKnnIndexed(
         spark.read.parquet(s"$stage/ivf"), mBack, q, k = 5, nProbe = 4, nProbeSuper = 2)
@@ -408,13 +408,13 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val stage = graft.pipeline.Staging.tempDir("graft-2lpq-test")
     try {
       idx.write.partitionBy(Similarity.IndexPart).parquet(s"$stage/ivfpq")
-      Similarity.twoLevelToDf(spark, m).write.parquet(s"$stage/model")
-      Similarity.pqModelToDf(spark, pq).write.parquet(s"$stage/pqmodel")
+      Seq(m).toDS().write.parquet(s"$stage/model")
+      Seq(pq).toDS().write.parquet(s"$stage/pqmodel")
       Similarity.vectorTableBucketed(corr).write.partitionBy("id_bucket").parquet(s"$stage/vectors")
       val gotStaged = rows(Similarity.ivfPqKnnIndexed(
         spark.read.parquet(s"$stage/ivfpq"),
-        Similarity.twoLevelFromDf(spark.read.parquet(s"$stage/model")),
-        Similarity.pqModelFromDf(spark.read.parquet(s"$stage/pqmodel")),
+        spark.read.parquet(s"$stage/model").as[Similarity.IvfTwoLevel].head(),
+        spark.read.parquet(s"$stage/pqmodel").as[Similarity.PqModel].head(),
         spark.read.parquet(s"$stage/vectors"),
         q, k = 5, nProbe = 4, nProbeSuper = 2, rerank = 32))
       assert(gotStaged == got)
@@ -431,6 +431,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(exact.nonEmpty && exactAdmitted.nonEmpty && exact != exactAdmitted)
     val flat = Similarity.Flat(Similarity.ivfTrain(emb, nCells = 16))
     val twoLevel = Similarity.ivfTrainTwoLevel(emb, nCells = 16, nSuper = 4)
+    val n = emb.count().toInt
     // (quantizer, nProbe, nProbeSuper) that probe every cell
     for ((quant, nProbe, nProbeSuper) <- Seq((flat, flat.centroids.length, 1),
                                              (twoLevel, twoLevel.nCells, twoLevel.nSuper))) {
@@ -440,7 +441,22 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(knn(None) == exact, quant.getClass.getSimpleName)
       assert(knn(Some(admitted.select(col("vec_id").as("id")))) == exactAdmitted,
         quant.getClass.getSimpleName)
+      // IVF-PQ: every cell probed and k·rerank ≥ corpus, so the ADC cut keeps
+      // every candidate and the exact re-rank alone decides
+      val pq = Similarity.pqTrain(emb, quant, nSub = 8, k = 16)
+      val pqIdx = Similarity.ivfPqIndex(emb, quant, pq)
+      def pqKnn(allowed: Option[org.apache.spark.sql.DataFrame]) = rows(Similarity.ivfPqKnnIndexed(
+        pqIdx, quant, pq, Similarity.vectorTable(emb), q, allowed, k = 5, nProbe = nProbe,
+        nProbeSuper = nProbeSuper, rerank = n))
+      assert(pqKnn(None) == exact, s"PQ over ${quant.getClass.getSimpleName}")
+      assert(pqKnn(Some(admitted.select(col("vec_id").as("id")))) == exactAdmitted,
+        s"PQ over ${quant.getClass.getSimpleName}")
     }
+    // LSH at nBits = 1: the own bucket and its one flip cover every bucket,
+    // and a cap above the corpus size keeps every member
+    val lsh = rows(Similarity.lshKnnIndexed(Similarity.lshIndex(emb, nBits = 1, nTables = 1),
+      Similarity.vectorTable(emb), q, k = 5, nBits = 1, nTables = 1, maxBucket = n + 1))
+    assert(lsh == exact, "LSH")
   }
 
   test("capByHash streaming cap keeps exactly the sort-take set with O(cap) memory") {
@@ -610,6 +626,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ANN staged indexes: parquet round-tripped LSH/IVF give identical results to one-shot") {
+    import spark.implicits._
     val stage = graft.pipeline.Staging.tempDir("graft-ann-test")
     try {
       val q = emb.filter(col("vec_id") < 10)
@@ -630,8 +647,8 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       // the shipped layout partitions on cell: the probe join's broadcast
       // side must dynamically prune the index scan to the probed cells
       Similarity.ivfIndex(emb, Similarity.Flat(cs)).write.partitionBy(Similarity.IndexPart).parquet(s"$stage/ivf")
-      Similarity.centroidsToDf(spark, cs).write.parquet(s"$stage/centroids")
-      val csBack = Similarity.centroidsFromDf(spark.read.parquet(s"$stage/centroids"))
+      Seq(Similarity.Flat(cs)).toDS().write.parquet(s"$stage/centroids")
+      val csBack = spark.read.parquet(s"$stage/centroids").as[Similarity.Flat].head().centroids
       assert(csBack.map(_.toSeq).toSeq == cs.map(_.toSeq).toSeq)
       val ivfStagedDf = Similarity.ivfKnnIndexed(
         spark.read.parquet(s"$stage/ivf"), Similarity.Flat(csBack), q, k = 5, nProbe = 6)
@@ -668,6 +685,7 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("IVF-PQ staged index: parquet round trip gives identical results to one-shot") {
+    import spark.implicits._
     val stage = graft.pipeline.Staging.tempDir("graft-pq-test")
     try {
       val q = emb.filter(col("vec_id") < 10)
@@ -678,15 +696,15 @@ class OperatorsSpec extends AnyFunSuite with BeforeAndAfterAll {
       // shipped layout: cell-partitioned codes, bucket-partitioned vectors —
       // both scans must be dynamically pruned (probed cells / candidates)
       Similarity.ivfPqIndex(emb, Similarity.Flat(cs), pq).write.partitionBy(Similarity.IndexPart).parquet(s"$stage/ivfpq")
-      Similarity.centroidsToDf(spark, cs).write.parquet(s"$stage/centroids")
-      Similarity.pqModelToDf(spark, pq).write.parquet(s"$stage/pqmodel")
+      Seq(Similarity.Flat(cs)).toDS().write.parquet(s"$stage/centroids")
+      Seq(pq).toDS().write.parquet(s"$stage/pqmodel")
       Similarity.vectorTableBucketed(emb).write.partitionBy("id_bucket").parquet(s"$stage/vectors")
-      val pqBack = Similarity.pqModelFromDf(spark.read.parquet(s"$stage/pqmodel"))
+      val pqBack = spark.read.parquet(s"$stage/pqmodel").as[Similarity.PqModel].head()
       assert(pqBack.codebooks.map(_.map(_.toSeq).toSeq).toSeq ==
         pq.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
       val stagedDf = Similarity.ivfPqKnnIndexed(
         spark.read.parquet(s"$stage/ivfpq"),
-        Similarity.Flat(Similarity.centroidsFromDf(spark.read.parquet(s"$stage/centroids"))),
+        spark.read.parquet(s"$stage/centroids").as[Similarity.Flat].head(),
         pqBack, spark.read.parquet(s"$stage/vectors"), q, k = 5, nProbe = 6)
       val planStr = stagedDf.queryExecution.executedPlan.toString.toLowerCase
       assert(planStr.contains("dynamicpruning"))
