@@ -10,13 +10,19 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability}
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.streaming._
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
+import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import scala.util.control.NonFatal
 import graft.functions.ParseTurnExpression.CAT_UNMATCHED
 import graft.functions.SpanRowWriter
 import graft.lexer.{ByteTokenizer, PatternBank, TokenType}
@@ -28,24 +34,29 @@ import graft.pipeline.TokenRow
   * assemble multi-line events (split before each Timestamp) into a typed
   * Dataset.
   *
-  * Every entry point runs ONE read path and ONE lexer kernel:
-  *  1. the driver resolves the input files ([[resolveFiles]]: the glob,
-  *     directories expanded to their files) — the stream instead discovers
-  *     them per micro-batch;
+  * Every entry point, batch or stream, reads a DataSource V2 `logfiles`
+  * table — [[EventTable]] for a batch, [[StreamTable]] for the stream —
+  * through ONE region planner and ONE reader:
+  *  1. the driver lists the input files ([[resolveFiles]]: the glob,
+  *     directories expanded to their files, hidden and empty files skipped);
+  *     the stream lists its directory once per trigger and admits the new
+  *     files ([[LogStream]]);
   *  1. each file becomes one or more [[Region]]s: a byte range starting at
-  *     an event boundary, with the event index and line number it starts at;
-  *  1. a task reads the region's bytes and lexes them with
+  *     an event boundary, with the event index and line number it starts at
+  *     — one whole-file region, or the regions [[regionsOf]] repairs from a
+  *     chunk index ([[indexOf]]);
+  *  1. the regions are sliced into input partitions ([[slices]]),
+  *     and a task reads each region's bytes and lexes them with
   *     [[graft.lexer.ByteTokenizer]], one event at a time, writing each
   *     event straight into a reused Tungsten row ([[EventRows]]) with the
   *     [[graft.functions.SpanRowWriter]] `parse_turn` writes its rows
   *     with: an event's fields are `parse_turn`'s over its spans.
   *
-  * The batch entry points serve those rows from a DataSource V2 scan
-  * ([[EventTable]]) whose input partitions are slices of the regions, so
-  * Catalyst prunes the columns nobody reads (a `count()` writes empty
-  * rows, and the token array is written only when selected), the physical
+  * A batch scan gets Catalyst's column pruning (a `count()` writes empty
+  * rows, and the token array is written only when selected); the physical
   * plan names its files, and building a plan runs no Spark job. The
-  * `Dataset[LogEvent]` they return is a typed view over those rows.
+  * `Dataset[LogEvent]` every entry point returns is a typed view over those
+  * rows; only [[eventsOf]] decodes them to objects.
   *
   * [[events]] and [[eventsWithTokens]] parse one whole-file region per file:
   * the unit of parallelism is the FILE, matching how log pipelines shard in
@@ -93,7 +104,7 @@ object LogFiles {
   /** Parse every file matching `pathGlob` into events. */
   def events(spark: SparkSession, pathGlob: String,
              bank: Broadcast[PatternBank]): Dataset[LogEvent] = {
-    val regions = wholeFileRegions(spark, pathGlob)
+    val regions = resolveFiles(spark, pathGlob).map(wholeFile)
     typedEvents(spark, eventRows(spark, () => regions, bank))
   }
 
@@ -101,79 +112,45 @@ object LogFiles {
   def eventsWithTokens(spark: SparkSession, pathGlob: String,
                        bank: Broadcast[PatternBank]): Dataset[LogEventWithTokens] = {
     import spark.implicits._
-    val regions = wholeFileRegions(spark, pathGlob)
+    val regions = resolveFiles(spark, pathGlob).map(wholeFile)
     eventRows(spark, () => regions, bank)
       .select(struct(eventSchema.fieldNames.map(col).toSeq: _*).as("event"), col("tokens"))
       .as[LogEventWithTokens]
   }
 
-  /** Structured Streaming twin of [[events]]: `.log` files arriving in
-    * `dir` parse through the SAME kernels as the batch paths, one
-    * micro-batch per trigger — the raw-log side of the R2 pluggable-stream
-    * symmetry [[graft.streaming.StreamingParse]] provides for transcripts
-    * (the reference's pull-stream input, reference
-    * src/lexer/lexer_stream.rs:3-5). The `binaryFile` file-stream source is
-    * used for DISCOVERY only — the query selects just (path, length), so the
-    * source's column pruning never materializes file content; all byte
-    * reads below are bounded ranges. A file is processed exactly once, in
-    * the micro-batch that discovers it (file-source offset tracking);
-    * event boundaries never cross files, so no cross-batch state is
-    * needed, and batch ≡ stream equality is by construction (shared
-    * kernels) and asserted in StreamingSpec.
+  /** Structured Streaming twin of [[events]]: the `.log` files arriving in
+    * `dir` (its own files, not those of its subdirectories) read as a
+    * micro-batch `logfiles` table ([[StreamTable]]) through the SAME region
+    * planner and reader as the batch entry points — the raw-log side of the
+    * pluggable-stream symmetry [[graft.streaming.StreamingParse]] gives
+    * transcripts (the reference's pull-stream input, reference
+    * src/lexer/lexer_stream.rs:3-5).
     *
-    * WITHIN-FILE SPLIT (the memory/latency bound the batch side gets from
-    * [[eventsSplit]]): a file larger than `chunkBytes` is routed through
-    * the chunk-index kernel INSIDE the stream — one task per file runs the
-    * cheap phase-1 boundary scan ([[scanChunk]] per range, each holding
-    * ~chunkBytes + lookahead, buffers discarded between chunks) and
-    * prefix-sums it into repaired regions ([[regionsOf]]); the regions
-    * then REPARTITION across the cluster and lex in parallel
-    * ([[parseRegion]]: the batch row kernel, decoded to [[LogEvent]]s). A
-    * 512 MB log arriving in the stream is a ~1 s byte scan plus 32
-    * parallel ~16 MB parse tasks, not one whole-file
-    * task holding 512 MB on-heap. Files at or under `chunkBytes` (and all
-    * files of a schema whose patterns fail [[chunkIndex]]'s newline-safety
-    * preconditions, where split points can't be trusted) parse as a single
-    * region — for those the whole-file task is the documented fallback.
-    * Global event_idx / line numbers are file-local exactly like
-    * [[events]]; the split restores them from the prefix sums, so stream
-    * output is identical to the batch whole-file parse. Files must arrive
-    * complete (the standard file-source contract: write elsewhere, move in).
+    * Each trigger admits up to `maxFilesPerTrigger` (> 0) new files, oldest
+    * modification time first, and logs them under the query's checkpoint
+    * ([[LogStream]]): a file is read exactly once, in the micro-batch that
+    * admits it, also across restarts. The checkpoint's offsets are file
+    * counts: a checkpoint of the earlier stream, which read through Spark's
+    * binary-file source, cannot be resumed, and the query fails on it with a
+    * message that says so. In a micro-batch a file larger than `chunkBytes`
+    * is split as [[eventsSplit]] splits it — one chunk-index job whose chunks
+    * scan in parallel tasks, regions repaired from the collected index — and
+    * every other file (every file, when the bank fails [[chunkIndex]]'s
+    * newline-safety preconditions) is one whole-file region. Event indices
+    * and line numbers are file-local, so the stream's events equal
+    * [[events]]' (StreamingSpec). Spark plans a micro-batch scan without
+    * column pruning, so the stream's table has the [[LogEvent]] columns
+    * only: a `tokens` column would be written for every event. Building the
+    * Dataset runs no Spark job. Files must arrive complete (the file-source
+    * contract: write elsewhere, move in).
     */
   def eventsStream(spark: SparkSession, dir: String, bank: Broadcast[PatternBank],
                    maxFilesPerTrigger: Int = 4, chunkBytes: Long = 16L << 20): Dataset[LogEvent] = {
-    import spark.implicits._
     require(chunkBytes >= 4096, s"chunkBytes too small: $chunkBytes")
-    val confSer = confOf(spark)
-    // same soundness preconditions chunkIndex requires; checked ONCE on the
-    // driver — an unsafe schema degrades to whole-file regions, it must not
-    // silently mis-split
-    val splittable = splitBlocker(bank.value).isEmpty
-    val files = spark.readStream
-      .format("binaryFile")
-      // the binaryFile format's FIXED schema — the streaming source API
-      // still requires it stated explicitly
-      .schema(StructType.fromDDL(
-        "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY"))
-      .option("pathGlobFilter", "*.log")
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .load(dir)
-      .select(col("path"), col("length"))
-      .as[(String, Long)]
-    // the source reports a file's Hadoop Path.toString — the batch naming
-    val regions = files.flatMap { case (path, len) =>
-      if (!splittable || len <= chunkBytes) Iterator.single(Region(path, 0L, len, 0L, 0L))
-      else {
-        val n = ((len + chunkBytes - 1) / chunkBytes).toInt
-        val metas = (0 until n).map { i =>
-          scanChunk(path, i, i * chunkBytes, math.min(len, (i + 1) * chunkBytes),
-            len, bank.value, confSer.value.value)
-        }
-        regionsOf(metas).iterator
-      }
-    }
-    regions.repartition(spark.sparkContext.defaultParallelism)
-      .flatMap(r => parseRegion(r, bank.value, confSer.value.value))
+    require(maxFilesPerTrigger > 0, s"maxFilesPerTrigger must be positive: $maxFilesPerTrigger")
+    val table = new StreamTable(spark, dir, maxFilesPerTrigger, chunkBytes, bank)
+    typedEvents(spark, GraftBridge.ofRows(spark, StreamingRelationV2(None, table.name(), table,
+      CaseInsensitiveStringMap.empty(), DataTypeUtils.toAttributes(eventSchema), None, None, None)))
   }
 
   // ------------------------------------------------------------------ //
@@ -244,18 +221,25 @@ object LogFiles {
     splitBlocker(bank.value).foreach(need =>
       throw new IllegalArgumentException(s"within-file split requires $need; use events() instead"))
     require(chunkBytes >= 4096, s"chunkBytes too small: $chunkBytes")
-    import spark.implicits._
     val files = resolveFiles(spark, pathGlob)
     files.find(_.compressed).foreach(f => throw new IllegalArgumentException(
       s"within-file split cannot byte-split the compressed file ${f.path}; use events() instead"))
-    val confSer = confOf(spark)
+    indexOf(spark, files, bank, chunkBytes)
+  }
+
+  /** The chunk-index job of [[chunkIndex]] and the stream: one [[scanChunk]]
+    * per `chunkBytes` range of `files`, the ranges scanned by parallel tasks.
+    */
+  private def indexOf(spark: SparkSession, files: Seq[InputFile], bank: Broadcast[PatternBank],
+                      chunkBytes: Long): Dataset[ChunkMeta] = {
+    import spark.implicits._
+    val conf = confOf(spark)
     val chunks = files.flatMap { f =>
       val n = ((f.len + chunkBytes - 1) / chunkBytes).toInt
       (0 until n).map(i => (f.path, i, i * chunkBytes, math.min(f.len, (i + 1) * chunkBytes), f.len))
     }
     spark.createDataset(chunks)
-      .map { case (path, idx, s, e, len) =>
-        scanChunk(path, idx, s, e, len, bank.value, confSer.value.value) }
+      .map { case (path, idx, s, e, len) => scanChunk(path, idx, s, e, len, bank.value, conf.value.value) }
   }
 
   /** Phase 2: parse events from a (possibly parquet-round-tripped) chunk
@@ -266,9 +250,7 @@ object LogFiles {
     */
   def eventsFromIndex(spark: SparkSession, index: Dataset[ChunkMeta],
                       bank: Broadcast[PatternBank]): Dataset[LogEvent] =
-    typedEvents(spark, eventRows(spark, () =>
-      index.collect().groupBy(_.file).values.flatMap(ms => regionsOf(ms.toSeq)).toSeq
-        .sortBy(r => (r.file, r.start)), bank))
+    typedEvents(spark, eventRows(spark, () => regionsOf(index.collect().toSeq), bank))
 
   /** Why line-start splitting is unsound for `bank`, or None when it is
     * sound. A timestamp OR variable pattern that can consume '\n' lets a
@@ -282,50 +264,42 @@ object LogFiles {
     else if (!bank.isDelimiter('\n')) Some("'\\n' to be a delimiter")
     else None
 
-  /** Prefix-sum ONE file's chunk metas into repaired parse regions — the
-    * boundary-repair core shared by the batch split path
-    * ([[eventsFromIndex]], driver-side over the collected index) and the
-    * streaming split path ([[eventsStream]], executor-side per file).
+  /** Prefix-sum each file's chunk metas into repaired parse regions, in
+    * (file, start) order — the boundary-repair core of every split: the
+    * batch one ([[eventsFromIndex]]) and the stream's, both driver-side over
+    * a collected index.
     */
-  private[sources] def regionsOf(ms: Seq[ChunkMeta]): Vector[Region] = {
-    val sorted = ms.sortBy(_.chunkIdx)
-    val file = sorted.head.file
-    val fileLen = sorted.last.end
-    var eventsBefore = 0L
-    var newlinesBefore = 0L
-    val out = Vector.newBuilder[Region]
-    var i = 0
-    while (i < sorted.length) {
-      val m = sorted(i)
-      if (m.firstEventStart >= 0) {
-        // owned region ends at the next chunk that owns an event start
-        var j = i + 1
-        while (j < sorted.length && sorted(j).firstEventStart < 0) j += 1
-        val end = if (j < sorted.length) sorted(j).firstEventStart else fileLen
-        out += Region(file, m.firstEventStart, end, eventsBefore,
-          newlinesBefore + m.nNewlinesBeforeFirstEvent)
+  private[sources] def regionsOf(ms: Seq[ChunkMeta]): Vector[Region] =
+    ms.groupBy(_.file).toVector.sortBy(_._1).flatMap { case (file, fileMetas) =>
+      val sorted = fileMetas.sortBy(_.chunkIdx).toVector
+      val eventsBefore = sorted.scanLeft(0L)(_ + _.nEventStarts)
+      val newlinesBefore = sorted.scanLeft(0L)(_ + _.nNewlines)
+      // a chunk owning an event start owns the bytes up to the next owner's (or the file's end)
+      val owners = sorted.indices.filter(sorted(_).firstEventStart >= 0)
+      val ends = owners.drop(1).map(sorted(_).firstEventStart) :+ sorted.last.end
+      owners.zip(ends).map { case (i, end) =>
+        val m = sorted(i)
+        Region(file, m.firstEventStart, end, eventsBefore(i), newlinesBefore(i) + m.nNewlinesBeforeFirstEvent)
       }
-      eventsBefore += m.nEventStarts
-      newlinesBefore += m.nNewlines
-      i += 1
     }
-    out.result()
-  }
 
   // ------------------------------------------------------------------ //
   // The shared read path: resolve files, build regions, read, lex.       //
   // ------------------------------------------------------------------ //
 
-  private final case class InputFile(path: String, len: Long, compressed: Boolean)
+  private final case class InputFile(path: String, len: Long, compressed: Boolean, mtime: Long)
 
-  /** The driver-side file resolver of every batch entry point: the files
-    * `pathGlob` matches, a directory standing for the files below it, in
-    * path order. Hidden (`.`/`_`-prefixed) files and directories are
-    * skipped, as Spark's file sources skip them — also when the path names
-    * one explicitly. A path that matches nothing but hidden entries fails,
-    * as `spark.read` does; empty files hold no events and are dropped.
+  /** The driver-side file resolver of every entry point: the files
+    * `pathGlob` matches, a directory standing for the files below it (or,
+    * unless `nested`, for its own files only, as the stream reads its
+    * directory), in path order. Hidden (`.`/`_`-prefixed) files and
+    * directories are skipped, as Spark's file sources skip them — also when
+    * the path names one explicitly, except the stream's own directory
+    * (`nested = false`), read whatever its name, as Spark's file stream
+    * reads it. A path that matches nothing but hidden entries fails, as
+    * `spark.read` does; empty files hold no events and are dropped.
     */
-  private def resolveFiles(spark: SparkSession, pathGlob: String): Seq[InputFile] = {
+  private def resolveFiles(spark: SparkSession, pathGlob: String, nested: Boolean = true): Seq[InputFile] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val glob = new Path(pathGlob)
     val fs = glob.getFileSystem(conf)
@@ -333,22 +307,22 @@ object LogFiles {
       val name = s.getPath.getName
       name.startsWith(".") || name.startsWith("_")
     }
-    val matched = Option(fs.globStatus(glob)).getOrElse(Array.empty[FileStatus]).filterNot(hidden)
+    val matched = Option(fs.globStatus(glob)).toSeq.flatten.filterNot(s => nested && hidden(s))
     if (matched.isEmpty)
       throw new java.io.FileNotFoundException(s"no file matches $pathGlob (hidden files skipped)")
     def below(dir: FileStatus): Iterator[FileStatus] =
       fs.listStatus(dir.getPath).iterator.filterNot(hidden)
-        .flatMap(s => if (s.isDirectory) below(s) else Iterator.single(s))
+        .flatMap(s => if (!s.isDirectory) Iterator.single(s) else if (nested) below(s) else Iterator.empty)
     val codecs = new CompressionCodecFactory(conf)
     matched.iterator
       .flatMap(s => if (s.isDirectory) below(s) else Iterator.single(s))
       .filter(_.getLen > 0)
-      .map(s => InputFile(s.getPath.toString, s.getLen, codecs.getCodec(s.getPath) != null))
+      .map(s => InputFile(s.getPath.toString, s.getLen, codecs.getCodec(s.getPath) != null,
+        s.getModificationTime))
       .toSeq.sortBy(_.path)
   }
 
-  private def wholeFileRegions(spark: SparkSession, pathGlob: String): Seq[Region] =
-    resolveFiles(spark, pathGlob).map(f => Region(f.path, 0L, f.len, 0L, 0L, f.compressed))
+  private def wholeFile(f: InputFile): Region = Region(f.path, 0L, f.len, 0L, 0L, f.compressed)
 
   /** Executor-side reads must see the SESSION's Hadoop conf (credentials,
     * endpoints, defaultFS) — a fresh Configuration() would silently limit
@@ -373,18 +347,6 @@ object LogFiles {
     import spark.implicits._
     rows.select(eventSchema.fieldNames.map(col).toSeq: _*).as[LogEvent]
   }
-
-  /** Lex one region and restore its global event indices and line numbers
-    * from the prefix-sum offsets: the row kernel over the region's bytes
-    * ([[EventRows]], all event columns).
-    */
-  private def regionRows(r: Region, bank: PatternBank, conf: Configuration,
-                         fields: Array[Int]): EventRows =
-    new EventRows(r.file, readRegion(r, conf), bank, r.eventIdxOffset, r.lineOffset, fields)
-
-  /** [[regionRows]] decoded to [[LogEvent]]s by the encoder, for the stream. */
-  private def parseRegion(r: Region, bank: PatternBank, conf: Configuration): Iterator[LogEvent] =
-    decoded(regionRows(r, bank, conf, EventFields))(eventEncoder.createDeserializer())
 
   private def readRegion(r: Region, conf: Configuration): Array[Byte] =
     if (!r.compressed) readRange(r.file, r.start, r.end, conf)
@@ -585,14 +547,14 @@ object LogFiles {
     }
   }
 
-  /** The DSv2 table behind the batch entry points: one row per event in
-    * [[rowSchema]], read from the regions `planRegions` yields — called
+  /** The DSv2 `logfiles` table of the batch entry points: one row per
+    * event in [[rowSchema]], over the regions `planRegions` yields — called
     * once per planned scan, so a chunk index is collected when the query
     * runs, never while it is built.
     */
-  private final class EventTable(planRegions: () => Seq[Region], bank: Broadcast[PatternBank],
-                                 conf: Broadcast[SerializableWritable[Configuration]],
-                                 parallelism: Int)
+  private final class EventTable(val planRegions: () => Seq[Region], val bank: Broadcast[PatternBank],
+                                 val conf: Broadcast[SerializableWritable[Configuration]],
+                                 val parallelism: Int)
       extends Table with SupportsRead {
     override def name(): String = "logfiles"
     override def schema(): StructType = rowSchema
@@ -605,21 +567,15 @@ object LogFiles {
           val names = required.fieldNames.toSet
           pruned = StructType(rowSchema.filter(f => names(f.name)))
         }
-        override def build(): Scan = new EventScan(planRegions, bank, conf, parallelism, pruned)
+        override def build(): Scan = new EventScan(EventTable.this, pruned)
       }
   }
 
-  /** A pruned scan over the regions. Its input partitions are contiguous
-    * slices of the region list, at most `parallelism` of them, as a local
-    * relation slices its rows: a task per region would launch a task per
-    * small file. Each region is read by an [[EventRows]] that writes only
-    * the columns the plan reads.
+  /** A pruned scan of `table`. Each region is read by an [[EventRows]] that
+    * writes only the columns the plan reads.
     */
-  private final class EventScan(planRegions: () => Seq[Region], bank: Broadcast[PatternBank],
-                                conf: Broadcast[SerializableWritable[Configuration]],
-                                parallelism: Int, pruned: StructType)
-      extends Scan with Batch {
-    private lazy val regions = planRegions().toVector
+  private final class EventScan(table: EventTable, pruned: StructType) extends Scan with Batch {
+    private lazy val regions = table.planRegions().toVector
     override def readSchema(): StructType = pruned
     override def description(): String = {
       val files = regions.map(_.file).distinct
@@ -627,24 +583,112 @@ object LogFiles {
         files.take(8).mkString("[", ", ", if (files.length > 8) ", ...]" else "]")
     }
     override def toBatch: Batch = this
-    override def planInputPartitions(): Array[InputPartition] = {
-      val n = regions.length
-      val slices = math.min(n, parallelism)
-      Array.tabulate[InputPartition](slices)(i =>
-        RegionSlice(regions.slice((i.toLong * n / slices).toInt, ((i + 1L) * n / slices).toInt)))
-    }
-    override def createReaderFactory(): PartitionReaderFactory = {
-      val fields = SpanRowWriter.fieldIds(pruned)
-      val bank = this.bank
-      val conf = this.conf
-      (p: InputPartition) => new SliceReader(p.asInstanceOf[RegionSlice].regions, bank.value,
-        conf.value.value, fields)
+    override def planInputPartitions(): Array[InputPartition] = slices(regions, table.parallelism)
+    override def createReaderFactory(): PartitionReaderFactory = readerFactory(pruned, table.bank, table.conf)
+  }
+
+  /** Contiguous slices of `regions`, at most `parallelism` of them, as a
+    * local relation slices its rows: a task per region would launch a task
+    * per small file.
+    */
+  private def slices(regions: Vector[Region], parallelism: Int): Array[InputPartition] = {
+    val n = regions.length
+    val k = math.min(n, parallelism)
+    Array.tabulate[InputPartition](k)(i =>
+      RegionSlice(regions.slice((i.toLong * n / k).toInt, ((i + 1L) * n / k).toInt)))
+  }
+
+  /** The reader of every scan: a [[SliceReader]] writing `columns`. */
+  private def readerFactory(columns: StructType, bank: Broadcast[PatternBank],
+                            conf: Broadcast[SerializableWritable[Configuration]]): PartitionReaderFactory = {
+    val fields = SpanRowWriter.fieldIds(columns)
+    (p: InputPartition) => new SliceReader(p.asInstanceOf[RegionSlice].regions, bank.value,
+      conf.value.value, fields)
+  }
+
+  /** The stream's `logfiles` table — its own scan builder and scan: the
+    * `.log` files arriving in `dir`, in the [[LogEvent]] columns only (Spark
+    * never prunes a micro-batch scan), read by a [[LogStream]].
+    */
+  private final class StreamTable(spark: SparkSession, dir: String, maxFiles: Int, chunkBytes: Long,
+                                  bank: Broadcast[PatternBank])
+      extends Table with SupportsRead with ScanBuilder with Scan {
+    private val conf = confOf(spark)
+    override def name(): String = "logfiles"
+    override def schema(): StructType = eventSchema
+    override def capabilities(): java.util.Set[TableCapability] =
+      java.util.EnumSet.of(TableCapability.MICRO_BATCH_READ)
+    override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = this
+    override def build(): Scan = this
+    override def readSchema(): StructType = eventSchema
+    override def description(): String = s"LogFiles *.log arriving in $dir"
+    override def toMicroBatchStream(checkpoint: String): MicroBatchStream = new LogStream(checkpoint)
+
+    /** The micro-batch stream. An offset counts the files admitted so far.
+      * Each batch's files are logged under the query's checkpoint, keyed by
+      * the batch's end offset, before that offset is returned: on restart a
+      * logged file is never admitted again, and a batch logged beyond the
+      * offset the query restarts from is admitted again with exactly its
+      * files. New files are admitted oldest modification time first, as
+      * Spark's file source admits them, up to the read limit's file count.
+      * A checkpoint this stream did not write — one of the earlier stream
+      * that read through Spark's binary-file source, whose offsets were
+      * `{"logOffset":N}` — fails with a message that says so.
+      */
+    private final class LogStream(checkpoint: String) extends MicroBatchStream with SupportsAdmissionControl {
+      private def notOurs(cause: Throwable) = new IllegalStateException(s"checkpoint $checkpoint was not " +
+        "written by this .log stream (one of the eventsStream that read through Spark's binary-file source " +
+        "cannot be resumed)", cause)
+      private val log = new HDFSMetadataLog[Array[InputFile]](spark, checkpoint)
+      private val batches = collection.mutable.TreeMap(
+        (try log.get(None, None) catch { case NonFatal(e) => throw notOurs(e) }).toSeq: _*)
+      /** Spark plans a batch's partitions once per copy of its scan node: the chunk-index job runs once. */
+      private val planned = collection.mutable.Map.empty[(Long, Long), Array[InputPartition]]
+      override def initialOffset(): Offset = LongOffset(0L)
+      override def deserializeOffset(json: String): Offset =
+        LongOffset(json.toLongOption.getOrElse(throw notOurs(null)))
+      override def getDefaultReadLimit: ReadLimit = ReadLimit.maxFiles(maxFiles)
+      override def latestOffset(): Offset = throw new UnsupportedOperationException("needs a read limit")
+      override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+        val from = start.json.toLong
+        batches.keysIteratorFrom(from + 1).nextOption().map(LongOffset(_)).getOrElse {
+          val seen = batches.values.flatten.map(_.path).toSet
+          val admitted = resolveFiles(spark, dir, nested = false)
+            .filter(f => f.path.endsWith(".log") && !seen(f.path)).sortBy(f => (f.mtime, f.path))
+            .take(limit match { case m: ReadMaxFiles => m.maxFiles; case _ => Int.MaxValue }).toArray
+          val end = from + admitted.length
+          if (admitted.nonEmpty) { log.add(end, admitted); batches(end) = admitted }
+          LongOffset(end)
+        }
+      }
+      override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
+        planned.getOrElseUpdate((start.json.toLong, end.json.toLong), slices(
+          regions(batches.range(start.json.toLong + 1, end.json.toLong + 1).values.flatten.toSeq),
+          spark.sparkContext.defaultParallelism))
+
+      /** A batch's regions: a file larger than `chunkBytes` split by one
+        * chunk-index job over all such files, every other file — every file,
+        * when the bank is unsafe to split — one whole-file region.
+        */
+      private def regions(files: Seq[InputFile]): Vector[Region] = {
+        val splittable = splitBlocker(bank.value).isEmpty
+        val (big, small) = files.partition(f => splittable && !f.compressed && f.len > chunkBytes)
+        small.map(wholeFile).toVector ++ (if (big.isEmpty) Nil
+          else regionsOf(indexOf(spark, big, bank, chunkBytes).collect().toSeq))
+      }
+
+      override def createReaderFactory(): PartitionReaderFactory = readerFactory(eventSchema, bank, conf)
+      override def commit(end: Offset): Unit = planned.clear()
+      override def stop(): Unit = ()
     }
   }
 
   private final case class RegionSlice(regions: Seq[Region]) extends InputPartition
 
-  /** Reads a slice's regions one after another, one region's bytes at a time. */
+  /** Reads a slice's regions one after another, one region's bytes at a
+    * time, each numbered from its prefix-sum offsets: global event indices
+    * and line numbers.
+    */
   private final class SliceReader(regions: Seq[Region], bank: PatternBank, conf: Configuration,
                                   fields: Array[Int]) extends PartitionReader[InternalRow] {
     private var i = 0
@@ -652,7 +696,8 @@ object LogFiles {
     override def next(): Boolean = {
       while (rows == null || !rows.next()) {
         if (i == regions.length) return false
-        rows = regionRows(regions(i), bank, conf, fields)
+        val r = regions(i)
+        rows = new EventRows(r.file, readRegion(r, conf), bank, r.eventIdxOffset, r.lineOffset, fields)
         i += 1
       }
       true

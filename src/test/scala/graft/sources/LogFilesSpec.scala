@@ -260,6 +260,62 @@ class LogFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
       chunkBytes = 4096).collect())
     assert(splitAll.keySet == wholeAll.keySet && splitAll.keySet.size == 8)
     splitAll.keySet.foreach(f => assert(splitAll(f) == wholeAll(f), s"glob diverged in $f"))
+
+    // lossless bytes on every entry point, over inputs written as raw bytes:
+    // non-ASCII and invalid UTF-8, \r\n line ends, delimiter-only lines, and
+    // in seed 12 a line longer than 1 MB
+    (9 to 12).foreach { seed =>
+      var h = graft.pipeline.Rng.mix(seed.toLong)
+      def next(bound: Int): Int = { h = graft.pipeline.Rng.mix(h); graft.pipeline.Rng.bounded(h, bound) }
+      val out = new java.io.ByteArrayOutputStream()
+      def put(s: String): Unit = out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      (0 until 200 + next(300)).foreach { i =>
+        val eol = if (next(3) == 0) "\r\n" else "\n"
+        next(8) match {
+          case 0 => put(" \t:,!;%".substring(next(7)) + eol) // delimiter-only line
+          case 1 => // non-ASCII text, then bytes that are not UTF-8
+            put(s"caf\u00e9 \u65e5\u672c \u00fc $i ")
+            out.write(Array(0xc3, 0xff, 0x80, 0xe6, 0x97).map(_.toByte))
+            put(eol)
+          case 2 => put("x" + "word ".repeat(next(40)) + eol)
+          case _ =>
+            put(f"2015-03-23 ${next(24)}%02d:${next(60)}%02d:${next(60)}%02d,${next(1000)}%03d ")
+            put((if (next(5) == 0) "ERROR" else "INFO") + s" [t-${next(9)}] \u00e9v\u00e9nement $i" + eol)
+        }
+      }
+      if (seed == 12) put("x" * ((1 << 20) + 100) + "\n")
+      java.nio.file.Files.write(dir.resolve(s"bytes-$seed.log"), out.toByteArray)
+    }
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{array_join, col, hex, lit, transform}
+    def name(f: String) = f.substring(f.lastIndexOf('/') + 1)
+    val fileBytes = java.nio.file.Files.list(dir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .map(f => f.getFileName.toString -> java.nio.file.Files.readAllBytes(f)).toMap
+    val whole = LogFiles.events(spark, s"$dir/*.log", bank).toDF()
+    // the memory sink keeps rows as decoded Strings, so the stream hands it the text's bytes
+    val q = LogFiles.eventsStream(spark, dir.toString, bank, chunkBytes = 4096)
+      .withColumn("text", col("text").cast("binary"))
+      .writeStream.format("memory").queryName("log_events_lossless").start()
+    try q.processAllAvailable() finally q.stop()
+    val streamed = spark.table("log_events_lossless")
+    Seq("events" -> whole, "eventsStream" -> streamed,
+        "eventsSplit" -> LogFiles.eventsSplit(spark, s"$dir/*.log", bank, chunkBytes = 4096).toDF())
+      .foreach { case (entry, df) =>
+        val got = df.select(col("file"), col("event_idx"), col("text").cast("binary")).collect()
+          .groupBy(r => name(r.getString(0)))
+          .map { case (f, rs) => f -> rs.sortBy(_.getInt(1)).flatMap(_.getAs[Array[Byte]](2)) }
+        assert(got.keySet == fileBytes.keySet && got.size == 12, s"$entry: ${got.keySet}")
+        got.foreach { case (f, b) => assert(java.util.Arrays.equals(b, fileBytes(f)), s"$entry: $f") }
+      }
+    def rows(df: DataFrame) = df.withColumn("text", hex(col("text").cast("binary"))).collect()
+      .map(_.toSeq).sortBy(r => (r(0).toString, r(1).toString.toInt)).toSeq
+    assert(rows(streamed) == rows(whole))
+    // parse_turn over the same texts as strings: its token values are the text's bytes
+    val parsed = whole.select(col("text").cast("binary").as("bin"))
+      .select(col("bin"), graft.functions.ParseTurnExpression.parse_turn(col("bin").cast("string"),
+        lit(null).cast("string"), lit(null).cast("string"), bank.value).as("p"))
+    assert(parsed.filter(array_join(transform(col("p.tokens"), t => t("value")), "").cast("binary")
+      =!= col("bin")).count() == 0)
   }
 
   test("ERROR events are categorized and templated") {

@@ -281,4 +281,145 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"stream-split rows=${got.length} batch rows=${want.length}")
     } finally q.stop()
   }
+
+  /** Moves `content` into `dir` as `name` the way the file-source contract
+    * asks: written complete elsewhere, then moved in.
+    */
+  private def moveLogIn(dir: String, name: String, content: Array[Byte]): Unit = {
+    val tmp = java.nio.file.Paths.get(dir, s".$name.tmp")
+    java.nio.file.Files.write(tmp, content)
+    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(dir, name),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  private def fixture(name: String): Array[Byte] = {
+    val in = getClass.getResourceAsStream(s"/$name")
+    try in.readAllBytes() finally in.close()
+  }
+
+  /** Runs the `.log` stream over `dir` into a parquet sink until it is idle, then stops it. */
+  private def drainLogStream(dir: String, out: String, ckpt: String): Unit = {
+    val bank = spark.sparkContext.broadcast(PatternBank.example)
+    val q = graft.sources.LogFiles.eventsStream(spark, dir, bank, maxFilesPerTrigger = 1)
+      .writeStream.format("parquet").option("checkpointLocation", ckpt).start(out)
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  /** The sink's events, each once, equal the batch events over `dir`'s files. */
+  private def assertSinkEqualsBatch(dir: String, out: String, nFiles: Int): Unit = {
+    import spark.implicits._
+    import graft.sources.LogFiles.LogEvent
+    val bank = spark.sparkContext.broadcast(PatternBank.example)
+    val got = spark.read.parquet(out).as[LogEvent].collect().toSeq.sortBy(e => (e.file, e.event_idx))
+    val want = graft.sources.LogFiles.events(spark, s"$dir/*.log", bank).collect().toSeq
+      .sortBy(e => (e.file, e.event_idx))
+    assert(got.map(e => (e.file, e.event_idx)).distinct.length == got.length, "an event landed twice")
+    assert(got == want, s"sink rows=${got.length} batch rows=${want.length}")
+    assert(got.map(_.file).distinct.length == nFiles)
+  }
+
+  // a `_`-prefixed stream directory is read like any other: only entries
+  // below it are hidden, as Spark's file stream hides them
+  for (dirPrefix <- Seq("graft-logstream-restart", "_graft-logstream-restart"))
+    test(s"the .log stream restarts from its checkpoint: each file is read exactly once ($dirPrefix)") {
+      val dir = graft.pipeline.Staging.tempDirDeletedOnExit(dirPrefix)
+      val out = graft.pipeline.Staging.tempDirDeletedOnExit("graft-logstream-restart-out")
+      val ckpt = graft.pipeline.Staging.tempDirDeletedOnExit("graft-logstream-restart-ckpt")
+      moveLogIn(dir, "a.log", fixture("hive-24h.log"))
+      drainLogStream(dir, out, ckpt)
+      // a new query on the same checkpoint: a.log was admitted, only b.log is new
+      moveLogIn(dir, "b.log", fixture("hive-24h_large.log"))
+      drainLogStream(dir, out, ckpt)
+      assertSinkEqualsBatch(dir, out, nFiles = 2)
+    }
+
+  test("the .log stream rejects a non-positive maxFilesPerTrigger and a checkpoint it did not write") {
+    val dir = graft.pipeline.Staging.tempDirDeletedOnExit("graft-logstream-reject")
+    val bank = spark.sparkContext.broadcast(PatternBank.example)
+    for (n <- Seq(0, -1))
+      intercept[IllegalArgumentException](graft.sources.LogFiles.eventsStream(spark, dir, bank, n))
+
+    // the file log the earlier stream, read through Spark's binary-file
+    // source, kept under sources/0
+    // (Spark's FileStreamSourceLog, format v1)
+    val ckpt = graft.pipeline.Staging.tempDirDeletedOnExit("graft-logstream-reject-ckpt")
+    val sourceLog = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(ckpt, "sources", "0"))
+    java.nio.file.Files.write(sourceLog.resolve("0"),
+      s"""v1\n{"path":"file://$dir/a.log","timestamp":1,"batchId":0}""".getBytes("UTF-8"))
+    moveLogIn(dir, "a.log", fixture("hive-24h.log"))
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      drainLogStream(dir, graft.pipeline.Staging.tempDirDeletedOnExit("graft-logstream-reject-out"), ckpt))
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage).toSeq
+    assert(messages.exists(m => m != null && m.contains("binary-file source")), messages.mkString("\n"))
+  }
+
+  test("the .log stream replays a batch its own log holds beyond the query's last offset") {
+    val dir = graft.pipeline.Staging.tempDirDeletedOnExit("graft-logstream-replay")
+    val out = graft.pipeline.Staging.tempDirDeletedOnExit("graft-logstream-replay-out")
+    val ckpt = graft.pipeline.Staging.tempDirDeletedOnExit("graft-logstream-replay-ckpt")
+    moveLogIn(dir, "a.log", fixture("hive-24h.log"))
+    moveLogIn(dir, "b.log", fixture("hive-24h_large.log"))
+    drainLogStream(dir, out, ckpt)
+    // as if the query died after the source admitted batch 1 but before the
+    // query logged its offsets: batch 1 must admit b.log again, not c.log
+    for (d <- Seq("offsets", "commits"); f <- Seq("1", ".1.crc"))
+      java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(ckpt, d, f))
+    moveLogIn(dir, "c.log", fixture("hive-24h.log"))
+    drainLogStream(dir, out, ckpt)
+    assertSinkEqualsBatch(dir, out, nFiles = 3)
+  }
+
+  test("the .log stream plans a big file like the batch split: parallel regions, no shuffle, no tokens") {
+    import org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val dir = graft.pipeline.Staging.tempDirDeletedOnExit("graft-logstream-plan")
+    val bank = spark.sparkContext.broadcast(PatternBank.example)
+    val tmp = java.nio.file.Paths.get(dir, ".big.log.tmp")
+    graft.datagen.SyntheticLogs.writeLog(tmp, 8)
+    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(dir, "big.log"),
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+
+    // building the stream's Dataset runs no job, and its one micro-batch runs
+    // two: the chunk-index job and the write. Listener events arrive in
+    // order, so once a marker job is seen every earlier job has been seen.
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    def jobsBefore(marker: String): Seq[String] = {
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!started.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(started.contains(marker))
+      val before = started.toArray(Array.empty[String]).toSeq.takeWhile(_ != marker)
+      started.clear()
+      before
+    }
+    sc.addSparkListener(listener)
+    try {
+      val stream = graft.sources.LogFiles.eventsStream(spark, dir, bank,
+        maxFilesPerTrigger = 1, chunkBytes = 256L << 10)
+      assert(jobsBefore("built").isEmpty, "jobs ran while the stream was built")
+      assert(!stream.schema.fieldNames.contains("tokens"))
+
+      val q = stream.writeStream.format("memory").queryName("log_events_plan").start()
+      try {
+        q.processAllAvailable()
+        val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+          .streamingQuery.lastExecution.executedPlan
+        val scans = plan.collect { case s: MicroBatchScanExec => s }
+        assert(scans.length == 1, plan.toString)
+        assert(scans.head.scan.description().startsWith("LogFiles"), plan.toString)
+        assert(scans.head.inputPartitions.length >= 2, plan.toString)
+        assert(!scans.head.output.map(_.name).contains("tokens"), plan.toString)
+        assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty, plan.toString)
+      } finally q.stop()
+      val batchJobs = jobsBefore("drained")
+      assert(batchJobs.length == 2, s"the micro-batch ran ${batchJobs.length} jobs")
+    } finally sc.removeSparkListener(listener)
+  }
 }
