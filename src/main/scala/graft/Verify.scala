@@ -1,10 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import graft.datagen.SyntheticTranscripts
 import graft.lexer.PatternBank
 import graft.pipeline.Parse
+import graft.sources.LogFiles
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. Also stages the
@@ -146,16 +147,20 @@ object Verify {
     }
   }
 
-  /** Stage the WHOLE-FILE-path event stats of the deterministic l1 log
-    * file: the independent twin of the l1 query's split path (one region
-    * per file — no chunk scan / boundary repair / region offsets; the
-    * shared lexer kernel is checked against the char oracle in
-    * LogFilesKernelSpec), re-read by the l1 oracle SQL in DuckDB.
+  /** Stage the event stats of the deterministic l1 log file, parsed whole
+    * on the driver: the independent twin of the l1 query's split path, re-read
+    * by the l1 oracle SQL in DuckDB. It runs the row kernel
+    * ([[graft.sources.LogFiles.eventsOf]]) over the file's bytes — no scan,
+    * no regions, no chunk index, no boundary repair — so it stays independent
+    * of region planning at every scale factor; the kernel itself is checked
+    * against the char oracle in LogFilesKernelSpec. It avoids
+    * `LogFiles.events`, whose planner splits a file larger than its chunk
+    * size: the sf0.1 l1 file is 16 MiB plus one line.
     */
   def stageLogEvents(spark: SparkSession, sfDir: String, stagedDir: String): Unit = {
-    val bank = Parse.broadcastBank(spark, PatternBank.example)
-    graft.sources.LogFiles.eventStats(
-        graft.sources.LogFiles.events(spark, SparkEntry.l1LogPath(sfDir), bank))
+    val file = SparkEntry.l1LogPath(sfDir)
+    val events = LogFiles.eventsOf(file, Files.readString(Paths.get(file)), PatternBank.example).toVector
+    LogFiles.eventStats(spark.createDataset(events)(Encoders.product[LogFiles.LogEvent]))
       .coalesce(1).write.mode("overwrite").parquet(s"$stagedDir/logevents")
   }
 

@@ -41,10 +41,14 @@ import graft.pipeline.TokenRow
   *     directories expanded to their files, hidden and empty files skipped);
   *     the stream lists its directory once per trigger and admits the new
   *     files ([[LogStream]]);
-  *  1. each file becomes one or more [[Region]]s: a byte range starting at
-  *     an event boundary, with the event index and line number it starts at
-  *     — one whole-file region, or the regions [[regionsOf]] repairs from a
-  *     chunk index ([[indexOf]]);
+  *  1. when the scan is planned, [[planRegions]] turns each file into
+  *     [[Region]]s — byte ranges starting at an event boundary, with the
+  *     event index and line number they start at — by one size rule: a file
+  *     larger than the chunk size is split (CLP-style: one chunk-index job,
+  *     [[indexOf]], whose chunks scan in parallel tasks, and boundary repair
+  *     at the first event-start line after each split, [[regionsOf]]) unless
+  *     it is compressed or the bank is unsafe to split; every other file is
+  *     one whole-file region;
   *  1. the regions are sliced into input partitions ([[slices]]),
   *     and a task reads each region's bytes and lexes them with
   *     [[graft.lexer.ByteTokenizer]], one event at a time, writing each
@@ -52,21 +56,18 @@ import graft.pipeline.TokenRow
   *     [[graft.functions.SpanRowWriter]] `parse_turn` writes its rows
   *     with: an event's fields are `parse_turn`'s over its spans.
   *
-  * A batch scan gets Catalyst's column pruning (a `count()` writes empty
-  * rows, and the token array is written only when selected); the physical
-  * plan names its files, and building a plan runs no Spark job. The
-  * `Dataset[LogEvent]` every entry point returns is a typed view over those
-  * rows; only [[eventsOf]] decodes them to objects.
-  *
-  * [[events]] and [[eventsWithTokens]] parse one whole-file region per file:
-  * the unit of parallelism is the FILE, matching how log pipelines shard in
-  * practice (event boundaries never cross files, so no fix-up shuffle is
-  * needed), and a compressed file (any Hadoop codec suffix, e.g. `.log.gz`)
-  * is decompressed whole. For multi-GB files that would pin one task,
-  * [[eventsSplit]] adds WITHIN-FILE parallelism: CLP-style chunking with
-  * boundary repair at the first event-start line after each split,
-  * producing identical events. [[eventsStream]] chooses between the two per
-  * arriving file. Lexing is lossless (`concat(event texts) == file bytes`,
+  * The entry points differ only in the chunk size and the checks: [[events]]
+  * and [[eventsWithTokens]] split at [[ChunkBytes]] and read what cannot be
+  * split whole (a compressed file, any Hadoop codec suffix such as
+  * `.log.gz`, is decompressed whole); [[eventsSplit]] takes the chunk size
+  * and rejects input it cannot split; [[eventsStream]] plans each
+  * micro-batch's new files. Event indices and line numbers are file-local,
+  * so every plan gives the same events. A batch scan gets Catalyst's column
+  * pruning (a `count()` writes empty rows, and the token array is written
+  * only when selected); the physical plan names its files, and building a
+  * plan runs no Spark job. The `Dataset[LogEvent]` every entry point
+  * returns is a typed view over those rows; only [[eventsOf]] decodes them
+  * to objects. Lexing is lossless (`concat(event texts) == file bytes`,
   * asserted in tests), and every entry point names a file by its Hadoop
   * `Path.toString` (`file:/logs/a b/x.log`, not URI-encoded).
   */
@@ -101,19 +102,23 @@ object LogFiles {
     */
   final case class LogEventWithTokens(event: LogEvent, tokens: Seq[TokenRow])
 
-  /** Parse every file matching `pathGlob` into events. */
+  /** The chunk size of every entry point that does not take one. */
+  private val ChunkBytes = 16L << 20
+
+  /** Parse every file matching `pathGlob` into events. A file larger than
+    * [[ChunkBytes]] is split as [[eventsSplit]] splits it, so a multi-GB
+    * file spreads over tasks instead of pinning one; a compressed file, and
+    * every file when the bank is unsafe to split, is read whole.
+    */
   def events(spark: SparkSession, pathGlob: String,
-             bank: Broadcast[PatternBank]): Dataset[LogEvent] = {
-    val regions = resolveFiles(spark, pathGlob).map(wholeFile)
-    typedEvents(spark, eventRows(spark, () => regions, bank))
-  }
+             bank: Broadcast[PatternBank]): Dataset[LogEvent] =
+    typedEvents(spark, planned(spark, resolveFiles(spark, pathGlob), bank, ChunkBytes))
 
   /** [[events]] with the per-event token array attached. */
   def eventsWithTokens(spark: SparkSession, pathGlob: String,
                        bank: Broadcast[PatternBank]): Dataset[LogEventWithTokens] = {
     import spark.implicits._
-    val regions = resolveFiles(spark, pathGlob).map(wholeFile)
-    eventRows(spark, () => regions, bank)
+    planned(spark, resolveFiles(spark, pathGlob), bank, ChunkBytes)
       .select(struct(eventSchema.fieldNames.map(col).toSeq: _*).as("event"), col("tokens"))
       .as[LogEventWithTokens]
   }
@@ -132,22 +137,23 @@ object LogFiles {
     * admits it, also across restarts. The checkpoint's offsets are file
     * counts: a checkpoint of the earlier stream, which read through Spark's
     * binary-file source, cannot be resumed, and the query fails on it with a
-    * message that says so. In a micro-batch a file larger than `chunkBytes`
-    * is split as [[eventsSplit]] splits it — one chunk-index job whose chunks
-    * scan in parallel tasks, regions repaired from the collected index — and
-    * every other file (every file, when the bank fails [[chunkIndex]]'s
-    * newline-safety preconditions) is one whole-file region. Event indices
-    * and line numbers are file-local, so the stream's events equal
-    * [[events]]' (StreamingSpec). Spark plans a micro-batch scan without
-    * column pruning, so the stream's table has the [[LogEvent]] columns
-    * only: a `tokens` column would be written for every event. Building the
-    * Dataset runs no Spark job. Files must arrive complete (the file-source
-    * contract: write elsewhere, move in).
+    * message that says so. A micro-batch's files are planned by the size
+    * rule of every entry point ([[planRegions]]): a file larger than
+    * `chunkBytes` is split by one chunk-index job, every other file — and a
+    * compressed file, or every file when the bank is unsafe to split — is
+    * one whole-file region. Event indices and line numbers are file-local,
+    * so the stream's events equal [[events]]' (StreamingSpec). Spark plans a
+    * micro-batch scan without column pruning, so the stream's table has the
+    * [[LogEvent]] columns only: a `tokens` column would be written for every
+    * event. Building the Dataset lists `dir` (a missing directory fails
+    * here with a `FileNotFoundException`) and runs no Spark job. Files must
+    * arrive complete (the file-source contract: write elsewhere, move in).
     */
   def eventsStream(spark: SparkSession, dir: String, bank: Broadcast[PatternBank],
-                   maxFilesPerTrigger: Int = 4, chunkBytes: Long = 16L << 20): Dataset[LogEvent] = {
+                   maxFilesPerTrigger: Int = 4, chunkBytes: Long = ChunkBytes): Dataset[LogEvent] = {
     require(chunkBytes >= 4096, s"chunkBytes too small: $chunkBytes")
     require(maxFilesPerTrigger > 0, s"maxFilesPerTrigger must be positive: $maxFilesPerTrigger")
+    resolveFiles(spark, dir, nested = false) // a missing directory fails here, not at the first trigger
     val table = new StreamTable(spark, dir, maxFilesPerTrigger, chunkBytes, bank)
     typedEvents(spark, GraftBridge.ofRows(spark, StreamingRelationV2(None, table.name(), table,
       CaseInsensitiveStringMap.empty(), DataTypeUtils.toAttributes(eventSchema), None, None, None)))
@@ -155,7 +161,7 @@ object LogFiles {
 
   // ------------------------------------------------------------------ //
   // Within-file split: the CLP-style chunk + boundary-repair path for    //
-  // files too large for one task (the extension point noted above).      //
+  // files larger than the chunk size.                                    //
   // ------------------------------------------------------------------ //
 
   /** Phase-1 metadata for one byte chunk `[start, end)` of a file: where
@@ -181,31 +187,33 @@ object LogFiles {
       file: String, start: Long, end: Long,
       eventIdxOffset: Long, lineOffset: Long, compressed: Boolean = false)
 
-  /** Parse files matching `pathGlob` into events with WITHIN-FILE
-    * parallelism: files are cut into `chunkBytes` ranges, a cheap
+  /** [[events]] with the chunk size given and the split checked: every
+    * file larger than `chunkBytes` is cut into `chunkBytes` ranges, a cheap
     * distributed index pass finds event-start lines (a line start where the
     * timestamp DFA accepts — the same test `tokenize` applies) and newline
     * counts per chunk, the driver prefix-sums chunk metadata into repaired
     * regions (each starting at an event boundary), and a second distributed
-    * pass lexes each region independently. Event output is IDENTICAL to
-    * [[events]] (asserted in tests) — same events, same global event_idx
-    * and line numbers — but a multi-GB file now spreads over
-    * size/chunkBytes tasks instead of pinning one.
+    * pass lexes each region independently; a file of at most `chunkBytes` is
+    * one whole-file region, lexed once and never indexed ([[planRegions]]).
+    * Event output is IDENTICAL to [[events]] (asserted in tests) — same
+    * events, same global event_idx and line numbers — and a multi-GB file
+    * spreads over size/chunkBytes tasks.
     *
     * Scale notes: the index pass is an IO-bound byte scan (DFA probes only
     * at line starts); at very large scale, persist its output like CLP
-    * persists its archive index instead of re-deriving per job. Driver
-    * memory holds one small ChunkMeta per chunk — size chunkBytes so
-    * files/chunkBytes stays ~10⁵–10⁶ (the same regime as Spark's own
-    * driver-side file-split planning). Soundness preconditions (checked):
-    * '\n' is a delimiter and neither the timestamp nor the variable DFA can
-    * consume '\n' — split points are line starts, so a newline-swallowing
-    * token could hide an event boundary (and a newline) from the index pass.
-    * A compressed file has no byte-addressable lines and is rejected.
+    * persists its archive index ([[chunkIndex]]) instead of re-deriving per
+    * job. Driver memory holds one small ChunkMeta per chunk — size
+    * chunkBytes so files/chunkBytes stays ~10⁵–10⁶ (the same regime as
+    * Spark's own driver-side file-split planning). Soundness preconditions
+    * (checked when the Dataset is built, like `chunkBytes` ≥ 4096): '\n' is
+    * a delimiter and neither the timestamp nor the variable DFA can consume
+    * '\n' — split points are line starts, so a newline-swallowing token
+    * could hide an event boundary (and a newline) from the index pass. A
+    * compressed file has no byte-addressable lines and is rejected.
     */
   def eventsSplit(spark: SparkSession, pathGlob: String, bank: Broadcast[PatternBank],
-                  chunkBytes: Long = 16L << 20): Dataset[LogEvent] =
-    eventsFromIndex(spark, chunkIndex(spark, pathGlob, bank, chunkBytes), bank)
+                  chunkBytes: Long = ChunkBytes): Dataset[LogEvent] =
+    typedEvents(spark, planned(spark, splittableFiles(spark, pathGlob, bank, chunkBytes), bank, chunkBytes))
 
   /** Phase 1 as a first-class, PERSISTABLE artifact: the chunk index — one
     * slim row per `chunkBytes` range of each matched file (event-start
@@ -217,27 +225,55 @@ object LogFiles {
     * archive and reuse it for the file's lifetime (raw logs are immutable).
     */
   def chunkIndex(spark: SparkSession, pathGlob: String, bank: Broadcast[PatternBank],
-                 chunkBytes: Long = 16L << 20): Dataset[ChunkMeta] = {
+                 chunkBytes: Long = ChunkBytes): Dataset[ChunkMeta] =
+    indexOf(spark, splittableFiles(spark, pathGlob, bank, chunkBytes), bank, chunkBytes)
+
+  /** The files `pathGlob` matches, after the checks of an explicit split:
+    * a bank safe to split, `chunkBytes` ≥ 4096, no compressed file.
+    */
+  private def splittableFiles(spark: SparkSession, pathGlob: String, bank: Broadcast[PatternBank],
+                              chunkBytes: Long): Seq[InputFile] = {
     splitBlocker(bank.value).foreach(need =>
       throw new IllegalArgumentException(s"within-file split requires $need; use events() instead"))
     require(chunkBytes >= 4096, s"chunkBytes too small: $chunkBytes")
-    val files = resolveFiles(spark, pathGlob)
-    files.find(_.compressed).foreach(f => throw new IllegalArgumentException(
+    resolveFiles(spark, pathGlob).tapEach(f => if (f.compressed) throw new IllegalArgumentException(
       s"within-file split cannot byte-split the compressed file ${f.path}; use events() instead"))
-    indexOf(spark, files, bank, chunkBytes)
   }
 
-  /** The chunk-index job of [[chunkIndex]] and the stream: one [[scanChunk]]
-    * per `chunkBytes` range of `files`, the ranges scanned by parallel tasks.
+  /** The region planner of every entry point, run when a scan is planned:
+    * a file larger than `chunkBytes` is split — one chunk-index job
+    * ([[indexOf]]) over all such files, regions repaired from the collected
+    * index ([[regionsOf]]) — unless it is compressed or the bank is unsafe
+    * to split ([[splitBlocker]]); every other file is one whole-file region.
+    * A file of at most `chunkBytes` is one chunk, and chunk 0 starts an
+    * event at offset 0, so its one index region would be the whole file:
+    * indexing it would only read it twice. Regions come in (file, start)
+    * order.
+    */
+  private def planRegions(spark: SparkSession, files: Seq[InputFile], bank: Broadcast[PatternBank],
+                          chunkBytes: Long): Vector[Region] = {
+    val (big, small) = files.partition(f => !f.compressed && f.len > chunkBytes && splitBlocker(bank.value).isEmpty)
+    val split = if (big.isEmpty) Nil else regionsOf(indexOf(spark, big, bank, chunkBytes).collect().toSeq)
+    (small.map(f => Region(f.path, 0L, f.len, 0L, 0L, f.compressed)) ++ split).toVector.sortBy(r => (r.file, r.start))
+  }
+
+  /** The rows of `files`, in the regions [[planRegions]] plans for them
+    * when the query is planned.
+    */
+  private def planned(spark: SparkSession, files: Seq[InputFile], bank: Broadcast[PatternBank],
+                      chunkBytes: Long): DataFrame =
+    eventRows(spark, () => planRegions(spark, files, bank, chunkBytes), bank)
+
+  /** The chunk-index job of [[chunkIndex]] and [[planRegions]]: one
+    * [[scanChunk]] per `chunkBytes` range of `files`, the ranges scanned by
+    * parallel tasks.
     */
   private def indexOf(spark: SparkSession, files: Seq[InputFile], bank: Broadcast[PatternBank],
                       chunkBytes: Long): Dataset[ChunkMeta] = {
     import spark.implicits._
     val conf = confOf(spark)
-    val chunks = files.flatMap { f =>
-      val n = ((f.len + chunkBytes - 1) / chunkBytes).toInt
-      (0 until n).map(i => (f.path, i, i * chunkBytes, math.min(f.len, (i + 1) * chunkBytes), f.len))
-    }
+    val chunks = files.flatMap(f => (0L until f.len by chunkBytes).zipWithIndex
+      .map { case (s, i) => (f.path, i, s, math.min(f.len, s + chunkBytes), f.len) })
     spark.createDataset(chunks)
       .map { case (path, idx, s, e, len) => scanChunk(path, idx, s, e, len, bank.value, conf.value.value) }
   }
@@ -265,9 +301,9 @@ object LogFiles {
     else None
 
   /** Prefix-sum each file's chunk metas into repaired parse regions, in
-    * (file, start) order — the boundary-repair core of every split: the
-    * batch one ([[eventsFromIndex]]) and the stream's, both driver-side over
-    * a collected index.
+    * (file, start) order — the boundary-repair core of every split: a
+    * persisted index's ([[eventsFromIndex]]) and [[planRegions]]', both
+    * driver-side over a collected index.
     */
   private[sources] def regionsOf(ms: Seq[ChunkMeta]): Vector[Region] =
     ms.groupBy(_.file).toVector.sortBy(_._1).flatMap { case (file, fileMetas) =>
@@ -322,8 +358,6 @@ object LogFiles {
       .toSeq.sortBy(_.path)
   }
 
-  private def wholeFile(f: InputFile): Region = Region(f.path, 0L, f.len, 0L, 0L, f.compressed)
-
   /** Executor-side reads must see the SESSION's Hadoop conf (credentials,
     * endpoints, defaultFS) — a fresh Configuration() would silently limit
     * the source to conf-free filesystems. It ships as a broadcast, as
@@ -333,14 +367,14 @@ object LogFiles {
   private def confOf(spark: SparkSession): Broadcast[SerializableWritable[Configuration]] =
     spark.sparkContext.broadcast(new SerializableWritable(spark.sparkContext.hadoopConfiguration))
 
-  /** The row source over the regions `planRegions` yields when the query
-    * is planned: a DSv2 relation built directly, since the bank is an
-    * object, not a string option.
+  /** The row source over the regions `plan` yields when the query is
+    * planned: a DSv2 relation built directly, since the bank is an object,
+    * not a string option.
     */
-  private def eventRows(spark: SparkSession, planRegions: () => Seq[Region],
+  private def eventRows(spark: SparkSession, plan: () => Seq[Region],
                         bank: Broadcast[PatternBank]): DataFrame =
     GraftBridge.ofRows(spark,
-      DataSourceV2Relation.create(new EventTable(planRegions, bank, confOf(spark),
+      DataSourceV2Relation.create(new EventTable(plan, bank, confOf(spark),
         spark.sparkContext.defaultParallelism), None, None))
 
   private def typedEvents(spark: SparkSession, rows: DataFrame): Dataset[LogEvent] = {
@@ -548,11 +582,11 @@ object LogFiles {
   }
 
   /** The DSv2 `logfiles` table of the batch entry points: one row per
-    * event in [[rowSchema]], over the regions `planRegions` yields — called
-    * once per planned scan, so a chunk index is collected when the query
-    * runs, never while it is built.
+    * event in [[rowSchema]], over the regions `plan` yields — called once
+    * per planned scan, so a chunk index is collected when the query runs,
+    * never while it is built.
     */
-  private final class EventTable(val planRegions: () => Seq[Region], val bank: Broadcast[PatternBank],
+  private final class EventTable(val plan: () => Seq[Region], val bank: Broadcast[PatternBank],
                                  val conf: Broadcast[SerializableWritable[Configuration]],
                                  val parallelism: Int)
       extends Table with SupportsRead {
@@ -575,7 +609,7 @@ object LogFiles {
     * writes only the columns the plan reads.
     */
   private final class EventScan(table: EventTable, pruned: StructType) extends Scan with Batch {
-    private lazy val regions = table.planRegions().toVector
+    private lazy val regions = table.plan().toVector
     override def readSchema(): StructType = pruned
     override def description(): String = {
       val files = regions.map(_.file).distinct
@@ -662,20 +696,9 @@ object LogFiles {
         }
       }
       override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-        planned.getOrElseUpdate((start.json.toLong, end.json.toLong), slices(
-          regions(batches.range(start.json.toLong + 1, end.json.toLong + 1).values.flatten.toSeq),
+        planned.getOrElseUpdate((start.json.toLong, end.json.toLong), slices(planRegions(spark,
+          batches.range(start.json.toLong + 1, end.json.toLong + 1).values.flatten.toSeq, bank, chunkBytes),
           spark.sparkContext.defaultParallelism))
-
-      /** A batch's regions: a file larger than `chunkBytes` split by one
-        * chunk-index job over all such files, every other file — every file,
-        * when the bank is unsafe to split — one whole-file region.
-        */
-      private def regions(files: Seq[InputFile]): Vector[Region] = {
-        val splittable = splitBlocker(bank.value).isEmpty
-        val (big, small) = files.partition(f => splittable && !f.compressed && f.len > chunkBytes)
-        small.map(wholeFile).toVector ++ (if (big.isEmpty) Nil
-          else regionsOf(indexOf(spark, big, bank, chunkBytes).collect().toSeq))
-      }
 
       override def createReaderFactory(): PartitionReaderFactory = readerFactory(eventSchema, bank, conf)
       override def commit(end: Offset): Unit = planned.clear()

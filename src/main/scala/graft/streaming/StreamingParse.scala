@@ -3,16 +3,16 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.lexer.PatternBank
 import graft.operators.Dedup
-import graft.pipeline.{Parse, Turn}
+import graft.pipeline.Turn
 
 /** Structured Streaming face of the engine: the reference's pluggable
   * pull-stream input (`src/lexer/lexer_stream.rs:3-5`) maps to `readStream`
-  * over the same transcript table layout; the SAME `parse_turn` expression
-  * the batch pipeline runs is inside the streaming plan, so batch and
-  * streaming parses are equal by construction (asserted in StreamingSpec
-  * against the typed batch oracle `Parse.apply`).
+  * over the same transcript table layout; the stream is parsed by the SAME
+  * `parse_turn` expression the batch pipeline runs (`Parse.expr` over
+  * [[turnsStream]]: micro-batch plans get the whole-stage-codegen kernel
+  * too), so batch and streaming parses are equal by construction (asserted
+  * in StreamingSpec against the typed batch oracle `Parse.apply`).
   */
 object StreamingParse {
 
@@ -25,13 +25,6 @@ object StreamingParse {
       .parquet(dir)
       .as[Turn]
   }
-
-  /** Streaming parse: the same whole-stage-codegen `parse_turn` the batch
-    * pipeline runs ([[Parse.expr]]) — micro-batch plans get the
-    * zero-allocation kernel too.
-    */
-  def parsedStream(turns: DataFrame, bank: PatternBank): DataFrame =
-    Parse.expr(turns, bank)
 
   /** Watermarked tumbling-window per-category counts — the streaming
     * analogue of the route-stage counts.

@@ -395,4 +395,74 @@ class LogFilesSpec extends AnyFunSuite with BeforeAndAfterAll {
       LogFiles.eventsSplit(spark, s"$dir/packed.log.gz", bank))
     assert(onSplit.getMessage.contains("compressed"))
   }
+
+  /** The jobs `body` starts, each as (description, tasks), in start order:
+    * listener events arrive in order, so once a marker job run after `body`
+    * is seen, every job `body` started has been recorded.
+    */
+  private def jobsOf[T](body: => T): (T, Seq[(String, Int)]) = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add((Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""), e.stageInfos.map(_.numTasks).sum))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val result = body
+      sc.setJobDescription("marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!started.toArray.exists(_ == ("marker", 1)) && System.nanoTime() < deadline) Thread.sleep(10)
+      val jobs = started.toArray(Array.empty[(String, Int)]).toSeq
+      assert(jobs.contains(("marker", 1)))
+      (result, jobs.takeWhile(_._1 != "marker"))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("eventsSplit indexes only the files larger than chunkBytes; its events equal events()") {
+    val dir = tempDir("graft-split-plan")
+    val large = resource("hive-24h_large.log")
+    val chunkBytes = 64L << 10
+    // three 64 KiB chunks; the session's 4 cores would run a 4th task if any
+    // other file were indexed too (a local relation runs min(rows, cores) tasks)
+    java.nio.file.Files.writeString(dir.resolve("big.log"), large * 3)
+    val nChunks = ((java.nio.file.Files.size(dir.resolve("big.log")) + chunkBytes - 1) / chunkBytes).toInt
+    assert(nChunks == 3 && spark.sparkContext.defaultParallelism == 4)
+    Seq("a.log" -> "hive-24h.log", "b.log" -> "hive-24h_large.log", "c.log" -> "hive-24h.log")
+      .foreach { case (name, fixture) => java.nio.file.Files.writeString(dir.resolve(name), resource(fixture)) }
+    val bank = spark.sparkContext.broadcast(PatternBank.example)
+    val split = LogFiles.eventsSplit(spark, s"$dir/*.log", bank, chunkBytes)
+    val (got, jobs) = jobsOf {
+      spark.sparkContext.setJobDescription("split")
+      try split.collect() finally spark.sparkContext.setJobDescription(null)
+    }
+    // the chunk-index job first, then the scan
+    assert(jobs.length == 2 && jobs.head == ("split", nChunks), jobs.toString)
+    def rows(evs: Array[LogFiles.LogEvent]) =
+      evs.toSeq.sortBy(e => (e.file, e.event_idx)).map(e => e -> e.text.getBytes("UTF-8").toSeq)
+    val want = LogFiles.events(spark, s"$dir/*.log", bank).collect()
+    assert(got.map(_.file).distinct.length == 4)
+    assert(rows(got) == rows(want))
+  }
+
+  test("events() splits a file larger than its chunk size: no job while built, parallel regions, eventsOf's rows") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val dir = tempDir("graft-events-big")
+    val f = dir.resolve("big.log")
+    graft.datagen.SyntheticLogs.writeLog(f, 17)
+    assert(java.nio.file.Files.size(f) > (16L << 20))
+    val bank = spark.sparkContext.broadcast(PatternBank.example)
+    val (ds, built) = jobsOf(LogFiles.events(spark, f.toString, bank))
+    assert(built.isEmpty, s"${built.length} job(s) ran while building the plan")
+    val scans = ds.queryExecution.executedPlan.collect { case s: BatchScanExec => s }
+    assert(scans.length == 1 && scans.head.inputPartitions.length >= 2, ds.queryExecution.executedPlan)
+    val file = new org.apache.hadoop.fs.Path(f.toUri).toString
+    val want = LogFiles.eventsOf(file, java.nio.file.Files.readString(f), bank.value).toVector
+    val got = ds.collect().sortBy(_.event_idx).toVector
+    assert(got.length == want.length && got.length > 1000)
+    assert(got == want)
+    assert(got.map(_.text).mkString == java.nio.file.Files.readString(f))
+  }
 }

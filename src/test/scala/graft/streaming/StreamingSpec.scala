@@ -30,7 +30,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     SyntheticTranscripts.generate(spark, 80L).repartition(6).write.mode("overwrite").parquet(dir)
     val bank = spark.sparkContext.broadcast(PatternBank.example)
 
-    val stream = StreamingParse.windowedCategoryCounts(StreamingParse.parsedStream(
+    val stream = StreamingParse.windowedCategoryCounts(Parse.expr(
       StreamingParse.turnsStream(spark, dir, maxFilesPerTrigger = 2).toDF(), PatternBank.example))
     val q = stream.writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
@@ -59,7 +59,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ckpt = graft.pipeline.Staging.tempDirDeletedOnExit("graft-stream-route-ckpt")
     SyntheticTranscripts.generate(spark, 60L).repartition(4).write.mode("overwrite").parquet(in)
 
-    val parsed = StreamingParse.parsedStream(
+    val parsed = Parse.expr(
       StreamingParse.turnsStream(spark, in, maxFilesPerTrigger = 2).toDF(), PatternBank.example)
       .select("conv_id", "turn_idx", "category", "n_tokens")
     val q = StreamingParse.routeStream(parsed, out, ckpt)
@@ -81,7 +81,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = graft.pipeline.Staging.tempDirDeletedOnExit("graft-stream-expr")
     SyntheticTranscripts.generate(spark, 40L).repartition(4).write.mode("overwrite").parquet(dir)
 
-    val exprStream = StreamingParse.parsedStream(
+    val exprStream = Parse.expr(
       StreamingParse.turnsStream(spark, dir, maxFilesPerTrigger = 2).toDF(), PatternBank.example)
       .select("conv_id", "turn_idx", "n_tokens", "n_errors", "category")
     val q = exprStream.writeStream
@@ -134,7 +134,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     SyntheticTranscripts.generate(spark, 30L).repartition(5).write.mode("overwrite").parquet(dir)
     val bank = spark.sparkContext.broadcast(PatternBank.example)
 
-    val progress = StreamingParse.conversationProgress(StreamingParse.parsedStream(
+    val progress = StreamingParse.conversationProgress(Parse.expr(
       StreamingParse.turnsStream(spark, dir, maxFilesPerTrigger = 1).toDF(), PatternBank.example))
     val q = progress.toDF().writeStream
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
@@ -420,6 +420,30 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       } finally q.stop()
       val batchJobs = jobsBefore("drained")
       assert(batchJobs.length == 2, s"the micro-batch ran ${batchJobs.length} jobs")
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("the .log stream fails when it is built over a missing directory, and runs no job") {
+    val sc = spark.sparkContext
+    val bank = sc.broadcast(PatternBank.example)
+    val missing = java.nio.file.Paths.get(
+      graft.pipeline.Staging.tempDirDeletedOnExit("graft-logstream-missing"), "absent").toString
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        started.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val e = intercept[java.io.FileNotFoundException](graft.sources.LogFiles.eventsStream(spark, missing, bank))
+      assert(e.getMessage.contains(missing), e.getMessage)
+      // listener events arrive in order: once the marker job is seen, every earlier job has been seen
+      sc.setJobDescription("marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30000000000L
+      while (!started.contains("marker") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(started.contains("marker") && started.peek() == "marker", s"jobs ran: $started")
     } finally sc.removeSparkListener(listener)
   }
 }

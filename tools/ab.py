@@ -10,7 +10,10 @@ S .. S+N-1 runs `perfbench/run.py --workload <name> --seed <seed> --trace 0
 --seconds 20` once in the parent tree and once in the working tree. The
 order alternates per seed: odd seeds run the parent first, even seeds the
 change. Nothing under perfbench/ or BENCHMARK.json is written; each tree
-builds into its own .bench_build/.
+builds into its own .bench_build/. Before every run, the tree's
+.bench_build/work/inputs (perfbench's staged inputs, kept per seed) is
+deleted in both trees, so neither side skips staging by reusing the inputs
+of an earlier run.
 
 Prints every run's `failed` count, then for each end-to-end metric of
 BENCHMARK.json: every value, the median, the min, the interquartile range,
@@ -36,7 +39,9 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def run_bench(tree, workload, seed):
-    """One perfbench run in `tree`; return its final JSON record or None."""
+    """One perfbench run in `tree`, with no staged inputs left from an earlier
+    run; return its final JSON record or None."""
+    shutil.rmtree(os.path.join(tree, ".bench_build", "work", "inputs"), ignore_errors=True)
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
            "--seconds", "20", "--trace", "0"]
     r = subprocess.run(cmd, cwd=tree, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
